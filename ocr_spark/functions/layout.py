@@ -156,7 +156,7 @@ def page_text(
 # ---------------------------------------------------------------------------
 # codepoint fast path — identical rules L1-L4, glyphs carried as Unicode
 # code points so a 23M-glyph shuffle never materializes 23M Python strings
-# (the Spark operator packs per-page arrays JVM-side; see layout_ops)
+# (layout_ops and pdf_ops run it on every page)
 # ---------------------------------------------------------------------------
 # Float-discrepancy margin for the vectorized clustering fast path: its
 # running means come from prefix-sum differences (cumsum[i-1] - cumsum at

@@ -16,6 +16,10 @@ Why this exact shape (measured at 23M glyphs / 24k pages, local[16]):
   bottleneck (the Python side was NOT: a trivial fn cost the same);
 - this shape: sort-based grouping on numeric rows, kernel-bound (~6 s).
 
+Both entry points (``glyphs_to_page_text``, ``glyphs_to_page_text_pyscan``)
+run every page through ``layout.page_text_codes``, as ``pdf_ops`` does;
+the string kernel ``layout.page_text`` is its spec (tests/test_kernels.py).
+
 Skew is bounded by the largest single page (a few thousand glyphs), not
 the largest document.  Determinism with arbitrary input order: region
 order is geometric (XY-cut), line membership is order-insensitive
@@ -27,11 +31,10 @@ layout.py L3).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark.functions.layout import page_text, page_text_codes
+from ocr_spark.functions.layout import page_text_codes
 from ocr_spark.schemas import PAGE_TEXT_SCHEMA
 
 
@@ -352,26 +355,6 @@ def glyphs_to_page_text_pyscan(
     return rel.repartition(max(len(ranges), 1)).mapInArrow(
         _pyscan_arrow_fn, PAGE_TEXT_SCHEMA
     )
-
-
-def _page_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-    text = page_text(
-        pdf["ch"].to_numpy(),
-        pdf["x0"].to_numpy(),
-        pdf["y0"].to_numpy(),
-        pdf["x1"].to_numpy(),
-        pdf["y1"].to_numpy(),
-    )
-    return pd.DataFrame(
-        {"doc_id": [pdf["doc_id"].iloc[0]], "page": [pdf["page"].iloc[0]], "text": [text]}
-    )
-
-
-def glyphs_to_page_text_grouped(glyphs: DataFrame) -> DataFrame:
-    """Reference shape: applyInPandas per (doc_id, page) group with the
-    string-glyph spec kernel.  Kept for differential testing against the
-    packed fast path (identical output asserted in tests)."""
-    return glyphs.groupBy("doc_id", "page").applyInPandas(_page_fn, PAGE_TEXT_SCHEMA)
 
 
 def ocr_structured_records(

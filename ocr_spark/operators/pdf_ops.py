@@ -5,16 +5,22 @@ Closes the reference's titular front door: it ingests PDF *files*
 OCRs the raw bytes (reference: src/ai/flows/extract-data-from-pdf.ts:
 114-139).  Here the byte layer is the stdlib parser
 (ocr_spark/functions/pdf.py, frozen contract P1-P8) and the layout layer
-is the existing XY-cut kernel (functions/layout.py L1-L4) — so the full
-engine-A chain runs from raw document bytes with no fixture-born glyph
-table in the path.
+is the code-point XY-cut kernel (functions/layout.py L1-L4,
+``page_text_codes`` — the kernel ``layout_ops.glyphs_to_page_text`` runs)
+— so the full engine-A chain runs from raw document bytes with no
+fixture-born glyph table in the path.
 
-Scale shape: both operators are single-pass ``mapInArrow`` over the
-document relation — no shuffle, no per-row Python UDFs, errors recorded
-per document (E6), the same zero-Exchange plan as the html extraction
-branch.  PDF payloads are KB-to-MB objects; per-task memory is bounded by
-the Arrow batch (session-tuned) times the largest document, the same
-envelope as the WARC/multimodal readers.
+Structure: ONE ``mapInArrow`` batch loop (``_map_docs``) parses each
+document once with ``pdf_glyphs`` and hands ``(out, doc_id, rows, err)``
+to a small per-output emitter — glyph rows, page rows, or one doc row.
+Each output schema is declared once, as a Spark ``StructType``.  A
+document's rows arrive page-contiguous, so ``_page_texts`` cuts pages
+with one diff over the page column — no sort, no grouping shuffle.
+
+Scale shape: a single-pass, zero-Exchange plan over the document relation
+(the html extraction branch's shape), no per-row Python UDFs, errors
+recorded per document (E6).  Per-task memory is bounded by the Arrow
+batch (session-tuned) times the largest document (KB-to-MB payloads).
 """
 
 from __future__ import annotations
@@ -22,8 +28,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ocr_spark.functions.layout import page_text
+from ocr_spark.functions.layout import page_text_codes
 from ocr_spark.functions.pdf import pdf_glyphs
 
 PDF_GLYPHS_SCHEMA = T.StructType(
@@ -49,127 +56,6 @@ PDF_PAGE_TEXT_SCHEMA = T.StructType(
     ]
 )
 
-
-def _glyph_batches(batches):
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("page", pa.int32()),
-            ("glyph_id", pa.int64()),
-            ("ch", pa.string()),
-            ("x0", pa.float64()),
-            ("y0", pa.float64()),
-            ("x1", pa.float64()),
-            ("y1", pa.float64()),
-            ("error", pa.string()),
-        ]
-    )
-    for batch in batches:
-        ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-        pdfs = batch.column(batch.schema.get_field_index("pdf")).to_pylist()
-        cols = {name: [] for name in schema.names}
-        for did, payload in zip(ids, pdfs):
-            rows, err = pdf_glyphs(payload)
-            if err is not None:
-                # E6 sentinel row: the error travels in the row, page/glyph
-                # slots zeroed (mirrors sample_frames' frame_idx -1 row)
-                cols["doc_id"].append(did)
-                cols["page"].append(0)
-                cols["glyph_id"].append(0)
-                cols["ch"].append("")
-                for c in ("x0", "y0", "x1", "y1"):
-                    cols[c].append(0.0)
-                cols["error"].append(err)
-                continue
-            for gid, (page, ch, x0, y0, x1, y1) in enumerate(rows):
-                cols["doc_id"].append(did)
-                cols["page"].append(page)
-                cols["glyph_id"].append(gid)
-                cols["ch"].append(ch)
-                cols["x0"].append(x0)
-                cols["y0"].append(y0)
-                cols["x1"].append(x1)
-                cols["y1"].append(y1)
-                cols["error"].append(None)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[n], schema.field(n).type) for n in schema.names],
-            schema=schema,
-        )
-
-
-def pdf_to_glyphs(docs: DataFrame) -> DataFrame:
-    """(doc_id, pdf binary) -> glyph rows in content-stream order (P8 ids).
-
-    Unparseable documents yield ONE sentinel row carrying the taxonomy code
-    (``error`` column; P1-P7 codes), never an exception.  Zero-shuffle:
-    each scan task parses its own documents."""
-    return docs.select("doc_id", "pdf").mapInArrow(
-        _glyph_batches, PDF_GLYPHS_SCHEMA
-    )
-
-
-def _page_text_batches(batches):
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("page", pa.int32()),
-            ("text", pa.string()),
-            ("error", pa.string()),
-        ]
-    )
-    for batch in batches:
-        ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-        pdfs = batch.column(batch.schema.get_field_index("pdf")).to_pylist()
-        cols = {name: [] for name in schema.names}
-        for did, payload in zip(ids, pdfs):
-            rows, err = pdf_glyphs(payload)
-            if err is not None:
-                cols["doc_id"].append(did)
-                cols["page"].append(0)
-                cols["text"].append("")
-                cols["error"].append(err)
-                continue
-            # rows arrive page-contiguous (content-stream order), so page
-            # slicing is a single linear scan — no sort, no grouping shuffle
-            start = 0
-            for i in range(1, len(rows) + 1):
-                if i == len(rows) or rows[i][0] != rows[start][0]:
-                    chunk = rows[start:i]
-                    cols["doc_id"].append(did)
-                    cols["page"].append(chunk[0][0])
-                    cols["text"].append(
-                        page_text(
-                            np.array([r[1] for r in chunk], dtype=object),
-                            np.array([r[2] for r in chunk]),
-                            np.array([r[3] for r in chunk]),
-                            np.array([r[4] for r in chunk]),
-                            np.array([r[5] for r in chunk]),
-                        )
-                    )
-                    cols["error"].append(None)
-                    start = i
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[n], schema.field(n).type) for n in schema.names],
-            schema=schema,
-        )
-
-
-def pdf_to_page_text(docs: DataFrame) -> DataFrame:
-    """The fused engine-A front door: PDF bytes -> glyphs -> XY-cut
-    reading-order text (L1-L4) in ONE Python pass — the intermediate glyph
-    table never crosses the JVM<->Python channel (the same argument as the
-    layout branch's pyscan path: the channel, not the kernel, is the cost).
-    Output rows: (doc_id, page, text, error); error docs yield one
-    sentinel row with page 0 and empty text."""
-    return docs.select("doc_id", "pdf").mapInArrow(
-        _page_text_batches, PDF_PAGE_TEXT_SCHEMA
-    )
-
-
 PDF_DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -180,52 +66,85 @@ PDF_DOC_SCHEMA = T.StructType(
 )
 
 
-def _doc_batches(batches):
-    import pyarrow as pa
+def _page_texts(rows: list[tuple]) -> list[tuple[int, str]]:
+    """Page-contiguous ``pdf_glyphs`` rows -> [(page, reading-order text)]:
+    one transpose, one utf-32 encode (P7 glyphs are single code points), a
+    cut wherever the page changes; a page with no glyphs gets no entry."""
+    if not rows:
+        return []
+    n = len(rows)
+    page, ch, *boxes = zip(*rows)
+    cp = np.frombuffer("".join(ch).encode("utf-32-le"), dtype="<u4")
+    page = np.fromiter(page, np.int64, n)
+    boxes = [np.fromiter(b, np.float64, n) for b in boxes]
+    cuts = (np.flatnonzero(np.diff(page)) + 1).tolist()
+    return [
+        (int(page[s]), page_text_codes(cp[s:e], *(b[s:e] for b in boxes)))
+        for s, e in zip([0, *cuts], [*cuts, n])
+    ]
 
-    schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("text", pa.string()),
-            ("n_pages", pa.int32()),
-            ("error", pa.string()),
-        ]
+
+def _emit_glyphs(out, did, rows, err):
+    if err is not None:
+        # E6 sentinel row: the error travels in the row, page/glyph slots
+        # zeroed (mirrors sample_frames' frame_idx -1 row)
+        rows = [(0, "", 0.0, 0.0, 0.0, 0.0)]
+    out.extend(
+        (did, page, gid, ch, x0, y0, x1, y1, err)
+        for gid, (page, ch, x0, y0, x1, y1) in enumerate(rows)
     )
-    for batch in batches:
-        ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-        pdfs = batch.column(batch.schema.get_field_index("pdf")).to_pylist()
-        cols = {name: [] for name in schema.names}
-        for did, payload in zip(ids, pdfs):
-            rows, err = pdf_glyphs(payload)
-            if err is not None:
-                cols["doc_id"].append(did)
-                cols["text"].append("")
-                cols["n_pages"].append(0)
-                cols["error"].append(err)
-                continue
-            texts = []
-            start = 0
-            for i in range(1, len(rows) + 1):
-                if i == len(rows) or rows[i][0] != rows[start][0]:
-                    chunk = rows[start:i]
-                    texts.append(
-                        page_text(
-                            np.array([r[1] for r in chunk], dtype=object),
-                            np.array([r[2] for r in chunk]),
-                            np.array([r[3] for r in chunk]),
-                            np.array([r[4] for r in chunk]),
-                            np.array([r[5] for r in chunk]),
-                        )
-                    )
-                    start = i
-            cols["doc_id"].append(did)
-            cols["text"].append("\n".join(texts))
-            cols["n_pages"].append(len(texts))
-            cols["error"].append(None)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[n], schema.field(n).type) for n in schema.names],
-            schema=schema,
-        )
+
+
+def _emit_pages(out, did, rows, err):
+    pages = _page_texts(rows) if err is None else [(0, "")]
+    out.extend((did, page, text, err) for page, text in pages)
+
+
+def _emit_doc(out, did, rows, err):
+    texts = [text for _, text in _page_texts(rows)]
+    out.append((did, "\n".join(texts), len(texts), err))
+
+
+def _map_docs(docs: DataFrame, emit, schema: T.StructType) -> DataFrame:
+    """The one batch loop: (doc_id, pdf) -> ``emit``'s rows under ``schema``.
+    ``pdf_glyphs`` never raises (E6), so one bad document never aborts its
+    batch."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def batches(it):
+        import pyarrow as pa
+
+        for batch in it:
+            out: list[tuple] = []
+            ids = batch.column("doc_id").to_pylist()
+            for did, payload in zip(ids, batch.column("pdf").to_pylist()):
+                emit(out, did, *pdf_glyphs(payload))
+            cols = list(zip(*out)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return docs.select("doc_id", "pdf").mapInArrow(batches, schema)
+
+
+def pdf_to_glyphs(docs: DataFrame) -> DataFrame:
+    """(doc_id, pdf binary) -> glyph rows in content-stream order (P8 ids).
+
+    Unparseable documents yield ONE sentinel row carrying the taxonomy code
+    (``error`` column; P1-P7 codes), never an exception.  Zero-shuffle:
+    each scan task parses its own documents."""
+    return _map_docs(docs, _emit_glyphs, PDF_GLYPHS_SCHEMA)
+
+
+def pdf_to_page_text(docs: DataFrame) -> DataFrame:
+    """The fused engine-A front door: PDF bytes -> glyphs -> XY-cut
+    reading-order text (L1-L4) in ONE Python pass — the intermediate glyph
+    table never crosses the JVM<->Python channel (the same argument as the
+    layout branch's pyscan path: the channel, not the kernel, is the cost).
+    Output rows: (doc_id, page, text, error); error docs yield one
+    sentinel row with page 0 and empty text."""
+    return _map_docs(docs, _emit_pages, PDF_PAGE_TEXT_SCHEMA)
 
 
 def pdf_doc_records(docs: DataFrame) -> DataFrame:
@@ -237,4 +156,4 @@ def pdf_doc_records(docs: DataFrame) -> DataFrame:
     together, so the assembly groupBy the glyph branch needs does not
     exist here).  This is the transform the resumable pipeline runs for a
     PDF corpus (jobs/extract_job.py --format pdf)."""
-    return docs.select("doc_id", "pdf").mapInArrow(_doc_batches, PDF_DOC_SCHEMA)
+    return _map_docs(docs, _emit_doc, PDF_DOC_SCHEMA)

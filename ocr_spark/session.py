@@ -82,11 +82,3 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def get_or_create(app_name: str = "ocr_spark") -> SparkSession:
-    """Reuse an active session if one exists (pytest shares one)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        return active
-    return build_session(app_name)

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import random
+
 import pyarrow.parquet as pq
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ocr_spark.functions.fields import DEFAULT_FIELDS, extract_fields
@@ -16,7 +18,8 @@ from ocr_spark.functions.html_extract import (
     extract_html_doc,
     tokenize_blocks,
 )
-from ocr_spark.functions.layout import page_text
+from ocr_spark.fixtures import generator as gen
+from ocr_spark.functions.layout import LINE_CLUSTER_EPS, page_text, page_text_codes
 from ocr_spark.normalize import collapse_ws, join_blocks, nfc
 
 
@@ -139,6 +142,65 @@ def test_layout_header_footer_dropped():
 
 def test_layout_empty_page():
     assert page_text([], [], [], [], []) == ""
+
+
+# baseline offsets on, and within 1e-11 of, the line-clustering threshold:
+# the vectorized clustering in page_text_codes defers those decisions to
+# the sequential loop (_cluster_lines_seq), so both branches get exercised
+_NEAR_EPS = st.sampled_from(
+    [d * s for s in (1.0, -1.0) for d in (
+        LINE_CLUSTER_EPS, LINE_CLUSTER_EPS + 1e-11, LINE_CLUSTER_EPS - 1e-11,
+        LINE_CLUSTER_EPS / 2, 2 * LINE_CLUSTER_EPS,
+    )]
+)
+
+
+@st.composite
+def _glyph_pages(draw):
+    # baselines mostly in the body band, some in the header/footer (rule L1)
+    anchor = st.one_of(st.floats(80.0, 712.0), st.sampled_from([60.0, 730.0]))
+    anchors = draw(st.lists(anchor, min_size=1, max_size=4))
+    glyphs = []
+    for _ in range(draw(st.integers(1, 60))):
+        ch = draw(st.characters(codec="utf-8"))
+        x0 = draw(st.one_of(st.floats(0.0, 600.0), st.sampled_from([72.0, 78.0, 324.0])))
+        y1 = draw(st.sampled_from(anchors)) + draw(st.one_of(_NEAR_EPS, st.floats(-4.0, 4.0)))
+        w, h = draw(st.floats(0.5, 12.0)), draw(st.floats(1.0, 12.0))
+        glyphs.append((ch, x0, y1 - h, x0 + w, y1))
+    return glyphs
+
+
+def _both_kernels(glyphs):
+    ch, *boxes = zip(*glyphs)
+    codes = page_text_codes([ord(c) for c in ch], *boxes)
+    return codes, page_text(list(ch), *boxes)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_glyph_pages())
+@example([("a", 100.0, 92.0, 105.0, 100.0), ("b", 110.0, 95.0, 115.0, 103.0)])
+def test_page_text_codes_matches_page_text(glyphs):
+    """The code-point kernel (production: layout_ops and pdf_ops) is
+    byte-identical to the string spec on arbitrary pages, including
+    baselines at the clustering threshold (the @example sits exactly on
+    it)."""
+    codes, spec = _both_kernels(glyphs)
+    assert codes == spec
+
+
+def test_page_text_codes_matches_page_text_on_generated_pdfs():
+    rng = random.Random("page-text-codes")
+    n_pages = 0
+    for d in range(40):
+        _, grows, _, _ = gen.gen_pdf_doc(rng, d)
+        pages: dict[int, list] = {}
+        for p, _gid, *glyph in grows:
+            pages.setdefault(p, []).append(tuple(glyph))
+        for glyphs in pages.values():
+            codes, spec = _both_kernels(glyphs)
+            assert codes == spec
+            n_pages += 1
+    assert n_pages > 40
 
 
 # ---------------------------------------------------------------------------

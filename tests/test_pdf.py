@@ -248,14 +248,17 @@ def test_spark_pdf_page_text_matches_golden_and_composed(spark, pdf_tables):
     assert composed == golden
 
 
-def test_pdf_chain_plan_is_exchange_free(spark, pdf_tables):
-    """The fused front door must stay a zero-Exchange scan->mapInArrow
-    plan (the same shape as the html extraction branch)."""
-    from ocr_spark.operators.pdf_ops import pdf_to_page_text
+@pytest.mark.parametrize(
+    "operator", ["pdf_to_glyphs", "pdf_to_page_text", "pdf_doc_records"]
+)
+def test_pdf_chain_plan_is_exchange_free(spark, pdf_tables, operator):
+    """Every PDF operator must stay a zero-Exchange scan->mapInArrow plan
+    (the same shape as the html extraction branch)."""
+    from ocr_spark.operators import pdf_ops
 
     docs, _ = pdf_tables
-    plan = pdf_to_page_text(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    plan = getattr(pdf_ops, operator)(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan
 
 
 def test_fixture_coverage_guard(spark, small_dir):
@@ -639,3 +642,25 @@ def test_empty_shapes_and_glyphless_pages(spark):
     recs = pdf_doc_records(one).collect()
     assert len(recs) == 1
     assert (recs[0]["text"], recs[0]["n_pages"], recs[0]["error"]) == ("", 0, None)
+
+    # a glyphless page BETWEEN two pages that draw glyphs: the page cut
+    # skips it (no page-2 row), and the document counts two text pages
+    gap = gen._pdf_build_file(
+        random.Random(3),
+        [
+            b"BT /F1 10 Tf 72 700 Td (first) Tj ET",
+            b"BT ET",
+            b"BT /F1 10 Tf 72 700 Td (third) Tj ET",
+        ],
+        inherited_attrs=True,
+        nested_tree=False,
+    )
+    assert sorted({r[0] for r in pdf_glyphs(gap)[0]}) == [1, 3]
+    two = spark.createDataFrame([(8, bytearray(gap))], "doc_id long, pdf binary")
+    pages = pdf_to_page_text(two).orderBy("page").collect()
+    assert [(r["page"], r["text"], r["error"]) for r in pages] == [
+        (1, "first", None),
+        (3, "third", None),
+    ]
+    [rec] = pdf_doc_records(two).collect()
+    assert (rec["text"], rec["n_pages"], rec["error"]) == ("first\nthird", 2, None)

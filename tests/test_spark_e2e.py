@@ -196,25 +196,6 @@ def test_doc_too_large_through_spark(spark):
     assert r["text"] == "" and r["spans"] == [] and r["n_blocks"] == 0
 
 
-def test_layout_packed_equals_grouped(spark, tiny_dir):
-    """The packed codepoint fast path must emit exactly the pages of the
-    per-group string-spec path (and both match the golden elsewhere)."""
-    from ocr_spark.operators.layout_ops import (
-        glyphs_to_page_text,
-        glyphs_to_page_text_grouped,
-    )
-
-    g = spark.read.parquet(f"{tiny_dir}/glyphs.parquet")
-    fast = {
-        (r["doc_id"], r["page"]): r["text"] for r in glyphs_to_page_text(g).collect()
-    }
-    spec = {
-        (r["doc_id"], r["page"]): r["text"]
-        for r in glyphs_to_page_text_grouped(g).collect()
-    }
-    assert fast == spec
-
-
 def test_layout_clustered_path_zero_exchange_same_output(spark, tiny_dir):
     """clustered_input=True on a page-aligned glyph parquet: NO Exchange
     anywhere in the plan (the raw-glyph shuffle is gone — the branch gets
