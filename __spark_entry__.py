@@ -277,15 +277,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_pdf_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-document error taxonomy (E6): one row per input doc, the
         planted corruption's code or NULL — oracle is the generator's own
-        expectation table."""
-        from ocr_spark.operators.pdf_ops import pdf_to_glyphs
+        expectation table.  The doc-level operator emits exactly one row
+        per document (a glyphless doc included), so no regrouping."""
+        from ocr_spark.operators.pdf_ops import pdf_doc_records
 
         docs = spark.read.parquet(f"{fix}/pdf_docs.parquet")
-        return (
-            pdf_to_glyphs(docs)
-            .groupBy("doc_id")
-            .agg(F.max("error").alias("error"))
-        )
+        return pdf_doc_records(docs).select("doc_id", "error")
 
     def q_attendance_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = spark.read.parquet(f"{fix}/attendance_docs.parquet")

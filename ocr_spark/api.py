@@ -31,11 +31,11 @@ def extract_records(
     doc_texts: DataFrame = None,
     glyphs: DataFrame = None,
     glyph_doc_map: DataFrame = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """The reference's ``extractDataFromPdf`` flow (both engines).
 
-    - ``pages`` (html bytes)            -> engine-B analogue: DOM extraction.
+    - ``pages`` (html bytes)            -> engine-B analogue: DOM extraction
+      (html-less rows fall back to the crawl text, E4).
     - ``doc_texts(url, doc_text)``      -> structuring only (the
       ``structureOcrTextPrompt`` half, extract-data-from-pdf.ts:59-75).
     - ``glyphs`` + ``glyph_doc_map``    -> engine-A analogue: layout OCR
@@ -48,7 +48,7 @@ def extract_records(
     if sum(provided) != 1:
         raise ValueError("provide exactly one of pages / doc_texts / glyphs")
     if pages is not None:
-        return extract_pages(pages, engine=engine)
+        return extract_pages(pages)
     if doc_texts is not None:
         return attendance_records(doc_texts)
     if glyph_doc_map is None:

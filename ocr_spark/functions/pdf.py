@@ -26,10 +26,12 @@ parsing — the same two-sided design as the PNG/WAV/MP4 kernels.
       per-row filter tags 0/2) supported; type-1 entries are file offsets,
       type-2 entries point into OBJECT STREAMS).  Trailers may chain via
       /Prev (incremental updates): tables are walked newest-first, the
-      NEWEST entry per object wins, and the newest trailer's /Root
-      governs.  A /Prev loop, failure to locate/parse a table, a missing
-      /Root, an unsupported predictor/filter tag, or an entry offset that
-      does not start the referenced object -> ``bad_xref``.
+      NEWEST entry per object wins (a newer FREE entry hides an older
+      section's definition), and the newest trailer's /Root governs.  A
+      /Prev loop, failure to locate/parse a table, a missing /Root, an
+      unsupported predictor/filter tag, an entry offset that does not
+      start the referenced object, a reference to a free or unlisted
+      object, or a cycle of indirect references -> ``bad_xref``.
   P3. Objects are ``N G obj <value> endobj`` over the standard token
       grammar: dicts, arrays, names, numbers, literal + hex strings,
       indirect refs ``N G R``, booleans, null, comments, streams.
@@ -41,7 +43,8 @@ parsing — the same two-sided design as the PNG/WAV/MP4 kernels.
       ``bad_stream``.  /Length may be an indirect reference.
   P5. Pages: Catalog /Pages tree, /Kids walked depth-first (interior
       /Pages nodes allowed); /MediaBox and /Resources INHERIT from
-      ancestors.  A broken tree -> ``bad_page_tree``.  Page y-flip uses
+      ancestors.  A broken tree, or a node reached twice (shared or
+      cyclic /Kids) -> ``bad_page_tree``.  Page y-flip uses
       the MediaBox top edge: ``y_top = media_y1 - y_pdf`` (output glyphs
       are top-down, y growing downward, per FIXTURES.md §2).
   P6. Content streams (page /Contents, a stream or array of streams
@@ -390,7 +393,9 @@ class _Document:
         self.data = data
         self.max_stream_bytes = max_stream_bytes
         # object locator: int = file offset; ("objstm", stm, idx) = the
-        # idx-th object inside object stream ``stm`` (xref-stream type 2)
+        # idx-th object inside object stream ``stm`` (xref-stream type 2);
+        # None = freed by the newest section naming it (a tombstone, so an
+        # older section's entry cannot resurrect the object)
         self.offsets: dict[int, object] = {}
         self.cache: dict[int, object] = {}
         self._objstm_cache: dict[int, tuple] = {}  # stm -> (pairs, body)
@@ -456,7 +461,9 @@ class _Document:
                     lx.pos += 1
                     if kind == b"n":
                         self.offsets.setdefault(start + k, entry_off)
-                    elif kind != b"f":
+                    elif kind == b"f":
+                        self.offsets.setdefault(start + k, None)
+                    else:
                         raise PdfError("bad_xref", f"bad entry kind {kind!r}")
         except PdfError as e:
             raise PdfError("bad_xref", str(e))
@@ -528,26 +535,34 @@ class _Document:
                 f2 = field(w[1], 0)
                 f3 = field(w[2], 0)
                 objnum = start + k
-                if etype == 1:
+                if etype == 0:
+                    self.offsets.setdefault(objnum, None)
+                elif etype == 1:
                     self.offsets.setdefault(objnum, f2)
                 elif etype == 2:
                     self.offsets.setdefault(objnum, ("objstm", f2, f3))
-                # type 0 (free) and unknown types: skipped (spec: readers
-                # ignore entry types they don't understand)
+                # unknown types: skipped (spec: readers ignore entry types
+                # they don't understand)
         return sdict
 
     # -- objects ------------------------------------------------------------
     def resolve(self, v):
+        # a chain of distinct objects has at most len(offsets) hops; more
+        # is a cycle (``1 0 obj 1 0 R endobj``), which would never end
+        hops = 0
         while isinstance(v, tuple) and len(v) == 2 and v[0] == "R":
+            hops += 1
+            if hops > len(self.offsets):
+                raise PdfError("bad_xref", "indirect reference cycle")
             v = self.get(v[1])
         return v
 
     def get(self, num: int):
         if num in self.cache:
             return self.cache[num]
-        if num not in self.offsets:
+        loc = self.offsets.get(num)
+        if loc is None:
             raise PdfError("bad_xref", f"object {num} not in xref")
-        loc = self.offsets[num]
         if isinstance(loc, tuple):
             val = self._get_from_objstm(loc[1], loc[2], num)
             self.cache[num] = val
@@ -646,6 +661,11 @@ class _Document:
         if pages_ref is None:
             raise PdfError("bad_page_tree", "Catalog missing /Pages")
         out: list[tuple[dict, dict]] = []
+        # ids of the nodes walked so far: a node reached twice (a shared
+        # /Kids entry) is not a tree, and a DAG of shared kids would walk
+        # 2**depth paths.  Resolved objects stay alive in self.cache or
+        # their parent's /Kids, so an id is never reused mid-walk.
+        seen: set[int] = set()
 
         def walk(node, inherited: dict, depth: int) -> None:
             if depth > 64:
@@ -653,6 +673,9 @@ class _Document:
             node = self.resolve(node)
             if not isinstance(node, dict):
                 raise PdfError("bad_page_tree", "non-dict page node")
+            if id(node) in seen:
+                raise PdfError("bad_page_tree", "page tree node reached twice")
+            seen.add(id(node))
             inh = dict(inherited)
             for k in ("MediaBox", "Resources"):
                 if k in node:

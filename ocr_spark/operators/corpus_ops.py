@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ocr_spark.plans.partitioning import guarded_broadcast
+
 
 # ---------------------------------------------------------------------------
 # deterministic content-hash sampling
@@ -108,19 +110,11 @@ def decontaminate(
     GUARDED: ``hits`` is bounded by the contaminated-doc count, tiny for a
     real eval set, but a benchmark that shares boilerplate with the corpus
     (or a mis-passed frame) makes it corpus-scale and an unconditional
-    broadcast would OOM the driver.  The probe COLLECTS up to cap+1 rows
-    (a bare limit().count() cannot short-circuit below the blocking gram
-    aggregate, and counting-then-joining would run the gram join twice):
-    below the cap the collected rows BECOME the broadcast side, so the
-    benign case computes the gram join exactly once and no persisted
-    relation outlives the call; above the cap a plain shuffle join
-    recomputes the aggregate once (pathological path only).  Note the
-    probe's own driver footprint: up to cap+1 driver-side Row objects at
-    a few hundred bytes each — the 1M default keeps the worst case in the
-    hundreds of MB, of the same order as the broadcast it guards (raise
-    it only with driver memory to spare).  Callers that KNOW the
-    benchmark is a bounded eval set can pass ``max_broadcast_hits=None``
-    to skip the probe and broadcast unconditionally."""
+    broadcast would OOM the driver — see
+    :func:`~ocr_spark.plans.partitioning.guarded_broadcast` (raise the cap
+    only with driver memory to spare).  Callers that KNOW the benchmark is
+    a bounded eval set can pass ``max_broadcast_hits=None`` to skip the
+    probe and broadcast unconditionally."""
     bench_grams = (
         _distinct_ngrams(benchmark, id_col, text_col, n)
         .select("gram")
@@ -133,16 +127,7 @@ def decontaminate(
         .agg(F.count(F.lit(1)).alias("n_matched_grams"))
     )
     ids = corpus.select(F.col(id_col))
-    if max_broadcast_hits is None:
-        right = F.broadcast(hits)
-    else:
-        probe = hits.limit(max_broadcast_hits + 1).collect()
-        if len(probe) <= max_broadcast_hits:
-            right = F.broadcast(
-                corpus.sparkSession.createDataFrame(probe, schema=hits.schema)
-            )
-        else:
-            right = hits
+    right = guarded_broadcast(hits, max_broadcast_hits)
     return (
         ids.join(right, ids[id_col] == right["_id"], "left")
         .select(
@@ -362,14 +347,10 @@ def remove_boilerplate_lines(
     - **Guarded broadcast of the hot set** (same pattern as
       :func:`decontaminate`): hot lines are bounded by
       total_lines/min_doc_freq and are ~10^5..10^7 template strings on a
-      real crawl, so the anti-join side usually broadcasts; the guard
-      COLLECTS up to cap+1 rows (never a ``limit().count()`` — it cannot
-      short-circuit below the blocking frequency aggregate, see CLAUDE.md)
-      and below the cap the collected rows BECOME the broadcast side; a
+      real crawl, so the anti-join side usually broadcasts; a
       pathological corpus (every line shared) overflows the probe and
-      falls back to a shuffle join.  Probe driver footprint: cap+1 Row
-      objects worst case (hundreds of MB at the 1M default — same order
-      as the broadcast it guards).
+      falls back to a shuffle join
+      (:func:`~ocr_spark.plans.partitioning.guarded_broadcast`).
     - **One reassembly shuffle and NO second corpus join**: every doc's
       exploded rows are prefixed with a null-line SENTINEL row — a null
       join key never matches, so the sentinel always survives the
@@ -397,22 +378,7 @@ def remove_boilerplate_lines(
         .agg(F.count(F.lit(1)).alias("_df"))
     )
     hot = freq.filter(F.col("_df") >= min_doc_freq).select("_line")
-    if max_broadcast_lines is None:
-        hot_rel = F.broadcast(hot)
-    else:
-        # the probe COLLECTS up to cap+1 rows: a limit().count() cannot
-        # short-circuit below the blocking frequency aggregate, and a
-        # persisted relation would leak a cache the caller never owns.
-        # Below the cap the collected rows BECOME the anti-join side (the
-        # aggregation runs exactly once); above it, the shuffle-join
-        # fallback recomputes the aggregate once (pathological path only).
-        probe = hot.limit(max_broadcast_lines + 1).collect()
-        if len(probe) <= max_broadcast_lines:
-            hot_rel = F.broadcast(
-                df.sparkSession.createDataFrame(probe, schema=hot.schema)
-            )
-        else:
-            hot_rel = hot
+    hot_rel = guarded_broadcast(hot, max_broadcast_lines)
     sentinel = F.array(F.lit(None).cast("string"))
     lines = arr.select(
         "_id",

@@ -1,20 +1,20 @@
 """The flagship extraction stage: pages -> extracted.
 
 Spark shape (SURVEY.md §3.1): scan -> one ArrowEvalPython projection -> sink.
-Zero shuffles in steady state; the pandas UDF replaces the reference's
+Zero shuffles in steady state; the arrow UDF replaces the reference's
 browser->server->Vision/Gemini round-trips
 (reference: src/ai/flows/extract-data-from-pdf.ts:78-175) with an in-process
 Arrow-vectorized kernel.
 
 Engine dispatch mirrors reference E4 (extract-data-from-pdf.ts:96,150 —
-``if (extractionEngine === 'googleCloudVision') ... else ...``) as two
-filtered branches + unionByName:
+``if (extractionEngine === 'googleCloudVision') ... else ...``) per row,
+inside the one UDF:
 
-- engine ``dom``  — the DOM-heuristic branch over raw ``html`` bytes
+- engine ``dom``  — the DOM-heuristic kernel over raw ``html`` bytes
   (stand-in for engine B, direct multimodal extraction).
-- engine ``wet``  — pass-through of the crawl's pre-extracted ``text``
-  column when ``html`` is absent (stand-in for engine A's external-OCR-text
-  path: text arrives already flat, we only normalize it).
+- engine ``wet``  — the crawl's pre-extracted ``text`` when ``html`` is
+  null (stand-in for engine A's external-OCR-text path: text arrives
+  already flat, we only normalize it).
 """
 
 from __future__ import annotations
@@ -22,7 +22,6 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
@@ -34,15 +33,15 @@ from ocr_spark.functions.html_extract import (
 from ocr_spark.normalize import collapse_ws, nfc
 from ocr_spark.schemas import EXTRACT_RESULT_TYPE
 
-ENGINE_DOM = "dom"
-ENGINE_WET = "wet"
-
 _RESULT_ARROW_TYPE = to_arrow_type(EXTRACT_RESULT_TYPE)
 
 
 @arrow_udf(EXTRACT_RESULT_TYPE)
-def extract_html_udf(html: pa.Array) -> pa.Array:
-    """Vectorized E2+E3: html bytes -> (text, spans, n_blocks, error).
+def extract_udf(html: pa.Array, text: pa.Array) -> pa.Array:
+    """Vectorized E2+E3+E4: (html bytes, crawl text) -> (text, spans,
+    n_blocks, error).  A row with html runs the DOM kernel; a row without
+    runs the REAL N2+N4 kernel over the crawl text (a JVM regexp collapse
+    is not equivalent: Java ``\\s`` is ASCII-only and Spark has no NFC).
 
     arrow_udf (not pandas_udf): the kernel consumes raw bytes and emits a
     typed struct — going through pandas would materialize an object Series
@@ -50,8 +49,12 @@ def extract_html_udf(html: pa.Array) -> pa.Array:
     out (~18% measured overhead at this batch shape).
     """
     rows = []
-    for doc in html.to_pylist():
-        t, sp, nb, err = extract_html_doc(doc, DEFAULT_MAX_HTML_BYTES)
+    for doc, crawl in zip(html.to_pylist(), text.to_pylist()):
+        if doc is not None:
+            t, sp, nb, err = extract_html_doc(doc, DEFAULT_MAX_HTML_BYTES)
+        else:
+            t = nfc(collapse_ws(crawl or ""))
+            sp, nb, err = [], int(bool(t)), None if t else ERR_EMPTY
         rows.append(
             {
                 "text": t,
@@ -63,23 +66,23 @@ def extract_html_udf(html: pa.Array) -> pa.Array:
     return pa.array(rows, type=_RESULT_ARROW_TYPE)
 
 
-@arrow_udf(T.StringType())
-def wet_normalize_udf(text: pa.Array) -> pa.Array:
-    """The REAL N2+N4 kernel over crawl-provided flat text: Unicode
-    whitespace collapse (``str.split`` semantics) then NFC.  A JVM regexp
-    collapse is NOT equivalent — Java/RE2 ``\\s`` is ASCII-only (an NBSP
-    or U+2028 run survives it) and Spark has no NFC builtin — so the old
-    JVM-side wet branch silently violated the frozen byte-identity spec
-    (normalize.py N2/N4) on real crawl text."""
-    return pa.array(
-        [None if t is None else nfc(collapse_ws(t)) for t in text.to_pylist()],
-        type=pa.string(),
-    )
+# Non-deterministic on purpose: it stops Catalyst pushing a downstream
+# predicate on a result field (``error``, ``text``) below the projection,
+# where the UDF would run a second time (CLAUDE.md, inferred-notnull trap).
+# The price: no predicate on an input column (``url``) reaches the scan
+# either, so select input rows before calling ``extract_pages``.
+extract_udf = extract_udf.asNondeterministic()
 
 
-def _finalize(df: DataFrame, engine: str) -> DataFrame:
-    """Common projection: flatten the kernel struct, default-coalesce (E5)."""
-    return df.select(
+def extract_pages(pages: DataFrame) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) -> extracted (EXTRACTED_SCHEMA).
+
+    Rows with html take the DOM kernel, html-less rows the crawl text (E4);
+    html rows send no crawl text over Arrow.
+    """
+    no_html = F.col("html").isNull()
+    r = pages.withColumn("_r", extract_udf("html", F.when(no_html, F.col("text"))))
+    return r.select(
         "url",
         "warc_ts",
         "lang",
@@ -87,52 +90,5 @@ def _finalize(df: DataFrame, engine: str) -> DataFrame:
         F.coalesce(F.col("_r.spans"), F.array()).alias("spans"),
         F.coalesce(F.col("_r.n_blocks"), F.lit(0)).alias("n_blocks"),
         F.col("_r.error").alias("error"),
-        F.lit(engine).alias("engine"),
-    )
-
-
-def extract_pages(pages: DataFrame, engine: str = "auto") -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> extracted (EXTRACTED_SCHEMA).
-
-    ``engine='auto'`` routes rows with html through the DOM branch and
-    html-less rows with crawl text through the WET pass-through (E4).
-    """
-    if engine not in (ENGINE_DOM, ENGINE_WET, "auto"):
-        # a typo'd engine silently fell through to auto dispatch
-        raise ValueError(f"engine must be 'dom', 'wet' or 'auto', got {engine!r}")
-    if engine == ENGINE_DOM:
-        return _finalize(
-            pages.withColumn("_r", extract_html_udf(F.col("html"))), ENGINE_DOM
-        )
-    if engine == ENGINE_WET:
-        return _wet_branch(pages)
-    dom = _finalize(
-        pages.filter(F.col("html").isNotNull()).withColumn(
-            "_r", extract_html_udf(F.col("html"))
-        ),
-        ENGINE_DOM,
-    )
-    wet = _wet_branch(pages.filter(F.col("html").isNull()))
-    return dom.unionByName(wet)
-
-
-def _wet_branch(pages: DataFrame) -> DataFrame:
-    """WET pass-through: crawl-provided text through the real normalize
-    kernel (see ``wet_normalize_udf``).  The outer coalesce keeps Catalyst
-    from inferring isnotnull(udf(...)) probes that would double-evaluate
-    the UDF (see CLAUDE.md, inferred-notnull trap)."""
-    norm = F.coalesce(
-        wet_normalize_udf(F.coalesce(F.col("text"), F.lit(""))), F.lit("")
-    )
-    return pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        norm.alias("text"),
-        F.array().cast("array<struct<field:string,begin:bigint,end:bigint>>").alias(
-            "spans"
-        ),
-        F.when(norm != "", F.lit(1)).otherwise(F.lit(0)).alias("n_blocks"),
-        F.when(norm == "", F.lit(ERR_EMPTY)).otherwise(F.lit(None).cast("string")).alias("error"),
-        F.lit(ENGINE_WET).alias("engine"),
+        F.when(no_html, F.lit("wet")).otherwise(F.lit("dom")).alias("engine"),
     )

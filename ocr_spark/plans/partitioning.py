@@ -51,3 +51,25 @@ def salted_repartition(
         bucket_expr(key_col, n_buckets),
         F.pmod(F.xxhash64(F.col(key_col), F.lit(1)), F.lit(salt)),
     )
+
+
+def guarded_broadcast(rel: DataFrame, max_rows: int | None) -> DataFrame:
+    """``rel`` as a join side: broadcast when it holds at most ``max_rows``
+    rows, else unchanged (a shuffle join).  ``max_rows=None`` broadcasts
+    unconditionally, for callers that know ``rel`` is bounded.
+
+    The probe COLLECTS up to ``max_rows``+1 rows: a ``limit().count()``
+    cannot short-circuit below a blocking aggregate, counting then joining
+    would run the aggregate twice, and a persisted relation would leak a
+    cache the caller never owns.  Below the cap the collected rows BECOME
+    the broadcast side, so the aggregate runs exactly once; above it the
+    shuffle join recomputes it once (pathological path only).  Driver
+    footprint: up to ``max_rows``+1 Row objects at a few hundred bytes
+    each — hundreds of MB at a 1M cap, the same order as the broadcast it
+    guards."""
+    if max_rows is None:
+        return F.broadcast(rel)
+    probe = rel.limit(max_rows + 1).collect()
+    if len(probe) > max_rows:
+        return rel
+    return F.broadcast(rel.sparkSession.createDataFrame(probe, schema=rel.schema))

@@ -145,9 +145,8 @@ class ExtractionPipeline:
         """
         if isinstance(pages, IceliteTable) and spark is None:
             raise ValueError("pass spark= when pages is an IceliteTable")
-        # (html byte counters intentionally absent: the input is scanned by
-        # two branches post-dispatch, so an input-side observe double-counts;
-        # bench.py measures MB/sec explicitly instead)
+        # (html byte counters intentionally absent: bench.py measures MB/sec
+        # explicitly instead)
         stats = {"groups": 0, "docs": 0, "errors": 0, "text_chars": 0}
 
         def tally(got: dict) -> None:

@@ -6,6 +6,9 @@ format, reference src/app/page.tsx:444-452)."""
 from __future__ import annotations
 
 import random
+import signal
+import time
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -351,6 +354,96 @@ def test_prev_chain_loop_is_bad_xref():
         b"/Root 1 0 R >>", b"/Root 1 0 R /Prev " + str(off).encode() + b" >>", 1
     )
     assert pdf_glyphs(looped)[1] == "bad_xref"
+
+
+def _handmade_pdf(objs: dict[int, bytes], root: int = 1) -> bytes:
+    """A classic-xref PDF holding ``objs`` verbatim (``N 0 obj <body>
+    endobj``); numbers missing from ``objs`` get free xref entries."""
+    out = bytearray(b"%PDF-1.4\n")
+    offs = {}
+    for n, body in sorted(objs.items()):
+        offs[n] = len(out)
+        out += b"%d 0 obj %s endobj\n" % (n, body)
+    xref, size = len(out), max(objs) + 1
+    out += b"xref\n0 %d\n" % size
+    for n in range(size):
+        out += b"%010d 00000 n \n" % offs[n] if n in offs else b"0000000000 65535 f \n"
+    out += b"trailer << /Size %d /Root %d 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (
+        size, root, xref,
+    )
+    return bytes(out)
+
+
+@contextmanager
+def _deadline(seconds: float):
+    """Fail (instead of hanging the suite) when the body outlives
+    ``seconds``; the alarm is a backstop, the elapsed check the assertion."""
+
+    def hang(signum, frame):
+        raise TimeoutError(f"kernel still running after {4 * seconds} s")
+
+    old = signal.signal(signal.SIGALRM, hang)
+    signal.setitimer(signal.ITIMER_REAL, 4 * seconds)
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
+    assert time.perf_counter() - t0 < seconds
+
+
+def test_self_referencing_root_is_bad_xref_within_deadline():
+    pdf = _handmade_pdf({1: b"1 0 R"})
+    with _deadline(0.5):
+        assert pdf_glyphs(pdf) == ([], "bad_xref")
+
+
+def test_shared_kids_dag_is_bad_page_tree_within_deadline():
+    """40 levels of ``/Kids [n 0 R n 0 R]``: 2**40 root-to-leaf paths
+    through 42 objects.  A node reached twice is not a tree."""
+    depth = 40
+    objs = {1: b"<< /Type /Catalog /Pages 2 0 R >>"}
+    for k in range(2, depth + 2):
+        objs[k] = b"<< /Type /Pages /Kids [%d 0 R %d 0 R] /Count %d >>" % (
+            k + 1, k + 1, 2 ** (depth + 2 - k),
+        )
+    objs[depth + 2] = b"<< /Type /Page /MediaBox [0 0 612 792] >>"
+    pdf = _handmade_pdf(objs)
+    with _deadline(0.5):
+        assert pdf_glyphs(pdf) == ([], "bad_page_tree")
+
+
+@pytest.mark.parametrize("section", ["table", "stream"])
+def test_incremental_free_entry_hides_older_definition(section):
+    """An update that frees object 4 (the page content) must not let the
+    base section's entry resurrect it: the reference is now to a free
+    object (bad_xref), while the base file alone still parses."""
+    content = b"BT /F1 10 Tf 72 700 Td (hi) Tj ET"
+    base = _handmade_pdf(
+        {
+            1: b"<< /Type /Catalog /Pages 2 0 R >>",
+            2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            3: b"<< /Type /Page /MediaBox [0 0 612 792] /Contents 4 0 R "
+            b"/Resources << /Font << /F1 5 0 R >> >> >>",
+            4: b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+            5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Courier >>",
+        }
+    )
+    rows, err = pdf_glyphs(base)
+    assert err is None and "".join(r[1] for r in rows) == "hi"
+    prev = int(base[base.rindex(b"startxref") + 9 : base.rindex(b"%%EOF")])
+    off = len(base)
+    if section == "table":
+        update = b"xref\n4 1\n0000000000 00001 f \ntrailer << /Size 6 /Root 1 0 R /Prev %d >>\n" % prev
+    else:
+        entry = bytes([0, 0, 0, 0, 0, 1])  # type 0 (free), next 0, gen 1
+        update = (
+            b"6 0 obj << /Type /XRef /W [1 4 1] /Index [4 1] /Size 7 /Root 1 0 R "
+            b"/Prev %d /Length 6 >>\nstream\n%s\nendstream endobj\n" % (prev, entry)
+        )
+    updated = base + update + b"startxref\n%d\n%%%%EOF\n" % off
+    assert pdf_glyphs(updated) == ([], "bad_xref")
 
 
 def test_mutation_fuzz_never_raises_and_tail_preserved():

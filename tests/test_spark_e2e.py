@@ -57,15 +57,40 @@ def test_extract_plan_is_vectorized_and_narrow(spark, tiny_dir):
     assert "ArrowEvalPython" in plan  # vectorized UDF channel
     assert "BatchEvalPython" not in plan  # no per-row Python
     assert "Exchange" not in plan  # zero shuffles in the extraction stage
-    # wet branch: the normalize UDF feeds THREE projections (text,
-    # n_blocks, error) — pin that Catalyst dedups them to ONE
-    # ArrowEvalPython (the inferred-notnull trap would show up here as 2+)
-    wet = extract_pages(
-        pages.withColumn("html", F.lit(None).cast("binary")), engine="wet"
-    )
+    # all-wet input: the UDF result feeds FOUR projections (text, spans,
+    # n_blocks, error) — pin that they share ONE ArrowEvalPython
+    wet = extract_pages(pages.withColumn("html", F.lit(None).cast("binary")))
     wplan = wet._jdf.queryExecution().executedPlan().toString()
     assert wplan.count("ArrowEvalPython") == 1
     assert "Exchange" not in wplan
+
+
+@pytest.mark.parametrize(
+    "downstream",
+    [
+        lambda df: df,
+        lambda df: df.filter(F.col("error").isNull()),
+        lambda df: df.filter(F.col("text") != ""),
+    ],
+    ids=["none", "filter_error", "filter_text"],
+)
+def test_extract_plan_one_scan_one_udf(spark, tiny_dir, downstream):
+    """E4 dispatch is per row inside ONE arrow UDF: a mixed dom/wet input
+    plans one parquet scan and one ArrowEvalPython — no filtered branches
+    joined by a Union.  A downstream filter on a result field must not be
+    pushed below the projection as a second UDF evaluation (the
+    inferred-notnull trap, CLAUDE.md)."""
+    pages = spark.read.parquet(f"{tiny_dir}/pages.parquet")
+    mixed = pages.withColumn(
+        "html", F.when(F.col("url").endswith("0"), None).otherwise(F.col("html"))
+    )
+    df = downstream(extract_pages(mixed))
+    df.write.format("noop").mode("overwrite").save()  # the plan that ran
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
+    assert plan.count("ArrowEvalPython") == 1
+    assert "Union" not in plan
+    assert "Exchange" not in plan
 
 
 def test_engine_dispatch(spark, tiny_dir):

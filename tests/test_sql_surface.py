@@ -11,18 +11,31 @@ from ocr_spark.sql import register
 
 
 def test_sql_extract(spark, tiny_dir):
+    """``ocr_extract(html, text)`` is the same UDF ``extract_pages`` runs:
+    html rows match the DOM golden, html-less rows fall back to the crawl
+    text and match the generator's independent ``wet_text`` golden."""
     register(spark)
-    spark.read.parquet(f"{tiny_dir}/pages.parquet").createOrReplaceTempView("pages_v")
+    pages = spark.read.parquet(f"{tiny_dir}/pages.parquet")
+    pages.withColumn(
+        "html", F.when(F.col("url").endswith("0"), None).otherwise(F.col("html"))
+    ).createOrReplaceTempView("pages_v")
     got = spark.sql(
-        "SELECT url, ocr_extract(html).text AS text, ocr_extract(html).error AS err "
-        "FROM pages_v"
+        "SELECT url, html IS NULL AS wet, r.text AS text, r.error AS err "
+        "FROM (SELECT url, html, ocr_extract(html, text) AS r FROM pages_v)"
     )
     golden = spark.read.parquet(f"{tiny_dir}/golden_pages.parquet").select(
-        "url", F.col("text").alias("gtext")
+        "url",
+        F.col("text").alias("gtext"),
+        F.coalesce("wet_text", F.lit("")).alias("gwet"),
     )
     j = got.join(golden, "url")
     assert j.count() == 100
-    assert j.filter(F.col("text") != F.col("gtext")).count() == 0
+    n_wet = j.filter("wet").count()
+    assert 0 < n_wet < 100
+    want = F.when(F.col("wet"), F.col("gwet")).otherwise(F.col("gtext"))
+    assert j.filter(F.col("text") != want).count() == 0
+    # an html-less row with no crawl text is the E6 empty error, not a crash
+    assert j.filter(F.col("wet") & (F.col("gwet") == "") & F.col("err").isNull()).count() == 0
 
 
 def test_sql_structure_and_lang(spark, tiny_dir):

@@ -58,9 +58,9 @@ def main() -> None:
         "Generated by `python tools/dump_plans.py` on sf0.01 / tiny fixtures.",
         "Expression ids normalized to `#N`.  What to look for:",
         "",
-        "- **extract_pages**: `PushedFilters` on the scan, a single",
-        "  `ArrowEvalPython`, and NO `Exchange` — the 100 TB stage is",
-        "  embarrassingly parallel.",
+        "- **extract_pages**: one scan, a single `ArrowEvalPython` (the",
+        "  dom/wet dispatch is per row inside the UDF, so no `Union`), and",
+        "  NO `Exchange` — the 100 TB stage is embarrassingly parallel.",
         "- **pdf_layout**: scan -> ONE MapInArrow -> filter, NO Exchange —",
         "  the fused PDF-bytes front door has the same shape as extraction.",
         "- **dedup_exact**: one hash-partitioned `Exchange` on the md5, with",
