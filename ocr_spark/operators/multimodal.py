@@ -10,16 +10,22 @@ vs box walker) and the goldens derive from generator PARAMETERS, never
 from parsing — so an oracle match is evidence of a correct codec, not a
 shared bug.  Per-row error taxonomies throughout (E6 semantics: errors
 recorded in the row, never raised).
+
+Every operator here is one per-payload emitter run by the shared byte
+kernel loop (``operators.payloads.map_payloads``, one ``mapInArrow`` over
+``(media_id, payload)`` after the ``kind`` filter), with its output schema
+declared once at module level.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ocr_spark.operators.payloads import map_payloads
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -29,6 +35,33 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("content_type", T.StringType(), True),
     ]
 )
+
+
+def _keyed(field: str, dtype: T.DataType) -> T.StructType:
+    """Output schema of a one-struct-per-payload operator."""
+    return T.StructType(
+        [
+            T.StructField("media_id", T.LongType(), False),
+            T.StructField(field, dtype, False),
+        ]
+    )
+
+
+def _one_struct(kernel):
+    """Emitter for a kernel that maps one payload to one struct value."""
+
+    def emit(out, mid, payload):
+        out.append((mid, kernel(payload)))
+
+    return emit
+
+
+def _map_kind(media: DataFrame, kind: str, emit, schema: T.StructType) -> DataFrame:
+    """``emit`` over the payloads of ``media``'s ``kind`` rows."""
+    return map_payloads(
+        media.filter(F.col("kind") == kind), "media_id", "payload", emit, schema
+    )
+
 
 IMAGE_META_TYPE = T.StructType(
     [
@@ -40,27 +73,15 @@ IMAGE_META_TYPE = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
-
-
-def _fake_decode(payload: bytes | None) -> dict:
-    if payload is None or len(payload) == 0:
-        return {
-            "width": 0, "height": 0, "n_channels": 0,
-            "sha256": "", "pixel_sha256": "", "error": "EMPTY_INPUT",
-        }
-    h = hashlib.sha256(payload).hexdigest()
-    # deterministic fake geometry derived from the digest
-    return {
-        "width": 64 + int(h[:4], 16) % 1984,
-        "height": 64 + int(h[4:8], 16) % 1984,
-        "n_channels": 1 + int(h[8], 16) % 4,
-        "sha256": h,
-        "pixel_sha256": "",
-        "error": None,
-    }
-
+IMAGE_META_SCHEMA = _keyed("meta", IMAGE_META_TYPE)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+# Work bound of the decode: the most unfiltered scanline bytes
+# ((1 + w*ch) * h) an IHDR may declare — a 1024 x 1024 RGBA image.  The
+# pure-Python unfilter walks them one at a time, so this caps one image's
+# work: an all-Paeth file at the bound decodes in ~2.5 s on one core of a
+# 4-vCPU host, where a forged 8k x 8k RGBA header would cost minutes.
+PNG_MAX_RAW_BYTES = (1 + 1024 * 4) * 1024
 # PNG color type -> sample channels (3 = palette indices, 1 sample/pixel)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
@@ -127,6 +148,8 @@ def _png_decode(payload: bytes | None) -> dict:
       UNSUPPORTED — IHDR parses (geometry reported) but the layout is a
         codec boundary: bit depth != 8, palette color, interlacing, or a
         nonzero compression/filter method;
+      TOO_LARGE — IHDR parses (geometry reported) but its unfiltered
+        size exceeds ``PNG_MAX_RAW_BYTES``: rejected before inflating;
       NO_IDAT — chunk walk found no pixel data;
       DECODE_ERROR — zlib inflate failed or a filter byte is invalid;
       TRUNCATED — fewer complete scanlines than IHDR's height:
@@ -171,6 +194,9 @@ def _png_decode_full(payload: bytes | None) -> tuple[dict, bytes | None]:
     if depth != 8 or ctype == 3 or comp != 0 or filt != 0 or interlace != 0:
         out["error"] = "UNSUPPORTED"
         return out, None
+    if (1 + w * ch) * h > PNG_MAX_RAW_BYTES:
+        out["error"] = "TOO_LARGE"
+        return out, None
     # chunk walk: 4-byte BE length, 4-byte type, body, 4-byte CRC (not
     # validated — same stance as the WAV parser toward RIFF padding)
     idat = bytearray()
@@ -190,14 +216,11 @@ def _png_decode_full(payload: bytes | None) -> tuple[dict, bytes | None]:
         return out, None
     try:
         # BOUNDED inflation: the unfilter consumes at most (1 + w*ch) * h
-        # bytes, so anything past that is semantically dead — and a zlib
-        # bomb (small IDAT inflating to GBs) must cost an error row, not
-        # executor memory.  The hard cap covers any sane 8-bit geometry
-        # (256 MB ~ 8k x 8k RGBA); forged headers past it land on the
-        # existing truncation semantics.
-        needed = min((1 + w * ch) * h, 1 << 28)
+        # bytes (<= PNG_MAX_RAW_BYTES, checked above), so anything past
+        # that is semantically dead — and a zlib bomb (small IDAT
+        # inflating to GBs) must cost an error row, not executor memory.
         d = zlib.decompressobj()
-        raw = d.decompress(bytes(idat), needed)
+        raw = d.decompress(bytes(idat), (1 + w * ch) * h)
     except zlib.error:
         out["error"] = "DECODE_ERROR"
         return out, None
@@ -211,34 +234,13 @@ def _png_decode_full(payload: bytes | None) -> tuple[dict, bytes | None]:
     return out, pixels
 
 
-def decode_images(media: DataFrame, deterministic_fake: bool = False) -> DataFrame:
-    """image rows -> decoded metadata via mapInPandas (Arrow batches carry
-    the binary payload; no base64, reference S3 eliminated).
-
-    The default decoder is the REAL stdlib PNG parser (:func:`_png_decode`
-    — inflate + unfilter + pixel digest, per-row errors, nothing raised);
-    ``deterministic_fake=True`` keeps the seeded fake that produces stable
-    metadata from the bytes alone, for plumbing tests that want arbitrary
-    payloads without constructing valid PNGs.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("meta", IMAGE_META_TYPE, False),
-        ]
-    )
-
-    def fn(batches):
-        decoder = _fake_decode if deterministic_fake else _png_decode
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "meta": [decoder(p) for p in pdf["payload"]],
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(fn, out_schema)
+def decode_images(media: DataFrame) -> DataFrame:
+    """image rows -> decoded metadata (Arrow batches carry the binary
+    payload; no base64, reference S3 eliminated).  The decoder is the REAL
+    stdlib PNG parser (:func:`_png_decode` — inflate + unfilter + pixel
+    digest): bytes that are not a decodable PNG get an error row, nothing
+    raised."""
+    return _map_kind(media, "image", _one_struct(_png_decode), IMAGE_META_SCHEMA)
 
 
 AUDIO_META_TYPE = T.StructType(
@@ -252,6 +254,7 @@ AUDIO_META_TYPE = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
+AUDIO_META_SCHEMA = _keyed("meta", AUDIO_META_TYPE)
 
 
 def _riff_fmt_data(payload: bytes):
@@ -330,26 +333,10 @@ def _wav_decode_ex(payload: bytes | None):
 
 
 def decode_audio(media: DataFrame) -> DataFrame:
-    """audio rows -> decoded metadata via mapInPandas (binary payload over
-    Arrow; same plumbing shape as ``decode_images``, but the decoder is a
-    real stdlib RIFF parse — no optional dependency, no stub)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("meta", AUDIO_META_TYPE, False),
-        ]
-    )
-
-    def fn(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "meta": [_wav_decode(p) for p in pdf["payload"]],
-                }
-            )
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(fn, out_schema)
+    """audio rows -> decoded metadata (binary payload over Arrow; same
+    plumbing shape as ``decode_images``, but the decoder is a real stdlib
+    RIFF parse — no optional dependency, no stub)."""
+    return _map_kind(media, "audio", _one_struct(_wav_decode), AUDIO_META_SCHEMA)
 
 
 AUDIO_FEATURES_TYPE = T.StructType(
@@ -360,6 +347,7 @@ AUDIO_FEATURES_TYPE = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
+AUDIO_FEATURES_SCHEMA = _keyed("feat", AUDIO_FEATURES_TYPE)
 
 
 def _wav_features(payload: bytes | None) -> dict:
@@ -406,30 +394,25 @@ def _wav_features(payload: bytes | None) -> dict:
 
 
 def audio_features(media: DataFrame) -> DataFrame:
-    """audio rows -> PCM features (peak amplitude, energy) via mapInPandas —
-    the feature-extract stage of the multimodal pipeline (decode ->
-    features -> filter/sample), with the same per-row error channel as the
-    metadata decode."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("feat", AUDIO_FEATURES_TYPE, False),
-        ]
+    """audio rows -> PCM features (peak amplitude, energy) — the
+    feature-extract stage of the multimodal pipeline (decode -> features
+    -> filter/sample), with the same per-row error channel as the metadata
+    decode."""
+    return _map_kind(
+        media, "audio", _one_struct(_wav_features), AUDIO_FEATURES_SCHEMA
     )
-
-    def fn(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "feat": [_wav_features(p) for p in pdf["payload"]],
-                }
-            )
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(fn, out_schema)
 
 
 RESIZE_T = 16  # frozen default thumbnail edge for resize_images
+RESIZED_IMAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("width", T.IntegerType(), False),
+        T.StructField("height", T.IntegerType(), False),
+        T.StructField("resized_sha256", T.StringType(), False),
+        T.StructField("error", T.StringType(), True),
+    ]
+)
 
 
 def _nn_resize(pixels: bytes, w: int, h: int, ch: int, t: int = RESIZE_T) -> bytes:
@@ -448,47 +431,22 @@ def _nn_resize(pixels: bytes, w: int, h: int, ch: int, t: int = RESIZE_T) -> byt
 
 
 def resize_images(media: DataFrame, size: int = RESIZE_T) -> DataFrame:
-    """image rows -> fixed-size NN thumbnail digest via mapInPandas: one
-    real decode (inflate + unfilter) feeding the resize kernel; rows whose
-    decode fails (or is TRUNCATED — a partial source has no well-defined
+    """image rows -> fixed-size NN thumbnail digest: one real decode
+    (inflate + unfilter) feeding the resize kernel; rows whose decode
+    fails (or is TRUNCATED — a partial source has no well-defined
     thumbnail) carry the decode taxonomy and an empty digest."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("resized_sha256", T.StringType(), False),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
 
-    def one(payload) -> dict:
+    def emit(out, mid, payload):
         meta, pixels = _png_decode_full(payload)
-        row = {
-            "width": meta["width"], "height": meta["height"],
-            "resized_sha256": "", "error": meta["error"],
-        }
+        digest = ""
         if meta["error"] is None and pixels is not None:
-            row["resized_sha256"] = hashlib.sha256(
+            digest = hashlib.sha256(
                 _nn_resize(pixels, meta["width"], meta["height"],
                            meta["n_channels"], size)
             ).hexdigest()
-        return row
+        out.append((mid, meta["width"], meta["height"], digest, meta["error"]))
 
-    def fn(batches):
-        for pdf in batches:
-            rows = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "width": [r["width"] for r in rows],
-                    "height": [r["height"] for r in rows],
-                    "resized_sha256": [r["resized_sha256"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(fn, out_schema)
+    return _map_kind(media, "image", emit, RESIZED_IMAGE_SCHEMA)
 
 
 VIDEO_META_TYPE = T.StructType(
@@ -501,6 +459,7 @@ VIDEO_META_TYPE = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
+VIDEO_META_SCHEMA = _keyed("meta", VIDEO_META_TYPE)
 
 
 def _mp4_boxes(payload: bytes, start: int, end: int):
@@ -588,26 +547,10 @@ def _mp4_decode(payload: bytes | None) -> dict:
 
 
 def decode_videos(media: DataFrame) -> DataFrame:
-    """video rows -> container metadata via mapInPandas (real ISO-BMFF
-    walk; per-frame sampling is ``sample_frames``, which parses the sample
-    tables for real)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("meta", VIDEO_META_TYPE, False),
-        ]
-    )
-
-    def fn(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "meta": [_mp4_decode(p) for p in pdf["payload"]],
-                }
-            )
-
-    return media.filter(F.col("kind") == "video").mapInPandas(fn, out_schema)
+    """video rows -> container metadata (real ISO-BMFF walk; per-frame
+    sampling is ``sample_frames``, which parses the sample tables for
+    real)."""
+    return _map_kind(media, "video", _one_struct(_mp4_decode), VIDEO_META_SCHEMA)
 
 
 def _mp4_sample_table(payload: bytes | None):
@@ -782,37 +725,22 @@ def sample_frames(
     (frame_idx -1) carrying the error code, never an exception.
     ``hash_frames=False`` skips the per-frame digest (frame_sha256 = "")
     for consumers that only need the index/range plan — Catalyst cannot
-    prune work out of an opaque mapInPandas, so the skip must be explicit."""
+    prune work out of an opaque mapInArrow, so the skip must be explicit."""
 
-    def fn(batches):
-        for pdf in batches:
-            out = {k.name: [] for k in FRAME_SAMPLE_TYPE.fields}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                ts, pts, offs, sizes, err = _mp4_sample_table(p)
-                if err is not None:
-                    row = (int(mid), -1, 0, 0.0, -1, -1, "", err)
-                else:
-                    row = None
-                    for idx in range(0, len(sizes), every_n):
-                        o, sz = int(offs[idx]), int(sizes[idx])
-                        out["media_id"].append(int(mid))
-                        out["frame_idx"].append(idx)
-                        out["pts_units"].append(int(pts[idx]))
-                        out["pts_s"].append(round(int(pts[idx]) / ts, 6))
-                        out["byte_offset"].append(o)
-                        out["n_bytes"].append(sz)
-                        out["frame_sha256"].append(
-                            hashlib.sha256(p[o : o + sz]).hexdigest()
-                            if hash_frames
-                            else ""
-                        )
-                        out["error"].append(None)
-                if row is not None:
-                    for k, v in zip(out, row):
-                        out[k].append(v)
-            yield pd.DataFrame(out)
+    def emit(out, mid, p):
+        ts, pts, offs, sizes, err = _mp4_sample_table(p)
+        if err is not None:
+            out.append((mid, -1, 0, 0.0, -1, -1, "", err))
+            return
+        for idx in range(0, len(sizes), every_n):
+            o, sz = int(offs[idx]), int(sizes[idx])
+            digest = hashlib.sha256(p[o : o + sz]).hexdigest() if hash_frames else ""
+            out.append(
+                (mid, idx, int(pts[idx]), round(int(pts[idx]) / ts, 6), o, sz,
+                 digest, None)
+            )
 
-    return media.filter(F.col("kind") == "video").mapInPandas(fn, FRAME_SAMPLE_TYPE)
+    return _map_kind(media, "video", emit, FRAME_SAMPLE_TYPE)
 
 
 def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
@@ -922,54 +850,27 @@ def sample_frame_pixels(media: DataFrame, every_n: int = 30) -> DataFrame:
     semantics throughout — errors ride rows, never exceptions."""
     import numpy as np
 
-    def fn(batches):
-        for pdf in batches:
-            out = {k.name: [] for k in FRAME_PIXELS_TYPE.fields}
+    def emit(out, mid, p):
+        _ts, _pts, offs, sizes, err = _mp4_sample_table(p)
+        fourcc, w, h = "", 0, 0
+        if err is None:
+            fourcc, w, h, _depth, err = _mp4_visual_entry(p)
+        if err is None and (fourcc != "raw " or w <= 0 or h <= 0):
+            err = "UNSUPPORTED_CODEC"
+        if err is not None:
+            out.append((mid, -1, 0, 0, "", 0, 0, 0, err))
+            return
+        npx = w * h
+        for idx in range(0, len(sizes), every_n):
+            o, sz = int(offs[idx]), int(sizes[idx])
+            if sz != npx * 3:
+                out.append((mid, idx, w, h, "", 0, 0, 0, "BAD_FRAME_SIZE"))
+                continue
+            fb = p[o : o + sz]
+            sums = np.frombuffer(fb, dtype=np.uint8).reshape(npx, 3).sum(
+                axis=0, dtype=np.int64
+            )
+            means = (int(c) // npx for c in sums)
+            out.append((mid, idx, w, h, hashlib.sha256(fb).hexdigest(), *means, None))
 
-            def sentinel(mid, err):
-                for k, v in zip(
-                    out, (int(mid), -1, 0, 0, "", 0, 0, 0, err)
-                ):
-                    out[k].append(v)
-
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                ts, pts, offs, sizes, err = _mp4_sample_table(p)
-                if err is not None:
-                    sentinel(mid, err)
-                    continue
-                fourcc, w, h, depth, verr = _mp4_visual_entry(p)
-                if verr is not None:
-                    sentinel(mid, verr)
-                    continue
-                if fourcc != "raw " or w <= 0 or h <= 0:
-                    sentinel(mid, "UNSUPPORTED_CODEC")
-                    continue
-                npx = w * h
-                for idx in range(0, len(sizes), every_n):
-                    o, sz = int(offs[idx]), int(sizes[idx])
-                    fb = p[o : o + sz]
-                    if sz != npx * 3:
-                        for k, v in zip(
-                            out,
-                            (int(mid), idx, w, h, "", 0, 0, 0, "BAD_FRAME_SIZE"),
-                        ):
-                            out[k].append(v)
-                        continue
-                    arr = np.frombuffer(fb, dtype=np.uint8).reshape(npx, 3)
-                    sums = arr.sum(axis=0, dtype=np.int64)
-                    row = (
-                        int(mid),
-                        idx,
-                        w,
-                        h,
-                        hashlib.sha256(fb).hexdigest(),
-                        int(sums[0]) // npx,
-                        int(sums[1]) // npx,
-                        int(sums[2]) // npx,
-                        None,
-                    )
-                    for k, v in zip(out, row):
-                        out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return media.filter(F.col("kind") == "video").mapInPandas(fn, FRAME_PIXELS_TYPE)
+    return _map_kind(media, "video", emit, FRAME_PIXELS_TYPE)

@@ -10,9 +10,10 @@ is the code-point XY-cut kernel (functions/layout.py L1-L4,
 — so the full engine-A chain runs from raw document bytes with no
 fixture-born glyph table in the path.
 
-Structure: ONE ``mapInArrow`` batch loop (``_map_docs``) parses each
-document once with ``pdf_glyphs`` and hands ``(out, doc_id, rows, err)``
-to a small per-output emitter — glyph rows, page rows, or one doc row.
+Structure: each operator is one small emitter run by the shared payload
+batch loop (``operators.payloads.map_payloads``, one ``mapInArrow``):
+the emitter parses its document once with ``pdf_glyphs`` and appends
+glyph rows, page rows, or one doc row.
 Each output schema is declared once, as a Spark ``StructType``.  A
 document's rows arrive page-contiguous, so ``_page_texts`` cuts pages
 with one diff over the page column — no sort, no grouping shuffle.
@@ -28,10 +29,10 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocr_spark.functions.layout import page_text_codes
 from ocr_spark.functions.pdf import pdf_glyphs
+from ocr_spark.operators.payloads import map_payloads
 
 PDF_GLYPHS_SCHEMA = T.StructType(
     [
@@ -84,7 +85,8 @@ def _page_texts(rows: list[tuple]) -> list[tuple[int, str]]:
     ]
 
 
-def _emit_glyphs(out, did, rows, err):
+def _emit_glyphs(out, did, pdf):
+    rows, err = pdf_glyphs(pdf)
     if err is not None:
         # E6 sentinel row: the error travels in the row, page/glyph slots
         # zeroed (mirrors sample_frames' frame_idx -1 row)
@@ -95,37 +97,16 @@ def _emit_glyphs(out, did, rows, err):
     )
 
 
-def _emit_pages(out, did, rows, err):
+def _emit_pages(out, did, pdf):
+    rows, err = pdf_glyphs(pdf)
     pages = _page_texts(rows) if err is None else [(0, "")]
     out.extend((did, page, text, err) for page, text in pages)
 
 
-def _emit_doc(out, did, rows, err):
+def _emit_doc(out, did, pdf):
+    rows, err = pdf_glyphs(pdf)
     texts = [text for _, text in _page_texts(rows)]
     out.append((did, "\n".join(texts), len(texts), err))
-
-
-def _map_docs(docs: DataFrame, emit, schema: T.StructType) -> DataFrame:
-    """The one batch loop: (doc_id, pdf) -> ``emit``'s rows under ``schema``.
-    ``pdf_glyphs`` never raises (E6), so one bad document never aborts its
-    batch."""
-    arrow_schema = to_arrow_schema(schema)
-
-    def batches(it):
-        import pyarrow as pa
-
-        for batch in it:
-            out: list[tuple] = []
-            ids = batch.column("doc_id").to_pylist()
-            for did, payload in zip(ids, batch.column("pdf").to_pylist()):
-                emit(out, did, *pdf_glyphs(payload))
-            cols = list(zip(*out)) or [()] * len(arrow_schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
-                schema=arrow_schema,
-            )
-
-    return docs.select("doc_id", "pdf").mapInArrow(batches, schema)
 
 
 def pdf_to_glyphs(docs: DataFrame) -> DataFrame:
@@ -134,7 +115,7 @@ def pdf_to_glyphs(docs: DataFrame) -> DataFrame:
     Unparseable documents yield ONE sentinel row carrying the taxonomy code
     (``error`` column; P1-P7 codes), never an exception.  Zero-shuffle:
     each scan task parses its own documents."""
-    return _map_docs(docs, _emit_glyphs, PDF_GLYPHS_SCHEMA)
+    return map_payloads(docs, "doc_id", "pdf", _emit_glyphs, PDF_GLYPHS_SCHEMA)
 
 
 def pdf_to_page_text(docs: DataFrame) -> DataFrame:
@@ -144,7 +125,7 @@ def pdf_to_page_text(docs: DataFrame) -> DataFrame:
     layout branch's pyscan path: the channel, not the kernel, is the cost).
     Output rows: (doc_id, page, text, error); error docs yield one
     sentinel row with page 0 and empty text."""
-    return _map_docs(docs, _emit_pages, PDF_PAGE_TEXT_SCHEMA)
+    return map_payloads(docs, "doc_id", "pdf", _emit_pages, PDF_PAGE_TEXT_SCHEMA)
 
 
 def pdf_doc_records(docs: DataFrame) -> DataFrame:
@@ -156,4 +137,4 @@ def pdf_doc_records(docs: DataFrame) -> DataFrame:
     together, so the assembly groupBy the glyph branch needs does not
     exist here).  This is the transform the resumable pipeline runs for a
     PDF corpus (jobs/extract_job.py --format pdf)."""
-    return _map_docs(docs, _emit_doc, PDF_DOC_SCHEMA)
+    return map_payloads(docs, "doc_id", "pdf", _emit_doc, PDF_DOC_SCHEMA)

@@ -7,8 +7,9 @@ Spark-first:
 - file discovery and byte loading via the built-in ``binaryFile`` source
   (one row per WARC file — WARC files are the natural work unit since
   records inside one file are not individually seekable without an index);
-- record splitting + header parsing in ``mapInPandas`` (Arrow-batched, one
-  file's records exploded per input row);
+- record splitting + header parsing in the shared byte kernel loop
+  (``operators.payloads.map_payloads``: one ``mapInArrow`` over
+  ``(path, content)``, one file's records exploded per input row);
 - at 100 TB the parallelism unit is the file (Common Crawl ships ~1 GB
   WARCs, ~60k files per crawl) — far more files than executors, so
   file-granular tasks balance well; `spark.sql.files.maxPartitionBytes`
@@ -26,11 +27,12 @@ from __future__ import annotations
 import gzip
 import io
 from datetime import datetime, timezone
+from operator import itemgetter
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ocr_spark.operators.payloads import map_payloads
 
 WARC_PAGES_SCHEMA = T.StructType(
     [
@@ -43,6 +45,16 @@ WARC_PAGES_SCHEMA = T.StructType(
     ]
 )
 
+WARC_LINEAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("warc_file", T.StringType(), False),
+        T.StructField("n_pages", T.LongType(), False),
+        T.StructField("n_bad_records", T.LongType(), False),
+    ]
+)
+
+_GLOBS = {"warc": "*.warc*", "wet": "*.wet*"}
+_page_row = itemgetter(*WARC_PAGES_SCHEMA.fieldNames())
 _CRLF2 = b"\r\n\r\n"
 
 
@@ -59,7 +71,7 @@ def parse_warc_bytes(
     payload: bytes, path: str, mode: str = "warc", max_inflate: int = 4 << 30
 ) -> tuple[list[dict], int]:
     """One WARC file's bytes -> (page rows, n_bad_records).  Pure python —
-    unit-testable without Spark; wrapped in mapInPandas below.
+    unit-testable without Spark; run per file by ``map_payloads`` below.
 
     ``mode="warc"``: keep ``response`` records with a text/html payload —
     the html lands in the ``html`` column (raw-bytes branch).
@@ -105,6 +117,10 @@ def parse_warc_bytes(
         try:
             length = int(header[b"content-length"])
         except (KeyError, ValueError):
+            length = -1
+        if length < 0:
+            # missing, unparseable or negative (a negative length could
+            # point the cursor back at this very record: an endless loop)
             bad += 1
             nxt = payload.find(b"WARC/", head_end + 4)
             if nxt < 0:
@@ -166,32 +182,29 @@ def parse_warc_bytes(
     return rows, bad
 
 
-def _read_container(spark: SparkSession, path: str, mode: str, glob: str) -> DataFrame:
-    def fn(batches):
-        for pdf in batches:
-            out: list[dict] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                rows, _bad = parse_warc_bytes(bytes(content), p, mode)
-                out.extend(rows)
-            yield pd.DataFrame(
-                out,
-                columns=["url", "warc_ts", "html", "text", "lang", "warc_file"],
-            )
+def _map_files(spark: SparkSession, path: str, mode: str, emit, schema) -> DataFrame:
+    """``emit(out, path, content)`` over each ``mode`` container file."""
+    reader = spark.read.format("binaryFile").option("pathGlobFilter", _GLOBS[mode])
+    return map_payloads(reader.load(path), "path", "content", emit, schema)
 
-    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return files.select("path", "content").mapInPandas(fn, WARC_PAGES_SCHEMA)
+
+def _read_container(spark: SparkSession, path: str, mode: str) -> DataFrame:
+    def emit(out, p, content):
+        out.extend(map(_page_row, parse_warc_bytes(content, p, mode)[0]))
+
+    return _map_files(spark, path, mode, emit, WARC_PAGES_SCHEMA)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC files under ``path`` -> pages DataFrame (WARC_PAGES_SCHEMA)."""
-    return _read_container(spark, path, "warc", "*.warc*")
+    return _read_container(spark, path, "warc")
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
     """WET files under ``path`` -> pages DataFrame with the pre-extracted
     plain text in ``text`` (html is null) — Common Crawl's conversion
     sidecar, the input of the wet-normalize branch."""
-    return _read_container(spark, path, "wet", "*.wet*")
+    return _read_container(spark, path, "wet")
 
 
 def warc_lineage(spark: SparkSession, path: str, mode: str = "warc") -> DataFrame:
@@ -200,24 +213,11 @@ def warc_lineage(spark: SparkSession, path: str, mode: str = "warc") -> DataFram
     corrupt .wet.gz is indistinguishable from an empty one (read_wet
     yields zero rows either way; this channel is where the difference
     shows)."""
-    if mode not in ("warc", "wet"):
+    if mode not in _GLOBS:
         raise ValueError(f"mode must be 'warc' or 'wet', got {mode!r}")
-    schema = T.StructType(
-        [
-            T.StructField("warc_file", T.StringType(), False),
-            T.StructField("n_pages", T.LongType(), False),
-            T.StructField("n_bad_records", T.LongType(), False),
-        ]
-    )
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                ok, bad = parse_warc_bytes(bytes(content), p, mode)
-                rows.append({"warc_file": p, "n_pages": len(ok), "n_bad_records": bad})
-            yield pd.DataFrame(rows, columns=["warc_file", "n_pages", "n_bad_records"])
+    def emit(out, p, content):
+        ok, bad = parse_warc_bytes(content, p, mode)
+        out.append((p, len(ok), bad))
 
-    glob = "*.warc*" if mode == "warc" else "*.wet*"
-    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return files.select("path", "content").mapInPandas(fn, schema)
+    return _map_files(spark, path, mode, emit, WARC_LINEAGE_SCHEMA)

@@ -6,9 +6,6 @@ format, reference src/app/page.tsx:444-452)."""
 from __future__ import annotations
 
 import random
-import signal
-import time
-from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -251,17 +248,38 @@ def test_spark_pdf_page_text_matches_golden_and_composed(spark, pdf_tables):
     assert composed == golden
 
 
-@pytest.mark.parametrize(
-    "operator", ["pdf_to_glyphs", "pdf_to_page_text", "pdf_doc_records"]
-)
-def test_pdf_chain_plan_is_exchange_free(spark, pdf_tables, operator):
-    """Every PDF operator must stay a zero-Exchange scan->mapInArrow plan
-    (the same shape as the html extraction branch)."""
-    from ocr_spark.operators import pdf_ops
+# every (id, payload) byte kernel operator -> (module, tiny-tier input)
+_PAYLOAD_OPERATORS = {
+    "pdf_to_glyphs": ("operators.pdf_ops", "pdf_docs.parquet"),
+    "pdf_to_page_text": ("operators.pdf_ops", "pdf_docs.parquet"),
+    "pdf_doc_records": ("operators.pdf_ops", "pdf_docs.parquet"),
+    "decode_images": ("operators.multimodal", "image.parquet"),
+    "resize_images": ("operators.multimodal", "image.parquet"),
+    "decode_audio": ("operators.multimodal", "audio.parquet"),
+    "audio_features": ("operators.multimodal", "audio.parquet"),
+    "decode_videos": ("operators.multimodal", "video.parquet"),
+    "sample_frames": ("operators.multimodal", "video.parquet"),
+    "sample_frame_pixels": ("operators.multimodal", "video.parquet"),
+    "read_warc": ("sources.warc", "warc"),
+    "read_wet": ("sources.warc", "wet"),
+    "warc_lineage": ("sources.warc", "warc"),
+}
 
-    docs, _ = pdf_tables
-    plan = getattr(pdf_ops, operator)(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan and "Exchange" not in plan, plan
+
+@pytest.mark.parametrize("operator", list(_PAYLOAD_OPERATORS))
+def test_pdf_chain_plan_is_exchange_free(spark, tiny_dir, operator):
+    """Every byte kernel operator (PDF, PNG, WAV, MP4, WARC) must stay a
+    zero-Exchange scan -> ONE mapInArrow plan (the shared payload loop;
+    the html extraction branch's shape) — no pandas hop."""
+    import importlib
+
+    module, data = _PAYLOAD_OPERATORS[operator]
+    fn = getattr(importlib.import_module(f"ocr_spark.{module}"), operator)
+    src = f"{tiny_dir}/{data}"
+    df = fn(spark, src) if module == "sources.warc" else fn(spark.read.parquet(src))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan and "Exchange" not in plan, plan
 
 
 def test_fixture_coverage_guard(spark, small_dir):
@@ -374,32 +392,13 @@ def _handmade_pdf(objs: dict[int, bytes], root: int = 1) -> bytes:
     return bytes(out)
 
 
-@contextmanager
-def _deadline(seconds: float):
-    """Fail (instead of hanging the suite) when the body outlives
-    ``seconds``; the alarm is a backstop, the elapsed check the assertion."""
-
-    def hang(signum, frame):
-        raise TimeoutError(f"kernel still running after {4 * seconds} s")
-
-    old = signal.signal(signal.SIGALRM, hang)
-    signal.setitimer(signal.ITIMER_REAL, 4 * seconds)
-    t0 = time.perf_counter()
-    try:
-        yield
-    finally:
-        signal.setitimer(signal.ITIMER_REAL, 0)
-        signal.signal(signal.SIGALRM, old)
-    assert time.perf_counter() - t0 < seconds
-
-
-def test_self_referencing_root_is_bad_xref_within_deadline():
+def test_self_referencing_root_is_bad_xref_within_deadline(deadline):
     pdf = _handmade_pdf({1: b"1 0 R"})
-    with _deadline(0.5):
+    with deadline(0.5):
         assert pdf_glyphs(pdf) == ([], "bad_xref")
 
 
-def test_shared_kids_dag_is_bad_page_tree_within_deadline():
+def test_shared_kids_dag_is_bad_page_tree_within_deadline(deadline):
     """40 levels of ``/Kids [n 0 R n 0 R]``: 2**40 root-to-leaf paths
     through 42 objects.  A node reached twice is not a tree."""
     depth = 40
@@ -410,7 +409,7 @@ def test_shared_kids_dag_is_bad_page_tree_within_deadline():
         )
     objs[depth + 2] = b"<< /Type /Page /MediaBox [0 0 612 792] >>"
     pdf = _handmade_pdf(objs)
-    with _deadline(0.5):
+    with deadline(0.5):
         assert pdf_glyphs(pdf) == ([], "bad_page_tree")
 
 
@@ -446,10 +445,11 @@ def test_incremental_free_entry_hides_older_definition(section):
     assert pdf_glyphs(updated) == ([], "bad_xref")
 
 
-def test_mutation_fuzz_never_raises_and_tail_preserved():
+def test_mutation_fuzz_never_raises_and_tail_preserved(deadline):
     """Byte-flip mutations that PRESERVE the xref/trailer tail (so parsing
     reaches the object/content layers, unlike the truncation sweep) must
-    always land in the error channel or parse cleanly — never raise."""
+    always land in the error channel or parse cleanly — never raise, and
+    each within a deadline."""
     rng = random.Random("fuzz")
     pdf, grows, trows, err = gen.gen_pdf_doc(random.Random("fuzz-doc"), 1)
     assert err is None
@@ -459,7 +459,8 @@ def test_mutation_fuzz_never_raises_and_tail_preserved():
         for _ in range(rng.randint(1, 6)):
             i = rng.randrange(tail_start)  # mutate the body only
             b[i] = rng.randrange(256)
-        rows, code = pdf_glyphs(bytes(b))
+        with deadline(0.5):
+            rows, code = pdf_glyphs(bytes(b))
         assert code is None or code in pdfmod.ERROR_CODES, code
     # content-layer type confusion specifically (operand of the wrong
     # type reaching an operator) must be recorded, not raised
@@ -470,7 +471,8 @@ def test_mutation_fuzz_never_raises_and_tail_preserved():
         b"BT /F1 10 Tf [(a) (b) 5 <41>] TJ T* ET",  # T* with no leading set is fine; junk TJ ok
     ]
     for content in bad_contents:
-        rows, code = pdf_glyphs(_minimal_pdf(content))
+        with deadline(0.5):
+            rows, code = pdf_glyphs(_minimal_pdf(content))
         assert code is None or code in pdfmod.ERROR_CODES, (content, code)
 
 

@@ -291,18 +291,24 @@ def test_simhash_column_deterministic(spark):
 # multimodal plumbing
 # ---------------------------------------------------------------------------
 def test_multimodal_fake_decode(spark):
+    """decode_images over arbitrary (non-PNG) bytes: the real decoder
+    returns an error row for any payload — kind filter, EMPTY_INPUT,
+    NOT_PNG and a deterministic payload digest."""
+    import hashlib
+
     rows = [
         Row(media_id=1, kind="image", payload=b"imagebytes1", content_type="image/png"),
         Row(media_id=2, kind="image", payload=b"", content_type="image/png"),
         Row(media_id=3, kind="audio", payload=b"au", content_type="audio/wav"),
     ]
     media = spark.createDataFrame(rows)
-    out = {r["media_id"]: r["meta"] for r in decode_images(media, deterministic_fake=True).collect()}
+    out = {r["media_id"]: r["meta"] for r in decode_images(media).collect()}
     assert set(out) == {1, 2}  # audio filtered out
-    assert out[1]["width"] >= 64 and out[1]["error"] is None
+    assert out[1]["error"] == "NOT_PNG"
+    assert out[1]["sha256"] == hashlib.sha256(b"imagebytes1").hexdigest()
     assert out[2]["error"] == "EMPTY_INPUT"
     # determinism
-    again = decode_images(media, deterministic_fake=True).filter(F.col("media_id") == 1).first()
+    again = decode_images(media).filter(F.col("media_id") == 1).first()
     assert again["meta"]["sha256"] == out[1]["sha256"]
 
 
@@ -1111,31 +1117,48 @@ def test_video_decode_matches_parameter_golden(spark, tiny_dir):
     assert {None, "EMPTY_INPUT", "NOT_MP4", "NO_MOOV", "NO_MVHD", "TRUNCATED"} <= errs
 
 
-def test_media_parsers_never_raise_fuzz():
-    """E6 hard guarantee: the RIFF and ISO-BMFF parsers return an error
-    struct for ARBITRARY bytes — including adversarial size fields — and
-    never raise (hypothesis fuzz + crafted overflow headers)."""
+def test_media_parsers_never_raise_fuzz(deadline):
+    """E6 hard guarantee: the RIFF, ISO-BMFF and PNG parsers return an
+    error struct for ARBITRARY bytes — including adversarial size fields —
+    and never raise, each payload within a deadline (hypothesis fuzz +
+    crafted overflow headers)."""
+    import struct
+    import zlib
+
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from ocr_spark.operators.multimodal import (
+        _PNG_SIG,
         _mp4_decode,
         _mp4_sample_table,
+        _png_decode,
         _wav_decode,
+        _wav_features,
     )
 
+    def parse_all(b):
+        with deadline(0.5):
+            for fn in (_wav_decode, _mp4_decode, _png_decode):
+                out = fn(b)
+                assert set(out) >= {"sha256", "error"}
+            assert set(_wav_features(b)) >= {"n_frames", "error"}
+            _mp4_sample_table(b)  # returns an error tuple, never raises
+
     @settings(max_examples=200, deadline=None)
-    @given(st.binary(max_size=256))
-    def fuzz(b):
-        for fn in (_wav_decode, _mp4_decode):
-            out = fn(b)
-            assert set(out) >= {"sha256", "error"}
-        _mp4_sample_table(b)  # returns an error tuple, never raises
+    @given(st.binary(max_size=256), st.booleans())
+    def fuzz(b, as_png):
+        # half the draws past the PNG signature, so IHDR/chunk parsing runs
+        parse_all(_PNG_SIG + b if as_png else b)
 
     fuzz()
-    # crafted: declared sizes far beyond the payload / zero-size loops
-    import struct
 
+    def ihdr(w, h, ctype=6):
+        body = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
+        return _PNG_SIG + struct.pack(">I", 13) + b"IHDR" + body + b"\0" * 4
+
+    bomb = zlib.compress(bytes(1 << 24))  # ~16 KB inflating to 16 MB
+    # crafted: declared sizes far beyond the payload / zero-size loops
     crafted = [
         b"RIFF" + struct.pack("<I", 0xFFFFFFFF) + b"WAVE" + b"fmt " + struct.pack("<I", 0xFFFFFFF0),
         b"RIFF" + struct.pack("<I", 4) + b"WAVE" + (b"junk" + struct.pack("<I", 0)) * 8,
@@ -1143,11 +1166,43 @@ def test_media_parsers_never_raise_fuzz():
         struct.pack(">I", 1) + b"ftyp" + struct.pack(">Q", 2**63) + b"isommoov",
         struct.pack(">I", 16) + b"ftyp" + b"isom\0\0\0\1"
         + struct.pack(">I", 0) + b"moov" + struct.pack(">I", 0xFFFFFFFF) + b"mvhd",
+        ihdr(0xFFFFFFFF, 0xFFFFFFFF),
+        ihdr(1, 1) + struct.pack(">I", 0xFFFFFFF0) + b"IDAT",
+        ihdr(64, 64) + struct.pack(">I", len(bomb)) + b"IDAT" + bomb,
     ]
     for b in crafted:
-        _wav_decode(b)
-        _mp4_decode(b)
-        _mp4_sample_table(b)
+        parse_all(b)
+
+
+def test_forged_png_geometry_is_too_large_within_deadline(deadline):
+    """An 8192 x 8192 RGBA IHDR over one all-Paeth zlib stream (~275 KB
+    that inflates to 268 MB of scanlines — minutes of pure-Python
+    unfilter) is rejected from its header: TOO_LARGE with the geometry
+    reported, before any inflation."""
+    import struct
+    import zlib
+
+    from ocr_spark.operators.multimodal import _PNG_SIG, PNG_MAX_RAW_BYTES, _png_decode
+
+    def chunk(t, b):
+        return struct.pack(">I", len(b)) + t + b + struct.pack(">I", zlib.crc32(t + b))
+
+    w = h = 8192
+    z = zlib.compressobj(9)
+    row = b"\x04" + bytes(4 * w)  # filter 4 = Paeth
+    idat = b"".join([z.compress(row) for _ in range(h)] + [z.flush()])
+    forged = (
+        _PNG_SIG
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0))
+        + chunk(b"IDAT", idat)
+        + chunk(b"IEND", b"")
+    )
+    assert len(forged) < 300_000 and (1 + 4 * w) * h > PNG_MAX_RAW_BYTES
+    with deadline(0.5):
+        out = _png_decode(forged)
+    assert out["error"] == "TOO_LARGE"
+    assert (out["width"], out["height"], out["n_channels"]) == (w, h, 4)
+    assert out["pixel_sha256"] == ""
 
 
 def test_image_decode_matches_parameter_golden(spark, tiny_dir):

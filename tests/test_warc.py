@@ -43,13 +43,20 @@ def test_parse_warc_basic():
     assert [(r["url"], r["html"]) for r in rows] == [("http://a/4", b"<p>up</p>")]
 
 
-def test_parse_warc_malformed_counted_not_fatal():
+def test_parse_warc_malformed_counted_not_fatal(deadline):
     good = _record(b"response", b"http://a/1", _http(b"<p>x</p>"))
     garbage = b"NOT A RECORD AT ALL\r\n\r\nmore junk\r\n\r\n"
     missing_len = b"WARC/1.0\r\nWARC-Type: response\r\n\r\nbody\r\n\r\n"
-    rows, bad = parse_warc_bytes(garbage + good + missing_len, "f")
+    # a Content-Length of minus its own header's length points the cursor
+    # back at the same record: one bad record, not an endless loop
+    neg = b"WARC/1.0\r\nWARC-Type: response\r\nContent-Length: -%d\r\n\r\n"
+    n = 1
+    while len(neg % n) != n:
+        n = len(neg % n)
+    with deadline(0.5):
+        rows, bad = parse_warc_bytes(garbage + good + missing_len + neg % n, "f")
     assert [r["url"] for r in rows] == ["http://a/1"]
-    assert bad >= 2
+    assert bad >= 3
 
 
 def test_parse_warc_truncated_tail():
@@ -147,3 +154,28 @@ def test_gzip_bomb_is_one_bad_container():
     # under the bound the same payload just parses (and finds no records)
     rows2, bad2 = parse_warc_bytes(bomb, "bomb.warc.gz", max_inflate=1 << 21)
     assert rows2 == []
+
+
+def test_warc_byte_flip_fuzz_within_deadline(tiny_dir, deadline):
+    """Seeded byte flips over the fixture WARC and WET files — both the
+    gzip containers and their inflated record streams — always return
+    (rows, n_bad) within a deadline: never raise, never hang."""
+    import gzip
+    import os
+    import random
+
+    rng = random.Random("warc-fuzz")
+    for mode in ("warc", "wet"):
+        d = f"{tiny_dir}/{mode}"
+        for name in sorted(os.listdir(d)):
+            with open(f"{d}/{name}", "rb") as f:
+                raw = f.read()
+            for payload in (raw, gzip.decompress(raw)):
+                for _ in range(25):
+                    b = bytearray(payload)
+                    for _ in range(rng.randint(1, 8)):
+                        b[rng.randrange(len(b))] = rng.randrange(256)
+                    with deadline(0.5):
+                        rows, bad = parse_warc_bytes(bytes(b), name, mode)
+                    assert bad >= 0 and all(r["warc_file"] == name for r in rows)
+
