@@ -193,11 +193,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_extract_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # clustered_input: the fixture glyph parquet is written with
-        # page-aligned row groups, so the plan is Exchange-free; a wrong
-        # clustering claim breaks THIS oracle loudly (count + hash)
         glyphs = spark.read.parquet(f"{fix}/glyphs.parquet")
-        return glyphs_to_page_text(glyphs, clustered_input=True).select(
+        return glyphs_to_page_text(glyphs).select(
             "doc_id", F.col("page").cast("bigint").alias("page"), "text"
         )
 
@@ -219,7 +216,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_spark.operators.layout_ops import pages_to_doc_text
 
         glyphs = spark.read.parquet(f"{fix}/glyphs.parquet")
-        docs = pages_to_doc_text(glyphs_to_page_text(glyphs, clustered_input=True))
+        docs = pages_to_doc_text(glyphs_to_page_text(glyphs))
         s = docs.select("doc_id", F.explode("spans").alias("s"))
         return s.select(
             "doc_id",
@@ -333,7 +330,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         glyphs = spark.read.parquet(f"{fix}/attendance_glyphs.parquet")
         doc_map = spark.read.parquet(f"{fix}/attendance_glyph_docs.parquet")
-        r = ocr_structured_records(glyphs, doc_map, clustered_input=True)
+        r = ocr_structured_records(glyphs, doc_map)
         return r.select(
             "url",
             F.col("fields.classe").alias("classe"),
@@ -358,9 +355,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         pdfs = spark.read.parquet(f"{fix}/attendance_pdfs.parquet")
         glyphs = pdf_to_glyphs(pdfs).filter(F.col("error").isNull()).drop("error")
-        doc_text = pages_to_doc_text(
-            glyphs_to_page_text(glyphs, clustered_input=True)
-        )
+        doc_text = pages_to_doc_text(glyphs_to_page_text(glyphs))
         keyed = doc_text.join(
             F.broadcast(pdfs.select("doc_id", "url")), "doc_id"
         ).select("url", "text")

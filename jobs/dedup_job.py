@@ -78,13 +78,13 @@ def main(argv: list[str] | None = None) -> dict:
     from pyspark.sql import SparkSession
 
     from ocr_spark.operators.corpus_filter import corpus_filter
-    from ocr_spark.operators.dedup import StaleTableError
     from ocr_spark.session import build_session
     from ocr_spark.sources.icelite import (
         CommitConflictError,
         IceliteError,
         IceliteTable,
         SchemaMismatchError,
+        StaleTableError,
     )
 
     spark = SparkSession.getActiveSession() or build_session(
@@ -206,7 +206,7 @@ def main(argv: list[str] | None = None) -> dict:
         print(f"error: table layout rejected: {e}", file=sys.stderr)
         raise SystemExit(4) from None
     except StaleTableError as e:
-        # stale/config-drifted signature table (materialize_minhash_signatures)
+        # stale/config-drifted signature table (IceliteTable.build_or_reuse)
         # — a layout rejection like the icelite ones, same exit code.  The
         # TYPED catch matters: a bare `except ValueError` would relabel any
         # unrelated ValueError from the job body as a table rejection and

@@ -1229,9 +1229,9 @@ def _write_page_aligned(path: str, table: pa.Table, target_bytes: int = 1 << 20)
     BOUNDARIES: a page never straddles a row group.  Parquet byte-range
     scan splits honor row-group boundaries, so every Spark task sees only
     WHOLE pages — the physical contract behind the layout branch's
-    zero-Exchange path (``layout_ops.glyphs_to_page_text(
-    clustered_input=True)``).  Groups still target ~1 MB (the v15 lesson:
-    group count drives scan cost), they just end on the next page edge."""
+    task-side scan (``layout_ops.glyphs_to_page_text_pyscan``).  Groups
+    still target ~1 MB (the v15 lesson: group count drives scan cost),
+    they just end on the next page edge."""
     import numpy as np
 
     d = table["doc_id"].to_numpy()

@@ -27,14 +27,7 @@ from pyspark.sql import types as T
 
 from ocr_spark.functions import textstats as K
 from ocr_spark.plans.partitioning import guarded_broadcast
-
-
-class StaleTableError(ValueError):
-    """A materialized signature/gram table was built with different
-    parameters or over a drifted doc set — drop the table to rebuild.
-    Subclasses ValueError for backward compatibility; CLI entry points
-    catch THIS type (not bare ValueError) to map table rejections to
-    their layout exit code without swallowing unrelated ValueErrors."""
+from ocr_spark.sources.icelite import StaleTableError  # noqa: F401  (re-export)
 
 
 def _capped_self_join_sides(
@@ -156,80 +149,35 @@ def materialize_minhash_signatures(
     dataset_token: str | None = None,
     check_count: bool = True,
 ) -> DataFrame:
-    """Compute minhash signatures and persist them to an icelite table
-    (atomic commit), returning the materialized relation.  If the table
-    already has a committed snapshot it is REUSED — the restart/resume
-    path for ``dedup_pipeline``: a crashed run recomputes nothing that
-    committed, and repeated calls are free.  At 100 TB the signature
-    relation (~512 B/doc, ~0.5 TB at 10^9 docs) must be a table, not an
-    executor-memory cache (VERDICT r2 "What's wrong" #3); callers own
-    invalidation (drop the table when the corpus changes).
-
-    ``table``: an ``ocr_spark.sources.icelite.IceliteTable`` keyed on
-    ``doc_id``.
+    """Compute minhash signatures into ``table`` (an
+    ``ocr_spark.sources.icelite.IceliteTable`` keyed on ``doc_id``), or
+    reuse the ones it holds — the restart/resume path for
+    ``dedup_pipeline``; the reuse rule is ``IceliteTable.build_or_reuse``.
+    At 100 TB the signature relation (~512 B/doc, ~0.5 TB at 10^9 docs)
+    must be a table, not an executor-memory cache (VERDICT r2 "What's
+    wrong" #3).
 
     ``dataset_token``: an identity string for the INPUT DOC SET (e.g. a
-    digest of the upstream filter parameters) — recorded at build time and
-    validated on reuse.  A stale table whose doc set drifted from ``df``
-    would silently mis-cluster: docs without a signature row never enter
-    the banded join, and a pair whose min-id member left the corpus drops
-    the survivor as a 'duplicate' of a ghost.
+    digest of the upstream filter parameters), compared on reuse.  A stale
+    table whose doc set drifted from ``df`` would silently mis-cluster:
+    docs without a signature row never enter the banded join, and a pair
+    whose min-id member left the corpus drops the survivor as a
+    'duplicate' of a ghost.
 
-    ``check_count``: with the default True, reuse also compares the
-    table's row count against ``df.count()`` to catch input drift the
-    token can't see — note that count RE-EXECUTES ``df``'s upstream plan
-    once per reuse call, so a caller whose upstream is expensive (e.g. the
-    full rules+dedup pipeline in ``corpus_filter``) should instead fold
-    the input's CONTENT identity into ``dataset_token`` and pass
-    ``check_count=False``.  The token must cover content (count + a text
-    digest, as ``corpus_filter`` does), not count alone: a raw count is
-    strictly weaker than this check — an equal-cardinality text drift
-    (re-extracted docs) changes the kept set without changing the count."""
-    spark = df.sparkSession
-    if table.exists() and table.row_count() > 0:
-        # reuse only a table built with the SAME parameters — 64-wide
-        # signatures served to a 128-perm caller would verify est_jaccard
-        # against the wrong denominator with no error
-        stored = next(
-            (
-                {
-                    "num_perm": s.metadata["num_perm"],
-                    "bands": s.metadata["bands"],
-                    "dataset_token": s.metadata.get("dataset_token"),
-                }
-                for s in table.snapshots()
-                if s.metadata.get("op") == "minhash_signatures"
-            ),
-            None,
-        )
-        want = {"num_perm": num_perm, "bands": bands, "dataset_token": dataset_token}
-        if stored != want:
-            raise StaleTableError(
-                f"signature table {table.root} was built with {stored}, "
-                f"requested {want} — drop the table to rebuild"
-            )
-        if check_count:
-            n_df, n_tbl = df.count(), table.row_count()
-            if n_df != n_tbl:
-                raise StaleTableError(
-                    f"signature table {table.root} holds {n_tbl} signatures but "
-                    f"the input has {n_df} docs — the doc set drifted since the "
-                    "table was built; drop the table to rebuild"
-                )
-        return table.read(spark)
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, bands)
-    table.append(
-        sigs,
-        metadata={
-            "op": "minhash_signatures",
-            "num_perm": num_perm,
-            "bands": bands,
-            "dataset_token": dataset_token,
-        },
+    ``check_count``: the reuse drift check (``df.count()`` against the
+    table's row count).  The count RE-EXECUTES ``df``'s upstream plan, so
+    a caller whose upstream is expensive (``corpus_filter``) instead folds
+    the input's CONTENT identity (count + a text digest — a raw count
+    misses an equal-cardinality text drift) into ``dataset_token`` and
+    passes ``check_count=False``."""
+    sigs, _ = table.build_or_reuse(
+        df,
+        "minhash_signatures",
+        {"num_perm": num_perm, "bands": bands, "dataset_token": dataset_token},
+        lambda d: (minhash_signatures(d, id_col, text_col, num_perm, bands), {}),
+        check_drift=check_count,
     )
-    if table.row_count() == 0:  # empty input: nothing landed, nothing to read
-        return sigs
-    return table.read(spark)
+    return sigs
 
 
 def minhash_dup_pairs(
@@ -459,66 +407,25 @@ def materialize_ngram_grams(
     n: int = 3,
     dataset_token: str | None = None,
 ) -> DataFrame:
-    """Explode the corpus's distinct word n-grams and persist the
-    ``(doc_id, gram)`` relation to an icelite table (atomic commit),
-    returning the materialized relation — the 100 TB path for
+    """Explode the corpus's distinct word n-grams into ``table`` as the
+    ``(doc_id, gram)`` relation, or reuse the relation it holds (the rule:
+    ``IceliteTable.build_or_reuse``) — the 100 TB path for
     :func:`ngram_jaccard_pairs`: the gram relation feeds four consumers,
     and an executor-memory ``.cache()`` of it does not survive restarts or
-    fit memory at web scale (the same argument as
-    :func:`materialize_minhash_signatures` for signatures).
-
-    Reuse semantics mirror the signature table: a committed snapshot built
-    with the same ``(n, dataset_token)`` is returned as-is (a rerun
-    recomputes nothing); a parameter or token mismatch raises.  Input
-    drift is caught by comparing ``df.count()`` against the INPUT doc
-    count recorded in the build snapshot's metadata (the gram row count
-    itself is not comparable to the doc count).  Note the drift check
-    re-executes ``df``'s upstream plan once per reuse — callers with an
-    expensive upstream should fold a content digest into
-    ``dataset_token`` and keep the table dropped-on-change instead.
-    """
+    fit memory at web scale.  The build records the INPUT doc count as
+    ``input_docs``, since the gram row count is not comparable to it."""
     from ocr_spark.operators.corpus_ops import exploded_word_ngrams
 
-    spark = df.sparkSession
-    if table.exists() and table.row_count() > 0:
-        stored = next(
-            (
-                {
-                    "n": s.metadata["n"],
-                    "dataset_token": s.metadata.get("dataset_token"),
-                    "input_docs": s.metadata.get("input_docs"),
-                }
-                for s in table.snapshots()
-                if s.metadata.get("op") == "ngram_grams"
-            ),
-            None,
-        )
-        if stored is None or stored["n"] != n or stored["dataset_token"] != dataset_token:
-            raise StaleTableError(
-                f"gram table {table.root} was built with {stored}, requested "
-                f"n={n} dataset_token={dataset_token} — drop the table to rebuild"
-            )
-        n_df = df.count()
-        if n_df != stored["input_docs"]:
-            raise StaleTableError(
-                f"gram table {table.root} was built over {stored['input_docs']} "
-                f"docs but the input has {n_df} — the doc set drifted since "
-                "the table was built; drop the table to rebuild"
-            )
-        return table.read(spark)
-    grams = exploded_word_ngrams(df, id_col, text_col, n, out_id="doc_id")
-    table.append(
-        grams,
-        metadata={
-            "op": "ngram_grams",
-            "n": n,
-            "dataset_token": dataset_token,
-            "input_docs": df.count(),
-        },
+    grams, _ = table.build_or_reuse(
+        df,
+        "ngram_grams",
+        {"n": n, "dataset_token": dataset_token},
+        lambda d: (
+            exploded_word_ngrams(d, id_col, text_col, n, out_id="doc_id"),
+            {"input_docs": d.count()},
+        ),
     )
-    if table.row_count() == 0:  # empty input: nothing landed, nothing to read
-        return grams
-    return table.read(spark)
+    return grams
 
 
 def ngram_jaccard_pairs(

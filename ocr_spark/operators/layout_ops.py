@@ -42,9 +42,9 @@ def _emit_pages(cols, complete_upto: int, seen: set):
     """Process contiguous (doc_id, page) groups in cols[:complete_upto];
     returns an output RecordBatch (or None) — caller keeps the rest
     pending.  ``seen`` guards contiguity: a key reappearing after its run
-    closed means the input is NOT page-contiguous in this task
-    (interleaved rows, or a clustered-input claim on an unclustered table)
-    — emitting would silently split the page into fragments, so raise."""
+    closed means the input is NOT page-contiguous in this task (e.g. a
+    pyscan file whose row groups interleave pages) — emitting would
+    silently split the page into fragments, so raise."""
     import pyarrow as pa
 
     if complete_upto == 0:
@@ -63,8 +63,8 @@ def _emit_pages(cols, complete_upto: int, seen: set):
         if key in seen:
             raise ValueError(
                 f"glyph key {key} reappeared after its contiguous run "
-                "closed — input is not page-contiguous; use the "
-                "default shuffled path for unclustered glyph tables"
+                "closed — input is not page-contiguous; use "
+                "glyphs_to_page_text for unclustered glyph tables"
             )
         seen.add(key)
         out_doc.append(key[0])
@@ -154,29 +154,19 @@ def _pages_arrow_fn(batches):
         yield rb
 
 
-def glyphs_to_page_text(glyphs: DataFrame, clustered_input: bool = False) -> DataFrame:
-    """glyphs -> (doc_id, page, text) in recovered reading order.
-
-    ``clustered_input=True`` skips the repartition+sort ENTIRELY — a
-    zero-Exchange plan, the same shape as the html extraction branch — and
-    is valid when the physical layout guarantees every scan task sees only
-    WHOLE pages in contiguous runs: parquet written with row groups
-    flushed at (doc_id, page) boundaries (byte-range splits honor
-    row-group edges; see ``fixtures/generator._write_page_aligned``), or
-    an icelite table bucketed on doc_id.  This is the 100 TB default for
-    OWNED glyph tables: the raw-glyph shuffle it removes is the single
-    largest byte mover in the branch (~23M x 48 B rows at the bench tier —
-    measured 1.9x end-to-end).  A page straddling tasks under a WRONG
-    clustering claim is caught two ways: a key reappearing within a task
-    raises in the kernel, and cross-task splits break the golden-parquet
-    oracle (row count + hash).  Default (False) keeps the shuffled path —
-    correct for ANY input layout."""
+def glyphs_to_page_text(glyphs: DataFrame) -> DataFrame:
+    """glyphs -> (doc_id, page, text) in recovered reading order, for ANY
+    input layout: one repartition+sort on (doc_id, page) makes every page
+    a contiguous run in one task.  Page-aligned parquet files have the
+    faster :func:`glyphs_to_page_text_pyscan`."""
     num = glyphs.select(
         "doc_id", "page", F.ascii("ch").alias("cp"), "x0", "y0", "x1", "y1"
     )
-    if not clustered_input:
-        num = num.repartition("doc_id", "page").sortWithinPartitions("doc_id", "page")
-    return num.mapInArrow(_pages_arrow_fn, PAGE_TEXT_SCHEMA)
+    return (
+        num.repartition("doc_id", "page")
+        .sortWithinPartitions("doc_id", "page")
+        .mapInArrow(_pages_arrow_fn, PAGE_TEXT_SCHEMA)
+    )
 
 
 def _resolve_fs(path: str):
@@ -343,9 +333,9 @@ def glyphs_to_page_text_pyscan(
     row groups directly in the Python workers removes that conversion:
     measured ~5x end-to-end vs the channel path.
 
-    Correctness needs the same physical contract as ``clustered_input=True``
-    (row groups flushed at page boundaries, ``_write_page_aligned``): scan
-    ranges are whole row groups, so every task sees whole pages; the
+    Correctness needs a physical contract: row groups flushed at page
+    boundaries (``fixtures/generator._write_page_aligned``).  Scan ranges
+    are whole row groups, so every task sees whole pages; the
     reappeared-key guard and the golden oracle catch violations.  Range
     planning reads footers ONLY for files larger than ``target_bytes`` —
     at web scale the planner cost is file listing, which the table's
@@ -357,9 +347,7 @@ def glyphs_to_page_text_pyscan(
     )
 
 
-def ocr_structured_records(
-    glyphs: DataFrame, doc_map: DataFrame, clustered_input: bool = False
-) -> DataFrame:
+def ocr_structured_records(glyphs: DataFrame, doc_map: DataFrame) -> DataFrame:
     """The reference's engine-A chain end-to-end (SURVEY.md §3.1 steps 4-5:
     Vision OCR text -> structuring prompt), deterministic: glyph boxes ->
     XY-cut reading-order text -> label-anchored field structuring.
@@ -371,7 +359,7 @@ def ocr_structured_records(
 
     from ocr_spark.operators.attendance import attendance_records
 
-    doc_text = pages_to_doc_text(glyphs_to_page_text(glyphs, clustered_input))
+    doc_text = pages_to_doc_text(glyphs_to_page_text(glyphs))
     keyed = doc_text.join(broadcast(doc_map), "doc_id").select("url", "text")
     return attendance_records(keyed, text_col="text")
 

@@ -118,6 +118,18 @@ def build_ivf_index(
     return df.withColumn("_list", assign(F.col(vec_col))), cents
 
 
+def _probe_lists(
+    centroids: list[list[float]], query: list[float], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` posting lists whose centroids are nearest ``query``
+    (ties broken by list id)."""
+    qd = [
+        (sum((a - b) ** 2 for a, b in zip(query, c)), i)
+        for i, c in enumerate(centroids)
+    ]
+    return [i for _, i in sorted(qd)[:n_probe]]
+
+
 def ivf_topk_indexed(
     indexed: DataFrame,
     centroids: list[list[float]],
@@ -130,11 +142,7 @@ def ivf_topk_indexed(
     """Search a prebuilt IVF index: scan only the n_probe nearest lists."""
     if not centroids:
         return cosine_topk(indexed, query, k, id_col, vec_col)
-    qd = [
-        (sum((a - b) ** 2 for a, b in zip(query, c)), i)
-        for i, c in enumerate(centroids)
-    ]
-    probe = [i for _, i in sorted(qd)[:n_probe]]
+    probe = _probe_lists(centroids, query, n_probe)
     return cosine_topk(
         indexed.filter(F.col("_list").isin(probe)), query, k, id_col, vec_col
     )
@@ -164,53 +172,22 @@ def materialize_ivf_index(
     vec_col: str = "embedding",
     sample_rows: int = 512,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Build the IVF index ONCE and persist it: the assigned relation goes
-    to an icelite table **keyed on ``_list``** (so probes prune at the
-    FILE level — each posting list lands in its own bucket directory),
-    centroids ride in the snapshot metadata.  A later call with a
-    committed table reuses it without touching the vectors — the
-    build-once/probe-many shape a 10^9-vector ANN service needs.
+    """Build the IVF index ONCE into ``table``, or reuse the index it holds
+    (the rule: ``IceliteTable.build_or_reuse``): the assigned relation is
+    keyed on ``_list``, so probes prune at the FILE level — each posting
+    list lands in its own bucket directory — and the centroids ride in the
+    build snapshot's metadata.  The build-once/probe-many shape a
+    10^9-vector ANN service needs.
 
     Construct the table as ``IceliteTable(root, key_col="_list",
     n_buckets=n_lists)``."""
-    spark = df.sparkSession
-    if table.exists() and table.row_count() > 0:
-        cents = next(
-            (
-                s.metadata["ivf_centroids"]
-                for s in reversed(table.snapshots())
-                if "ivf_centroids" in s.metadata
-            ),
-            None,
-        )
-        if cents is None:
-            raise ValueError(
-                f"table {table.root} has data but no ivf_centroids metadata "
-                "— it was not written by materialize_ivf_index; drop it to rebuild"
-            )
-        if len(cents) != n_lists:
-            raise ValueError(
-                f"index at {table.root} has {len(cents)} lists, requested "
-                f"{n_lists} — drop the table to rebuild"
-            )
-        # fingerprint the CORPUS the index covers, same convention as the
-        # minhash signature tables: a drifted df (vectors appended since
-        # the build) must refuse reuse, not silently probe an index that
-        # is missing the new vectors
-        n_df, n_tbl = df.count(), table.row_count()
-        if n_df != n_tbl:
-            raise ValueError(
-                f"index at {table.root} covers {n_tbl} vectors but the "
-                f"input has {n_df} — the corpus drifted since the build; "
-                "drop the table to rebuild"
-            )
-        return table.read(spark), cents
-    indexed, cents = build_ivf_index(df, n_lists, id_col, vec_col, sample_rows)
-    table.append(
-        indexed,
-        metadata={"op": "ivf_index", "ivf_centroids": cents, "n_lists": n_lists},
-    )
-    return table.read(spark), cents
+
+    def build(d: DataFrame):
+        indexed, cents = build_ivf_index(d, n_lists, id_col, vec_col, sample_rows)
+        return indexed, {"ivf_centroids": cents}
+
+    indexed, meta = table.build_or_reuse(df, "ivf_index", {"n_lists": n_lists}, build)
+    return indexed, meta["ivf_centroids"]
 
 
 def ivf_topk_table(
@@ -228,7 +205,6 @@ def ivf_topk_table(
     read (the file list shrinks before Spark lists anything; a residual
     ``_list`` filter handles hash-collided buckets)."""
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     from ocr_spark.sources.icelite import bucket_expr
 
@@ -237,11 +213,7 @@ def ivf_topk_table(
         raise ValueError("no active SparkSession — pass spark=")
     if not centroids:
         return cosine_topk(table.read(spark), query, k, id_col, vec_col)
-    qd = [
-        (sum((a - b) ** 2 for a, b in zip(query, c)), i)
-        for i, c in enumerate(centroids)
-    ]
-    probe = [i for _, i in sorted(qd)[:n_probe]]
+    probe = _probe_lists(centroids, query, n_probe)
     buckets = [
         r["b"]
         for r in spark.createDataFrame([(l,) for l in probe], "_list int")

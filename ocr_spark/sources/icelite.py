@@ -36,7 +36,7 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +61,15 @@ class SchemaMismatchError(IceliteError):
     """K6 validated insert: the incoming batch's columns/types don't match
     the table schema — rejected BEFORE any data file lands (the reference
     zod-safeParses every insert and 400s mismatches, route.ts:106-114)."""
+
+
+class StaleTableError(ValueError):
+    """A derived table (see ``IceliteTable.build_or_reuse``) was built with
+    different parameters or over a drifted input — drop the table to
+    rebuild.  A ValueError, not an IceliteError: the table is sound, the
+    request does not match it.  CLI entry points catch THIS type (not bare
+    ValueError) to map table rejections to their layout exit code without
+    swallowing unrelated ValueErrors."""
 
 
 def bucket_expr(key_col: str, n_buckets: int):
@@ -304,6 +313,54 @@ class IceliteTable:
                 )
             )
         return sid
+
+    def build_or_reuse(
+        self,
+        df: DataFrame,
+        op: str,
+        params: dict,
+        build: Callable[[DataFrame], tuple[DataFrame, dict]],
+        check_drift: bool = True,
+    ) -> tuple[DataFrame, dict]:
+        """The one build-or-reuse rule for tables derived from ``df``
+        (minhash signatures, n-gram grams, the IVF index); returns
+        ``(relation, build_metadata)``.
+
+        A table with rows is REUSED — read back, nothing recomputed,
+        nothing committed — only if its first ``op`` snapshot carries the
+        same ``params``; with ``check_drift``, ``df.count()`` (one run of
+        ``df``'s upstream plan) must also equal that build's ``input_docs``
+        metadata, or the table's row count when the build recorded none
+        (one row per input).  Anything else raises StaleTableError: rows
+        built another way, or over another input, would be served silently
+        wrong.  Otherwise ``build(df)`` returns ``(relation, extra)`` and
+        the relation is appended with ``{"op": op, **params, **extra}``;
+        an empty input lands no rows, so the built relation is returned
+        as it is."""
+        if self.row_count() > 0:
+            built = next(
+                (s.metadata for s in self.snapshots() if s.metadata.get("op") == op),
+                None,
+            )
+            stored = {k: built.get(k) for k in params} if built else f"no {op} snapshot"
+            if stored != params:
+                raise StaleTableError(
+                    f"table {self.root} was built with {stored}, requested "
+                    f"{params} — drop the table to rebuild"
+                )
+            if check_drift:
+                n_df, n_built = df.count(), built.get("input_docs", self.row_count())
+                if n_df != n_built:
+                    raise StaleTableError(
+                        f"{op} table {self.root} was built over {n_built} input "
+                        f"rows but the input has {n_df} — the input drifted "
+                        "since the build; drop the table to rebuild"
+                    )
+            return self.read(df.sparkSession), built
+        rel, extra = build(df)
+        meta = {"op": op, **params, **extra}
+        self.append(rel, metadata=meta)
+        return (self.read(df.sparkSession) if self.row_count() else rel), meta
 
     def merge(
         self,

@@ -241,8 +241,7 @@ def test_spark_pdf_page_text_matches_golden_and_composed(spark, pdf_tables):
     composed = {
         (r["doc_id"], r["page"]): r["text"]
         for r in glyphs_to_page_text(
-            pdf_to_glyphs(docs).filter(F.col("error").isNull()).drop("error"),
-            clustered_input=True,
+            pdf_to_glyphs(docs).filter(F.col("error").isNull()).drop("error")
         ).collect()
     }
     assert composed == golden
@@ -319,7 +318,7 @@ def test_pdf_attendance_end_to_end(spark, tiny_dir):
 
     pdfs = spark.read.parquet(f"{tiny_dir}/attendance_pdfs.parquet")
     glyphs = pdf_to_glyphs(pdfs).filter(FF.col("error").isNull()).drop("error")
-    doc_text = pages_to_doc_text(glyphs_to_page_text(glyphs, clustered_input=True))
+    doc_text = pages_to_doc_text(glyphs_to_page_text(glyphs))
     keyed = doc_text.join(pdfs.select("doc_id", "url"), "doc_id").select("url", "text")
     got = {
         r["url"]: (

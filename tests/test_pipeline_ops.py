@@ -214,15 +214,16 @@ def test_ivf_topk_close_to_exact(spark, embeddings):
 def test_ivf_materialized_index_probe_prunes_files(spark, embeddings, tmp_path):
     """materialize_ivf_index: build once into an icelite table keyed on
     the posting list; probing reads only the probed lists' bucket files
-    (manifest pruning), matches the in-memory probe, and a second
-    materialize call reuses the committed table."""
+    (manifest pruning), matches the in-memory probe, a second materialize
+    call reuses the committed table, and a table built another way (other
+    n_lists, a drifted corpus, not an IVF build) is refused as stale."""
     from ocr_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
         ivf_topk_table,
         materialize_ivf_index,
     )
-    from ocr_spark.sources.icelite import IceliteTable
+    from ocr_spark.sources.icelite import IceliteTable, StaleTableError
 
     tbl = IceliteTable(str(tmp_path / "ivf"), key_col="_list", n_buckets=8)
     indexed, cents = materialize_ivf_index(embeddings, tbl, n_lists=8)
@@ -247,6 +248,43 @@ def test_ivf_materialized_index_probe_prunes_files(spark, embeddings, tmp_path):
     probed_files = ivf_topk_table(tbl, cents, q, k=5, n_probe=2, spark=spark).inputFiles()
     all_files = tbl.read(spark).inputFiles()
     assert probed_files and len(set(probed_files)) < len(set(all_files))
+
+    with pytest.raises(StaleTableError, match="built with"):
+        materialize_ivf_index(embeddings, tbl, n_lists=4)
+    with pytest.raises(StaleTableError, match="drifted"):
+        materialize_ivf_index(embeddings.filter(F.col("vec_id") != 3), tbl, n_lists=8)
+    other = IceliteTable(str(tmp_path / "other"), key_col="_list", n_buckets=8)
+    other.append(mem_indexed, metadata={"op": "not_ivf"})
+    with pytest.raises(StaleTableError, match="built with"):
+        materialize_ivf_index(embeddings, other, n_lists=8)
+    assert tbl.head_id() == head and other.head_id() == 0
+
+
+@pytest.mark.parametrize("which", ["minhash", "ngram", "ivf"])
+def test_materializers_return_empty_relation_on_empty_input(spark, embeddings, tmp_path, which):
+    """A 0-row input lands no rows: each materializer commits its build
+    snapshot and returns the empty built relation (IVF with no centroids)
+    instead of reading back an empty table."""
+    from ocr_spark.operators.dedup import (
+        materialize_minhash_signatures,
+        materialize_ngram_grams,
+    )
+    from ocr_spark.operators.similarity import materialize_ivf_index
+    from ocr_spark.sources.icelite import IceliteTable
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    if which == "ivf":
+        tbl = IceliteTable(str(tmp_path / "t"), key_col="_list", n_buckets=8)
+        rel, cents = materialize_ivf_index(embeddings.limit(0), tbl, n_lists=8)
+        assert cents == []
+    else:
+        tbl = IceliteTable(str(tmp_path / "t"), key_col="doc_id", n_buckets=4)
+        materialize = {
+            "minhash": materialize_minhash_signatures,
+            "ngram": materialize_ngram_grams,
+        }[which]
+        rel = materialize(docs, tbl)
+    assert rel.count() == 0 and tbl.row_count() == 0 and tbl.head_id() == 0
 
 
 # ---------------------------------------------------------------------------

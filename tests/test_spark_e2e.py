@@ -221,37 +221,13 @@ def test_doc_too_large_through_spark(spark):
     assert r["text"] == "" and r["spans"] == [] and r["n_blocks"] == 0
 
 
-def test_layout_clustered_path_zero_exchange_same_output(spark, tiny_dir):
-    """clustered_input=True on a page-aligned glyph parquet: NO Exchange
-    anywhere in the plan (the raw-glyph shuffle is gone — the branch gets
-    the html path's zero-Exchange shape) and the output is identical to
-    the shuffled path; a deliberately interleaved input raises instead of
-    silently fragmenting pages."""
-    g = spark.read.parquet(f"{tiny_dir}/glyphs.parquet")
-    clustered = glyphs_to_page_text(g, clustered_input=True)
-    plan = clustered._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    got = {(r["doc_id"], r["page"]): r["text"] for r in clustered.collect()}
-    want = {(r["doc_id"], r["page"]): r["text"] for r in glyphs_to_page_text(g).collect()}
-    assert got == want
-
-    # interleave two pages' rows -> the contiguity guard must fire
-    interleaved = (
-        g.filter(F.col("doc_id") < 2)
-        .orderBy("glyph_id", "doc_id", "page")  # glyph_id-major interleaves keys
-        .coalesce(1)
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="reappeared"):
-        glyphs_to_page_text(interleaved, clustered_input=True).collect()
-
-
-def test_layout_pyscan_equals_channel_path(spark, tiny_dir):
+def test_layout_pyscan_equals_channel_path(spark, tiny_dir, tmp_path):
     """The python-source scan path (task-side pyarrow row-group reads —
     glyph bytes never cross the JVM->Python row channel) must emit exactly
     the shuffled channel path's pages; range planning must stay footer-free
-    for small files and split big files on row-group boundaries."""
+    for small files and split big files on row-group boundaries; a file
+    whose row groups interleave two pages raises instead of silently
+    fragmenting them."""
     from ocr_spark.operators.layout_ops import (
         _glyph_scan_ranges,
         glyphs_to_page_text,
@@ -283,6 +259,21 @@ def test_layout_pyscan_equals_channel_path(spark, tiny_dir):
         for r in glyphs_to_page_text_pyscan(spark, path, target_bytes=1).collect()
     }
     assert got_split == want
+
+    # row groups A, B, A: page A reappears after its run closed
+    t = pq.read_table(path)
+    keys = list(zip(t["doc_id"].to_pylist(), t["page"].to_pylist()))
+    a, b = sorted(set(keys))[:2]
+    rows_a = [i for i, k in enumerate(keys) if k == a]
+    rows_b = [i for i, k in enumerate(keys) if k == b]
+    half = len(rows_a) // 2
+    bad = str(tmp_path / "interleaved.parquet")
+    with pq.ParquetWriter(bad, t.schema) as w:
+        for rows in (rows_a[:half], rows_b, rows_a[half:]):
+            w.write_table(t.take(rows))
+    assert pq.ParquetFile(bad).metadata.num_row_groups == 3
+    with pytest.raises(Exception, match="reappeared"):
+        glyphs_to_page_text_pyscan(spark, bad).collect()
 
 
 def test_pyscan_file_uri_and_no_os_listdir(spark, tiny_dir, monkeypatch):
