@@ -82,7 +82,8 @@ Resource bounds (the html branch's DOC_TOO_LARGE discipline applied
 here): the raw payload is capped (``max_bytes`` -> ``doc_too_large``)
 and every FlateDecode inflation is capped (``max_stream_bytes`` ->
 ``stream_too_large``) — a zlib bomb in a content stream must cost one
-error row, never an executor OOM.
+error row, never an executor OOM.  The content interpreter's work per
+document is capped too (``MAX_DOC_WORK`` -> ``doc_too_large``).
 """
 
 from __future__ import annotations
@@ -147,6 +148,13 @@ ERROR_CODES = (
 # caller-side knobs, not these defaults.
 DEFAULT_MAX_PDF_BYTES = 64 << 20
 DEFAULT_MAX_STREAM_BYTES = 64 << 20
+# content work per document (``_interpret``): one unit per operator plus the
+# length of each shown string, summed over pages.  Pages that share one
+# small Flate stream replay it page after page: 100 such pages in an 8 KB
+# file showed 15M glyphs (11 s, 3.5 GB RSS) with neither cap above firing.
+# The largest fixture or benchmark document costs ~11k units; 2**20 leaves
+# ~100x headroom.
+MAX_DOC_WORK = 1 << 20
 
 
 class PdfError(Exception):
@@ -729,27 +737,41 @@ def _page_content(doc: _Document, page: dict) -> bytes:
     return b"\n".join(chunks)
 
 
-def _interpret(content: bytes, fonts: dict, media_top: float, emit) -> None:
-    """Replay the P6 operator set, emitting glyphs per P7 via ``emit(ch,
-    x0, y0, x1, y1)``.  All position arithmetic mirrors the generator's —
-    expression-for-expression — so results are bit-identical floats."""
-    lx = _Lexer(content)
-    stack: list = []
-    font_widths = None  # active width table
-    size = 0.0
-    leading = 0.0
-    line_x = line_y = 0.0  # text line matrix translation
-    x = y = 0.0  # current pen position
-    in_text = False
+def _page_inputs(doc: _Document):
+    """(page_no, content, fonts, media_top) per leaf page, resolved lazily
+    so a page's errors surface after the pages before it ran."""
+    for page_no, (page, inherited) in enumerate(doc.pages(), start=1):
+        media = doc.resolve(inherited.get("MediaBox"))
+        if not (isinstance(media, list) and len(media) == 4):
+            raise PdfError("bad_page_tree", "missing /MediaBox")
+        media_top = float(media[3])
+        fonts = _page_fonts(doc, inherited)
+        yield page_no, _page_content(doc, page), fonts, media_top
+
+
+def _interpret(pages) -> list[tuple]:
+    """Replay the P6 operator set over ``pages`` — (page_no, content, fonts,
+    media_top) in leaf order — and return the glyph rows (page, ch, x0, y0,
+    x1, y1) per P7.  All position arithmetic mirrors the generator's —
+    expression-for-expression — so results are bit-identical floats.
+
+    The document's pages share one ``MAX_DOC_WORK`` budget: each operator
+    costs 1 and each shown string its length, charged once per show call.
+    Exceeding it is ``doc_too_large``."""
+    rows: list[tuple] = []
+    work = MAX_DOC_WORK
 
     def show(sbytes: bytes) -> None:
-        nonlocal x
+        nonlocal x, work
         if font_widths is None:
             raise PdfError("missing_font", "show with no font set")
         try:
             chars = sbytes.decode("cp1252")
         except UnicodeDecodeError as e:
             raise PdfError("bad_content", f"undefined WinAnsi byte: {e}")
+        work -= len(chars)
+        if work < 0:
+            raise PdfError("doc_too_large", "content work budget exhausted")
         for ch in chars:
             w = font_widths.get(ch)
             if w is None:
@@ -757,88 +779,104 @@ def _interpret(content: bytes, fonts: dict, media_top: float, emit) -> None:
             adv = w * size / 1000.0
             if ch != " ":
                 y_top = media_top - y
-                emit(ch, x, y_top - 0.8 * size, x + adv - 0.5, y_top)
+                rows.append((page_no, ch, x, y_top - 0.8 * size, x + adv - 0.5, y_top))
             x = x + adv
 
-    n = len(content)
-    while True:
-        lx._skip_ws()
-        if lx.pos >= n:
-            break
-        c = content[lx.pos]
-        # operands share the object grammar; operators are keyword runs
-        if c == 0x2F or c == 0x28 or c == 0x3C or c == 0x5B or c == 0x2B or c == 0x2D or c == 0x2E or 0x30 <= c <= 0x39:
+    for page_no, content, fonts, media_top in pages:
+        lx = _Lexer(content)
+        stack: list = []
+        font_widths = None  # active width table
+        size = 0.0
+        leading = 0.0
+        line_x = line_y = 0.0  # text line matrix translation
+        x = y = 0.0  # current pen position
+        in_text = False
+        n = len(content)
+        while True:
+            lx._skip_ws()
+            if lx.pos >= n:
+                break
+            c = content[lx.pos]
+            # operands share the object grammar; operators are keyword runs
+            if c == 0x2F or c == 0x28 or c == 0x3C or c == 0x5B or c == 0x2B or c == 0x2D or c == 0x2E or 0x30 <= c <= 0x39:
+                try:
+                    stack.append(lx.value())
+                except PdfError as e:
+                    raise PdfError("bad_content", str(e))
+                continue
+            start = lx.pos
+            while lx.pos < n and content[lx.pos] not in _WS and content[lx.pos] not in _DELIM:
+                lx.pos += 1
+            op = content[start : lx.pos].decode("latin-1")
+            if not op:
+                raise PdfError("bad_content", f"stray delimiter at {start}")
+            work -= 1
+            if work < 0:
+                raise PdfError("doc_too_large", "content work budget exhausted")
+            work -= 1
+            if work < 0:
+                raise PdfError("doc_too_large", "content work budget exhausted")
             try:
-                stack.append(lx.value())
-            except PdfError as e:
-                raise PdfError("bad_content", str(e))
-            continue
-        start = lx.pos
-        while lx.pos < n and content[lx.pos] not in _WS and content[lx.pos] not in _DELIM:
-            lx.pos += 1
-        op = content[start : lx.pos].decode("latin-1")
-        if not op:
-            raise PdfError("bad_content", f"stray delimiter at {start}")
-        try:
-            if op == "BT":
-                line_x = line_y = x = y = 0.0
-                in_text = True
-            elif op == "ET":
-                in_text = False
-            elif op == "Tf":
-                fname, fsize = stack[-2], stack[-1]
-                base = fonts.get(str(fname))
-                if base is None:
-                    raise PdfError("missing_font", str(fname))
-                fw = FONT_WIDTHS.get(base)
-                if fw is None:
-                    raise PdfError("missing_font", base)
-                font_widths = fw
-                size = float(fsize)
-            elif op == "TL":
-                leading = float(stack[-1])
-            elif op == "Td" or op == "TD":
-                tx, ty = float(stack[-2]), float(stack[-1])
-                if op == "TD":
-                    leading = -ty
-                line_x = line_x + tx
-                line_y = line_y + ty
-                x, y = line_x, line_y
-            elif op == "Tm":
-                a, b, cc, d2, e, f = (float(v) for v in stack[-6:])
-                if a != 1.0 or b != 0.0 or cc != 0.0 or d2 != 1.0:
-                    raise PdfError("bad_content", "Tm with scale/rotation")
-                line_x, line_y = e, f
-                x, y = line_x, line_y
-            elif op == "T*":
-                line_y = line_y - leading
-                x, y = line_x, line_y
-            elif op == "'":
-                line_y = line_y - leading
-                x, y = line_x, line_y
-                show(stack[-1])
-            elif op == "Tj":
-                show(stack[-1])
-            elif op == "TJ":
-                arr = stack[-1]
-                if not isinstance(arr, list):
-                    raise PdfError("bad_content", "TJ operand is not an array")
-                for el in arr:
-                    if isinstance(el, bytes):
-                        show(el)
-                    elif isinstance(el, (int, float)):
-                        x = x - float(el) * size / 1000.0
-                    else:
-                        raise PdfError("bad_content", f"TJ element {el!r}")
-            elif op in _NOOP_OPS:
-                pass
-            else:
-                raise PdfError("bad_content", f"unsupported operator {op!r}")
-        except IndexError:
-            raise PdfError("bad_content", f"operator {op!r} missing operands")
-        stack.clear()
-    if in_text:
-        raise PdfError("bad_content", "unbalanced BT/ET")
+                if op == "BT":
+                    line_x = line_y = x = y = 0.0
+                    in_text = True
+                elif op == "ET":
+                    in_text = False
+                elif op == "Tf":
+                    fname, fsize = stack[-2], stack[-1]
+                    base = fonts.get(str(fname))
+                    if base is None:
+                        raise PdfError("missing_font", str(fname))
+                    fw = FONT_WIDTHS.get(base)
+                    if fw is None:
+                        raise PdfError("missing_font", base)
+                    font_widths = fw
+                    size = float(fsize)
+                elif op == "TL":
+                    leading = float(stack[-1])
+                elif op == "Td" or op == "TD":
+                    tx, ty = float(stack[-2]), float(stack[-1])
+                    if op == "TD":
+                        leading = -ty
+                    line_x = line_x + tx
+                    line_y = line_y + ty
+                    x, y = line_x, line_y
+                elif op == "Tm":
+                    a, b, cc, d2, e, f = (float(v) for v in stack[-6:])
+                    if a != 1.0 or b != 0.0 or cc != 0.0 or d2 != 1.0:
+                        raise PdfError("bad_content", "Tm with scale/rotation")
+                    line_x, line_y = e, f
+                    x, y = line_x, line_y
+                elif op == "T*":
+                    line_y = line_y - leading
+                    x, y = line_x, line_y
+                elif op == "'":
+                    line_y = line_y - leading
+                    x, y = line_x, line_y
+                    show(stack[-1])
+                elif op == "Tj":
+                    show(stack[-1])
+                elif op == "TJ":
+                    arr = stack[-1]
+                    if not isinstance(arr, list):
+                        raise PdfError("bad_content", "TJ operand is not an array")
+                    for el in arr:
+                        if isinstance(el, bytes):
+                            show(el)
+                        elif isinstance(el, (int, float)):
+                            x = x - float(el) * size / 1000.0
+                        else:
+                            raise PdfError("bad_content", f"TJ element {el!r}")
+                elif op in _NOOP_OPS:
+                    pass
+                else:
+                    raise PdfError("bad_content", f"unsupported operator {op!r}")
+            except IndexError:
+                raise PdfError("bad_content", f"operator {op!r} missing operands")
+            stack.clear()
+        if in_text:
+            raise PdfError("bad_content", "unbalanced BT/ET")
+    return rows
 
 
 # ---------------------------------------------------------------------------
@@ -861,21 +899,9 @@ def pdf_glyphs(
         return [], "not_pdf"
     if len(payload) > max_bytes:
         return [], "doc_too_large"
-    rows: list[tuple] = []
     try:
         doc = _Document(bytes(payload), max_stream_bytes=max_stream_bytes)
-        for page_no, (page, inherited) in enumerate(doc.pages(), start=1):
-            media = doc.resolve(inherited.get("MediaBox"))
-            if not (isinstance(media, list) and len(media) == 4):
-                raise PdfError("bad_page_tree", "missing /MediaBox")
-            media_top = float(media[3])
-            fonts = _page_fonts(doc, inherited)
-            content = _page_content(doc, page)
-
-            def emit(ch, x0, y0, x1, y1, _p=page_no):
-                rows.append((_p, ch, x0, y0, x1, y1))
-
-            _interpret(content, fonts, media_top, emit)
+        rows = _interpret(_page_inputs(doc))
     except PdfError as e:
         return [], e.code
     except RecursionError:

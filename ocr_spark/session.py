@@ -9,6 +9,7 @@ master is ``local[N]``.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -21,6 +22,16 @@ ARROW_BATCH_ROWS = 512
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _daemon_finds_ocr_spark() -> bool:
+    """Will ``python -m ocr_spark.worker_daemon``, started with this
+    process's working directory and environment, import this package?  A
+    script that only put ocr_spark on its own ``sys.path`` (workers then get
+    it per task through ``addPyFile``) keeps the stock daemon."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    search = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return root in {os.path.realpath(p) for p in search + site.getsitepackages() if p}
 
 
 def build_session(
@@ -44,6 +55,23 @@ def build_session(
         use_submit_master = "PYSPARK_GATEWAY_PORT" in os.environ
     if not use_submit_master:
         builder = builder.master(f"local[{cores}]")
+        # ---- Python worker daemon (local master only) --------------------
+        # Spark's stock daemon starts workers with pyspark.zip, the py4j zip
+        # and the spark-core jar ahead of site-packages, and pyspark's
+        # per-task setup (``importlib.invalidate_caches()``) makes every
+        # zipimporter re-read its archive: ~0.25 s of every Python task
+        # (0.16-0.48 s over 28 tasks, 4-vCPU host).  The module
+        # ``ocr_spark.worker_daemon`` drops the archives whose packages are
+        # installed at the same version, so workers load the installed
+        # pyspark and the setup takes 0.1-0.3 ms.  A trivial arrow UDF job
+        # (1,000 rows, 4 tasks, local[4]) went from 0.53 s to 0.32 s;
+        # without Python it takes 0.18 s.  Only the builder-created local
+        # master gets the daemon: there it runs with the driver's working
+        # directory and environment, where it can import ocr_spark.  Under
+        # spark-submit, ``--py-files`` reach workers per task, after the
+        # daemon has started, so the stock daemon stays.
+        if _daemon_finds_ocr_spark():
+            builder = builder.config("spark.python.daemon.module", "ocr_spark.worker_daemon")
     builder = (
         builder.appName(app_name)
         # ---- planner / AQE ------------------------------------------------

@@ -6,6 +6,7 @@ format, reference src/app/page.tsx:444-452)."""
 from __future__ import annotations
 
 import random
+import zlib
 
 import numpy as np
 import pytest
@@ -410,6 +411,27 @@ def test_shared_kids_dag_is_bad_page_tree_within_deadline(deadline):
     pdf = _handmade_pdf(objs)
     with deadline(0.5):
         assert pdf_glyphs(pdf) == ([], "bad_page_tree")
+
+
+def test_pages_sharing_one_content_stream_are_doc_too_large_within_deadline(deadline):
+    """100 page objects over one Flate stream of a 150,000-char show: an
+    8 KB file that replays 15M glyphs unless the document's content work
+    is capped."""
+    n_pages = 100
+    content = zlib.compress(b"BT /F1 10 Tf 72 700 Td (" + b"a" * 150_000 + b") Tj ET", 9)
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /MediaBox [0 0 612 792] /Resources << /Font << /F1 3 0 R >> >>"
+        b" /Kids [%s] /Count %d >>" % (b" ".join(b"%d 0 R" % (5 + i) for i in range(n_pages)), n_pages),
+        3: b"<< /Type /Font /Subtype /Type1 /BaseFont /Courier >>",
+        4: b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream" % (len(content), content),
+    }
+    for i in range(n_pages):
+        objs[5 + i] = b"<< /Type /Page /Contents 4 0 R >>"
+    pdf = _handmade_pdf(objs)
+    assert len(pdf) < 10_000
+    with deadline(3.0):
+        assert pdf_glyphs(pdf) == ([], "doc_too_large")
 
 
 @pytest.mark.parametrize("section", ["table", "stream"])
