@@ -57,13 +57,13 @@ def _largest_gap(lo: np.ndarray, hi: np.ndarray) -> tuple[float, float]:
     Deterministic: first-largest wins on ties (argmax of the vectorized gap
     array == the sorted scan that only replaces on strictly-greater —
     identical arithmetic, identical tie-break)."""
-    order = np.argsort(lo, kind="stable")
+    if lo.size < 2:
+        return 0.0, 0.0
+    order = lo.argsort(kind="stable")
     lo_s = lo[order]
     cover = np.maximum.accumulate(hi[order])
-    if lo_s.size < 2:
-        return 0.0, 0.0
     gaps = lo_s[1:] - cover[:-1]
-    i = int(np.argmax(gaps))
+    i = int(gaps.argmax())
     g = float(gaps[i])
     if g <= 0.0:
         return 0.0, 0.0
@@ -156,118 +156,170 @@ def page_text(
 # ---------------------------------------------------------------------------
 # codepoint fast path — identical rules L1-L4, glyphs carried as Unicode
 # code points so a 23M-glyph shuffle never materializes 23M Python strings
-# (layout_ops and pdf_ops run it on every page)
+# (layout_ops and pdf_ops run it).  L2 recurses per page; L3+L4 then run
+# ONCE over every leaf of every page of the input, with a forced line
+# break at each leaf boundary (leaves, like lines, join with "\n").
 # ---------------------------------------------------------------------------
-# Float-discrepancy margin for the vectorized clustering fast path: its
-# running means come from prefix-sum differences (cumsum[i-1] - cumsum at
-# segment start) while the sequential spec sums each line fresh — the two
-# can differ by ~n*ulp(sum).  y values are <= 792 and segments are <= a few
-# thousand glyphs, so the discrepancy is < 1e-8; any comparison landing
-# within this margin of LINE_CLUSTER_EPS falls back to the exact loop.
+# Float-discrepancy margin for the vectorized clustering: its running means
+# come from prefix-sum differences while the sequential spec sums each line
+# fresh.  Baselines are taken relative to their candidate line's first one,
+# so the prefix sums stay small (exactly 0 where a line shares one baseline);
+# the margin adds a bound on the prefix-sum rounding (4 * n * eps * sum|d|).
+# Any comparison landing within the margin of LINE_CLUSTER_EPS sends its
+# leaf to the exact sequential loop.
 _CLUSTER_MARGIN = 1e-6
+_EPS = float(np.finfo(np.float64).eps)
 
 
-def _cluster_lines_fast(ys: np.ndarray) -> np.ndarray | None:
-    """Vectorized rule-L3 line segmentation over SORTED baselines.
-
-    Candidate: break where consecutive baselines jump by more than EPS;
-    then VERIFY the candidate reproduces the sequential running-mean
-    decisions — every inner glyph within EPS of its line's running mean,
-    every segment's first glyph beyond EPS of the previous line's final
-    mean — with a margin covering prefix-sum float drift.  Returns the
-    per-glyph segment ids, or None when any decision is within the margin
-    (caller falls back to the exact sequential loop)."""
-    n = ys.size
-    if n < 2:
-        return np.zeros(n, dtype=np.int64)
-    brk = np.diff(ys) > LINE_CLUSTER_EPS
-    seg = np.concatenate(([0], np.cumsum(brk)))
-    starts = np.concatenate(([0], np.nonzero(brk)[0] + 1))
-    start_of = starts[seg]
-    p = np.cumsum(ys)
-    p0 = np.where(start_of > 0, p[np.maximum(start_of - 1, 0)], 0.0)
-    k = np.arange(n) - start_of
-    inner = k >= 1
-    dev = np.abs(ys - (p[np.arange(n) - 1] - p0) / np.maximum(k, 1))
-    if np.any(dev[inner] > LINE_CLUSTER_EPS - _CLUSTER_MARGIN):
-        return None
-    if starts.size > 1:
-        b = starts[1:]
-        prev_start = starts[:-1]
-        prev_p0 = np.where(prev_start > 0, p[np.maximum(prev_start - 1, 0)], 0.0)
-        prev_mean = (p[b - 1] - prev_p0) / (b - prev_start)
-        if np.any(np.abs(ys[b] - prev_mean) <= LINE_CLUSTER_EPS + _CLUSTER_MARGIN):
-            return None
-    return seg
-
-
-def _cluster_lines_seq(ys: np.ndarray) -> np.ndarray:
-    """The sequential rule-L3 spec loop (running-mean clustering) over
-    SORTED baselines; returns per-glyph segment ids."""
-    seg = np.empty(ys.size, dtype=np.int64)
-    cur = -1
+def _line_starts_seq(ys: np.ndarray) -> np.ndarray:
+    """The sequential rule-L3 spec loop (running-mean clustering) over one
+    leaf's SORTED baselines; True where a new line starts."""
+    starts = np.zeros(ys.size, dtype=bool)
     baseline_sum = 0.0
     count = 0
     for i, y in enumerate(ys.tolist()):
-        if cur >= 0 and abs(y - baseline_sum / count) <= LINE_CLUSTER_EPS:
+        if count and abs(y - baseline_sum / count) <= LINE_CLUSTER_EPS:
             baseline_sum += y
             count += 1
         else:
-            cur += 1
+            starts[i] = True
             baseline_sum = y
             count = 1
-        seg[i] = cur
-    return seg
+    return starts
 
 
-def _lines_text_codes(cp: np.ndarray, x0: np.ndarray, x1: np.ndarray, y1: np.ndarray) -> str:
-    """Rule L3+L4 on one leaf region over code points, fully vectorized:
-    one argsort for the baseline scan, the fast-path segmentation (exact
-    sequential fallback inside the margin), one lexsort for (line, x0,
-    input-order) glyph order, one separator insert and ONE utf-32 decode
-    per leaf.  Output is byte-identical to the sequential spec
-    (hypothesis-differential-tested against page_text)."""
-    order = np.argsort(y1, kind="stable")
-    ys = y1[order]
-    seg = _cluster_lines_fast(ys)
-    if seg is None:
-        seg = _cluster_lines_seq(ys)
-    # L3 within-line order: x0 primary, ORIGINAL input index as tiebreak
-    # (`order` holds original indices); lines are already in mean-baseline
-    # order because ys is sorted
-    ls = np.lexsort((order, x0[order], seg))
-    final = order[ls]
-    codes = cp[final].astype(np.uint32)
-    if final.size > 1:
-        seg_sorted = seg[ls]
-        new_line = seg_sorted[1:] != seg_sorted[:-1]
-        gap = (x0[final][1:] - x1[final][:-1]) > SPACE_GAP
-        pos = np.nonzero(new_line | gap)[0] + 1
-        vals = np.where(new_line[pos - 1], np.uint32(0x0A), np.uint32(0x20))
-        if pos.size:
-            codes = np.insert(codes, pos, vals)
-    return codes.astype("<u4").tobytes().decode("utf-32-le")
+def _line_starts(ys: np.ndarray, leaf_start: np.ndarray) -> np.ndarray:
+    """Vectorized rule L3 over baselines sorted within each leaf
+    (``leaf_start`` marks each leaf's first glyph): True where a new line
+    starts.
+
+    Candidate: break at each leaf start and where consecutive baselines
+    jump by more than EPS; then VERIFY the candidate reproduces the
+    sequential running-mean decisions — every inner glyph within EPS of its
+    line's running mean, every non-forced break beyond EPS of the previous
+    line's final mean.  A leaf with any decision within the margin is
+    recomputed by the exact sequential loop."""
+    n = ys.size
+    brk = leaf_start.copy()
+    brk[1:] |= np.diff(ys) > LINE_CLUSTER_EPS
+    starts = np.flatnonzero(brk)
+    line = np.cumsum(brk) - 1
+    start_of = starts[line]
+    d = ys - ys[start_of]
+    p = np.cumsum(d)
+    margin = _CLUSTER_MARGIN + 4.0 * n * _EPS * float(np.abs(d).sum())
+    before = np.concatenate(([0.0], p))  # before[i] = sum of d[:i]
+    k = np.arange(n) - start_of  # glyphs of the line before this one
+    mean = (before[:-1] - before[start_of]) / np.maximum(k, 1)
+    unsure = (k >= 1) & (np.abs(d - mean) > LINE_CLUSTER_EPS - margin)
+    b = starts[1:]
+    b = b[~leaf_start[b]]  # the non-forced breaks
+    if b.size:
+        prev = starts[line[b - 1]]
+        prev_mean = (before[b] - before[prev]) / (b - prev)
+        near = np.abs((ys[b] - ys[prev]) - prev_mean) <= LINE_CLUSTER_EPS + margin
+        unsure[b[near]] = True
+    if unsure.any():
+        leaf_bounds = np.flatnonzero(leaf_start).tolist() + [n]
+        leaf_of = np.cumsum(leaf_start) - 1
+        for leaf in np.unique(leaf_of[unsure]).tolist():
+            s, e = leaf_bounds[leaf], leaf_bounds[leaf + 1]
+            brk[s:e] = _line_starts_seq(ys[s:e])
+    return brk
 
 
-def _xycut_codes(cp, x0, y0, x1, y1, idx) -> list[str]:
-    """Rule L2 over code points (same recursion as _xycut)."""
-    if len(idx) == 0:
-        return []
+def _xycut_leaves(x0, y0, x1, y1, xc, yc, idx, out: list) -> None:
+    """Rule L2 over glyph indices ``idx`` (same recursion as _xycut);
+    appends the leaves' index arrays to ``out`` in reading order.  ``xc``
+    and ``yc`` are the glyph centers."""
     xgap, xmid = _largest_gap(x0[idx], x1[idx])
     ygap, ymid = _largest_gap(y0[idx], y1[idx])
     cut_x = xgap >= X_GAP_MIN and xgap >= ygap
     cut_y = not cut_x and ygap >= Y_GAP_MIN
     if cut_x:
-        mid = (x0[idx] + x1[idx]) / 2.0
+        mid = xc[idx]
         left, right = idx[mid < xmid], idx[mid >= xmid]
         if len(left) and len(right):
-            return _xycut_codes(cp, x0, y0, x1, y1, left) + _xycut_codes(cp, x0, y0, x1, y1, right)
+            _xycut_leaves(x0, y0, x1, y1, xc, yc, left, out)
+            _xycut_leaves(x0, y0, x1, y1, xc, yc, right, out)
+            return
     if cut_y:
-        mid = (y0[idx] + y1[idx]) / 2.0
+        mid = yc[idx]
         top, bottom = idx[mid < ymid], idx[mid >= ymid]
         if len(top) and len(bottom):
-            return _xycut_codes(cp, x0, y0, x1, y1, top) + _xycut_codes(cp, x0, y0, x1, y1, bottom)
-    return [_lines_text_codes(cp[idx], x0[idx], x1[idx], y1[idx])]
+            _xycut_leaves(x0, y0, x1, y1, xc, yc, top, out)
+            _xycut_leaves(x0, y0, x1, y1, xc, yc, bottom, out)
+            return
+    out.append(idx)
+
+
+def page_texts_codes(
+    page: np.ndarray,
+    cp: np.ndarray,
+    x0: np.ndarray,
+    y0: np.ndarray,
+    x1: np.ndarray,
+    y1: np.ndarray,
+) -> list[tuple[int, str]]:
+    """Rules L1-L4 over several pages of single-code-point glyphs, each
+    page one contiguous run of ``page`` (a document's ``pdf_glyph_columns``
+    order) -> [(page, text)] for every run, "" where no glyph is in the
+    body.  Each text equals ``page_text`` on that page's glyphs."""
+    page = np.asarray(page)
+    n = page.size
+    if n == 0:
+        return []
+    x0 = np.asarray(x0, dtype=np.float64)
+    y0 = np.asarray(y0, dtype=np.float64)
+    x1 = np.asarray(x1, dtype=np.float64)
+    y1 = np.asarray(y1, dtype=np.float64)
+    cuts = (np.flatnonzero(page[1:] != page[:-1]) + 1).tolist()
+    xc = (x0 + x1) / 2.0
+    yc = (y0 + y1) / 2.0
+    in_body = (yc >= HEADER_Y) & (yc < FOOTER_Y)
+    leaves: list[np.ndarray] = []
+    page_glyphs = []  # body glyphs per page
+    for s, e in zip([0, *cuts], [*cuts, n]):
+        body = np.flatnonzero(in_body[s:e]) + s
+        if body.size:
+            _xycut_leaves(x0, y0, x1, y1, xc, yc, body, leaves)
+        page_glyphs.append(body.size)
+    keys = page[[0, *cuts]].tolist()
+    if not leaves:
+        return [(k, "") for k in keys]
+    # L3 over all leaves at once: leaf-major, then baseline; lexsort is
+    # stable, so equal baselines keep input order within their leaf
+    idx = np.concatenate(leaves)
+    sizes = [leaf.size for leaf in leaves]
+    leaf = np.repeat(np.arange(len(leaves)), sizes)
+    order = np.lexsort((y1[idx], leaf))
+    leaf_start = np.zeros(idx.size, dtype=bool)
+    leaf_start[np.cumsum([0, *sizes[:-1]])] = True
+    line = np.cumsum(_line_starts(y1[idx[order]], leaf_start))
+    # L3 within-line order: x0 primary, input order (``order`` holds
+    # positions in ``idx``, ascending within a leaf) as tiebreak; lines
+    # are already in leaf then mean-baseline order
+    ls = np.lexsort((order, x0[idx[order]], line))
+    final = idx[order[ls]]
+    codes = cp[final].astype(np.uint32)
+    line = line[ls]
+    # L4: "\n" between lines (so between leaves and pages too), one space
+    # where the gap inside a line exceeds SPACE_GAP
+    new_line = line[1:] != line[:-1]
+    gap = (x0[final][1:] - x1[final][:-1]) > SPACE_GAP
+    pos = np.flatnonzero(new_line | gap) + 1
+    codes = np.insert(codes, pos, np.where(new_line[pos - 1], np.uint32(0x0A), np.uint32(0x20)))
+    text = codes.astype("<u4").tobytes().decode("utf-32-le")
+    # cut the text back into pages: glyph j of ``final`` sits at
+    # j + (separators inserted at or before j)
+    ends = np.cumsum(page_glyphs)
+    first = ends - np.asarray(page_glyphs)
+    lo = (first + np.searchsorted(pos, first, side="right")).tolist()
+    hi = (ends + np.searchsorted(pos, ends - 1, side="right")).tolist()
+    return [
+        (k, text[a:b] if g else "")
+        for k, g, a, b in zip(keys, page_glyphs, lo, hi)
+    ]
 
 
 def page_text_codes(
@@ -281,13 +333,5 @@ def page_text_codes(
     one character; multi-code-point glyphs must use ``page_text``).  Output
     is identical to page_text for such input — asserted in tests."""
     cp = np.asarray(cp, dtype=np.int64)
-    x0 = np.asarray(x0, dtype=np.float64)
-    y0 = np.asarray(y0, dtype=np.float64)
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    yc = (y0 + y1) / 2.0
-    body = np.nonzero((yc >= HEADER_Y) & (yc < FOOTER_Y))[0]
-    if len(body) == 0:
-        return ""
-    leaves = _xycut_codes(cp, x0, y0, x1, y1, body)
-    return "\n".join(t for t in leaves if t)
+    pages = page_texts_codes(np.zeros(cp.size, np.int64), cp, x0, y0, x1, y1)
+    return pages[0][1] if pages else ""

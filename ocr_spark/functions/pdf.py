@@ -48,7 +48,8 @@ parsing — the same two-sided design as the PNG/WAV/MP4 kernels.
       the MediaBox top edge: ``y_top = media_y1 - y_pdf`` (output glyphs
       are top-down, y growing downward, per FIXTURES.md §2).
   P6. Content streams (page /Contents, a stream or array of streams
-      joined with a newline) support exactly the text operators
+      joined with a newline; a joined length past ``max_stream_bytes`` ->
+      ``stream_too_large``) support exactly the text operators
       BT ET Tf TL Td TD Tm T* ' Tj TJ plus a no-op allow-list of pure
       graphics operators (q Q w J j M d ri i gs re m l c v y h S s f F
       f* B B* b b* n W W* g G rg RG k K cs CS sc scn sh BX EX).  Tm must
@@ -81,15 +82,20 @@ missing_width | bad_content``.
 Resource bounds (the html branch's DOC_TOO_LARGE discipline applied
 here): the raw payload is capped (``max_bytes`` -> ``doc_too_large``)
 and every FlateDecode inflation is capped (``max_stream_bytes`` ->
-``stream_too_large``) — a zlib bomb in a content stream must cost one
-error row, never an executor OOM.  The content interpreter's work per
-document is capped too (``MAX_DOC_WORK`` -> ``doc_too_large``).
+``stream_too_large``), as is each page's joined /Contents — a zlib bomb
+in a content stream, or one stream named many times, must cost one error
+row, never an executor OOM.  The content interpreter's work per document
+is capped too (``MAX_DOC_WORK`` -> ``doc_too_large``: 1 unit per
+operator plus each shown string's length).
 """
 
 from __future__ import annotations
 
 import re
 import zlib
+from typing import NamedTuple
+
+import numpy as np
 
 # ---------------------------------------------------------------------------
 # standard-14 width tables (units: 1/1000 em, public Adobe AFM metrics).
@@ -171,8 +177,17 @@ class Name(str):
 
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 _NUM_RE = re.compile(rb"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?")
+_S = rb"(?:[\x00\t\n\x0c\r ]++|%[^\n]*+\n?)*+"  # whitespace and comments
+_REG = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"  # a regular (non-ws, non-delimiter) byte
+_INT = rb"[+-]?\d++(?!\.|[eE][+-]?\d)"  # a _NUM_RE match with no '.', 'e', 'E'
+# after an int N: " G R", G a _NUM_RE match with no '.', R delimited
+_REF_TAIL = _S + rb"[+-]?\d++(?!\.)(?:[eE][+-]?\d+)?" + _S + rb"R(?!" + _REG + rb")"
+_SKIP_WS = re.compile(_S)
+_REF_TAIL_RE = re.compile(_REF_TAIL)
+_REGULAR_RUN = re.compile(_REG + rb"*+")
+_LIT_PLAIN = re.compile(rb"[^\\()]*+\)")  # a literal string's rest, no escape
+_LIT_SPECIAL = re.compile(rb"[\\()]")
 
 
 class _Lexer:
@@ -181,28 +196,13 @@ class _Lexer:
         self.pos = pos
 
     def _skip_ws(self) -> None:
-        d, n = self.data, len(self.data)
-        while self.pos < n:
-            c = self.data[self.pos]
-            if c in _WS:
-                self.pos += 1
-            elif c == 0x25:  # % comment to end of line
-                nl = d.find(b"\n", self.pos)
-                self.pos = n if nl < 0 else nl + 1
-            else:
-                return
+        self.pos = _SKIP_WS.match(self.data, self.pos).end()
 
     def peek_keyword(self) -> str | None:
         """Next regular-character run without consuming (e.g. 'stream')."""
-        save = self.pos
-        self._skip_ws()
-        start = self.pos
-        d, n = self.data, len(self.data)
-        while self.pos < n and d[self.pos] not in _WS and d[self.pos] not in _DELIM:
-            self.pos += 1
-        word = d[start : self.pos].decode("latin-1")
-        self.pos = save
-        return word or None
+        start = _SKIP_WS.match(self.data, self.pos).end()
+        end = _REGULAR_RUN.match(self.data, start).end()
+        return self.data[start:end].decode("latin-1") or None
 
     def expect_keyword(self, kw: str) -> None:
         self._skip_ws()
@@ -246,41 +246,39 @@ class _Lexer:
             txt = m.group().decode("latin-1")
             if "." not in txt and "e" not in txt and "E" not in txt:
                 first = int(txt)
-                save = self.pos
-                self._skip_ws()
-                m2 = _NUM_RE.match(d, self.pos)
-                if m2 is not None and b"." not in m2.group():
+                m2 = _REF_TAIL_RE.match(d, self.pos)
+                if m2 is not None:
                     self.pos = m2.end()
-                    self._skip_ws()
-                    if d.startswith(b"R", self.pos) and (
-                        self.pos + 1 >= n
-                        or d[self.pos + 1] in _WS
-                        or d[self.pos + 1] in _DELIM
-                    ):
-                        self.pos += 1
-                        return ("R", first)
-                self.pos = save
+                    return ("R", first)
                 return first
             return float(txt)
         raise PdfError("bad_obj", f"unparseable token at {self.pos}")
 
     def _name(self) -> Name:
-        self.pos += 1  # '/'
-        d, n = self.data, len(self.data)
-        start = self.pos
-        while self.pos < n and d[self.pos] not in _WS and d[self.pos] not in _DELIM:
-            self.pos += 1
-        return Name(d[start : self.pos].decode("latin-1"))
+        start = self.pos + 1  # past '/'
+        self.pos = _REGULAR_RUN.match(self.data, start).end()
+        return Name(self.data[start : self.pos].decode("latin-1"))
 
     def _literal_string(self) -> bytes:
         d, n = self.data, len(self.data)
-        self.pos += 1  # '('
+        start = self.pos + 1  # past '('
+        # fast path: no escape or nested paren before the closing one
+        m = _LIT_PLAIN.match(d, start)
+        if m is not None:
+            self.pos = m.end()
+            return d[start : self.pos - 1]
+        self.pos = start
         out = bytearray()
         depth = 1
-        while self.pos < n:
-            c = d[self.pos]
+        while True:
+            # copy the run up to the next '\\', '(' or ')' in one slice
+            m = _LIT_SPECIAL.search(d, self.pos)
+            if m is None:
+                break
+            out += d[self.pos : m.start()]
+            c = d[m.start()]
+            self.pos = m.start() + 1
             if c == 0x5C:  # backslash escape
-                self.pos += 1
                 if self.pos >= n:
                     break
                 e = d[self.pos]
@@ -308,17 +306,11 @@ class _Lexer:
             elif c == 0x28:
                 depth += 1
                 out.append(c)
-                self.pos += 1
-            elif c == 0x29:
+            else:  # ')'
                 depth -= 1
                 if depth == 0:
-                    self.pos += 1
                     return bytes(out)
                 out.append(c)
-                self.pos += 1
-            else:
-                out.append(c)
-                self.pos += 1
         raise PdfError("bad_obj", "unterminated literal string")
 
     def _hex_string(self) -> bytes:
@@ -728,10 +720,18 @@ def _page_content(doc: _Document, page: dict) -> bytes:
         return b""
     parts = contents if isinstance(contents, list) else [contents]
     chunks = []
+    size = -1  # joined length so far (no newline before the first chunk)
     for p in parts:
         p = doc.resolve(p)
         if not (isinstance(p, tuple) and p[0] == "stream"):
             raise PdfError("bad_obj", "/Contents entry is not a stream")
+        # the joined content obeys the per-stream bound: an array naming
+        # one stream many times would otherwise hold that many copies
+        size += 1 + len(p[2])
+        if size > doc.max_stream_bytes:
+            raise PdfError(
+                "stream_too_large", f"/Contents joins past {doc.max_stream_bytes} bytes"
+            )
         chunks.append(p[2])
     # multiple streams form one logical stream; a newline keeps tokens apart
     return b"\n".join(chunks)
@@ -749,91 +749,195 @@ def _page_inputs(doc: _Document):
         yield page_no, _page_content(doc, page), fonts, media_top
 
 
-def _interpret(pages) -> list[tuple]:
+# content tokens (P3 grammar, P6 operators).  One regex match per token
+# covers whitespace/comments plus the common shapes: operators, numbers,
+# names, refs, hex strings, literal strings with no escape or nested paren,
+# and arrays of those.  Anything else (an escaped string, a dict, a stray
+# delimiter, an operator inside an array) is read by ``_Lexer`` from the
+# token's start, or from the outermost open array's '[' — one grammar.
+_CONTENT_TOKEN = re.compile(
+    _S
+    + rb"(?:(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9]" + _REG + rb"*+)"
+    + rb"|(?P<ref>" + _INT + rb")" + _REF_TAIL
+    + rb"|(?P<int>" + _INT + rb")"
+    + rb"|(?P<real>[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)"
+    + rb"|\((?P<str>[^\\()]*+)\)"
+    + rb"|/(?P<name>" + _REG + rb"*+)"
+    + rb"|<(?P<hex>[0-9A-Fa-f\t\n\x0c\r ]*+)>"
+    + rb"|(?P<open>\[)|(?P<close>\])|(?P<end>\Z)|(?P<other>[\s\S]))"
+)
+_OPERAND_START = frozenset(b"/(<[+-.0123456789")
+
+
+def _content_tokens(content: bytes):
+    """Content-stream tokens in order: operators as ``str``, operands as
+    object-grammar values (``Name``, bytes, int, float, list, refs).  A
+    malformed operand or a stray delimiter raises ``bad_content``."""
+    pos = 0
+    while True:
+        nest: list[list] = []  # open arrays, outermost first
+        for m in _CONTENT_TOKEN.finditer(content, pos):
+            kind = m.lastgroup
+            if kind == "op" and not nest:
+                yield m.group("op").decode("latin-1")
+                continue
+            if kind == "int":
+                v = int(m.group("int"))
+            elif kind == "str":
+                v = m.group("str")
+            elif kind == "real":
+                v = float(m.group("real"))
+            elif kind == "name":
+                v = Name(m.group("name").decode("latin-1"))
+            elif kind == "hex":
+                h = m.group("hex").translate(None, _WS)
+                v = bytes.fromhex((h + b"0" if len(h) % 2 else h).decode("latin-1"))
+            elif kind == "ref":
+                v = ("R", int(m.group("ref")))
+            elif kind == "open":
+                if not nest:
+                    array_start = m.start("open")
+                nest.append([])
+                continue
+            elif kind == "close" and nest:
+                v = nest.pop()
+            elif kind == "end" and not nest:
+                return
+            else:
+                break
+            if nest:
+                nest[-1].append(v)
+            else:
+                yield v
+        # the token _CONTENT_TOKEN leaves to the object grammar
+        pos = array_start if nest else m.start(kind)
+        if content[pos] in _OPERAND_START:
+            lx = _Lexer(content, pos)
+            try:
+                v = lx.value()
+            except PdfError as e:
+                raise PdfError("bad_content", str(e))
+            pos = lx.pos
+            yield v
+        else:  # a delimiter that starts no operand
+            raise PdfError("bad_content", f"stray delimiter at {pos}")
+
+
+def _cp1252_table() -> np.ndarray:
+    """Code point per byte under WinAnsiEncoding (P7); -1 = undefined."""
+    cp = np.full(256, -1, np.int64)
+    for b in range(256):
+        try:
+            cp[b] = ord(bytes([b]).decode("cp1252"))
+        except UnicodeDecodeError:
+            pass
+    return cp
+
+
+def _byte_class(mask: np.ndarray):
+    """A regex matching any byte where ``mask`` is set (None when none is)."""
+    hits = np.flatnonzero(mask).tolist()
+    if not hits:
+        return None
+    return re.compile(b"[" + b"".join(re.escape(bytes([b])) for b in hits) + b"]")
+
+
+_CP1252 = _cp1252_table()
+_UNDEFINED_BYTE = _byte_class(_CP1252 < 0)
+
+
+def _width_table(widths) -> tuple[np.ndarray, object]:
+    """(width per byte, NaN where the font has none; regex of those bytes)."""
+    w = np.full(256, np.nan)
+    for b in np.flatnonzero(_CP1252 >= 0).tolist():
+        v = widths.get(chr(_CP1252[b]))
+        if v is not None:
+            w[b] = v
+    return w, _byte_class(np.isnan(w) & (_CP1252 >= 0))
+
+
+# BaseFont -> per-byte width table, built once from FONT_WIDTHS
+_FONT_TABLES = {base: _width_table(w) for base, w in FONT_WIDTHS.items()}
+
+
+class GlyphColumns(NamedTuple):
+    """A document's glyphs as columns, in P8 emission order (glyph_id is
+    the row index); ``cp`` holds each glyph's Unicode code point."""
+
+    page: np.ndarray
+    cp: np.ndarray
+    x0: np.ndarray
+    y0: np.ndarray
+    x1: np.ndarray
+    y1: np.ndarray
+
+
+NO_GLYPHS = GlyphColumns(
+    np.empty(0, np.int64), np.empty(0, np.int64), *(np.empty(0) for _ in range(4))
+)
+
+
+def _interpret(pages) -> GlyphColumns:
     """Replay the P6 operator set over ``pages`` — (page_no, content, fonts,
-    media_top) in leaf order — and return the glyph rows (page, ch, x0, y0,
-    x1, y1) per P7.  All position arithmetic mirrors the generator's —
-    expression-for-expression — so results are bit-identical floats.
+    media_top) in leaf order — and return the glyph columns per P7.
+
+    Each show is vectorized: its bytes index the per-byte code point and
+    advance tables, and one sequential ``np.add.accumulate`` over
+    ``[x, adv...]`` yields the pen positions — the same float additions,
+    in the same order, as the scalar ``x = x + adv``, so boxes stay
+    bit-identical to the generator's mirrored arithmetic.
 
     The document's pages share one ``MAX_DOC_WORK`` budget: each operator
     costs 1 and each shown string its length, charged once per show call.
     Exceeding it is ``doc_too_large``."""
-    rows: list[tuple] = []
+    shows: list[bytes] = []  # shown strings, spaces included
+    pens: list[np.ndarray] = []  # per show: pen x before each byte and after the last
+    meta: list[tuple] = []  # per show: (page, y0, y1)
     work = MAX_DOC_WORK
 
     def show(sbytes: bytes) -> None:
         nonlocal x, work
-        if font_widths is None:
+        if adv is None:
             raise PdfError("missing_font", "show with no font set")
-        try:
-            chars = sbytes.decode("cp1252")
-        except UnicodeDecodeError as e:
-            raise PdfError("bad_content", f"undefined WinAnsi byte: {e}")
-        work -= len(chars)
+        if _UNDEFINED_BYTE.search(sbytes) is not None:
+            raise PdfError("bad_content", "undefined WinAnsi byte")
+        n = len(sbytes)
+        work -= n
         if work < 0:
             raise PdfError("doc_too_large", "content work budget exhausted")
-        for ch in chars:
-            w = font_widths.get(ch)
-            if w is None:
-                raise PdfError("missing_width", repr(ch))
-            adv = w * size / 1000.0
-            if ch != " ":
-                y_top = media_top - y
-                rows.append((page_no, ch, x, y_top - 0.8 * size, x + adv - 0.5, y_top))
-            x = x + adv
+        if no_width is not None and no_width.search(sbytes) is not None:
+            raise PdfError("missing_width", repr(sbytes))
+        if n == 0:
+            return
+        xs = np.empty(n + 1)
+        xs[0] = x
+        adv.take(np.frombuffer(sbytes, np.uint8), out=xs[1:])
+        np.add.accumulate(xs, out=xs)
+        x = float(xs[n])
+        y_top = media_top - y
+        shows.append(sbytes)
+        pens.append(xs)
+        meta.append((page_no, y_top - 0.8 * size, y_top))
 
     for page_no, content, fonts, media_top in pages:
-        lx = _Lexer(content)
         stack: list = []
-        font_widths = None  # active width table
+        adv = None  # per-byte advance at the active font and size
+        no_width = None  # regex of the bytes the active font has no width for
         size = 0.0
         leading = 0.0
         line_x = line_y = 0.0  # text line matrix translation
         x = y = 0.0  # current pen position
         in_text = False
-        n = len(content)
-        while True:
-            lx._skip_ws()
-            if lx.pos >= n:
-                break
-            c = content[lx.pos]
-            # operands share the object grammar; operators are keyword runs
-            if c == 0x2F or c == 0x28 or c == 0x3C or c == 0x5B or c == 0x2B or c == 0x2D or c == 0x2E or 0x30 <= c <= 0x39:
-                try:
-                    stack.append(lx.value())
-                except PdfError as e:
-                    raise PdfError("bad_content", str(e))
+        for op in _content_tokens(content):
+            if type(op) is not str:  # operands are values; operators are str
+                stack.append(op)
                 continue
-            start = lx.pos
-            while lx.pos < n and content[lx.pos] not in _WS and content[lx.pos] not in _DELIM:
-                lx.pos += 1
-            op = content[start : lx.pos].decode("latin-1")
-            if not op:
-                raise PdfError("bad_content", f"stray delimiter at {start}")
-            work -= 1
-            if work < 0:
-                raise PdfError("doc_too_large", "content work budget exhausted")
             work -= 1
             if work < 0:
                 raise PdfError("doc_too_large", "content work budget exhausted")
             try:
-                if op == "BT":
-                    line_x = line_y = x = y = 0.0
-                    in_text = True
-                elif op == "ET":
-                    in_text = False
-                elif op == "Tf":
-                    fname, fsize = stack[-2], stack[-1]
-                    base = fonts.get(str(fname))
-                    if base is None:
-                        raise PdfError("missing_font", str(fname))
-                    fw = FONT_WIDTHS.get(base)
-                    if fw is None:
-                        raise PdfError("missing_font", base)
-                    font_widths = fw
-                    size = float(fsize)
-                elif op == "TL":
-                    leading = float(stack[-1])
+                if op == "Tj":
+                    show(stack[-1])
                 elif op == "Td" or op == "TD":
                     tx, ty = float(stack[-2]), float(stack[-1])
                     if op == "TD":
@@ -847,15 +951,6 @@ def _interpret(pages) -> list[tuple]:
                         raise PdfError("bad_content", "Tm with scale/rotation")
                     line_x, line_y = e, f
                     x, y = line_x, line_y
-                elif op == "T*":
-                    line_y = line_y - leading
-                    x, y = line_x, line_y
-                elif op == "'":
-                    line_y = line_y - leading
-                    x, y = line_x, line_y
-                    show(stack[-1])
-                elif op == "Tj":
-                    show(stack[-1])
                 elif op == "TJ":
                     arr = stack[-1]
                     if not isinstance(arr, list):
@@ -867,6 +962,31 @@ def _interpret(pages) -> list[tuple]:
                             x = x - float(el) * size / 1000.0
                         else:
                             raise PdfError("bad_content", f"TJ element {el!r}")
+                elif op == "T*":
+                    line_y = line_y - leading
+                    x, y = line_x, line_y
+                elif op == "'":
+                    line_y = line_y - leading
+                    x, y = line_x, line_y
+                    show(stack[-1])
+                elif op == "BT":
+                    line_x = line_y = x = y = 0.0
+                    in_text = True
+                elif op == "ET":
+                    in_text = False
+                elif op == "Tf":
+                    fname, fsize = stack[-2], stack[-1]
+                    base = fonts.get(str(fname))
+                    if base is None:
+                        raise PdfError("missing_font", str(fname))
+                    table = _FONT_TABLES.get(base)
+                    if table is None:
+                        raise PdfError("missing_font", base)
+                    size = float(fsize)
+                    widths, no_width = table
+                    adv = widths * size / 1000.0  # adv = w * size / 1000.0
+                elif op == "TL":
+                    leading = float(stack[-1])
                 elif op in _NOOP_OPS:
                     pass
                 else:
@@ -876,36 +996,45 @@ def _interpret(pages) -> list[tuple]:
             stack.clear()
         if in_text:
             raise PdfError("bad_content", "unbalanced BT/ET")
-    return rows
+    if not shows:
+        return NO_GLYPHS
+    counts = np.fromiter(map(len, shows), np.int64, len(shows))
+    page, y0, y1 = (np.repeat(np.array(c), counts) for c in zip(*meta))
+    cp = _CP1252[np.frombuffer(b"".join(shows), np.uint8)]
+    x0 = np.concatenate([xs[:-1] for xs in pens])
+    x1 = np.concatenate([xs[1:] for xs in pens]) - 0.5  # x + adv - 0.5
+    glyph = cp != 0x20  # a space advances the pen and emits nothing
+    return GlyphColumns(page[glyph], cp[glyph], x0[glyph], y0[glyph], x1[glyph], y1[glyph])
 
 
 # ---------------------------------------------------------------------------
 # public entry
 # ---------------------------------------------------------------------------
-def pdf_glyphs(
+def pdf_glyph_columns(
     payload: bytes | None,
     max_bytes: int = DEFAULT_MAX_PDF_BYTES,
     max_stream_bytes: int = DEFAULT_MAX_STREAM_BYTES,
-):
-    """Raw PDF bytes -> (glyph_rows, error).
+) -> tuple[GlyphColumns, str | None]:
+    """Raw PDF bytes -> (GlyphColumns, error).
 
-    ``glyph_rows`` is a list of (page, ch, x0, y0, x1, y1) in content-stream
-    emission order (page numbers are 1-based leaf order, P5; ``glyph_id`` is
-    the caller's row index per P8).  On any contract violation returns
-    ``([], code)`` with a taxonomy code — never raises.  ``max_bytes``
-    bounds the raw payload (-> ``doc_too_large``); ``max_stream_bytes``
-    bounds every FlateDecode inflation (-> ``stream_too_large``)."""
+    Glyphs come in content-stream emission order (page numbers are 1-based
+    leaf order, P5; ``glyph_id`` is the row index per P8).  On any contract
+    violation returns ``(NO_GLYPHS, code)`` with a taxonomy code — never
+    raises.  ``max_bytes`` bounds the raw payload (-> ``doc_too_large``);
+    ``max_stream_bytes`` bounds every FlateDecode inflation and each page's
+    joined content (-> ``stream_too_large``)."""
     if payload is None or not payload.startswith(b"%PDF-"):
-        return [], "not_pdf"
+        return NO_GLYPHS, "not_pdf"
     if len(payload) > max_bytes:
-        return [], "doc_too_large"
+        return NO_GLYPHS, "doc_too_large"
     try:
         doc = _Document(bytes(payload), max_stream_bytes=max_stream_bytes)
-        rows = _interpret(_page_inputs(doc))
+        with np.errstate(all="ignore"):  # IEEE inf/nan, as Python floats give
+            cols = _interpret(_page_inputs(doc))
     except PdfError as e:
-        return [], e.code
+        return NO_GLYPHS, e.code
     except RecursionError:
-        return [], "bad_obj"
+        return NO_GLYPHS, "bad_obj"
     except Exception:  # noqa: BLE001 — E6: a malformed file must land in
         # the error channel, never abort the batch.  Typed PdfErrors cover
         # every ANTICIPATED violation; this catches the grammar's long
@@ -913,5 +1042,21 @@ def pdf_glyphs(
         # TypeError, a bytes operand to float() -> ValueError, ...).
         # Masked kernel defects still surface: the golden oracles compare
         # full row content, so a wrongly-errored document fails them.
-        return [], "bad_obj"
-    return rows, None
+        return NO_GLYPHS, "bad_obj"
+    return cols, None
+
+
+def pdf_glyphs(
+    payload: bytes | None,
+    max_bytes: int = DEFAULT_MAX_PDF_BYTES,
+    max_stream_bytes: int = DEFAULT_MAX_STREAM_BYTES,
+):
+    """Raw PDF bytes -> (glyph_rows, error): ``pdf_glyph_columns`` as a
+    list of (page, ch, x0, y0, x1, y1) tuples, ``([], code)`` on error."""
+    cols, err = pdf_glyph_columns(payload, max_bytes, max_stream_bytes)
+    if err is not None:
+        return [], err
+    chars = cols.cp.astype("<u4").tobytes().decode("utf-32-le")
+    return list(
+        zip(cols.page.tolist(), chars, *(c.tolist() for c in cols[2:]))
+    ), None

@@ -5,18 +5,18 @@ Closes the reference's titular front door: it ingests PDF *files*
 OCRs the raw bytes (reference: src/ai/flows/extract-data-from-pdf.ts:
 114-139).  Here the byte layer is the stdlib parser
 (ocr_spark/functions/pdf.py, frozen contract P1-P8) and the layout layer
-is the code-point XY-cut kernel (functions/layout.py L1-L4,
-``page_text_codes`` — the kernel ``layout_ops.glyphs_to_page_text`` runs)
-— so the full engine-A chain runs from raw document bytes with no
-fixture-born glyph table in the path.
+is the code-point XY-cut kernel (functions/layout.py L1-L4) — so the full
+engine-A chain runs from raw document bytes with no fixture-born glyph
+table in the path.
 
 Structure: each operator is one small emitter run by the shared payload
 batch loop (``operators.payloads.map_payloads``, one ``mapInArrow``):
-the emitter parses its document once with ``pdf_glyphs`` and appends
-glyph rows, page rows, or one doc row.
-Each output schema is declared once, as a Spark ``StructType``.  A
-document's rows arrive page-contiguous, so ``_page_texts`` cuts pages
-with one diff over the page column — no sort, no grouping shuffle.
+the emitter parses its document once with ``pdf_glyph_columns`` — numpy
+columns (page, code point, box), no Python object per glyph — and appends
+glyph rows, page rows, or one doc row.  The page and doc emitters hand the
+columns to ``layout.page_texts_codes``, which XY-cuts each page and runs
+line clustering and spacing once over all of the document's leaves.
+Each output schema is declared once, as a Spark ``StructType``.
 
 Scale shape: a single-pass, zero-Exchange plan over the document relation
 (the html extraction branch's shape), no per-row Python UDFs, errors
@@ -26,12 +26,13 @@ batch (session-tuned) times the largest document (KB-to-MB payloads).
 
 from __future__ import annotations
 
-import numpy as np
+from itertools import repeat
+
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ocr_spark.functions.layout import page_text_codes
-from ocr_spark.functions.pdf import pdf_glyphs
+from ocr_spark.functions.layout import page_texts_codes
+from ocr_spark.functions.pdf import pdf_glyph_columns
 from ocr_spark.operators.payloads import map_payloads
 
 PDF_GLYPHS_SCHEMA = T.StructType(
@@ -67,45 +68,32 @@ PDF_DOC_SCHEMA = T.StructType(
 )
 
 
-def _page_texts(rows: list[tuple]) -> list[tuple[int, str]]:
-    """Page-contiguous ``pdf_glyphs`` rows -> [(page, reading-order text)]:
-    one transpose, one utf-32 encode (P7 glyphs are single code points), a
-    cut wherever the page changes; a page with no glyphs gets no entry."""
-    if not rows:
-        return []
-    n = len(rows)
-    page, ch, *boxes = zip(*rows)
-    cp = np.frombuffer("".join(ch).encode("utf-32-le"), dtype="<u4")
-    page = np.fromiter(page, np.int64, n)
-    boxes = [np.fromiter(b, np.float64, n) for b in boxes]
-    cuts = (np.flatnonzero(np.diff(page)) + 1).tolist()
-    return [
-        (int(page[s]), page_text_codes(cp[s:e], *(b[s:e] for b in boxes)))
-        for s, e in zip([0, *cuts], [*cuts, n])
-    ]
-
-
 def _emit_glyphs(out, did, pdf):
-    rows, err = pdf_glyphs(pdf)
+    g, err = pdf_glyph_columns(pdf)
     if err is not None:
         # E6 sentinel row: the error travels in the row, page/glyph slots
         # zeroed (mirrors sample_frames' frame_idx -1 row)
-        rows = [(0, "", 0.0, 0.0, 0.0, 0.0)]
+        out.append((did, 0, 0, "", 0.0, 0.0, 0.0, 0.0, err))
+        return
+    n = g.page.size
+    chars = g.cp.astype("<u4").tobytes().decode("utf-32-le")
     out.extend(
-        (did, page, gid, ch, x0, y0, x1, y1, err)
-        for gid, (page, ch, x0, y0, x1, y1) in enumerate(rows)
+        zip(
+            repeat(did, n), g.page.tolist(), range(n), chars,
+            g.x0.tolist(), g.y0.tolist(), g.x1.tolist(), g.y1.tolist(), repeat(None, n),
+        )
     )
 
 
 def _emit_pages(out, did, pdf):
-    rows, err = pdf_glyphs(pdf)
-    pages = _page_texts(rows) if err is None else [(0, "")]
+    g, err = pdf_glyph_columns(pdf)
+    pages = page_texts_codes(*g) if err is None else [(0, "")]
     out.extend((did, page, text, err) for page, text in pages)
 
 
 def _emit_doc(out, did, pdf):
-    rows, err = pdf_glyphs(pdf)
-    texts = [text for _, text in _page_texts(rows)]
+    g, err = pdf_glyph_columns(pdf)
+    texts = [text for _, text in page_texts_codes(*g)]
     out.append((did, "\n".join(texts), len(texts), err))
 
 

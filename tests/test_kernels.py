@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import example, given, settings
@@ -19,7 +20,12 @@ from ocr_spark.functions.html_extract import (
     tokenize_blocks,
 )
 from ocr_spark.fixtures import generator as gen
-from ocr_spark.functions.layout import LINE_CLUSTER_EPS, page_text, page_text_codes
+from ocr_spark.functions.layout import (
+    LINE_CLUSTER_EPS,
+    page_text,
+    page_text_codes,
+    page_texts_codes,
+)
 from ocr_spark.normalize import collapse_ws, join_blocks, nfc
 
 
@@ -146,7 +152,7 @@ def test_layout_empty_page():
 
 # baseline offsets on, and within 1e-11 of, the line-clustering threshold:
 # the vectorized clustering in page_text_codes defers those decisions to
-# the sequential loop (_cluster_lines_seq), so both branches get exercised
+# the sequential loop (_line_starts_seq), so both branches get exercised
 _NEAR_EPS = st.sampled_from(
     [d * s for s in (1.0, -1.0) for d in (
         LINE_CLUSTER_EPS, LINE_CLUSTER_EPS + 1e-11, LINE_CLUSTER_EPS - 1e-11,
@@ -201,6 +207,23 @@ def test_page_text_codes_matches_page_text_on_generated_pdfs():
             assert codes == spec
             n_pages += 1
     assert n_pages > 40
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_glyph_pages(), min_size=1, max_size=4), st.integers(1, 3))
+def test_page_texts_codes_matches_page_text_per_page(pages, step):
+    """The one-pass document kernel (pdf_ops) gives every page the string
+    spec's text, leaf and page boundaries included; a page with glyphs
+    but none in the body gets ""."""
+    numbers = [1 + step * i for i in range(len(pages))]
+    cols = [
+        (p, ord(ch), *box)
+        for p, glyphs in zip(numbers, pages)
+        for ch, *box in glyphs
+    ]
+    page, cp, *boxes = (np.array(c) for c in zip(*cols))
+    want = [(p, page_text(*zip(*glyphs))) for p, glyphs in zip(numbers, pages)]
+    assert page_texts_codes(page, cp, *boxes) == want
 
 
 # ---------------------------------------------------------------------------

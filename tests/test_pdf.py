@@ -434,6 +434,144 @@ def test_pages_sharing_one_content_stream_are_doc_too_large_within_deadline(dead
         assert pdf_glyphs(pdf) == ([], "doc_too_large")
 
 
+def _contents_array_pdf(content: bytes, times: int, flate: bool) -> bytes:
+    """One page whose /Contents array names one stream ``times`` times."""
+    stream = zlib.compress(content, 9) if flate else content
+    return _handmade_pdf(
+        {
+            1: b"<< /Type /Catalog /Pages 2 0 R >>",
+            2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            3: b"<< /Type /Page /MediaBox [0 0 612 792] /Contents [%s] >>"
+            % b" ".join([b"4 0 R"] * times),
+            4: b"<< /Length %d%s >>\nstream\n%s\nendstream"
+            % (len(stream), b" /Filter /FlateDecode" if flate else b"", stream),
+        }
+    )
+
+
+def test_contents_array_naming_one_stream_many_times_is_stream_too_large_within_deadline(deadline):
+    """A ~2 KB file whose page names one 1 MB comment-only Flate stream
+    100 times: the joined content stops at ``max_stream_bytes`` instead of
+    holding 100 copies."""
+    pdf = _contents_array_pdf(b"%" + b"x" * (1 << 20) + b"\n", 100, flate=True)
+    assert len(pdf) < 4_000
+    with deadline(1.0):
+        assert pdf_glyphs(pdf) == ([], "stream_too_large")
+    # the bound is on the joined length: 3 x 10 bytes + 2 newlines
+    small = _contents_array_pdf(b"BT ET    \n", 3, flate=False)
+    assert pdf_glyphs(small, max_stream_bytes=32) == ([], None)
+    assert pdf_glyphs(small, max_stream_bytes=31) == ([], "stream_too_large")
+
+
+def test_work_budget_charges_one_unit_per_operator(monkeypatch):
+    """Each operator costs exactly 1 unit of ``MAX_DOC_WORK``."""
+    monkeypatch.setattr(pdfmod, "MAX_DOC_WORK", 10)
+    assert pdf_glyphs(_minimal_pdf(b"BT ET " * 5)) == ([], None)
+    assert pdf_glyphs(_minimal_pdf(b"BT ET " * 5 + b"q")) == ([], "doc_too_large")
+
+
+def _one_page_pdf(content: bytes) -> bytes:
+    """One US-Letter page over ``content``; /F1 Courier, /F2 Helvetica."""
+    return _handmade_pdf(
+        {
+            1: b"<< /Type /Catalog /Pages 2 0 R >>",
+            2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            3: b"<< /Type /Page /MediaBox [0 0 612 792] /Contents 4 0 R "
+            b"/Resources << /Font << /F1 5 0 R /F2 6 0 R >> >> >>",
+            4: b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+            5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Courier >>",
+            6: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+        }
+    )
+
+
+def test_show_error_precedence():
+    """Within one show: an undefined WinAnsi byte (0x81) anywhere beats a
+    Helvetica char with no width (0xE9); a show before any Tf is
+    missing_font, even an empty one."""
+    cases = {
+        b"BT /F2 10 Tf (\\201\\351) Tj ET": "bad_content",
+        b"BT /F2 10 Tf (\\351\\201) Tj ET": "bad_content",
+        b"BT /F2 10 Tf (\\351) Tj ET": "missing_width",
+        b"BT /F2 10 Tf (a\\351) Tj ET": "missing_width",
+        b"BT /F1 10 Tf (\\351) Tj ET": None,  # Courier has every width
+        b"BT () Tj ET": "missing_font",
+    }
+    for content, code in cases.items():
+        assert pdf_glyphs(_one_page_pdf(content))[1] == code, content
+
+
+def test_empty_show_emits_nothing_and_keeps_the_pen():
+    plain = pdf_glyphs(_one_page_pdf(b"BT /F2 10 Tf 72 700 Td (a) Tj (b) Tj ET"))
+    assert plain[1] is None and len(plain[0]) == 2
+    for content in (
+        b"BT /F2 10 Tf 72 700 Td (a) Tj () Tj (b) Tj ET",
+        b"BT /F2 10 Tf 72 700 Td [(a) () <> (b)] TJ ET",
+    ):
+        assert pdf_glyphs(_one_page_pdf(content)) == plain, content
+
+
+def _p7_rows(font: str, size: float, x: float, y: float, elements) -> list[tuple]:
+    """The scalar P7 loop: one page, one Td to (x, y), then shows (bytes)
+    and TJ kerns (numbers) in order."""
+    widths = pdfmod.HELVETICA_WIDTHS if font == "Helvetica" else pdfmod.COURIER_WIDTHS
+    y_top = 792.0 - y
+    rows = []
+    for el in elements:
+        if isinstance(el, bytes):
+            for ch in el.decode("cp1252"):
+                adv = widths.get(ch) * size / 1000.0
+                if ch != " ":
+                    rows.append((1, ch, x, y_top - 0.8 * size, x + adv - 0.5, y_top))
+                x = x + adv
+        else:
+            x = x - el * size / 1000.0
+    return rows
+
+
+def test_vectorized_show_matches_scalar_p7_property():
+    """Random shows, TJ kerns and sizes: the kernel's boxes equal the
+    scalar P7 loop bit for bit (repr distinguishes -0.0 and every ulp)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    helv = bytes(sorted(ord(c) for c in pdfmod.HELVETICA_WIDTHS))
+    courier = bytes(b for b in range(256) if b not in b"\x81\x8d\x8f\x90\x9d")  # WinAnsi
+    num = st.floats(-1e4, 1e4, allow_nan=False).map(lambda v: float(gen._pdf_num(v)))
+
+    @st.composite
+    def pages(draw):
+        font = draw(st.sampled_from(["Courier", "Helvetica"]))
+        alphabet = courier if font == "Courier" else helv
+        text = st.lists(st.sampled_from(alphabet), max_size=40).map(bytes)
+        elements = draw(st.lists(st.one_of(text, num), max_size=12))
+        size = draw(st.one_of(st.floats(0.5, 72.0), st.sampled_from([0.0, 10.0, -7.5])))
+        size = float(gen._pdf_num(size))
+        return font, size, draw(num), draw(num), elements, draw(st.integers(0, 2**31))
+
+    @settings(max_examples=200, deadline=None)
+    @given(pages())
+    def prop(page):
+        font, size, x, y, elements, seed = page
+        rng = random.Random(seed)
+        ops = []
+        for el in elements:
+            if isinstance(el, bytes):
+                ops.append(gen._pdf_lit(el, rng).encode("latin-1"))
+            else:
+                ops.append(gen._pdf_num(el).encode())
+        content = b"BT /%s %s Tf %s %s Td [%s] TJ ET" % (
+            b"F1" if font == "Courier" else b"F2",
+            gen._pdf_num(size).encode(), gen._pdf_num(x).encode(),
+            gen._pdf_num(y).encode(), b" ".join(ops),
+        )
+        rows, err = pdf_glyphs(_one_page_pdf(content))
+        assert err is None
+        assert repr(rows) == repr(_p7_rows(font, size, x, y, elements))
+
+    prop()
+
+
 @pytest.mark.parametrize("section", ["table", "stream"])
 def test_incremental_free_entry_hides_older_definition(section):
     """An update that frees object 4 (the page content) must not let the
