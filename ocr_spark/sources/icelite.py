@@ -16,17 +16,20 @@ engine needs (SURVEY.md §2 K1-K8, §7 M4):
 - **Bucket partitioning**: rows are hashed on the key column into N buckets
   (``bucket(N, url)`` layout per BASELINE.json:6); readers can prune to a
   bucket subset via the manifest without listing directories.
+- **Task-side writes** (Iceberg's Spark writer protocol, ``_write_data``):
+  each write task writes its own bucket files and returns only their
+  metadata; the driver commits it.
 - **Lineage + resume**: every snapshot records operation metadata (e.g. the
-  bucket-group a pipeline commit covered) and per-file row counts (read
-  from parquet footers — no extra Spark job).  A resumed run asks the table
-  which groups are already committed and skips them.
+  bucket-group a pipeline commit covered) and per-file row counts (as the
+  writing task counted them — no extra Spark job).  A resumed run asks the
+  table which groups are already committed and skips them.
 
 Layout::
 
     <root>/
       _HEAD                      # text file: current snapshot id (atomic)
       _snapshots/<id>.json       # manifest chain (parent_id links)
-      data/snap-<id>/bucket=<k>/part-*.parquet
+      data/<token>/__bucket=<k>/part-<uuid>.parquet   # one token per write
 """
 
 from __future__ import annotations
@@ -41,6 +44,7 @@ from typing import Any, Callable
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 BUCKET_COL = "__bucket"
 
@@ -75,6 +79,68 @@ class StaleTableError(ValueError):
 def bucket_expr(key_col: str, n_buckets: int):
     """Deterministic url-hash bucket: non-negative xxhash64 mod N (JVM-side)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+# what each write task returns per file it wrote (see IceliteTable._write_data)
+WRITTEN_FILES_SCHEMA = "bucket int, path string, rows long"
+# buffered bytes at which a write task flushes its buckets as row groups
+ROW_GROUP_BYTES = 64 << 20
+
+
+def write_bucket_files(batches, root: str, token: str):
+    """Task side of ``IceliteTable._write_data`` (the protocol is described
+    there).  Rows are buffered until ``ROW_GROUP_BYTES`` and then flushed as
+    one row group per bucket."""
+    import numpy as np
+    import pyarrow as pa
+
+    pending: dict[int, list] = {}
+    pending_bytes = 0
+    writers: dict[int, pq.ParquetWriter] = {}
+    paths: dict[int, str] = {}
+    rows: dict[int, int] = {}
+
+    def flush() -> None:
+        for b, pieces in pending.items():
+            table = pa.Table.from_batches(pieces)
+            if b not in writers:
+                paths[b] = os.path.join(
+                    "data", token, f"{BUCKET_COL}={b}", f"part-{uuid.uuid4().hex}.parquet"
+                )
+                full = os.path.join(root, paths[b])
+                os.makedirs(os.path.dirname(full), exist_ok=True)
+                writers[b] = pq.ParquetWriter(full, table.schema, compression="snappy")
+            writers[b].write_table(table, row_group_size=table.num_rows)
+            rows[b] = rows.get(b, 0) + table.num_rows
+        pending.clear()
+
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        buckets = batch.column(BUCKET_COL).to_numpy()
+        order = np.argsort(buckets, kind="stable")
+        buckets = buckets[order]
+        data = batch.drop_columns([BUCKET_COL]).take(pa.array(order))
+        starts = np.flatnonzero(np.diff(buckets, prepend=-1))
+        for start, end in zip(starts, [*starts[1:], len(buckets)]):
+            piece = data.slice(start, end - start)
+            pending.setdefault(int(buckets[start]), []).append(piece)
+            pending_bytes += piece.nbytes
+        if pending_bytes >= ROW_GROUP_BYTES:
+            flush()
+            pending_bytes = 0
+    flush()
+    for w in writers.values():
+        w.close()
+    done = sorted(paths)
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(done, pa.int32()),
+            pa.array([paths[b] for b in done], pa.string()),
+            pa.array([rows[b] for b in done], pa.int64()),
+        ],
+        names=["bucket", "path", "rows"],
+    )
 
 
 @dataclass
@@ -215,30 +281,43 @@ class IceliteTable:
     # ----------------------------------------------------------------- write
     def _write_data(self, df: DataFrame, token: str) -> tuple[dict, dict]:
         """Write df bucket-partitioned under data/<token>; returns
-        (files: bucket->paths, file_rows: path->rows from parquet footers).
-        The token is unique per write attempt so concurrent writers never
-        collide on a directory; a failed attempt leaves unreferenced files
-        that expire_snapshots-style GC may remove."""
-        out_dir = os.path.join(self.root, "data", token)
-        (
+        (files: bucket->paths, file_rows: path->rows).
+
+        The Iceberg writer protocol: the bucket column is computed
+        JVM-side, and one ``mapInArrow`` pass over df's own partitions
+        runs ``write_bucket_files`` in each task, which writes the task's
+        rows into one snappy parquet file per bucket it holds, at
+        ``data/<token>/__bucket=<b>/part-<uuid>.parquet``.  Tasks return
+        only ``(bucket, path, rows)``; the driver collects that metadata
+        and commits it, so a write is one Spark job over df's own plan.  A
+        write of T tasks leaves up to T files per bucket — ``compact``
+        folds them back to one.
+
+        Workers unpickle ``write_bucket_files`` by reference, importing
+        this module: keep it free of ``ocr_spark.plans`` (the
+        ``operators/payloads.py`` leaf rule).
+
+        The token is unique per commit attempt (a merge writes its incoming
+        rows and its anti-join survivors under one), and every file name
+        carries a fresh uuid, so concurrent writers and retried or
+        speculative task attempts never collide; files of an attempt that did not win are
+        never returned, so no snapshot references them and
+        ``remove_orphan_files`` reaps them."""
+        root = os.path.abspath(self.root)
+
+        def write(batches):
+            return write_bucket_files(batches, root, token)
+
+        written = (
             df.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets))
-            .repartition(BUCKET_COL)
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(out_dir)
+            .mapInArrow(write, WRITTEN_FILES_SCHEMA)
+            .collect()
         )
         files: dict[str, list[str]] = {}
         file_rows: dict[str, int] = {}
-        for bdir in sorted(os.listdir(out_dir)):
-            if not bdir.startswith(f"{BUCKET_COL}="):
-                continue
-            bucket = bdir.split("=", 1)[1]
-            for fn in sorted(os.listdir(os.path.join(out_dir, bdir))):
-                if not fn.endswith(".parquet"):
-                    continue
-                rel = os.path.join("data", token, bdir, fn)
-                files.setdefault(bucket, []).append(rel)
-                file_rows[rel] = pq.read_metadata(os.path.join(self.root, rel)).num_rows
+        for bucket, path, rows in sorted(written):
+            files.setdefault(str(bucket), []).append(path)
+            file_rows[path] = rows
         return files, file_rows
 
     # ---------------------------------------------------------------- schema
@@ -375,6 +454,17 @@ class IceliteTable:
         Exactly-once visible effect per key: running the same merge twice
         yields the same table (reference save-to-google-sheet.ts:146-240).
 
+        ``df`` runs exactly once: its rows are written first, through
+        ``_write_data``, and the anti-join reads the key column back from
+        the files just written — so an expensive upstream (the extraction
+        transform) is never recomputed for the key set.  Only the buckets
+        those files land in can hold a matched key: their old files are
+        anti-joined and the survivors written by the same writer; every
+        other bucket, ``touched_buckets`` included, keeps its files.
+        ``touched_buckets`` (the pipeline's bucket group) is the bucket set
+        the caller promises ``df`` stays inside; a row outside it is a
+        typed error.
+
         Concurrency: writers touching DISJOINT buckets may run in parallel
         (manifest rebuilt from the current head at commit time, under the
         lock); a same-bucket race raises a commit conflict instead of
@@ -386,51 +476,47 @@ class IceliteTable:
             return self.append(df, metadata)
         self._validate_or_record_schema(df)
 
-        incoming = df.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets))
+        token = f"w-{uuid.uuid4().hex[:12]}"
+        files, file_rows = self._write_data(df, token)
         if touched_buckets is not None:
-            # caller already knows the affected buckets (e.g. the pipeline's
-            # bucket-group) — skip the extra job over the incoming DF
-            touched = [str(b) for b in touched_buckets]
-        else:
-            touched = [
-                str(r[BUCKET_COL])
-                for r in incoming.select(BUCKET_COL).distinct().collect()
-            ]
-        old_paths = [p for b in touched for p in start_head.files.get(b, [])]
+            stray = sorted(set(files) - {str(b) for b in touched_buckets})
+            if stray:
+                # under-covering touched_buckets would APPEND these buckets'
+                # rows without anti-joining their old keys — duplicate keys,
+                # silently; surface it as a typed layout error instead
+                raise IceliteError(
+                    f"merge wrote buckets {stray} outside touched_buckets "
+                    f"{sorted(touched_buckets)} — the caller's bucket set "
+                    "under-covers the incoming batch"
+                )
+        old_paths = [p for b in files for p in start_head.files.get(b, [])]
         if old_paths:
-            old = spark.read.parquet(*[os.path.join(self.root, p) for p in old_paths])
+            # both reads take df's (validated) schema: no inference job
+            def scan(paths, schema):
+                return spark.read.schema(schema).parquet(
+                    *[os.path.join(self.root, p) for p in paths]
+                )
+
+            keys = scan(list(file_rows), T.StructType([df.schema[self.key_col]]))
             # no forced broadcast on the key set: a bucket-group merge at
             # the 100 TB design point carries ~10^8 distinct keys (multi-GB
             # — over Spark's broadcast hard limit and the driver heap);
             # AQE upgrades the anti-join to broadcast at runtime whenever
             # the key relation is actually small, so the hint only removed
             # the planner's ability to fall back
-            keep = old.join(
-                incoming.select(self.key_col).distinct(),
-                self.key_col,
-                "left_anti",
-            )
-            combined = keep.unionByName(incoming.drop(BUCKET_COL))
-        else:
-            combined = incoming.drop(BUCKET_COL)
-        files, file_rows = self._write_data(combined, f"w-{uuid.uuid4().hex[:12]}")
-        stray = sorted(set(files) - set(touched))
-        if stray:
-            # under-covering touched_buckets would APPEND these buckets'
-            # rows without anti-joining their old keys — duplicate keys,
-            # silently; surface it as a typed layout error instead
-            raise IceliteError(
-                f"merge wrote buckets {stray} outside touched_buckets "
-                f"{sorted(touched)} — the caller's bucket set under-covers "
-                "the incoming batch"
-            )
+            keep = scan(old_paths, df.schema).join(keys.distinct(), self.key_col, "left_anti")
+            kept, kept_rows = self._write_data(keep, token)
+            for b, paths in kept.items():
+                files[b].extend(paths)
+            file_rows.update(kept_rows)
 
         with self._lock:
             head = self.snapshot()
             if head.snapshot_id != start_head.snapshot_id:
-                # someone committed since we started: fine iff our buckets
-                # were untouched (our anti-join read their old state)
-                for b in touched:
+                # someone committed since we started: fine iff the buckets
+                # we rewrite were untouched (our anti-join read their old
+                # state)
+                for b in files:
                     if head.files.get(b, []) != start_head.files.get(b, []):
                         raise CommitConflictError(
                             f"icelite commit conflict: bucket {b} changed "
@@ -438,13 +524,13 @@ class IceliteTable:
                         )
             sid = head.snapshot_id + 1
             new_files = {
-                b: list(paths) for b, paths in head.files.items() if b not in touched
+                b: list(paths) for b, paths in head.files.items() if b not in files
             }
             new_rows = {
                 p: head.file_rows[p] for paths in new_files.values() for p in paths
             }
             for b, paths in files.items():
-                new_files.setdefault(b, []).extend(paths)
+                new_files[b] = paths
                 for p in paths:
                     new_rows[p] = file_rows[p]
             self._commit(
@@ -475,13 +561,22 @@ class IceliteTable:
             if b in wanted
             for p in ps
         ]
+        schema = self._spark_schema(head)
         if not paths:
-            return spark.createDataFrame([], self._any_schema(spark, head))
-        return spark.read.parquet(*paths)
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*paths)
 
-    def _any_schema(self, spark: SparkSession, head: Snapshot):
+    def _spark_schema(self, head: Snapshot) -> str:
+        """The table's schema as a DDL string, so a read plans without
+        Spark's parquet schema-inference job: the types frozen in
+        ``_schema.json``, in the column order of one data file's footer
+        (``_schema.json`` keeps its keys sorted)."""
+        types = self.table_schema()
         some = next(p for ps in head.files.values() for p in ps)
-        return spark.read.parquet(os.path.join(self.root, some)).schema
+        names = pq.read_schema(os.path.join(self.root, some)).names
+        return ", ".join(
+            "`{}` {}".format(n.replace("`", "``"), types[n]) for n in names
+        )
 
     def patch_metadata(self, sid: int, updates: dict) -> None:
         """Amend one snapshot's metadata in place (manifest file only — the
@@ -497,7 +592,8 @@ class IceliteTable:
         ``max_files_per_bucket`` is rewritten into one file.  Content is
         unchanged (same rows, new layout) — the lakehouse maintenance op
         that keeps scan task counts proportional to data, not to commit
-        history.  Returns the new snapshot id, or None if nothing to do.
+        history (every write leaves up to one file per bucket per task).
+        Returns the new snapshot id, or None if nothing to do.
 
         Concurrency follows merge(): the rewrite runs against the starting
         head outside the lock, then the commit re-reads the head under the
@@ -512,8 +608,10 @@ class IceliteTable:
         }
         if not fat:
             return None
-        paths = [os.path.join(self.root, p) for ps in fat.values() for p in ps]
-        rewritten = spark.read.parquet(*paths)
+        # one task per bucket, so the task-side writer makes one file each
+        rewritten = self.read(
+            spark, buckets=[int(b) for b in fat], snapshot_id=start_head.snapshot_id
+        ).repartition(bucket_expr(self.key_col, self.n_buckets))
         files, file_rows = self._write_data(rewritten, f"compact-{uuid.uuid4().hex[:12]}")
         with self._lock:
             head = self.snapshot()
@@ -580,16 +678,22 @@ class IceliteTable:
         (Iceberg's ``remove_orphan_files``; expire_snapshots can't reach
         them because they were never referenced).  ``older_than_s`` guards
         against deleting files of an IN-FLIGHT write (Iceberg defaults to
-        3 days); 0 is only safe when no writer is running.  Returns the
-        deleted paths (relative)."""
+        3 days); 0 is only safe when no writer is running.  Files of a
+        failed or losing speculative task attempt are orphans too: the
+        driver never received their metadata.  Returns the deleted paths
+        (relative).
+
+        Non-parquet files in a directory that holds live data survive:
+        tables written through Spark's own file writer (before the
+        task-side writer) carry its ``_SUCCESS``/``.crc`` sidecars there."""
         import time
 
         live: set[str] = set()
         for s in self.snapshots():
             for ps in s.files.values():
                 live.update(ps)
-        # directories holding at least one live file keep their Spark
-        # sidecars (_SUCCESS, .crc); fully-orphaned write dirs lose them too
+        # directories holding at least one live file keep their sidecars;
+        # fully-orphaned write dirs lose them too
         live_dirs = {os.path.dirname(p) for p in live}
         data_root = os.path.join(self.root, "data")
         doomed: list[str] = []

@@ -179,6 +179,13 @@ def test_remove_orphan_files(spark, tmp_table, tmp_path):
         f.write(b"not really parquet")
     sidecar = os.path.join(tmp_table.root, "data", "w-crashed", "_SUCCESS")
     open(sidecar, "w").close()
+    # a committed write dir with a Spark sidecar (_SUCCESS at the token-dir
+    # root two levels above the bucket files), as tables written through
+    # Spark's file writer have
+    head = tmp_table.snapshot()
+    some_live = next(p for ps in head.files.values() for p in ps)
+    token_dir = os.path.dirname(os.path.dirname(os.path.join(tmp_table.root, some_live)))
+    open(os.path.join(token_dir, "_SUCCESS"), "w").close()
     assert tmp_table.expire_snapshots(keep_last=1) == []  # can't see it
     deleted = tmp_table.remove_orphan_files()
     assert sorted(deleted) == [
@@ -187,11 +194,7 @@ def test_remove_orphan_files(spark, tmp_table, tmp_path):
     ]
     assert not os.path.exists(orphan)
     assert not os.path.exists(os.path.dirname(crashed))  # empty dirs pruned
-    # committed write dirs keep their Spark sidecars (_SUCCESS at the
-    # token-dir root two levels above the bucket files)
-    head = tmp_table.snapshot()
-    some_live = next(p for ps in head.files.values() for p in ps)
-    token_dir = os.path.dirname(os.path.dirname(os.path.join(tmp_table.root, some_live)))
+    # committed write dirs keep their sidecars
     assert os.path.exists(os.path.join(token_dir, "_SUCCESS"))
     # committed data intact
     assert {r["url"] for r in tmp_table.read(spark).collect()} == {"u1", "u2"}
@@ -270,3 +273,125 @@ def test_layout_mismatch_rejected(spark, tmp_table):
         IceliteTable(tmp_table.root, key_col="url", n_buckets=16)
     with pytest.raises(IceliteError, match="laid out with"):
         IceliteTable(tmp_table.root, key_col="doc_id", n_buckets=4)
+
+
+@pytest.mark.parametrize("touched", [None, [0, 1, 2, 3]])
+def test_merge_runs_incoming_once(spark, tmp_table, touched):
+    """A merge into populated buckets evaluates the incoming batch once: its
+    rows are written first and the anti-join reads the key column back from
+    those files, so an expensive transform never runs again for the key
+    set (nor for a bucket-discovery pass when touched_buckets is None)."""
+    tmp_table.append(_df(spark, [(f"u{i}", i) for i in range(20)]))
+    seen = spark.sparkContext.accumulator(0)
+
+    # the key itself comes out of the counted transform, so no column
+    # pruning can drop it from a key-set or bucket pass
+    @F.udf("string")
+    def counted(url):
+        seen.add(1)
+        return url
+
+    batch = _df(spark, [(f"u{i}", 100 + i) for i in range(0, 30, 3)])
+    tmp_table.merge(batch.withColumn("url", counted("url")), touched_buckets=touched)
+    assert seen.value == 10
+    got = {r["url"]: r["v"] for r in tmp_table.read(spark).collect()}
+    want = {f"u{i}": i for i in range(20)} | {f"u{i}": 100 + i for i in range(0, 30, 3)}
+    assert got == want
+
+
+def test_sink_types_round_trip(spark, tmp_path):
+    """What the task-side writer lands reads back through Spark with the
+    merged rows' own types and values: timestamps, array<struct>, a
+    non-nullable int and a null error column, through both the incoming
+    files and the anti-join survivors."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    table = IceliteTable(str(tmp_path / "typed"), key_col="url", n_buckets=4)
+    span = T.StructType(
+        [T.StructField("start", T.IntegerType()), T.StructField("label", T.StringType())]
+    )
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("warc_ts", T.TimestampType()),
+            T.StructField("spans", T.ArrayType(span)),
+            T.StructField("n", T.IntegerType(), nullable=False),
+            T.StructField("error", T.StringType()),
+        ]
+    )
+
+    def rows(keys, n):
+        return [
+            (
+                f"u{k}",
+                dt.datetime(2024, 1, 1 + k % 28, k % 24, 30, 15, 123456),
+                [(k, "title"), (k + 1, None)] if k % 3 else [],
+                n,
+                None if k % 4 else "E_PARSE",
+            )
+            for k in keys
+        ]
+
+    table.append(spark.createDataFrame(rows(range(12), 1), schema))
+    incoming = spark.createDataFrame(rows(range(8, 20), 2), schema)
+    table.merge(incoming)
+    got = table.read(spark)
+    assert {f.name: f.dataType for f in got.schema} == {
+        f.name: f.dataType for f in incoming.schema
+    }
+    want = spark.createDataFrame(rows(range(8), 1) + rows(range(8, 20), 2), schema)
+    assert sorted(got.select(*schema.names).collect()) == sorted(want.collect())
+
+
+def test_file_rows_match_parquet_footers(spark, tmp_table):
+    """Every manifest ``file_rows`` entry is the task's own count and must
+    equal that file's parquet footer — after multi-task appends, a merge
+    and a compaction."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    def check():
+        head = tmp_table.snapshot()
+        paths = [p for ps in head.files.values() for p in ps]
+        assert sorted(head.file_rows) == sorted(paths)
+        for b, ps in head.files.items():
+            for p in ps:
+                assert f"__bucket={b}/" in p
+                footer = pq.read_metadata(os.path.join(tmp_table.root, p)).num_rows
+                assert footer == head.file_rows[p], p
+        assert tmp_table.row_count() == tmp_table.read(spark).count()
+
+    tmp_table.append(_df(spark, [(f"u{i}", i) for i in range(50)]).repartition(3))
+    tmp_table.merge(_df(spark, [(f"u{i}", -i) for i in range(0, 80, 4)]).repartition(2))
+    check()
+    assert tmp_table.row_count() == 50 + len(range(52, 80, 4))
+    assert any(len(ps) > 1 for ps in tmp_table.snapshot().files.values())
+    tmp_table.compact(spark)
+    assert all(len(ps) == 1 for ps in tmp_table.snapshot().files.values())
+    check()
+
+
+def test_read_plans_without_a_spark_job(spark, tmp_path):
+    """read() passes the table's stored schema, so building the relation
+    runs no parquet schema-inference job; the columns keep the written
+    order (``_schema.json`` itself is key-sorted), also for a read of
+    buckets that hold no files."""
+    table = IceliteTable(str(tmp_path / "ordered"), key_col="url", n_buckets=4)
+    table.append(
+        spark.createDataFrame([(f"u{i}", i, "x") for i in range(8)], "url string, z int, a string")
+        .coalesce(1)
+    )
+    sc = spark.sparkContext
+    group = "icelite-read-plans-only"
+    sc.setJobGroup(group, "plan icelite reads")
+    try:
+        whole = table.read(spark)
+        empty = table.read(spark, buckets=[7])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert whole.columns == empty.columns == ["url", "z", "a"]
+    assert whole.count() == 8 and empty.count() == 0

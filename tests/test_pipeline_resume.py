@@ -62,6 +62,37 @@ def test_rerun_after_completion_is_noop(spark, pages, tmp_path):
     assert out.head_id() == head
 
 
+def test_group_is_one_job_without_exchange(spark, pages, tmp_path, monkeypatch):
+    """A bucket group into a fresh table is ONE Spark job whose executed plan
+    has no Exchange: extraction tasks write their own bucket files and the
+    driver commits only the file metadata they return."""
+    plans = []
+    df_type = type(pages)
+    collect = df_type.collect
+
+    def recording_collect(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(df_type, "collect", recording_collect)
+    out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
+    pipe = ExtractionPipeline(out, n_buckets=8, group_size=2)
+    sc = spark.sparkContext
+    job_group = "pipeline-groups-one-job-each"
+    sc.setJobGroup(job_group, "pipeline groups into a fresh table")
+    try:
+        stats = pipe.run(pages)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["groups"] == 4
+    # the first group appends, the other three merge into empty buckets
+    assert len(sc.statusTracker().getJobIdsForGroup(job_group)) == 4
+    assert len(plans) == 4
+    assert not [p for p in plans if "Exchange" in p]
+    assert out.row_count() == pages.count()
+
+
 def test_lineage_counters_recorded(spark, pages, tmp_path):
     out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
     ExtractionPipeline(out, n_buckets=8, group_size=4).run(pages)
