@@ -58,18 +58,17 @@ def guarded_broadcast(rel: DataFrame, max_rows: int | None) -> DataFrame:
     rows, else unchanged (a shuffle join).  ``max_rows=None`` broadcasts
     unconditionally, for callers that know ``rel`` is bounded.
 
-    The probe COLLECTS up to ``max_rows``+1 rows: a ``limit().count()``
-    cannot short-circuit below a blocking aggregate, counting then joining
-    would run the aggregate twice, and a persisted relation would leak a
-    cache the caller never owns.  Below the cap the collected rows BECOME
-    the broadcast side, so the aggregate runs exactly once; above it the
-    shuffle join recomputes it once (pathological path only).  Driver
-    footprint: up to ``max_rows``+1 Row objects at a few hundred bytes
-    each — hundreds of MB at a 1M cap, the same order as the broadcast it
-    guards."""
+    The probe COLLECTS up to ``max_rows``+1 rows, as one Arrow table: a
+    ``limit().count()`` cannot short-circuit below a blocking aggregate,
+    counting then joining would run the aggregate twice, and a persisted
+    relation would leak a cache the caller never owns.  Below the cap the
+    collected table BECOMES the broadcast side, so the aggregate runs
+    exactly once; above it the shuffle join recomputes it once
+    (pathological path only).  Driver footprint: the Arrow table, about
+    the relation's own bytes — not one Python ``Row`` per row."""
     if max_rows is None:
         return F.broadcast(rel)
-    probe = rel.limit(max_rows + 1).collect()
-    if len(probe) > max_rows:
+    probe = rel.limit(max_rows + 1).toArrow()
+    if probe.num_rows > max_rows:
         return rel
     return F.broadcast(rel.sparkSession.createDataFrame(probe, schema=rel.schema))

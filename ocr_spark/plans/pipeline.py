@@ -9,17 +9,21 @@ table is identical to an uninterrupted run (exactly-once visible rows per
 url; the per-group MERGE makes replays of a half-processed group
 idempotent, reference K3 semantics).
 
-Lineage/counters ride on ``df.observe``: docs in, docs errored, html bytes,
-text chars per commit — recorded into the snapshot metadata alongside
-per-file row counts.
+Lineage counters — docs, docs errored, text chars per commit — come from
+the file metadata the group's incoming write returns (rows, errors and
+text characters per file, counted by the write tasks that also run the
+extraction step; see ``IceliteTable._write_data``), never from the
+anti-join survivors, and land in the snapshot metadata alongside per-file
+row counts.  Only the attempts whose metadata the driver collected count,
+so a retried or speculative task never counts twice.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ocr_spark.operators.extract import extract_pages
+from ocr_spark.operators.payloads import batch_step
 from ocr_spark.plans.partitioning import salted_repartition
 from ocr_spark.sources.icelite import IceliteTable, bucket_expr
 
@@ -44,9 +48,10 @@ class ExtractionPipeline:
         ``key_col``/``transform`` generalize the pipeline beyond the html
         branch: ``transform`` maps a group's input slice to the rows merged
         into the output (default :func:`extract_pages`) and must emit the
-        key column plus ``text``/``error`` for the lineage counters — e.g.
-        ``pdf_ops.pdf_doc_records`` with ``key_col='doc_id'`` runs the PDF
-        front door resumable (jobs/extract_job.py --format pdf)."""
+        key column plus ``text``/``error`` for the lineage counters, which
+        the write tasks count — e.g. ``pdf_ops.pdf_doc_records`` with
+        ``key_col='doc_id'`` runs the PDF front door resumable
+        (jobs/extract_job.py --format pdf)."""
         # the OUTPUT layout must align with the pipeline's bucket groups,
         # same as the input check in _group_input: merging group [0..3]
         # into a table with a different n_buckets/key would scatter rows
@@ -103,19 +108,18 @@ class ExtractionPipeline:
         part = self._group_input(pages, spark, group)
         if self.salt:
             part = salted_repartition(part, self.key_col, self.n_buckets, self.salt)
-        obs = Observation(f"extract-group-{group[0]}")
-        extracted = self.transform(part).observe(
-            obs,
-            F.count(F.lit(1)).alias("docs"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
-            F.sum(F.length("text")).alias("text_chars"),
-        )
+        extracted = self.transform(part)
         sid = self.out.merge(
             extracted,
             metadata={"bucket_group": group, "counters": {}},
             touched_buckets=group,
         )
-        got = {k: (int(v) if v is not None else 0) for k, v in obs.get.items()}
+        written = batch_step(extracted).written
+        got = {
+            "docs": sum(f.rows for f in written),
+            "errors": sum(f.errors for f in written),
+            "text_chars": sum(f.text_chars for f in written),
+        }
         # the counters only exist once the write ran; amend the manifest
         # (metadata-only — HEAD untouched, safe under concurrency)
         self.out.patch_metadata(sid, {"counters": got})

@@ -99,6 +99,14 @@ def build_session(
             os.environ.get("OCR_SPARK_MAX_PARTITION_BYTES", "4194304"),
         )
         .config("spark.sql.files.openCostInBytes", "65536")
+        # ---- planning a read lists its files on the driver ---------------
+        # Above this many paths Spark lists them in a parallel Spark job,
+        # one task per path.  icelite reads pass the manifest's own file
+        # list (up to tasks x buckets files per write until compact runs),
+        # so that job only re-learns what the manifest says: planning a
+        # 767-file table read took 5.4 s with the job and 0.36 s listed on
+        # the driver (48 files: 0.48 s vs 0.08 s; local[4], local disk).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         # ---- stragglers: extraction time varies ~100x by doc size --------
         .config("spark.speculation", "true")
         # ---- local-mode memory (driver == the one JVM) -------------------

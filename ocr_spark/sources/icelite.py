@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_spark.operators.payloads import batch_step, same_batch
+
 BUCKET_COL = "__bucket"
 
 
@@ -81,8 +83,10 @@ def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
-# what each write task returns per file it wrote (see IceliteTable._write_data)
-WRITTEN_FILES_SCHEMA = "bucket int, path string, rows long"
+# what each write task returns per file it wrote: its row count and the
+# pipeline's lineage counters over its rows (rows with an ``error``,
+# characters of ``text``; 0 for a table without such a column)
+WRITTEN_FILES_SCHEMA = "bucket int, path string, rows long, errors long, text_chars long"
 # buffered bytes at which a write task flushes its buckets as row groups
 ROW_GROUP_BYTES = 64 << 20
 
@@ -93,12 +97,13 @@ def write_bucket_files(batches, root: str, token: str):
     one row group per bucket."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     pending: dict[int, list] = {}
     pending_bytes = 0
     writers: dict[int, pq.ParquetWriter] = {}
     paths: dict[int, str] = {}
-    rows: dict[int, int] = {}
+    counts: dict[int, list[int]] = {}  # bucket -> [rows, errors, text_chars]
 
     def flush() -> None:
         for b, pieces in pending.items():
@@ -111,7 +116,13 @@ def write_bucket_files(batches, root: str, token: str):
                 os.makedirs(os.path.dirname(full), exist_ok=True)
                 writers[b] = pq.ParquetWriter(full, table.schema, compression="snappy")
             writers[b].write_table(table, row_group_size=table.num_rows)
-            rows[b] = rows.get(b, 0) + table.num_rows
+            c = counts.setdefault(b, [0, 0, 0])
+            c[0] += table.num_rows
+            names = table.schema.names
+            if "error" in names:
+                c[1] += table.num_rows - table.column("error").null_count
+            if "text" in names and pa.types.is_string(table.schema.field("text").type):
+                c[2] += pc.sum(pc.utf8_length(table.column("text"))).as_py() or 0
         pending.clear()
 
     for batch in batches:
@@ -137,9 +148,9 @@ def write_bucket_files(batches, root: str, token: str):
         [
             pa.array(done, pa.int32()),
             pa.array([paths[b] for b in done], pa.string()),
-            pa.array([rows[b] for b in done], pa.int64()),
+            *(pa.array([counts[b][i] for b in done], pa.int64()) for i in range(3)),
         ],
-        names=["bucket", "path", "rows"],
+        names=["bucket", "path", "rows", "errors", "text_chars"],
     )
 
 
@@ -283,15 +294,21 @@ class IceliteTable:
         """Write df bucket-partitioned under data/<token>; returns
         (files: bucket->paths, file_rows: path->rows).
 
-        The Iceberg writer protocol: the bucket column is computed
-        JVM-side, and one ``mapInArrow`` pass over df's own partitions
-        runs ``write_bucket_files`` in each task, which writes the task's
-        rows into one snappy parquet file per bucket it holds, at
-        ``data/<token>/__bucket=<b>/part-<uuid>.parquet``.  Tasks return
-        only ``(bucket, path, rows)``; the driver collects that metadata
-        and commits it, so a write is one Spark job over df's own plan.  A
-        write of T tasks leaves up to T files per bucket — ``compact``
-        folds them back to one.
+        The Iceberg writer protocol, in one Python pass per task: the
+        bucket column is computed JVM-side on the rows of ``df``'s batch
+        step (``payloads.batch_step``) — the input its ``map_batches``
+        step reads when that step keeps the table's key, else ``df``
+        itself under the identity step — and one ``mapInArrow`` runs the
+        step and then ``write_bucket_files`` in each task.  An extraction
+        group's rows thus go from the kernel straight into parquet,
+        without a trip back through the JVM.  Each task writes its rows
+        into one snappy parquet file per bucket it holds, at
+        ``data/<token>/__bucket=<b>/part-<uuid>.parquet``, and returns
+        only ``(bucket, path, rows, errors, text_chars)``; the driver
+        collects that metadata, records it on the step (``written``) and
+        commits it, so a write is one Spark job.  A write of T tasks
+        leaves up to T files per bucket — ``compact`` folds them back to
+        one.  A cached ``df`` is written from its cache.
 
         Workers unpickle ``write_bucket_files`` by reference, importing
         this module: keep it free of ``ocr_spark.plans`` (the
@@ -304,20 +321,25 @@ class IceliteTable:
         never returned, so no snapshot references them and
         ``remove_orphan_files`` reaps them."""
         root = os.path.abspath(self.root)
+        step = batch_step(df)
+        src, fn = step.src, step.fn
+        if self.key_col not in step.keeps or df.is_cached:
+            src, fn = df, same_batch
 
         def write(batches):
-            return write_bucket_files(batches, root, token)
+            carry = (BUCKET_COL,)
+            return write_bucket_files((fn(b, carry) for b in batches), root, token)
 
-        written = (
-            df.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets))
+        step.written = (
+            src.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets))
             .mapInArrow(write, WRITTEN_FILES_SCHEMA)
             .collect()
         )
         files: dict[str, list[str]] = {}
         file_rows: dict[str, int] = {}
-        for bucket, path, rows in sorted(written):
-            files.setdefault(str(bucket), []).append(path)
-            file_rows[path] = rows
+        for f in sorted(step.written):
+            files.setdefault(str(f.bucket), []).append(f.path)
+            file_rows[f.path] = f.rows
         return files, file_rows
 
     # ---------------------------------------------------------------- schema

@@ -42,10 +42,9 @@ def run_stream_once(
     total = {"n": 0}
 
     def sink(batch_df, epoch_id: int) -> None:
-        # persist: the extraction arrow_udf is the dominant cost and the
-        # sink consumes batch_df three times (this count, merge's
-        # distinct-bucket probe, merge's combined write) — unpersisted,
-        # every micro-batch would pay the extraction 3x
+        # persist: the extraction step is the dominant cost and the sink
+        # consumes batch_df twice (this count and merge's one write of
+        # it) — unpersisted, every micro-batch would pay the extraction 2x
         batch_df.persist()
         try:
             cnt = batch_df.count()

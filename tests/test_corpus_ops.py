@@ -174,7 +174,9 @@ def test_decontaminate_plan_broadcasts_benchmark(spark):
         [(i, "some words repeated here " * 4) for i in range(50)],
         "doc_id long, text string",
     )
-    bench = spark.createDataFrame([(0, "eval set text")], "doc_id long, text string")
+    bench = spark.createDataFrame(
+        [(0, "eval set text"), (1, "some words repeated")], "doc_id long, text string"
+    )
     plan = (
         decontaminate(corpus, bench, n=3)
         ._jdf.queryExecution().executedPlan().toString()
@@ -183,6 +185,14 @@ def test_decontaminate_plan_broadcasts_benchmark(spark):
     # the only exchanges allowed touch the benchmark/aggregation side, not
     # a corpus-gram sort-merge join
     assert "SortMergeJoin" not in plan
+    # a benchmark sharing no gram with the corpus probes an empty hit set,
+    # which becomes an empty local relation: the planner drops the join
+    clean = spark.createDataFrame([(0, "eval set text")], "doc_id long, text string")
+    plan = (
+        decontaminate(corpus, clean, n=3)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "Join" not in plan and "Exchange" not in plan
 
 
 def test_corpus_filter_decontamination_stage(spark):

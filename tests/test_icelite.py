@@ -374,24 +374,89 @@ def test_file_rows_match_parquet_footers(spark, tmp_table):
     check()
 
 
+@pytest.mark.parametrize(
+    "operator, data, key_col, sort",
+    [
+        ("extract_pages", "pages.parquet", "url", ["url"]),
+        ("pdf_doc_records", "pdf_docs.parquet", "doc_id", ["doc_id"]),
+        ("pdf_to_glyphs", "pdf_docs.parquet", "doc_id", ["doc_id", "glyph_id"]),
+    ],
+)
+def test_step_write_matches_jvm_rows(spark, tiny_dir, tmp_path, operator, data, key_col, sort):
+    """A DataFrame that carries its batch step is written by running the
+    step inside the writer's own pass; its files hold the same rows, with
+    the same parquet schema (types and nullability), as the same operator's
+    rows after a trip through the JVM (any further DataFrame operation
+    drops the step).  pdf_to_glyphs emits many rows per document, so the
+    bucket column is repeated per emitted row."""
+    import importlib
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_spark.operators.payloads import batch_step
+
+    module = "extract" if operator == "extract_pages" else "pdf_ops"
+    op = getattr(importlib.import_module(f"ocr_spark.operators.{module}"), operator)
+    src = spark.read.parquet(f"{tiny_dir}/{data}")
+    if operator == "extract_pages":
+        src = src.withColumn(
+            "html", F.when(F.col("url").endswith("0"), None).otherwise(F.col("html"))
+        )
+
+    def write(name, df):
+        table = IceliteTable(str(tmp_path / name), key_col=key_col, n_buckets=4)
+        table.append(df)
+        paths = [os.path.join(table.root, p) for ps in table.snapshot().files.values() for p in ps]
+        schemas = [pq.read_schema(p) for p in paths]
+        assert all(s.equals(schemas[0]) for s in schemas)
+        return schemas[0], pa.concat_tables(pq.read_table(p) for p in paths).sort_by(
+            [(c, "ascending") for c in sort]
+        )
+
+    fused = op(src)
+    assert key_col in batch_step(fused).keeps
+    assert batch_step(fused).src is not fused
+    plain = op(src).filter(F.lit(True))
+    assert batch_step(plain).src is plain
+    fused_schema, fused_rows = write("fused", fused)
+    plain_schema, plain_rows = write("plain", plain)
+    assert fused_schema.equals(plain_schema, check_metadata=True)
+    assert fused_rows.equals(plain_rows)
+    if operator == "pdf_to_glyphs":
+        assert fused_rows.num_rows > src.count()
+
+
 def test_read_plans_without_a_spark_job(spark, tmp_path):
     """read() passes the table's stored schema, so building the relation
     runs no parquet schema-inference job; the columns keep the written
     order (``_schema.json`` itself is key-sorted), also for a read of
-    buckets that hold no files."""
+    buckets that hold no files.  Nor does a read of many files run Spark's
+    parallel file-listing job (above 32 paths by Spark's default): the
+    manifest already names every file."""
     table = IceliteTable(str(tmp_path / "ordered"), key_col="url", n_buckets=4)
     table.append(
         spark.createDataFrame([(f"u{i}", i, "x") for i in range(8)], "url string, z int, a string")
         .coalesce(1)
     )
+    many = IceliteTable(str(tmp_path / "many"), key_col="url", n_buckets=16)
+    many.append(
+        spark.createDataFrame([(f"u{i}", i) for i in range(400)], "url string, v int")
+        .repartition(4)
+    )
+    n_files = sum(len(ps) for ps in many.snapshot().files.values())
+    assert n_files >= 48
     sc = spark.sparkContext
     group = "icelite-read-plans-only"
     sc.setJobGroup(group, "plan icelite reads")
     try:
         whole = table.read(spark)
         empty = table.read(spark, buckets=[7])
+        wide = many.read(spark)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert whole.columns == empty.columns == ["url", "z", "a"]
     assert whole.count() == 8 and empty.count() == 0
+    assert wide.count() == 400

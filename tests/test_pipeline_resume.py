@@ -7,8 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark.operators.extract import extract_pages
+from ocr_spark.operators.pdf_ops import pdf_doc_records
 from ocr_spark.plans.pipeline import ExtractionPipeline
-from ocr_spark.sources.icelite import IceliteTable
+from ocr_spark.sources.icelite import IceliteTable, bucket_expr
 
 
 @pytest.fixture(scope="module")
@@ -64,8 +66,9 @@ def test_rerun_after_completion_is_noop(spark, pages, tmp_path):
 
 def test_group_is_one_job_without_exchange(spark, pages, tmp_path, monkeypatch):
     """A bucket group into a fresh table is ONE Spark job whose executed plan
-    has no Exchange: extraction tasks write their own bucket files and the
-    driver commits only the file metadata they return."""
+    has no Exchange and ONE Python node: each task runs the extraction step
+    and writes its own bucket files in the same MapInArrow, and the driver
+    commits only the file metadata they return (no observed metrics)."""
     plans = []
     df_type = type(pages)
     collect = df_type.collect
@@ -90,7 +93,74 @@ def test_group_is_one_job_without_exchange(spark, pages, tmp_path, monkeypatch):
     assert len(sc.statusTracker().getJobIdsForGroup(job_group)) == 4
     assert len(plans) == 4
     assert not [p for p in plans if "Exchange" in p]
+    for plan in plans:
+        assert plan.count("MapInArrow") == 1, plan
+        assert "ArrowEvalPython" not in plan and "CollectMetrics" not in plan, plan
     assert out.row_count() == pages.count()
+
+
+def _group_counters(table) -> dict:
+    return {
+        tuple(s.metadata["bucket_group"]): s.metadata["counters"]
+        for s in table.snapshots()
+        if "bucket_group" in s.metadata
+    }
+
+
+def _aggregate(rel, key_col: str, n_buckets: int, group_size: int) -> dict:
+    """The lineage counters as a DataFrame aggregate, per bucket group."""
+    g = (bucket_expr(key_col, n_buckets) / group_size).cast("int")
+    rows = rel.groupBy(g.alias("g")).agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.sum(F.col("error").isNotNull().cast("long")).alias("errors"),
+        F.sum(F.length("text")).alias("text_chars"),
+    )
+    return {
+        tuple(range(r["g"] * group_size, (r["g"] + 1) * group_size)): {
+            "docs": r["docs"], "errors": r["errors"], "text_chars": r["text_chars"],
+        }
+        for r in rows.collect()
+    }
+
+
+def test_counters_match_committed_rows(spark, pages, tiny_dir, tmp_path):
+    """Each group's docs/errors/text_chars, counted by the write tasks,
+    equal a DataFrame aggregate over the rows the group committed — over
+    mixed dom/wet/error html and over pdf."""
+    mixed = pages.withColumn(
+        "html", F.when(F.col("url").endswith("0"), None).otherwise(F.col("html"))
+    )
+    html = IceliteTable(str(tmp_path / "html"), key_col="url", n_buckets=8)
+    stats = ExtractionPipeline(html, n_buckets=8, group_size=2).run(mixed)
+    got = _group_counters(html)
+    assert got == _aggregate(html.read(spark), "url", 8, 2)
+    engines = {r["engine"] for r in html.read(spark).select("engine").distinct().collect()}
+    assert engines == {"dom", "wet"} and stats["errors"] > 0
+
+    docs = spark.read.parquet(f"{tiny_dir}/pdf_docs.parquet")
+    pdf = IceliteTable(str(tmp_path / "pdf"), key_col="doc_id", n_buckets=8)
+    stats = ExtractionPipeline(
+        pdf, n_buckets=8, group_size=2, key_col="doc_id", transform=pdf_doc_records
+    ).run(docs)
+    assert _group_counters(pdf) == _aggregate(pdf.read(spark), "doc_id", 8, 2)
+    assert stats["docs"] == docs.count() and stats["errors"] > 0
+
+
+def test_rerun_counters_count_incoming_rows_only(spark, pages, tmp_path):
+    """A merge into populated buckets (the re-process path) counts the rows
+    it extracted, not the old rows the anti-join carried over."""
+    out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
+    ExtractionPipeline(out, n_buckets=8, group_size=2).run(pages)
+    head = out.head_id()
+    subset = pages.filter(F.col("url").substr(-1, 1).isin("1", "3", "5", "7"))
+    ExtractionPipeline(out, n_buckets=8, group_size=2).run(subset, force=True)
+    rerun = {
+        tuple(s.metadata["bucket_group"]): s.metadata["counters"]
+        for s in out.snapshots()
+        if "bucket_group" in s.metadata and s.snapshot_id > head
+    }
+    assert rerun == _aggregate(extract_pages(subset), "url", 8, 2)
+    assert sum(c["docs"] for c in rerun.values()) < out.row_count() == pages.count()
 
 
 def test_lineage_counters_recorded(spark, pages, tmp_path):

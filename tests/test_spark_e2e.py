@@ -1,7 +1,7 @@
 """Spark-level end-to-end: extraction, attendance, unnest, layout branch.
 
 Golden-fixture identity at the DataFrame level plus plan-shape assertions
-(vectorization constraint: ArrowEvalPython only, no row-at-a-time
+(vectorization constraint: Arrow batch maps only, no row-at-a-time
 BatchEvalPython — BASELINE.json:15).
 """
 
@@ -54,14 +54,14 @@ def test_extract_error_rows_carry_defaults(extracted):
 def test_extract_plan_is_vectorized_and_narrow(spark, tiny_dir):
     pages = spark.read.parquet(f"{tiny_dir}/pages.parquet")
     plan = extract_pages(pages)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # vectorized UDF channel
+    assert "MapInArrow" in plan  # vectorized Arrow batch channel
     assert "BatchEvalPython" not in plan  # no per-row Python
     assert "Exchange" not in plan  # zero shuffles in the extraction stage
-    # all-wet input: the UDF result feeds FOUR projections (text, spans,
-    # n_blocks, error) — pin that they share ONE ArrowEvalPython
+    # all-wet input: the step emits FOUR result columns (text, spans,
+    # n_blocks, error) — pin that they come from ONE MapInArrow
     wet = extract_pages(pages.withColumn("html", F.lit(None).cast("binary")))
     wplan = wet._jdf.queryExecution().executedPlan().toString()
-    assert wplan.count("ArrowEvalPython") == 1
+    assert wplan.count("MapInArrow") == 1
     assert "Exchange" not in wplan
 
 
@@ -75,11 +75,11 @@ def test_extract_plan_is_vectorized_and_narrow(spark, tiny_dir):
     ids=["none", "filter_error", "filter_text"],
 )
 def test_extract_plan_one_scan_one_udf(spark, tiny_dir, downstream):
-    """E4 dispatch is per row inside ONE arrow UDF: a mixed dom/wet input
-    plans one parquet scan and one ArrowEvalPython — no filtered branches
-    joined by a Union.  A downstream filter on a result field must not be
-    pushed below the projection as a second UDF evaluation (the
-    inferred-notnull trap, CLAUDE.md)."""
+    """E4 dispatch is per row inside ONE Arrow batch step: a mixed dom/wet
+    input plans one parquet scan and one MapInArrow — no filtered branches
+    joined by a Union.  A downstream filter on a result field must not
+    add a second evaluation of the step (the inferred-notnull trap,
+    CLAUDE.md)."""
     pages = spark.read.parquet(f"{tiny_dir}/pages.parquet")
     mixed = pages.withColumn(
         "html", F.when(F.col("url").endswith("0"), None).otherwise(F.col("html"))
@@ -88,7 +88,7 @@ def test_extract_plan_one_scan_one_udf(spark, tiny_dir, downstream):
     df.write.format("noop").mode("overwrite").save()  # the plan that ran
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 1
-    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("MapInArrow") == 1
     assert "Union" not in plan
     assert "Exchange" not in plan
 

@@ -58,9 +58,13 @@ def main() -> None:
         "Generated by `python tools/dump_plans.py` on sf0.01 / tiny fixtures.",
         "Expression ids normalized to `#N`.  What to look for:",
         "",
-        "- **extract_pages**: one scan, a single `ArrowEvalPython` (the",
-        "  dom/wet dispatch is per row inside the UDF, so no `Union`), and",
-        "  NO `Exchange` — the 100 TB stage is embarrassingly parallel.",
+        "- **extract_pages**: one scan, a single `MapInArrow` (the dom/wet",
+        "  dispatch is per row inside the batch step, so no `Union`), and",
+        "  NO `Exchange` — the 100 TB stage is embarrassingly parallel.  A",
+        "  pipeline group runs the same step inside the icelite writer's",
+        "  `MapInArrow` (scan -> `__bucket` projection -> ONE `MapInArrow`",
+        "  that extracts and writes the bucket files), so each task crosses",
+        "  the JVM->Python boundary once.",
         "- **pdf_layout**: scan -> ONE MapInArrow -> filter, NO Exchange —",
         "  the fused PDF-bytes front door has the same shape as extraction.",
         "- **dedup_exact**: one hash-partitioned `Exchange` on the md5, with",
