@@ -79,13 +79,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     from ocr_spark.operators.corpus_filter import corpus_filter
     from ocr_spark.session import build_session
-    from ocr_spark.sources.icelite import (
-        CommitConflictError,
-        IceliteError,
-        IceliteTable,
-        SchemaMismatchError,
-        StaleTableError,
-    )
+    from ocr_spark.sources.icelite import IceliteTable, exit_on_table_error
 
     spark = SparkSession.getActiveSession() or build_session(
         "dedup-job", cores=args.cores
@@ -139,7 +133,7 @@ def main(argv: list[str] | None = None) -> dict:
         docs = docs.withColumn("text", redact_expr(docs["text"]))
         pre_stages.append("redact_pii")
 
-    try:
+    with exit_on_table_error():
         sig_tbl = (
             IceliteTable(args.signatures, key_col="doc_id", n_buckets=args.buckets)
             if args.signatures and args.near_dedup
@@ -196,23 +190,6 @@ def main(argv: list[str] | None = None) -> dict:
         else:
             out.append(kept, metadata=meta)
             stats.update(docs_in=docs.count(), docs_kept=out.row_count())
-    except SchemaMismatchError as e:
-        print(f"error: schema rejected: {e}", file=sys.stderr)
-        raise SystemExit(4) from None
-    except CommitConflictError as e:
-        print(f"error: commit conflict (retryable): {e}", file=sys.stderr)
-        raise SystemExit(3) from None
-    except IceliteError as e:
-        print(f"error: table layout rejected: {e}", file=sys.stderr)
-        raise SystemExit(4) from None
-    except StaleTableError as e:
-        # stale/config-drifted signature table (IceliteTable.build_or_reuse)
-        # — a layout rejection like the icelite ones, same exit code.  The
-        # TYPED catch matters: a bare `except ValueError` would relabel any
-        # unrelated ValueError from the job body as a table rejection and
-        # hide its traceback behind exit 4
-        print(f"error: table rejected: {e}", file=sys.stderr)
-        raise SystemExit(4) from None
     print(json.dumps(stats))
     return stats
 

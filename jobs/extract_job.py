@@ -47,11 +47,7 @@ def main(argv: list[str] | None = None) -> None:
 
     from ocr_spark.plans.pipeline import ExtractionPipeline
     from ocr_spark.session import build_session
-    from ocr_spark.sources.icelite import (
-        CommitConflictError,
-        IceliteTable,
-        SchemaMismatchError,
-    )
+    from ocr_spark.sources.icelite import IceliteTable, exit_on_table_error
 
     spark = SparkSession.getActiveSession() or build_session(
         "extract-job", cores=args.cores
@@ -73,11 +69,7 @@ def main(argv: list[str] | None = None) -> None:
     except Exception as e:  # noqa: BLE001 — operator-friendly CLI error
         print(f"error: cannot read --input {args.input!r}: {type(e).__name__}", file=sys.stderr)
         raise SystemExit(2) from None
-    from ocr_spark.sources.icelite import IceliteError
-
-    # sink error taxonomy -> distinct exit codes so an orchestrator can
-    # retry conflicts (3) but page a human on schema/layout drift (4)
-    try:
+    with exit_on_table_error():
         if args.format == "pdf":
             from ocr_spark.operators.pdf_ops import pdf_doc_records
 
@@ -90,15 +82,6 @@ def main(argv: list[str] | None = None) -> None:
             salt=args.salt, key_col=key_col, transform=transform,
         )
         stats = pipe.run(pages, max_concurrent=args.max_concurrent, spark=spark)
-    except SchemaMismatchError as e:
-        print(f"error: schema rejected: {e}", file=sys.stderr)
-        raise SystemExit(4) from None
-    except CommitConflictError as e:
-        print(f"error: commit conflict (retryable): {e}", file=sys.stderr)
-        raise SystemExit(3) from None
-    except IceliteError as e:
-        print(f"error: table layout rejected: {e}", file=sys.stderr)
-        raise SystemExit(4) from None
     print(json.dumps({"job": "extract", "output": args.output, **stats}))
     return stats
 

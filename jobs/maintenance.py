@@ -23,7 +23,6 @@ import sys
 def main(argv: list[str] | None = None) -> dict:
     p = argparse.ArgumentParser()
     p.add_argument("--table", required=True, help="icelite table root")
-    p.add_argument("--buckets", type=int, default=16)
     p.add_argument("--compact", action="store_true", help="rewrite multi-file buckets")
     p.add_argument(
         "--max-files-per-bucket", type=int, default=1, help="compaction threshold"
@@ -41,32 +40,16 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--cores", type=int, default=None, help="local mode only")
     args = p.parse_args(argv)
 
-    import os
-
     from pyspark.sql import SparkSession
 
     from ocr_spark.session import build_session
-    from ocr_spark.sources.icelite import (
-        CommitConflictError,
-        IceliteError,
-        IceliteTable,
-        SchemaMismatchError,
-    )
+    from ocr_spark.sources.icelite import IceliteTable, exit_on_table_error
 
-    try:
-        # adopt the table's FROZEN layout from _table.json when it exists —
-        # maintenance must work on any table (doc_id-keyed signature
-        # tables, 32-bucket outputs) without the operator re-supplying a
-        # layout that the table already records
-        meta_path = os.path.join(args.table, "_table.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-            table = IceliteTable(
-                args.table, key_col=meta["key_col"], n_buckets=meta["n_buckets"]
-            )
-        else:
-            table = IceliteTable(args.table, key_col="url", n_buckets=args.buckets)
+    with exit_on_table_error():
+        # the table's own recorded layout: maintenance works on any table
+        # (doc_id-keyed signature tables, 32-bucket outputs) without the
+        # operator re-supplying it
+        table = IceliteTable.open(args.table)
         if not table.exists():
             print(f"error: no icelite table at {args.table!r}", file=sys.stderr)
             raise SystemExit(2)
@@ -88,18 +71,6 @@ def main(argv: list[str] | None = None) -> dict:
             )
         stats["snapshots"] = len(table.snapshots())
         stats["rows"] = table.row_count()
-    # the same exit-code taxonomy as extract_job/dedup_job (CLAUDE.md:
-    # 2 input, 3 conflict, 4 schema/layout) — these escaped as raw
-    # tracebacks with exit 1 before
-    except SchemaMismatchError as e:
-        print(f"error: schema rejected: {e}", file=sys.stderr)
-        raise SystemExit(4) from None
-    except CommitConflictError as e:
-        print(f"error: commit conflict (retryable): {e}", file=sys.stderr)
-        raise SystemExit(3) from None
-    except IceliteError as e:
-        print(f"error: table layout rejected: {e}", file=sys.stderr)
-        raise SystemExit(4) from None
     print(json.dumps(stats))
     return stats
 

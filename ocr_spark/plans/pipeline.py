@@ -52,24 +52,27 @@ class ExtractionPipeline:
         the write tasks count — e.g. ``pdf_ops.pdf_doc_records`` with
         ``key_col='doc_id'`` runs the PDF front door resumable
         (jobs/extract_job.py --format pdf)."""
-        # the OUTPUT layout must align with the pipeline's bucket groups,
-        # same as the input check in _group_input: merging group [0..3]
-        # into a table with a different n_buckets/key would scatter rows
-        # into buckets the merge's touched_buckets anti-join never covers —
-        # duplicate keys on resume instead of exactly-once
-        if out_table.key_col != key_col or out_table.n_buckets != n_buckets:
-            raise ValueError(
-                f"output table is keyed ({out_table.key_col!r}, "
-                f"{out_table.n_buckets} buckets), pipeline expects "
-                f"({key_col!r}, {n_buckets}) — merge groups would not align "
-                "with the table's buckets"
-            )
         self.out = out_table
         self.n_buckets = n_buckets
         self.group_size = group_size
         self.salt = salt
         self.key_col = key_col
         self.transform = transform if transform is not None else extract_pages
+        self._check_layout(out_table, "output")
+
+    def _check_layout(self, table: IceliteTable, role: str) -> None:
+        """An input or output table must be laid out on the pipeline's key
+        and bucket count.  Otherwise a group's buckets name other rows: an
+        output merge would scatter rows into buckets its touched_buckets
+        anti-join never covers (duplicate keys on resume instead of
+        exactly-once), and an input read would feed the group rows its
+        resume record does not cover."""
+        if (table.key_col, table.n_buckets) != (self.key_col, self.n_buckets):
+            raise ValueError(
+                f"{role} table is keyed ({table.key_col!r}, {table.n_buckets} "
+                f"buckets), pipeline expects ({self.key_col!r}, {self.n_buckets}) "
+                "— bucket ids would not align with the pipeline's bucket groups"
+            )
 
     def bucket_groups(self) -> list[list[int]]:
         return [
@@ -94,13 +97,7 @@ class ExtractionPipeline:
           the input out as an icelite table to get pruning.
         """
         if isinstance(pages, IceliteTable):
-            if pages.n_buckets != self.n_buckets or pages.key_col != self.key_col:
-                raise ValueError(
-                    f"input table is keyed ({pages.key_col!r}, "
-                    f"{pages.n_buckets} buckets), pipeline expects "
-                    f"({self.key_col!r}, {self.n_buckets}) — bucket ids "
-                    "would not align with key processing groups"
-                )
+            self._check_layout(pages, "input")
             return pages.read(spark, buckets=group)
         return pages.filter(bucket_expr(self.key_col, self.n_buckets).isin(group))
 

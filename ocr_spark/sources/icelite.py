@@ -28,6 +28,7 @@ Layout::
 
     <root>/
       _HEAD                      # text file: current snapshot id (atomic)
+      _table.json                # the table record: key_col, n_buckets, schema
       _snapshots/<id>.json       # manifest chain (parent_id links)
       data/<token>/__bucket=<k>/part-<uuid>.parquet   # one token per write
 """
@@ -37,7 +38,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import sys
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -76,6 +79,54 @@ class StaleTableError(ValueError):
     request does not match it.  CLI entry points catch THIS type (not bare
     ValueError) to map table rejections to their layout exit code without
     swallowing unrelated ValueErrors."""
+
+
+# the CLI jobs' exit code and message per table error (2, unreadable input,
+# stays in each job): an orchestrator retries a conflict (3) but pages a
+# human on schema/layout drift (4); the first matching type wins
+_EXIT_CODES = (
+    (SchemaMismatchError, 4, "schema rejected"),
+    (CommitConflictError, 3, "commit conflict (retryable)"),
+    (IceliteError, 4, "table layout rejected"),
+    (StaleTableError, 4, "table rejected"),
+)
+
+
+@contextmanager
+def exit_on_table_error():
+    """Turn a table error raised in the block into its CLI exit: one
+    ``error: ...`` line on stderr and ``SystemExit`` with the code from
+    ``_EXIT_CODES``.  Any other exception passes through untouched."""
+    try:
+        yield
+    except (IceliteError, StaleTableError) as e:
+        code, what = next((c, w) for t, c, w in _EXIT_CODES if isinstance(e, t))
+        print(f"error: {what}: {e}", file=sys.stderr)
+        raise SystemExit(code) from None
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """The one way a metadata file (the table record, a manifest, ``_HEAD``)
+    is put in place: a temp file, flushed and fsync'd, then ``os.replace``.
+    Without the fsync a crash after the rename can leave a zero-length
+    file, and a zero-length record or manifest bricks the whole table."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _read_record(root: str) -> dict | None:
+    """The table record at ``root`` (``{key_col, n_buckets, schema}``), or
+    None before the first data write."""
+    path = os.path.join(root, "_table.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
 
 
 def bucket_expr(key_col: str, n_buckets: int):
@@ -202,42 +253,34 @@ class IceliteTable:
         import threading
 
         self._lock = threading.Lock()
-        # layout validation: the first write freezes (key_col, n_buckets) in
-        # _table.json; opening an existing table with a DIFFERENT layout is
-        # an error, not a silent misread — e.g. a 32-bucket table opened as
-        # 16 buckets would make bucket-pruned reads (resume, IVF probes)
-        # silently miss half the manifest keys
-        self._validate_table_meta(record=False)
+        self._record()
 
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "_table.json")
+    @classmethod
+    def open(cls, root: str, key_col: str = "url", n_buckets: int = 16) -> "IceliteTable":
+        """The table at ``root`` with the layout its record stores;
+        ``key_col``/``n_buckets`` apply only to a table not yet written."""
+        record = _read_record(root) or {"key_col": key_col, "n_buckets": n_buckets}
+        return cls(root, key_col=record["key_col"], n_buckets=record["n_buckets"])
 
-    def _validate_table_meta(self, record: bool) -> None:
+    def _record(self) -> dict | None:
+        """The table record, checked against this object's layout: opening
+        a table with a DIFFERENT layout is an error, not a silent misread —
+        e.g. a 32-bucket table opened as 16 buckets would make bucket-pruned
+        reads (resume, IVF probes) silently miss half the manifest keys."""
+        record = _read_record(self.root)
         want = {"key_col": self.key_col, "n_buckets": self.n_buckets}
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                stored = json.load(f)
-            if stored != want:
-                raise IceliteError(
-                    f"icelite table at {self.root} was laid out with {stored} "
-                    f"but opened with {want} — bucket ids would not align"
-                )
-        elif record:
-            os.makedirs(self.root, exist_ok=True)
-            tmp = self._meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(want, f, indent=1, sort_keys=True)
-            os.replace(tmp, self._meta_path)
+        laid = record and {k: record[k] for k in want}
+        if laid and laid != want:
+            raise IceliteError(
+                f"icelite table at {self.root} was laid out with {laid} "
+                f"but opened with {want} — bucket ids would not align"
+            )
+        return record
 
     # ------------------------------------------------------------------ paths
     @property
     def _head_path(self) -> str:
         return os.path.join(self.root, "_HEAD")
-
-    @property
-    def _schema_path(self) -> str:
-        return os.path.join(self.root, "_schema.json")
 
     def _snap_path(self, sid: int) -> str:
         return os.path.join(self.root, "_snapshots", f"{sid}.json")
@@ -267,27 +310,46 @@ class IceliteTable:
             s = self.snapshot(s.parent_id) if s.parent_id is not None else None
         return list(reversed(out))
 
-    def _write_manifest(self, snap: Snapshot) -> None:
-        """fsync'd atomic manifest write — EVERY manifest rewrite must go
-        through this (a crash after a non-fsync'd os.replace can leave a
-        zero-length manifest that bricks the whole snapshot chain)."""
-        tmp = self._snap_path(snap.snapshot_id) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(snap.to_json())
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._snap_path(snap.snapshot_id))
-
-    def _commit(self, snap: Snapshot) -> None:
-        """The atomic commit point (manifest fsync + HEAD os.replace)."""
-        os.makedirs(os.path.join(self.root, "_snapshots"), exist_ok=True)
-        self._write_manifest(snap)
-        head_tmp = self._head_path + f".tmp-{uuid.uuid4().hex}"
-        with open(head_tmp, "w") as f:
-            f.write(str(snap.snapshot_id))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(head_tmp, self._head_path)
+    def _commit(
+        self,
+        start: Snapshot | None,
+        operation: str,
+        files: dict[str, list[str]],
+        file_rows: dict[str, int],
+        metadata: dict | None,
+        replaced=(),
+    ) -> int:
+        """The one commit rule; returns the new snapshot id.  Under the
+        lock it re-reads the head, refuses with a commit conflict if any
+        ``replaced`` bucket changed since ``start`` (the head the write
+        read: committing over a concurrent writer's change to that bucket
+        would silently drop it), keeps every other bucket's files by
+        reference, drops the replaced buckets' files, adds ``files``, and
+        writes the manifest, then ``_HEAD`` — the atomic commit point.
+        Writers of disjoint buckets thus commit in any order."""
+        with self._lock:
+            head = self.snapshot()
+            for b in replaced:
+                if head.files.get(b, []) != start.files.get(b, []):
+                    raise CommitConflictError(
+                        f"icelite commit conflict: bucket {b} changed "
+                        f"under a concurrent {operation}"
+                    )
+            new_files = {
+                b: list(ps) for b, ps in (head.files if head else {}).items() if b not in replaced
+            }
+            new_rows = {p: head.file_rows[p] for ps in new_files.values() for p in ps}
+            for b, ps in files.items():
+                new_files.setdefault(b, []).extend(ps)
+            new_rows.update(file_rows)
+            sid = head.snapshot_id + 1 if head else 0
+            snap = Snapshot(
+                sid, head.snapshot_id if head else None, operation, new_files, new_rows,
+                metadata or {},
+            )
+            _atomic_write(self._snap_path(sid), snap.to_json())
+            _atomic_write(self._head_path, str(sid))
+        return sid
 
     # ----------------------------------------------------------------- write
     def _write_data(self, df: DataFrame, token: str) -> tuple[dict, dict]:
@@ -344,27 +406,24 @@ class IceliteTable:
 
     # ---------------------------------------------------------------- schema
     def table_schema(self) -> dict[str, str] | None:
-        """The frozen column->type map recorded at first write, or None."""
-        if not os.path.exists(self._schema_path):
-            return None
-        with open(self._schema_path) as f:
-            return json.load(f)
+        """The frozen column->type map recorded at first write, in the
+        written column order, or None."""
+        record = self._record()
+        return dict(record["schema"]) if record else None
 
     def _validate_or_record_schema(self, df: DataFrame) -> None:
-        """K6 validated insert: the first data write freezes the table
-        schema (names + types, nullability/order-insensitive); every later
-        append/merge batch is validated against it and rejected with a
-        typed error BEFORE any file is written."""
-        self._validate_table_meta(record=True)
-        incoming = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        """K6 validated insert: the first data write records the table —
+        its layout and its schema (names + types, in the written column
+        order) in one ``_table.json``; every later append/merge batch is
+        validated against it (nullability/order-insensitive) and rejected
+        with a typed error BEFORE any file is written."""
+        columns = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
         stored = self.table_schema()
         if stored is None:
-            os.makedirs(self.root, exist_ok=True)
-            tmp = self._schema_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(incoming, f, indent=1, sort_keys=True)
-            os.replace(tmp, self._schema_path)
+            record = {"key_col": self.key_col, "n_buckets": self.n_buckets, "schema": columns}
+            _atomic_write(os.path.join(self.root, "_table.json"), json.dumps(record, indent=1))
             return
+        incoming = dict(columns)
         if incoming != stored:
             missing = sorted(set(stored) - set(incoming))
             extra = sorted(set(incoming) - set(stored))
@@ -379,41 +438,14 @@ class IceliteTable:
                 f"type changes {retyped}"
             )
 
-    def create_empty(self, metadata: dict | None = None) -> None:
-        if self.exists():
-            return
-        self._validate_table_meta(record=True)
-        os.makedirs(self.root, exist_ok=True)
-        self._commit(
-            Snapshot(0, None, "create", {}, {}, metadata or {"key": self.key_col, "n_buckets": self.n_buckets})
-        )
-
     def append(self, df: DataFrame, metadata: dict | None = None) -> int:
         """K5/K6 append: new files add to the current file set.  Pure
-        addition never conflicts — the manifest is rebuilt from the current
-        head under the commit lock.  The batch schema is validated against
-        the table schema first (SchemaMismatchError, no files written)."""
+        addition never conflicts: it replaces no bucket.  The batch schema
+        is validated against the table schema first (SchemaMismatchError,
+        no files written)."""
         self._validate_or_record_schema(df)
         files, file_rows = self._write_data(df, f"w-{uuid.uuid4().hex[:12]}")
-        with self._lock:
-            head = self.snapshot()
-            sid = (head.snapshot_id + 1) if head else 0
-            merged_files = {k: list(v) for k, v in (head.files if head else {}).items()}
-            for b, paths in files.items():
-                merged_files.setdefault(b, []).extend(paths)
-            merged_rows = dict(head.file_rows) if head else {}
-            merged_rows.update(file_rows)
-            self._commit(
-                Snapshot(
-                    sid,
-                    head.snapshot_id if head else None,
-                    "append",
-                    merged_files,
-                    merged_rows,
-                    metadata or {},
-                )
-            )
-        return sid
+        return self._commit(None, "append", files, file_rows, metadata)
 
     def build_or_reuse(
         self,
@@ -488,9 +520,8 @@ class IceliteTable:
         typed error.
 
         Concurrency: writers touching DISJOINT buckets may run in parallel
-        (manifest rebuilt from the current head at commit time, under the
-        lock); a same-bucket race raises a commit conflict instead of
-        silently losing an update.
+        (``_commit``); a same-bucket race raises a commit conflict instead
+        of silently losing an update.
         """
         spark = df.sparkSession
         start_head = self.snapshot()
@@ -531,34 +562,9 @@ class IceliteTable:
             for b, paths in kept.items():
                 files[b].extend(paths)
             file_rows.update(kept_rows)
-
-        with self._lock:
-            head = self.snapshot()
-            if head.snapshot_id != start_head.snapshot_id:
-                # someone committed since we started: fine iff the buckets
-                # we rewrite were untouched (our anti-join read their old
-                # state)
-                for b in files:
-                    if head.files.get(b, []) != start_head.files.get(b, []):
-                        raise CommitConflictError(
-                            f"icelite commit conflict: bucket {b} changed "
-                            "under a concurrent merge"
-                        )
-            sid = head.snapshot_id + 1
-            new_files = {
-                b: list(paths) for b, paths in head.files.items() if b not in files
-            }
-            new_rows = {
-                p: head.file_rows[p] for paths in new_files.values() for p in paths
-            }
-            for b, paths in files.items():
-                new_files[b] = paths
-                for p in paths:
-                    new_rows[p] = file_rows[p]
-            self._commit(
-                Snapshot(sid, head.snapshot_id, "merge", new_files, new_rows, metadata or {})
-            )
-        return sid
+        # the anti-join read the written buckets' old state: they are the
+        # ones a concurrent writer must not have changed
+        return self._commit(start_head, "merge", files, file_rows, metadata, replaced=set(files))
 
     # ------------------------------------------------------------------ read
     def read(
@@ -583,22 +589,14 @@ class IceliteTable:
             if b in wanted
             for p in ps
         ]
-        schema = self._spark_schema(head)
+        # the recorded schema as DDL: the read plans without Spark's
+        # schema-inference job and without opening any data file
+        schema = ", ".join(
+            "`{}` {}".format(n.replace("`", "``"), t) for n, t in self.table_schema().items()
+        )
         if not paths:
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(*paths)
-
-    def _spark_schema(self, head: Snapshot) -> str:
-        """The table's schema as a DDL string, so a read plans without
-        Spark's parquet schema-inference job: the types frozen in
-        ``_schema.json``, in the column order of one data file's footer
-        (``_schema.json`` keeps its keys sorted)."""
-        types = self.table_schema()
-        some = next(p for ps in head.files.values() for p in ps)
-        names = pq.read_schema(os.path.join(self.root, some)).names
-        return ", ".join(
-            "`{}` {}".format(n.replace("`", "``"), types[n]) for n in names
-        )
 
     def patch_metadata(self, sid: int, updates: dict) -> None:
         """Amend one snapshot's metadata in place (manifest file only — the
@@ -606,7 +604,7 @@ class IceliteTable:
         with self._lock:
             snap = self.snapshot(sid)
             snap.metadata.update(updates)
-            self._write_manifest(snap)
+            _atomic_write(self._snap_path(sid), snap.to_json())
 
     # ----------------------------------------------------------- maintenance
     def compact(self, spark: SparkSession, max_files_per_bucket: int = 1) -> int | None:
@@ -618,10 +616,9 @@ class IceliteTable:
         Returns the new snapshot id, or None if nothing to do.
 
         Concurrency follows merge(): the rewrite runs against the starting
-        head outside the lock, then the commit re-reads the head under the
-        lock and raises a commit conflict if any compacted bucket changed —
-        committing against the stale head would silently drop a concurrent
-        writer's files from the table view."""
+        head outside the lock, and the commit replaces the compacted
+        buckets, so a concurrent change to any of them is a commit
+        conflict."""
         start_head = self.snapshot()
         if start_head is None:
             return None
@@ -635,33 +632,8 @@ class IceliteTable:
             spark, buckets=[int(b) for b in fat], snapshot_id=start_head.snapshot_id
         ).repartition(bucket_expr(self.key_col, self.n_buckets))
         files, file_rows = self._write_data(rewritten, f"compact-{uuid.uuid4().hex[:12]}")
-        with self._lock:
-            head = self.snapshot()
-            if head.snapshot_id != start_head.snapshot_id:
-                for b in fat:
-                    if head.files.get(b, []) != start_head.files.get(b, []):
-                        raise CommitConflictError(
-                            f"icelite commit conflict: bucket {b} changed "
-                            "under a concurrent compact"
-                        )
-            sid = head.snapshot_id + 1
-            new_files = {b: list(ps) for b, ps in head.files.items() if b not in fat}
-            new_rows = {p: head.file_rows[p] for ps in new_files.values() for p in ps}
-            for b, ps in files.items():
-                new_files.setdefault(b, []).extend(ps)
-                for p in ps:
-                    new_rows[p] = file_rows[p]
-            self._commit(
-                Snapshot(
-                    sid,
-                    head.snapshot_id,
-                    "compact",
-                    new_files,
-                    new_rows,
-                    {"compacted_buckets": sorted(fat)},
-                )
-            )
-        return sid
+        meta = {"compacted_buckets": sorted(fat)}
+        return self._commit(start_head, "compact", files, file_rows, meta, replaced=fat)
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
         """Iceberg-style maintenance: drop history older than the last
@@ -686,7 +658,7 @@ class IceliteTable:
         with self._lock:
             root_snap = keep[0]
             root_snap.parent_id = None
-            self._write_manifest(root_snap)
+            _atomic_write(self._snap_path(root_snap.snapshot_id), root_snap.to_json())
             for s in drop:
                 try:
                     os.remove(self._snap_path(s.snapshot_id))

@@ -235,7 +235,7 @@ def test_maintenance_cli(spark, tmp_table, capsys):
 
     stats = main(
         [
-            "--table", tmp_table.root, "--buckets", "4",
+            "--table", tmp_table.root,
             "--compact", "--expire-keep", "1", "--gc-orphans",
         ]
     )
@@ -248,7 +248,7 @@ def test_maintenance_cli(spark, tmp_table, capsys):
     # content survives maintenance
     assert tmp_table.read(spark).count() == 6
     # idempotent second pass: nothing left to do
-    stats2 = main(["--table", tmp_table.root, "--buckets", "4", "--compact",
+    stats2 = main(["--table", tmp_table.root, "--compact",
                    "--expire-keep", "1", "--gc-orphans"])
     assert stats2["compacted_snapshot"] is None
     assert stats2["expired_files"] == 0 and stats2["orphans_removed"] == 0
@@ -259,7 +259,7 @@ def test_maintenance_cli(spark, tmp_table, capsys):
 
 
 def test_layout_mismatch_rejected(spark, tmp_table):
-    """The first write freezes (key_col, n_buckets) in _table.json; opening
+    """The first write freezes (key_col, n_buckets) in the table record; opening
     the table with a different layout raises instead of silently misreading
     bucket-pruned scans (a 4-bucket table opened as 16 buckets would make a
     resume's manifest lookups miss most bucket keys — data loss, no error)."""
@@ -428,13 +428,16 @@ def test_step_write_matches_jvm_rows(spark, tiny_dir, tmp_path, operator, data, 
         assert fused_rows.num_rows > src.count()
 
 
-def test_read_plans_without_a_spark_job(spark, tmp_path):
-    """read() passes the table's stored schema, so building the relation
-    runs no parquet schema-inference job; the columns keep the written
-    order (``_schema.json`` itself is key-sorted), also for a read of
-    buckets that hold no files.  Nor does a read of many files run Spark's
-    parallel file-listing job (above 32 paths by Spark's default): the
-    manifest already names every file."""
+def test_read_plans_without_a_spark_job(spark, tmp_path, monkeypatch):
+    """read() passes the table's recorded schema, so building the relation
+    runs no parquet schema-inference job and opens no parquet footer; the
+    columns keep the written order, also for a read of buckets that hold no
+    files.  Nor does a read of many files run Spark's parallel file-listing
+    job (above 32 paths by Spark's default): the manifest already names
+    every file."""
+    import pyarrow.parquet as pq
+    import pyarrow.parquet.core as pq_core
+
     table = IceliteTable(str(tmp_path / "ordered"), key_col="url", n_buckets=4)
     table.append(
         spark.createDataFrame([(f"u{i}", i, "x") for i in range(8)], "url string, z int, a string")
@@ -447,6 +450,16 @@ def test_read_plans_without_a_spark_job(spark, tmp_path):
     )
     n_files = sum(len(ps) for ps in many.snapshot().files.values())
     assert n_files >= 48
+    footers = []
+
+    class CountedParquetFile(pq.ParquetFile):
+        def __init__(self, source, *args, **kwargs):
+            footers.append(source)
+            super().__init__(source, *args, **kwargs)
+
+    # pq.read_schema/read_metadata open their file through core.ParquetFile
+    monkeypatch.setattr(pq_core, "ParquetFile", CountedParquetFile)
+    monkeypatch.setattr(pq, "ParquetFile", CountedParquetFile)
     sc = spark.sparkContext
     group = "icelite-read-plans-only"
     sc.setJobGroup(group, "plan icelite reads")
@@ -456,7 +469,110 @@ def test_read_plans_without_a_spark_job(spark, tmp_path):
         wide = many.read(spark)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.undo()
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert footers == []
     assert whole.columns == empty.columns == ["url", "z", "a"]
     assert whole.count() == 8 and empty.count() == 0
     assert wide.count() == 400
+
+
+def test_metadata_files_are_fsynced_before_rename(spark, tmp_table, monkeypatch):
+    """Every file icelite renames into place (the table record, each
+    manifest, ``_HEAD``) was fsync'd first: a crash can persist an unsynced
+    rename without its data, leaving a zero-length file that breaks every
+    later open.  Every metadata file in the root arrives by such a rename,
+    and the root holds nothing beyond ``_HEAD``, ``_snapshots/``, ``data/``
+    and the one table record."""
+    import os
+
+    root = os.path.realpath(tmp_table.root)
+    synced: set[str] = set()
+    renamed: set[str] = set()
+    unsynced: list[str] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        synced.add(os.readlink(f"/proc/self/fd/{fd}"))
+        real_fsync(fd)
+
+    def replace(src, dst, *args, **kwargs):
+        rel = os.path.relpath(os.path.realpath(dst), root)
+        if not rel.startswith(".."):
+            renamed.add(rel)
+            if os.path.realpath(src) not in synced:
+                unsynced.append(rel)
+        real_replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    for i in range(2):
+        tmp_table.append(_df(spark, [(f"u{i}a", i), (f"u{i}b", 10 + i)]))
+    sid = tmp_table.merge(_df(spark, [("u0a", 7)]))
+    tmp_table.patch_metadata(sid, {"note": "patched"})
+    tmp_table.compact(spark)
+    tmp_table.expire_snapshots(keep_last=2)
+    monkeypatch.undo()
+
+    assert unsynced == []
+    metadata_files = {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, fs in os.walk(root)
+        if not os.path.relpath(d, root).startswith("data")
+        for f in fs
+    }
+    assert metadata_files <= renamed
+    top = set(os.listdir(root))
+    assert len(top) == 4 and {"_HEAD", "_snapshots", "data"} < top
+    assert "_schema.json" not in top
+
+
+def test_compact_conflicts_with_a_concurrent_merge(spark, tmp_table, monkeypatch):
+    """A merge that rewrites a bucket between a compaction's read and its
+    commit makes the compaction raise a commit conflict and leave the head
+    at the merge's snapshot: committing the stale rewrite would drop the
+    merge's rows from the table."""
+    from ocr_spark.sources.icelite import CommitConflictError
+
+    keys = [f"u{i}{s}" for i in range(4) for s in "ab"]
+    for i in range(4):
+        tmp_table.append(_df(spark, [(f"u{i}a", i), (f"u{i}b", 10 + i)]))
+    write = tmp_table._write_data
+    merged = {}
+
+    def write_then_merge(df, token):
+        out = write(df, token)
+        monkeypatch.setattr(tmp_table, "_write_data", write)
+        merged["sid"] = tmp_table.merge(_df(spark, [(k, 100) for k in keys]))
+        return out
+
+    monkeypatch.setattr(tmp_table, "_write_data", write_then_merge)
+    with pytest.raises(CommitConflictError, match="under a concurrent compact"):
+        tmp_table.compact(spark)
+    head = tmp_table.snapshot()
+    assert head.snapshot_id == merged["sid"] and head.operation == "merge"
+    assert {r["url"]: r["v"] for r in tmp_table.read(spark).collect()} == dict.fromkeys(keys, 100)
+
+
+@pytest.mark.parametrize(
+    "error, code, message",
+    [
+        ("SchemaMismatchError", 4, "schema rejected"),
+        ("CommitConflictError", 3, "commit conflict (retryable)"),
+        ("IceliteError", 4, "table layout rejected"),
+        ("StaleTableError", 4, "table rejected"),
+    ],
+)
+def test_exit_on_table_error(error, code, message, capsys):
+    """The CLI jobs' one map from table error to exit code and message;
+    any other exception passes through."""
+    from ocr_spark.sources import icelite
+
+    with pytest.raises(SystemExit) as e:
+        with icelite.exit_on_table_error():
+            raise getattr(icelite, error)("boom")
+    assert e.value.code == code
+    assert capsys.readouterr().err == f"error: {message}: boom\n"
+    with pytest.raises(KeyError):
+        with icelite.exit_on_table_error():
+            raise KeyError("not a table error")

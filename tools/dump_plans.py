@@ -45,6 +45,7 @@ CASES = [
 def plan_of(df) -> str:
     s = df._jdf.queryExecution().executedPlan().toString()
     s = re.sub(r"#\d+", "#N", s)  # strip expr ids for stable diffs
+    s = re.sub(r"plan_id=\d+", "plan_id=N", s)  # and Exchange ids
     return s.strip()
 
 
@@ -56,7 +57,7 @@ def main() -> None:
         "# Physical plans (evidence artifact)",
         "",
         "Generated by `python tools/dump_plans.py` on sf0.01 / tiny fixtures.",
-        "Expression ids normalized to `#N`.  What to look for:",
+        "Expression ids normalized to `#N`, Exchange ids to `plan_id=N`.  What to look for:",
         "",
         "- **extract_pages**: one scan, a single `MapInArrow` (the dom/wet",
         "  dispatch is per row inside the batch step, so no `Union`), and",
