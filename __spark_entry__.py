@@ -346,20 +346,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         page.tsx:444-452 upload -> extract-data-from-pdf.ts OCR+structuring).
         Same golden as the attendance branch — byte identity through FOUR
         chained stages from raw document bytes."""
-        from ocr_spark.operators.attendance import attendance_records
-        from ocr_spark.operators.layout_ops import (
-            glyphs_to_page_text,
-            pages_to_doc_text,
-        )
+        from ocr_spark.operators.layout_ops import ocr_structured_records
         from ocr_spark.operators.pdf_ops import pdf_to_glyphs
 
         pdfs = spark.read.parquet(f"{fix}/attendance_pdfs.parquet")
         glyphs = pdf_to_glyphs(pdfs).filter(F.col("error").isNull()).drop("error")
-        doc_text = pages_to_doc_text(glyphs_to_page_text(glyphs))
-        keyed = doc_text.join(
-            F.broadcast(pdfs.select("doc_id", "url")), "doc_id"
-        ).select("url", "text")
-        r = attendance_records(keyed, text_col="text")
+        r = ocr_structured_records(glyphs, pdfs.select("doc_id", "url"))
         return r.select(
             "url",
             F.col("fields.classe").alias("classe"),

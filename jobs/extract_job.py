@@ -47,29 +47,31 @@ def main(argv: list[str] | None = None) -> None:
 
     from ocr_spark.plans.pipeline import ExtractionPipeline
     from ocr_spark.session import build_session
-    from ocr_spark.sources.icelite import IceliteTable, exit_on_table_error
+    from ocr_spark.sources.icelite import IceliteError, IceliteTable, exit_on_table_error
 
     spark = SparkSession.getActiveSession() or build_session(
         "extract-job", cores=args.cores
     )
-    try:
-        if args.format == "warc":
-            from ocr_spark.sources.warc import read_warc
-
-            pages = read_warc(spark, args.input).drop("warc_file")
-        elif args.format == "icelite":
-            # bucket-laid-out input: each group reads ONLY its buckets'
-            # files (manifest pruning) — the resume path scans nothing of
-            # the committed groups
-            pages = IceliteTable(args.input, key_col="url", n_buckets=args.buckets)
-            if not pages.exists():
-                raise FileNotFoundError(args.input)
-        else:
-            pages = spark.read.parquet(args.input)
-    except Exception as e:  # noqa: BLE001 — operator-friendly CLI error
-        print(f"error: cannot read --input {args.input!r}: {type(e).__name__}", file=sys.stderr)
-        raise SystemExit(2) from None
     with exit_on_table_error():
+        try:
+            if args.format == "warc":
+                from ocr_spark.sources.warc import read_warc
+
+                pages = read_warc(spark, args.input).drop("warc_file")
+            elif args.format == "icelite":
+                # bucket-laid-out input: each group reads ONLY its buckets'
+                # files (manifest pruning) — the resume path scans nothing of
+                # the committed groups
+                pages = IceliteTable(args.input, key_col="url", n_buckets=args.buckets)
+                if not pages.exists():
+                    raise FileNotFoundError(args.input)
+            else:
+                pages = spark.read.parquet(args.input)
+        except IceliteError:
+            raise  # a table laid out for other buckets: exit 4, not 2
+        except Exception as e:  # noqa: BLE001 — operator-friendly CLI error
+            print(f"error: cannot read --input {args.input!r}: {type(e).__name__}", file=sys.stderr)
+            raise SystemExit(2) from None
         if args.format == "pdf":
             from ocr_spark.operators.pdf_ops import pdf_doc_records
 

@@ -486,40 +486,51 @@ def _mp4_boxes(payload: bytes, start: int, end: int):
         pos += size
 
 
+def _mp4_children(payload: bytes, span: tuple[int, int]) -> dict:
+    """{type: (body_start, body_end)} of the FIRST box of each type
+    directly inside ``span``."""
+    kids: dict = {}
+    for t, s, e in _mp4_boxes(payload, *span):
+        kids.setdefault(t, (s, e))
+    return kids
+
+
+def _mp4_moov(payload: bytes | None):
+    """The prelude every MP4 kernel shares -> ``(ftyp, moov, error)``, each
+    box as its (body_start, body_end) span: EMPTY_INPUT / NOT_MP4 (first
+    box not ftyp) / NO_MOOV (ftyp is still returned)."""
+    if payload is None or len(payload) == 0:
+        return None, None, "EMPTY_INPUT"
+    top = list(_mp4_boxes(payload, 0, len(payload)))
+    if not top or top[0][0] != b"ftyp":
+        return None, None, "NOT_MP4"
+    moov = next(((s, e) for t, s, e in top if t == b"moov"), None)
+    return top[0][1:], moov, None if moov else "NO_MOOV"
+
+
 def _mp4_decode(payload: bytes | None) -> dict:
     """ISO-BMFF (MP4) metadata probe — pure stdlib box-tree walk, no codec
     library: major brand from ``ftyp``, timescale/duration from
     ``moov/mvhd`` (versions 0 and 1).  The real video counterpart of
     ``_wav_decode``: frame DECODING stays a codec boundary, the container
     metadata a training pipeline partitions/samples on is parsed for real.
-    E6 per-row errors, never raises: EMPTY_INPUT / NOT_MP4 (first box not
-    ftyp) / NO_MOOV / NO_MVHD / UNSUPPORTED_VERSION (mvhd version > 1) /
-    TRUNCATED (mvhd fields cut short)."""
+    E6 per-row errors, never raises: the ``_mp4_moov`` prelude's codes /
+    NO_MVHD / UNSUPPORTED_VERSION (mvhd version > 1) / TRUNCATED (mvhd
+    fields cut short)."""
     import struct
 
     out = {
         "major_brand": "", "timescale": 0, "duration_units": 0,
         "duration_s": 0.0, "sha256": "", "error": None,
     }
-    if payload is None or len(payload) == 0:
-        out["error"] = "EMPTY_INPUT"
+    ftyp, moov, out["error"] = _mp4_moov(payload)
+    if out["error"] != "EMPTY_INPUT":
+        out["sha256"] = hashlib.sha256(payload).hexdigest()
+    if ftyp is not None and ftyp[1] - ftyp[0] >= 4:
+        out["major_brand"] = payload[ftyp[0] : ftyp[0] + 4].decode("ascii", "replace")
+    if out["error"] is not None:
         return out
-    out["sha256"] = hashlib.sha256(payload).hexdigest()
-    top = list(_mp4_boxes(payload, 0, len(payload)))
-    if not top or top[0][0] != b"ftyp":
-        out["error"] = "NOT_MP4"
-        return out
-    fb, fs, fe = top[0]
-    if fe - fs >= 4:
-        out["major_brand"] = payload[fs : fs + 4].decode("ascii", "replace")
-    moov = next(((s, e) for t, s, e in top if t == b"moov"), None)
-    if moov is None:
-        out["error"] = "NO_MOOV"
-        return out
-    mvhd = next(
-        ((s, e) for t, s, e in _mp4_boxes(payload, moov[0], moov[1]) if t == b"mvhd"),
-        None,
-    )
+    mvhd = _mp4_children(payload, moov).get(b"mvhd")
     if mvhd is None:
         out["error"] = "NO_MVHD"
         return out
@@ -553,35 +564,69 @@ def decode_videos(media: DataFrame) -> DataFrame:
     return _map_kind(media, "video", _one_struct(_mp4_decode), VIDEO_META_SCHEMA)
 
 
-def _mp4_sample_table(payload: bytes | None):
-    """Parse the first video track's sample table for REAL —
-    trak/mdia/{mdhd,hdlr,minf/stbl/{stts,stsc,stsz,stco}} — and return
-    ``(timescale, pts_units, offsets, sizes, error)`` where the three
-    arrays are numpy int64 per-sample vectors (pts from the stts runs,
-    absolute file offsets from the chunk layout).  Vectorized on purpose:
-    a 2 h movie carries ~200k samples and this runs per row inside a
-    batch UDF, so the expansion is ``np.repeat``/``cumsum``, not a Python
-    loop.  Never raises; error taxonomy: EMPTY_INPUT / NOT_MP4 / NO_MOOV /
-    NO_TRAK (moov carries no trak box) / NO_SAMPLE_TABLE (no vide track
-    with a complete mdhd+stbl) / BAD_SAMPLE_TABLE (tables present but
-    inconsistent: count mismatches, non-monotonic stsc, zero timescale,
-    or frame ranges outside the payload)."""
+def _mp4_video_track(payload: bytes | None):
+    """Choose THE video track -> ``(timescale, stbl, error)``, ``stbl``
+    being ``_mp4_children`` of its minf/stbl: the first trak whose hdlr is
+    ``vide``, whose mdhd is a readable v0/v1 box and which has a stbl.
+    The one place a trak is chosen: ISO/IEC 14496-12 keeps a track's
+    sample tables and its sample description (stsd) in the same stbl, so
+    every reader of either takes both from this choice.  Errors: the
+    ``_mp4_moov`` prelude's / NO_TRAK (moov carries no trak box) /
+    NO_SAMPLE_TABLE (no such track)."""
     import struct
 
+    _ftyp, moov, err = _mp4_moov(payload)
+    if err is not None:
+        return 0, None, err
+    traks = [(s, e) for t, s, e in _mp4_boxes(payload, *moov) if t == b"trak"]
+    if not traks:
+        return 0, None, "NO_TRAK"
+    for trak in traks:
+        mdia = _mp4_children(payload, trak).get(b"mdia")
+        if mdia is None:
+            continue
+        sub = _mp4_children(payload, mdia)
+        hdlr, mdhd, minf = sub.get(b"hdlr"), sub.get(b"mdhd"), sub.get(b"minf")
+        if hdlr is None or payload[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
+            continue
+        if mdhd is None or minf is None:
+            continue
+        s, e = mdhd
+        # mdhd v0 keeps the timescale at +12, v1 (64-bit times) at +20
+        if e - s < 16 or payload[s] > 1 or e - s < 16 + 8 * payload[s]:
+            continue
+        (timescale,) = struct.unpack_from(">I", payload, s + 12 + 8 * payload[s])
+        stbl = _mp4_children(payload, minf).get(b"stbl")
+        if stbl is not None:
+            return int(timescale), _mp4_children(payload, stbl), None
+    return 0, None, "NO_SAMPLE_TABLE"
+
+
+def _mp4_sample_table(payload: bytes | None):
+    """The video track's sample table, parsed for REAL -> ``(timescale,
+    pts_units, offsets, sizes, error)``: the ``_mp4_video_track`` choice,
+    expanded by ``_mp4_samples``.  Never raises; error taxonomy:
+    EMPTY_INPUT / NOT_MP4 / NO_MOOV / NO_TRAK / NO_SAMPLE_TABLE /
+    BAD_SAMPLE_TABLE."""
+    timescale, stbl, err = _mp4_video_track(payload)
+    if err is not None:
+        return 0, None, None, None, err
+    return _mp4_samples(payload, timescale, stbl)
+
+
+def _mp4_samples(payload: bytes, timescale: int, tables: dict):
+    """One track's stbl/{stts,stsc,stsz,stco} -> ``(timescale, pts_units,
+    offsets, sizes, error)`` where the three arrays are numpy int64
+    per-sample vectors (pts from the stts runs, absolute file offsets from
+    the chunk layout).  Vectorized on purpose: a 2 h movie carries ~200k
+    samples and this runs per row inside a batch UDF, so the expansion is
+    ``np.repeat``/``cumsum``, not a Python loop.  Never raises; error
+    taxonomy: NO_SAMPLE_TABLE (a table box is missing) / BAD_SAMPLE_TABLE
+    (tables present but inconsistent: count mismatches, non-monotonic
+    stsc, zero timescale, or frame ranges outside the payload)."""
     import numpy as np
 
     none = (0, None, None, None)
-    if payload is None or len(payload) == 0:
-        return (*none, "EMPTY_INPUT")
-    top = list(_mp4_boxes(payload, 0, len(payload)))
-    if not top or top[0][0] != b"ftyp":
-        return (*none, "NOT_MP4")
-    moov = next(((s, e) for t, s, e in top if t == b"moov"), None)
-    if moov is None:
-        return (*none, "NO_MOOV")
-    traks = [(s, e) for t, s, e in _mp4_boxes(payload, moov[0], moov[1]) if t == b"trak"]
-    if not traks:
-        return (*none, "NO_TRAK")
 
     def u32s(s: int, e: int, skip: int, count: int):
         """count big-endian u32 words at body offset `skip`, or None if
@@ -590,111 +635,75 @@ def _mp4_sample_table(payload: bytes | None):
             return None
         return np.frombuffer(payload, dtype=">u4", offset=s + skip, count=count)
 
-    for ts_, te in traks:
-        mdia = next(
-            ((s, e) for t, s, e in _mp4_boxes(payload, ts_, te) if t == b"mdia"), None
-        )
-        if mdia is None:
-            continue
-        sub = {}
-        for t, s, e in _mp4_boxes(payload, mdia[0], mdia[1]):
-            sub.setdefault(t, (s, e))
-        hdlr = sub.get(b"hdlr")
-        if hdlr is None or payload[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
-            continue
-        mdhd, minf = sub.get(b"mdhd"), sub.get(b"minf")
-        if mdhd is None or minf is None:
-            continue
-        s, e = mdhd
-        if e - s < 4 or payload[s] > 1:
-            continue
-        if payload[s]:  # mdhd v1: 64-bit times, timescale at +20
-            if e - s < 24:
-                continue
-            (timescale,) = struct.unpack_from(">I", payload, s + 20)
-        else:
-            if e - s < 16:
-                continue
-            (timescale,) = struct.unpack_from(">I", payload, s + 12)
-        stbl = next(
-            ((s2, e2) for t, s2, e2 in _mp4_boxes(payload, minf[0], minf[1]) if t == b"stbl"),
-            None,
-        )
-        if stbl is None:
-            continue
-        tables = {}
-        for t, s2, e2 in _mp4_boxes(payload, stbl[0], stbl[1]):
-            tables.setdefault(t, (s2, e2))
-        if not all(t in tables for t in (b"stts", b"stsc", b"stsz", b"stco")):
-            return (*none, "NO_SAMPLE_TABLE")
-        bad = (*none, "BAD_SAMPLE_TABLE")
-        if timescale == 0:
+    if not all(t in tables for t in (b"stts", b"stsc", b"stsz", b"stco")):
+        return (*none, "NO_SAMPLE_TABLE")
+    bad = (*none, "BAD_SAMPLE_TABLE")
+    if timescale == 0:
+        return bad
+    # stts: runs of (count, delta) -> per-sample pts
+    s2, e2 = tables[b"stts"]
+    head = u32s(s2, e2, 4, 1)
+    if head is None:
+        return bad
+    runs = u32s(s2, e2, 8, int(head[0]) * 2)
+    if runs is None:
+        return bad
+    counts, deltas = runs[0::2].astype(np.int64), runs[1::2].astype(np.int64)
+    n_stts = int(counts.sum())
+    # stsz: uniform size or per-sample table
+    s2, e2 = tables[b"stsz"]
+    head = u32s(s2, e2, 4, 2)
+    if head is None:
+        return bad
+    uniform, n = int(head[0]), int(head[1])
+    if n != n_stts or n == 0:
+        return bad
+    if uniform:
+        # a forged count can't exceed what the file could hold — guard
+        # BEFORE allocating n-sized arrays
+        if uniform * n > len(payload):
             return bad
-        # stts: runs of (count, delta) -> per-sample pts
-        s2, e2 = tables[b"stts"]
-        head = u32s(s2, e2, 4, 1)
-        if head is None:
+        sizes = np.full(n, uniform, dtype=np.int64)
+    else:
+        sz = u32s(s2, e2, 12, n)
+        if sz is None:
             return bad
-        runs = u32s(s2, e2, 8, int(head[0]) * 2)
-        if runs is None:
-            return bad
-        counts, deltas = runs[0::2].astype(np.int64), runs[1::2].astype(np.int64)
-        n_stts = int(counts.sum())
-        # stsz: uniform size or per-sample table
-        s2, e2 = tables[b"stsz"]
-        head = u32s(s2, e2, 4, 2)
-        if head is None:
-            return bad
-        uniform, n = int(head[0]), int(head[1])
-        if n != n_stts or n == 0:
-            return bad
-        if uniform:
-            # a forged count can't exceed what the file could hold — guard
-            # BEFORE allocating n-sized arrays
-            if uniform * n > len(payload):
-                return bad
-            sizes = np.full(n, uniform, dtype=np.int64)
-        else:
-            sz = u32s(s2, e2, 12, n)
-            if sz is None:
-                return bad
-            sizes = sz.astype(np.int64)
-        # stco: chunk file offsets
-        s2, e2 = tables[b"stco"]
-        head = u32s(s2, e2, 4, 1)
-        if head is None:
-            return bad
-        stco = u32s(s2, e2, 8, int(head[0]))
-        if stco is None or len(stco) == 0:
-            return bad
-        chunk_off = stco.astype(np.int64)
-        # stsc: (first_chunk, samples_per_chunk) runs -> per-chunk counts
-        s2, e2 = tables[b"stsc"]
-        head = u32s(s2, e2, 4, 1)
-        if head is None:
-            return bad
-        ents = u32s(s2, e2, 8, int(head[0]) * 3)
-        if ents is None or len(ents) == 0:
-            return bad
-        first = ents[0::3].astype(np.int64)
-        spc = ents[1::3].astype(np.int64)
-        n_chunks = len(chunk_off)
-        if first[0] != 1 or np.any(np.diff(first) <= 0) or first[-1] > n_chunks:
-            return bad
-        run_len = np.diff(np.append(first, n_chunks + 1))
-        per_chunk = np.repeat(spc, run_len)
-        if int(per_chunk.sum()) != n or np.any(per_chunk <= 0):
-            return bad
-        # per-sample offsets: chunk base + within-chunk prefix of sizes
-        chunk_of_sample = np.repeat(np.arange(n_chunks), per_chunk)
-        pre = np.concatenate(([0], np.cumsum(sizes)[:-1]))
-        chunk_first_sample = np.concatenate(([0], np.cumsum(per_chunk)[:-1]))
-        offsets = chunk_off[chunk_of_sample] + (pre - pre[chunk_first_sample][chunk_of_sample])
-        if np.any(offsets < 0) or np.any(offsets + sizes > len(payload)):
-            return bad
-        pts = np.concatenate(([0], np.cumsum(np.repeat(deltas, counts))[:-1]))
-        return int(timescale), pts, offsets, sizes, None
-    return (*none, "NO_SAMPLE_TABLE")
+        sizes = sz.astype(np.int64)
+    # stco: chunk file offsets
+    s2, e2 = tables[b"stco"]
+    head = u32s(s2, e2, 4, 1)
+    if head is None:
+        return bad
+    stco = u32s(s2, e2, 8, int(head[0]))
+    if stco is None or len(stco) == 0:
+        return bad
+    chunk_off = stco.astype(np.int64)
+    # stsc: (first_chunk, samples_per_chunk) runs -> per-chunk counts
+    s2, e2 = tables[b"stsc"]
+    head = u32s(s2, e2, 4, 1)
+    if head is None:
+        return bad
+    ents = u32s(s2, e2, 8, int(head[0]) * 3)
+    if ents is None or len(ents) == 0:
+        return bad
+    first = ents[0::3].astype(np.int64)
+    spc = ents[1::3].astype(np.int64)
+    n_chunks = len(chunk_off)
+    if first[0] != 1 or np.any(np.diff(first) <= 0) or first[-1] > n_chunks:
+        return bad
+    run_len = np.diff(np.append(first, n_chunks + 1))
+    per_chunk = np.repeat(spc, run_len)
+    if int(per_chunk.sum()) != n or np.any(per_chunk <= 0):
+        return bad
+    # per-sample offsets: chunk base + within-chunk prefix of sizes
+    chunk_of_sample = np.repeat(np.arange(n_chunks), per_chunk)
+    pre = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+    chunk_first_sample = np.concatenate(([0], np.cumsum(per_chunk)[:-1]))
+    offsets = chunk_off[chunk_of_sample] + (pre - pre[chunk_first_sample][chunk_of_sample])
+    if np.any(offsets < 0) or np.any(offsets + sizes > len(payload)):
+        return bad
+    pts = np.concatenate(([0], np.cumsum(np.repeat(deltas, counts))[:-1]))
+    return int(timescale), pts, offsets, sizes, None
 
 
 FRAME_SAMPLE_TYPE = T.StructType(
@@ -756,69 +765,33 @@ def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
     )
 
 
-def _mp4_visual_entry(payload: bytes):
-    """First video track's stsd VisualSampleEntry -> (fourcc, width,
-    height, depth, error).  Parses the 78-byte spec layout (ISO-BMFF
-    12.1.3: reserved(6), data_ref_index(2), pre_defined/reserved(16),
-    width(2), height(2), resolutions(8), reserved(4), frame_count(2),
-    compressorname(32), depth(2), pre_defined(2)); the fixture generator
-    WRITES the same layout through its own builder
-    (fixtures/generator._visual_sample_entry) — independent code paths.
-    Callers gate on the sample-table walk first, so this only reports
-    NO_SAMPLE_TABLE when stsd itself is absent/short."""
+def _mp4_visual_entry(payload: bytes, stsd: tuple[int, int] | None):
+    """The first stsd VisualSampleEntry -> (fourcc, width, height, depth,
+    error), ``stsd`` being the (body_start, body_end) span from the stbl
+    ``_mp4_video_track`` chose — nothing above it is walked.  Parses the
+    78-byte spec layout (ISO-BMFF 12.1.3: reserved(6), data_ref_index(2),
+    pre_defined/reserved(16), width(2), height(2), resolutions(8),
+    reserved(4), frame_count(2), compressorname(32), depth(2),
+    pre_defined(2)); the fixture generator WRITES the same layout through
+    its own builder (fixtures/generator._visual_sample_entry) — independent
+    code paths.  NO_SAMPLE_TABLE when stsd is absent or short."""
     import struct
 
-    none = ("", 0, 0, 0)
-    top = list(_mp4_boxes(payload, 0, len(payload)))
-    moov = next(((s, e) for t, s, e in top if t == b"moov"), None)
-    if moov is None:
-        return (*none, "NO_MOOV")
-    for t, ts_, te in _mp4_boxes(payload, moov[0], moov[1]):
-        if t != b"trak":
-            continue
-        mdia = next(
-            ((s, e) for t2, s, e in _mp4_boxes(payload, ts_, te) if t2 == b"mdia"),
-            None,
-        )
-        if mdia is None:
-            continue
-        sub = {}
-        for t2, s, e in _mp4_boxes(payload, mdia[0], mdia[1]):
-            sub.setdefault(t2, (s, e))
-        hdlr = sub.get(b"hdlr")
-        if hdlr is None or payload[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
-            continue
-        minf = sub.get(b"minf")
-        if minf is None:
-            continue
-        stbl = next(
-            ((s, e) for t2, s, e in _mp4_boxes(payload, minf[0], minf[1]) if t2 == b"stbl"),
-            None,
-        )
-        if stbl is None:
-            continue
-        stsd = next(
-            ((s, e) for t2, s, e in _mp4_boxes(payload, stbl[0], stbl[1]) if t2 == b"stsd"),
-            None,
-        )
-        if stsd is None:
-            return (*none, "NO_SAMPLE_TABLE")
-        s, e = stsd
-        if e - s < 16:  # ver/flags + count + first entry header
-            return (*none, "NO_SAMPLE_TABLE")
-        entry = next(iter(_mp4_boxes(payload, s + 8, e)), None)
-        if entry is None:
-            return (*none, "NO_SAMPLE_TABLE")
-        fourcc_b, es, ee = entry
-        fourcc = fourcc_b.decode("ascii", "replace")
-        if ee - es < 78:
-            # a stub codec entry (e.g. bare mp4v): geometry unknown — the
-            # caller maps non-'raw ' fourccs to UNSUPPORTED_CODEC anyway
-            return (fourcc, 0, 0, 0, None)
-        w, h = struct.unpack_from(">HH", payload, es + 24)
-        (depth,) = struct.unpack_from(">H", payload, es + 74)
-        return (fourcc, int(w), int(h), int(depth), None)
-    return (*none, "NO_TRAK")
+    none = ("", 0, 0, 0, "NO_SAMPLE_TABLE")
+    if stsd is None or stsd[1] - stsd[0] < 16:  # ver/flags + count + entry header
+        return none
+    entry = next(iter(_mp4_boxes(payload, stsd[0] + 8, stsd[1])), None)
+    if entry is None:
+        return none
+    fourcc_b, es, ee = entry
+    fourcc = fourcc_b.decode("ascii", "replace")
+    if ee - es < 78:
+        # a stub codec entry (e.g. bare mp4v): geometry unknown — the
+        # caller maps non-'raw ' fourccs to UNSUPPORTED_CODEC anyway
+        return (fourcc, 0, 0, 0, None)
+    w, h = struct.unpack_from(">HH", payload, es + 24)
+    (depth,) = struct.unpack_from(">H", payload, es + 74)
+    return (fourcc, int(w), int(h), int(depth), None)
 
 
 FRAME_PIXELS_TYPE = T.StructType(
@@ -851,10 +824,11 @@ def sample_frame_pixels(media: DataFrame, every_n: int = 30) -> DataFrame:
     import numpy as np
 
     def emit(out, mid, p):
-        _ts, _pts, offs, sizes, err = _mp4_sample_table(p)
-        fourcc, w, h = "", 0, 0
+        timescale, stbl, err = _mp4_video_track(p)
         if err is None:
-            fourcc, w, h, _depth, err = _mp4_visual_entry(p)
+            _ts, _pts, offs, sizes, err = _mp4_samples(p, timescale, stbl)
+        if err is None:
+            fourcc, w, h, _depth, err = _mp4_visual_entry(p, stbl.get(b"stsd"))
         if err is None and (fourcc != "raw " or w <= 0 or h <= 0):
             err = "UNSUPPORTED_CODEC"
         if err is not None:

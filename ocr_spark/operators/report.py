@@ -2,8 +2,9 @@
 
 The reference summarizes one record with an LLM
 (reference: src/ai/flows/summarize-pdf-data.ts:28-45); deterministic
-replacement per SURVEY.md §2 A1: grouped metrics over the extraction
-output — the one intentionally-wide (shuffling) operator in the engine.
+replacement per SURVEY.md §2 A1: ``summarize``, one metric string per
+record, and grouped metrics over the extraction output — the one
+intentionally-wide (shuffling) operator in the engine.
 Also carries A2's rule: ``nombre_des_présents`` is the *declared* count and
 is never recomputed; ``size(présences)`` is a separate QA column.
 """
@@ -89,6 +90,27 @@ def extraction_summary(extracted: DataFrame) -> DataFrame:
             mean_chars.cast("string"),
             F.lit(" chars per clean doc, max "),
             F.col("max_chars").cast("string"),
+        ).alias("summary"),
+    )
+
+
+def summarize(records: DataFrame) -> DataFrame:
+    """A1 per record: the reference's ``summarizePdfData`` flow,
+    deterministic — one metric summary string per record instead of LLM
+    prose (summarize-pdf-data.ts:28-45).
+    Fields are coalesced individually: ``F.concat`` propagates nulls, so a
+    record carrying an extraction error (partial fields struct) would get
+    summary=NULL instead of a summary of whatever WAS extracted — the
+    reference still renders per-document output in that case."""
+    return records.select(
+        "url",
+        F.concat(
+            F.lit("classe="), F.coalesce(F.col("fields.classe"), F.lit("?")),
+            F.lit(" cours="), F.coalesce(F.col("fields.cours"), F.lit("?")),
+            F.lit(" présents="),
+            F.coalesce(F.col("fields.nombre_des_présents").cast("string"), F.lit("?")),
+            F.lit(" étudiants="),
+            F.coalesce(F.size("fields.présences").cast("string"), F.lit("?")),
         ).alias("summary"),
     )
 

@@ -674,35 +674,23 @@ class IceliteTable:
         against deleting files of an IN-FLIGHT write (Iceberg defaults to
         3 days); 0 is only safe when no writer is running.  Files of a
         failed or losing speculative task attempt are orphans too: the
-        driver never received their metadata.  Returns the deleted paths
-        (relative).
-
-        Non-parquet files in a directory that holds live data survive:
-        tables written through Spark's own file writer (before the
-        task-side writer) carry its ``_SUCCESS``/``.crc`` sidecars there."""
+        driver never received their metadata.  Any unreferenced file under
+        ``data/`` is one, wherever it sits.  Returns the deleted paths
+        (relative)."""
         import time
 
         live: set[str] = set()
         for s in self.snapshots():
             for ps in s.files.values():
                 live.update(ps)
-        # directories holding at least one live file keep their sidecars;
-        # fully-orphaned write dirs lose them too
-        live_dirs = {os.path.dirname(p) for p in live}
         data_root = os.path.join(self.root, "data")
         doomed: list[str] = []
         cutoff = time.time() - older_than_s
         for dirpath, _dirs, files in os.walk(data_root):
-            rel_dir = os.path.relpath(dirpath, self.root)
-            dir_is_live = any(d == rel_dir or d.startswith(rel_dir + os.sep) for d in live_dirs)
             for fn in files:
                 full = os.path.join(dirpath, fn)
                 rel = os.path.relpath(full, self.root)
-                if rel in live:
-                    continue
-                if not fn.endswith(".parquet") and dir_is_live:
-                    continue  # sidecar of a directory with committed data
-                if os.path.getmtime(full) > cutoff:
+                if rel in live or os.path.getmtime(full) > cutoff:
                     continue
                 os.remove(full)
                 doomed.append(rel)
@@ -720,9 +708,11 @@ class IceliteTable:
         head = self.snapshot()
         return sum(head.file_rows.values()) if head else 0
 
-    def committed_groups(self, key: str = "bucket_group") -> list[list[int]]:
-        """Resume support: operation metadata of every snapshot in the chain."""
-        return [s.metadata[key] for s in self.snapshots() if key in s.metadata]
+    def committed_groups(self) -> list[list[int]]:
+        """Resume support: the ``bucket_group`` of every snapshot in the
+        chain that records one."""
+        return [s.metadata["bucket_group"] for s in self.snapshots()
+                if "bucket_group" in s.metadata]
 
     def drop(self) -> None:
         if os.path.exists(self.root):

@@ -1,83 +1,18 @@
-"""Reference-parity facade: each reference flow as one call."""
+"""The extraction job CLI: exit codes per failure class and the PDF
+front door through the resumable job."""
 
 from __future__ import annotations
 
-import json
-import os
-
 import pytest
-from pyspark.sql import functions as F
 
-from ocr_spark.api import (
-    append_records,
-    export_json,
-    extract_records,
-    summarize,
-    upsert_wide_rows,
-)
 from ocr_spark.sources.icelite import IceliteTable
 
 
-@pytest.fixture(scope="module")
-def recs(spark, tiny_dir):
-    docs = spark.read.parquet(f"{tiny_dir}/attendance_docs.parquet")
-    return extract_records(doc_texts=docs).cache()
-
-
-def test_extract_records_dispatch(spark, tiny_dir, recs):
-    pages = spark.read.parquet(f"{tiny_dir}/pages.parquet")
-    assert extract_records(pages).count() == 100
-    assert recs.count() == 50
-    glyphs = spark.read.parquet(f"{tiny_dir}/attendance_glyphs.parquet")
-    doc_map = spark.read.parquet(f"{tiny_dir}/attendance_glyph_docs.parquet")
-    assert extract_records(glyphs=glyphs, glyph_doc_map=doc_map).count() == 50
-    with pytest.raises(ValueError):
-        extract_records(pages, doc_texts=pages)
-    with pytest.raises(ValueError):
-        extract_records(glyphs=glyphs)
-
-
-def test_upsert_wide_rows_idempotent(spark, recs, tmp_path):
-    t = IceliteTable(str(tmp_path / "sheet"), key_col="url", n_buckets=4)
-    upsert_wide_rows(recs, t)
-    n1 = t.row_count()
-    upsert_wide_rows(recs, t)  # re-save same keys: replaced, not duplicated
-    assert t.row_count() == n1
-    # wide-row law: one row per student, or one empty row
-    want = recs.select(
-        F.sum(F.greatest(F.size("fields.présences"), F.lit(1))).alias("n")
-    ).first()["n"]
-    assert n1 == want
-
-
-def test_append_and_summarize(spark, recs, tmp_path):
-    t = IceliteTable(str(tmp_path / "mongo"), key_col="url", n_buckets=4)
-    sid = append_records(recs, t)
-    assert isinstance(sid, int)
-    assert t.row_count() == 50
-    s = summarize(recs).first()["summary"]
-    assert "classe=" in s and "présents=" in s
-
-
-def test_export_json(spark, recs, tmp_path):
-    out = str(tmp_path / "json_out")
-    export_json(recs.limit(5), out)
-    lines = []
-    for fn in os.listdir(out):
-        if fn.startswith("part-"):
-            with open(os.path.join(out, fn)) as f:
-                lines += [json.loads(line) for line in f if line.strip()]
-    assert len(lines) == 5
-    parsed = json.loads(lines[0]["json_output"])
-    assert set(parsed) == {
-        "classe", "cours", "date", "nom_du_professeur",
-        "nombre_des_présents", "salle_n", "séance", "présences",
-    }
-
-
-def test_extract_job_exit_codes(spark, tiny_dir, monkeypatch):
+def test_extract_job_exit_codes(spark, tiny_dir, tmp_path, monkeypatch, capsys):
     """The job CLI maps the sink error taxonomy to distinct exit codes:
-    2 = unreadable input, 3 = retryable commit conflict, 4 = schema drift."""
+    2 = unreadable input, 3 = retryable commit conflict, 4 = schema or
+    layout drift (an icelite input laid out for other buckets than
+    ``--buckets`` included)."""
     from jobs.extract_job import main
     from ocr_spark.plans import pipeline as P
     from ocr_spark.sources.icelite import CommitConflictError, SchemaMismatchError
@@ -86,6 +21,17 @@ def test_extract_job_exit_codes(spark, tiny_dir, monkeypatch):
 
     with pytest.raises(SystemExit) as e:
         main(["--input", "/nonexistent/nope.parquet", "--output", "/tmp/never"])
+    assert e.value.code == 2
+
+    laid8 = str(tmp_path / "in8")
+    IceliteTable(laid8, key_col="url", n_buckets=8).append(spark.read.parquet(inp).limit(5))
+    as16 = ["--format", "icelite", "--output", str(tmp_path / "out"), "--buckets", "16"]
+    with pytest.raises(SystemExit) as e:
+        main(["--input", laid8, *as16])
+    assert e.value.code == 4
+    assert "laid out with" in capsys.readouterr().err
+    with pytest.raises(SystemExit) as e:
+        main(["--input", str(tmp_path / "missing"), *as16])
     assert e.value.code == 2
 
     def boom_conflict(self, pages, max_concurrent=1, spark=None):

@@ -42,6 +42,14 @@ def test_merge_idempotent(spark, tmp_table):
     twice = sorted((r["url"], r["v"]) for r in tmp_table.read(spark).collect())
     assert once == twice
     assert tmp_table.row_count() == 3
+    # a key carrying several rows (one wide row per student): re-saving it
+    # replaces all of them, never duplicates
+    wide = _df(spark, [("u7", 1), ("u7", 2), ("u7", 3)])
+    tmp_table.merge(wide)
+    tmp_table.merge(wide)
+    assert tmp_table.row_count() == 6
+    u7 = sorted(r["v"] for r in tmp_table.read(spark).collect() if r["url"] == "u7")
+    assert u7 == [1, 2, 3]
 
 
 def test_snapshot_isolation_history(spark, tmp_table):
@@ -179,23 +187,23 @@ def test_remove_orphan_files(spark, tmp_table, tmp_path):
         f.write(b"not really parquet")
     sidecar = os.path.join(tmp_table.root, "data", "w-crashed", "_SUCCESS")
     open(sidecar, "w").close()
-    # a committed write dir with a Spark sidecar (_SUCCESS at the token-dir
-    # root two levels above the bucket files), as tables written through
-    # Spark's file writer have
+    # a stray file in a committed write dir (at the token-dir root two
+    # levels above the bucket files)
     head = tmp_table.snapshot()
     some_live = next(p for ps in head.files.values() for p in ps)
     token_dir = os.path.dirname(os.path.dirname(os.path.join(tmp_table.root, some_live)))
     open(os.path.join(token_dir, "_SUCCESS"), "w").close()
     assert tmp_table.expire_snapshots(keep_last=1) == []  # can't see it
     deleted = tmp_table.remove_orphan_files()
-    assert sorted(deleted) == [
+    assert sorted(deleted) == sorted([
         os.path.join("data", "w-crashed", "_SUCCESS"),
         os.path.join("data", "w-crashed", "__bucket=0", "part-00000.parquet"),
-    ]
+        os.path.relpath(os.path.join(token_dir, "_SUCCESS"), tmp_table.root),
+    ])
     assert not os.path.exists(orphan)
     assert not os.path.exists(os.path.dirname(crashed))  # empty dirs pruned
-    # committed write dirs keep their sidecars
-    assert os.path.exists(os.path.join(token_dir, "_SUCCESS"))
+    # committed write dirs' unreferenced files are reaped too
+    assert not os.path.exists(os.path.join(token_dir, "_SUCCESS"))
     # committed data intact
     assert {r["url"] for r in tmp_table.read(spark).collect()} == {"u1", "u2"}
     # age guard: a "fresh" orphan survives when older_than_s is large

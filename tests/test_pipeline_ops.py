@@ -1687,6 +1687,7 @@ def test_frame_pixels_bad_frame_size(spark):
     )
     from ocr_spark.operators.multimodal import (
         _mp4_sample_table,
+        _mp4_video_track,
         _mp4_visual_entry,
     )
 
@@ -1702,7 +1703,8 @@ def test_frame_pixels_bad_frame_size(spark):
     payload = ftyp + mdat + _box(b"moov", _mvhd(0, 600, 80) + trak)
     ts, pts, offs, szs, err = _mp4_sample_table(payload)
     assert err is None
-    fourcc, w, h, depth, verr = _mp4_visual_entry(payload)
+    _ts, stbl, _err = _mp4_video_track(payload)
+    fourcc, w, h, depth, verr = _mp4_visual_entry(payload, stbl[b"stsd"])
     assert (fourcc, w, h, depth, verr) == ("raw ", 4, 2, 24, None)
     from ocr_spark.operators.multimodal import sample_frame_pixels
 
@@ -1714,6 +1716,55 @@ def test_frame_pixels_bad_frame_size(spark):
     assert len(rows) == 2
     assert all(r["error"] == "BAD_FRAME_SIZE" for r in rows)
     assert all(r["pixel_sha256"] == "" for r in rows)
+
+
+@pytest.mark.parametrize("skip", ["mdhd_version_2", "mdhd_truncated", "no_mdhd"])
+def test_frame_pixels_take_geometry_from_the_sampled_track(spark, skip):
+    """The sample sizes and the stsd geometry come from ONE track: when
+    the first video trak is skipped (no readable v0/v1 mdhd), the frames
+    of the second trak decode with the second trak's geometry, never
+    with the skipped trak's."""
+    import hashlib
+
+    from ocr_spark.fixtures.generator import (
+        _box,
+        _mvhd,
+        _video_track,
+        _visual_sample_entry,
+    )
+    from ocr_spark.operators.multimodal import sample_frame_pixels
+
+    small = b"\x07" * 12 * 3  # three 2x2 RGB24 frames
+    big = [bytes([10 * k + 1, 10 * k + 2, 10 * k + 3]) * 16 for k in range(3)]
+    ftyp = _box(b"ftyp", b"isom" + b"\0\0\0\1" + b"mp42")
+    mdat = _box(b"mdat", small + b"".join(big))
+    base = len(ftyp) + 8
+    skipped = _video_track(
+        1000, [(3, 40)], [(1, 3)], [12] * 3, [base],
+        sample_entry=_visual_sample_entry(b"raw ", 2, 2),
+    )
+    i = skipped.index(b"mdhd") - 4
+    mdhd = skipped[i : i + 32]  # 8-byte header + 24-byte v0 body
+    bad = {  # same length, so every enclosing box size still holds
+        "mdhd_version_2": mdhd[:8] + b"\x02" + mdhd[9:],
+        "mdhd_truncated": _box(b"mdhd", mdhd[8:16]) + _box(b"free", mdhd[24:]),
+        "no_mdhd": _box(b"free", mdhd[8:]),
+    }[skip]
+    skipped = skipped[:i] + bad + skipped[i + 32 :]
+    chosen = _video_track(
+        1000, [(3, 40)], [(1, 3)], [48] * 3, [base + len(small)],
+        sample_entry=_visual_sample_entry(b"raw ", 4, 4),
+    )
+    payload = ftyp + mdat + _box(b"moov", _mvhd(0, 600, 120) + skipped + chosen)
+    media = spark.createDataFrame(
+        [(1, "video", bytearray(payload), "video/mp4")],
+        "media_id long, kind string, payload binary, content_type string",
+    )
+    rows = sorted(sample_frame_pixels(media, every_n=1).collect(), key=lambda r: r["frame_idx"])
+    assert [tuple(r)[1:] for r in rows] == [
+        (k, 4, 4, hashlib.sha256(big[k]).hexdigest(), 10 * k + 1, 10 * k + 2, 10 * k + 3, None)
+        for k in range(3)
+    ]
 
 
 def test_bucket_cap_adds_no_exchange(spark):

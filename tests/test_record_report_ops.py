@@ -75,6 +75,33 @@ def test_extraction_summary_deterministic_string(spark):
     )
 
 
+def test_summarize_per_record(spark, tiny_dir):
+    """A1 per record (the reference's summarizePdfData): one metric string
+    per record from its fields; a null field reads "?" instead of nulling
+    the whole summary."""
+    from ocr_spark.operators.report import summarize
+
+    docs = spark.read.parquet(f"{tiny_dir}/attendance_docs.parquet")
+    recs = attendance_records(docs).cache()
+    got = {r["url"]: r["summary"] for r in summarize(recs).collect()}
+    want = {
+        r["url"]: (
+            f"classe={r['fields']['classe']} cours={r['fields']['cours']} "
+            f"présents={r['fields']['nombre_des_présents']} "
+            f"étudiants={len(r['fields']['présences'])}"
+        )
+        for r in recs.collect()
+    }
+    assert len(got) == 50 and got == want
+    nulled = recs.limit(1).withColumn(
+        "fields", F.lit(None).cast(recs.schema["fields"].dataType)
+    )
+    assert summarize(nulled).first()["summary"] == (
+        "classe=? cours=? présents=? étudiants=?"
+    )
+    recs.unpersist()
+
+
 def test_attendance_qa_never_recomputes(spark, tiny_dir):
     """A2: declared count is kept verbatim even when it disagrees."""
     docs = spark.read.parquet(f"{tiny_dir}/attendance_docs.parquet")
