@@ -1,11 +1,32 @@
 """The extraction job CLI: exit codes per failure class and the PDF
-front door through the resumable job."""
+front door through the resumable job; the wide-row upsert flow."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from ocr_spark.operators.attendance import attendance_records
+from ocr_spark.operators.unnest import explode_presences
 from ocr_spark.sources.icelite import IceliteTable
+
+
+def test_upsert_wide_rows_idempotent(spark, tiny_dir, tmp_path):
+    """The reference's save-to-sheet flow: explode each record into one wide
+    row per student (empty list -> one empty-student row) and merge by key;
+    re-saving the same keys replaces their rows, never duplicates them."""
+    docs = spark.read.parquet(f"{tiny_dir}/attendance_docs.parquet")
+    recs = attendance_records(docs).cache()
+    t = IceliteTable(str(tmp_path / "sheet"), key_col="url", n_buckets=4)
+    t.merge(explode_presences(recs))
+    n1 = t.row_count()
+    t.merge(explode_presences(recs))  # re-save same keys: replaced, not duplicated
+    assert t.row_count() == n1
+    # wide-row law: one row per student, or one empty row
+    want = recs.select(
+        F.sum(F.greatest(F.size("fields.présences"), F.lit(1))).alias("n")
+    ).first()["n"]
+    assert n1 == want
 
 
 def test_extract_job_exit_codes(spark, tiny_dir, tmp_path, monkeypatch, capsys):
