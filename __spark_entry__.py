@@ -25,8 +25,10 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+import tempfile
 import zipfile
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,7 +66,8 @@ def _prep(spark: SparkSession) -> SparkSession:
     spark._ocr_spark_pyfiles = True
     return spark
 
-from ocr_spark.fixtures.generator import ensure_fixtures
+from ocr_spark.fixtures.generator import FRAME_SAMPLE_EVERY_N, ensure_fixtures
+from ocr_spark.operators import multimodal as mm
 from ocr_spark.operators.attendance import attendance_records, with_json_output
 from ocr_spark.operators.dedup import (
     embedding_dup_pairs,
@@ -95,6 +98,136 @@ def _pq(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+# The column lists below are functions: a Column needs an active session.
+def _extract_cols() -> list:
+    """Extraction output as the oracles compare it (extract_html and the
+    streaming end state, one oracle over the pages golden)."""
+    return [
+        "url",
+        "text",
+        F.col("n_blocks").cast("bigint").alias("n_blocks"),
+        F.col("error").isNotNull().alias("has_error"),
+    ]
+
+
+def _page_text_cols() -> list:
+    """One page of reading-order text (extract_layout, its pyscan twin,
+    pdf_layout)."""
+    return ["doc_id", F.col("page").cast("bigint").alias("page"), "text"]
+
+
+def _ocr_field_cols() -> list:
+    """Engine-A structured fields (ocr_attendance and pdf_attendance, one
+    golden)."""
+    return [
+        "url",
+        F.col("fields.classe").alias("classe"),
+        F.col("fields.nombre_des_présents").alias("nombre_des_présents"),
+        F.col("fields.salle_n").alias("salle_n"),
+        F.size("fields.présences").cast("bigint").alias("n_students"),
+    ]
+
+
+# Golden-projection media queries: the operator runs over the fixture, the
+# named result struct (None: flat columns) is flattened to media_id, the
+# columns and ``error`` (NULL coalesced to ''), and the oracle projects the
+# same columns from the generator's parameter-derived golden, so a match
+# proves the kernel against an independent writer.  A column written
+# "name:type" is cast to that type on both sides.
+# name: (fixture, operator, struct, golden, columns, reason)
+_GOLDEN_MEDIA = {
+    "audio_meta": (
+        "audio", mm.decode_audio, "meta", "golden_audio",
+        "n_channels sample_rate bits_per_sample n_frames duration_s sha256",
+        "RIFF/WAVE header parse vs the parameters the stdlib wave writer used",
+    ),
+    "audio_features": (
+        "audio", mm.audio_features, "feat", "golden_audio",
+        "n_frames peak_abs sumsq",
+        "numpy PCM peak/energy vs pure-Python loops over the generator's samples",
+    ),
+    "image_resize": (
+        "image", mm.resize_images, None, "golden_image",
+        "width height resized_sha256",
+        "decode + 16x16 NN resize vs per-pixel loops over the generator's pixels",
+    ),
+    "video_meta": (
+        "video", mm.decode_videos, "meta", "golden_video",
+        "major_brand timescale duration_units duration_s sha256",
+        "ISO-BMFF box walk (ftyp, moov/mvhd) vs the generator's box parameters",
+    ),
+    "frame_sample": (
+        "video", partial(mm.sample_frames, every_n=FRAME_SAMPLE_EVERY_N), None,
+        "golden_frames",
+        "frame_idx pts_units pts_s byte_offset n_bytes frame_sha256",
+        "stts/stsc/stsz/stco walk vs the generator's chunk-layout arithmetic",
+    ),
+    "frame_pixels": (
+        "video", partial(mm.sample_frame_pixels, every_n=FRAME_SAMPLE_EVERY_N),
+        None, "golden_frame_pixels",
+        "frame_idx width:bigint height:bigint pixel_sha256 mean_r mean_g mean_b",
+        "raw-RGB frames at the stsd geometry vs the generator's pixel buffers",
+    ),
+    "image_meta": (
+        "image", mm.decode_images, "meta", "golden_image",
+        "width height n_channels sha256 pixel_sha256",
+        "PNG inflate + row unfilters vs the generator's forward-filter path",
+    ),
+}
+
+
+def _media_cols(columns: str) -> list[tuple[str, str]]:
+    """``"a b:bigint"`` -> ``[("a", ""), ("b", "bigint")]``."""
+    return [c.partition(":")[::2] for c in columns.split()]
+
+
+def _golden_media_query(fix: str, name: str) -> Callable[[SparkSession, str], DataFrame]:
+    fixture, op, struct, _golden, columns, why = _GOLDEN_MEDIA[name]
+    pre = f"{struct}." if struct else ""
+
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        cols = [
+            (F.col(pre + c).cast(t) if t else F.col(pre + c)).alias(c)
+            for c, t in _media_cols(columns)
+        ]
+        return op(spark.read.parquet(f"{fix}/{fixture}.parquet")).select(
+            "media_id", *cols, F.coalesce(F.col(pre + "error"), F.lit("")).alias("error")
+        )
+
+    q.__doc__ = why
+    return q
+
+
+def _golden_media_oracle(fix: str, name: str) -> str:
+    _fixture, _op, _struct, golden, columns, _why = _GOLDEN_MEDIA[name]
+    cols = ", ".join(
+        f"CAST({c} AS {t.upper()}) AS {c}" if t else c for c, t in _media_cols(columns)
+    )
+    return (
+        f"SELECT media_id, {cols}, coalesce(error, '') AS error "
+        f"FROM '{fix}/{golden}.parquet'"
+    )
+
+
+def _drained(spark: SparkSession, fix: str, prefix: str, drain) -> DataFrame:
+    """Shard the pages fixture into files under a fresh work dir, run
+    ``drain(spark, input_dir, work_dir)`` (an availableNow stream over
+    them) and return its result, collected — the streaming queries'
+    outputs are fixture-sized.  The work dir (a pages copy, the sink,
+    checkpoints) is removed even when the drain raises."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        inp = os.path.join(work, "in")
+        spark.read.parquet(f"{fix}/pages.parquet").repartition(12).write.mode(
+            "overwrite"
+        ).parquet(inp)
+        df = drain(spark, inp, work)
+        rows = df.collect()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return spark.createDataFrame(rows, df.schema)
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full extraction stage over the pages fixture."""
     _prep(spark)
@@ -112,12 +245,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # -- extraction family (fixture-based, golden-parquet oracles) --------
     def q_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages = spark.read.parquet(f"{fix}/pages.parquet")
-        return extract_pages(pages).select(
-            "url",
-            "text",
-            F.col("n_blocks").cast("bigint").alias("n_blocks"),
-            F.col("error").isNotNull().alias("has_error"),
-        )
+        return extract_pages(pages).select(*_extract_cols())
 
     def q_stream_extract_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Structured Streaming ingestion, oracle-checked at its END STATE:
@@ -126,30 +254,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         icelite MERGE (several microbatch epochs, checkpointed), and the
         final table must equal the batch golden — the incremental path
         isn't SQL-expressible but its fixpoint is plain SQL."""
-        import tempfile
-
         from ocr_spark.sources.icelite import IceliteTable
-        from ocr_spark.streaming.extract_stream import run_stream_once
+        from ocr_spark.streaming import extract_stream
 
-        work = tempfile.mkdtemp(prefix="stream_extract_state_")
-        inp = os.path.join(work, "in")
-        spark.read.parquet(f"{fix}/pages.parquet").repartition(12).write.mode(
-            "overwrite"
-        ).parquet(inp)
-        out = IceliteTable(os.path.join(work, "table"), key_col="url", n_buckets=8)
-        run_stream_once(spark, inp, out, os.path.join(work, "ckpt"))
-        df = out.read(spark).select(
-            "url",
-            "text",
-            F.col("n_blocks").cast("bigint").alias("n_blocks"),
-            F.col("error").isNotNull().alias("has_error"),
-        )
-        # materialize (small fixture-sized result), then remove the work
-        # dir — every gate run otherwise leaked a pages copy + table +
-        # checkpoint into /tmp
-        rows = df.collect()
-        shutil.rmtree(work, ignore_errors=True)
-        return spark.createDataFrame(rows, df.schema)
+        def drain(spark, inp, work):
+            out = IceliteTable(os.path.join(work, "table"), key_col="url", n_buckets=8)
+            extract_stream.run_stream_once(spark, inp, out, os.path.join(work, "ckpt"))
+            return out.read(spark).select(*_extract_cols())
+
+        return _drained(spark, fix, "stream_extract_state_", drain)
 
     def q_host_stats_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Stateful streaming (applyInPandasWithState) oracle-checked at
@@ -157,30 +270,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         availableNow micro-batches into an epoch-tagged update log; the
         last update per host must equal the plain batch groupBy over the
         golden parquet."""
-        import tempfile
+        from ocr_spark.streaming import host_stats
 
-        from ocr_spark.streaming.host_stats import (
-            final_host_stats,
-            run_host_stats_once,
-        )
+        def drain(spark, inp, work):
+            updates = os.path.join(work, "updates")
+            host_stats.run_host_stats_once(spark, inp, updates, os.path.join(work, "ckpt"))
+            return host_stats.final_host_stats(spark, updates).select(
+                "host",
+                F.col("n_docs").cast("bigint").alias("n_docs"),
+                F.col("n_errors").cast("bigint").alias("n_errors"),
+                F.col("total_chars").cast("bigint").alias("total_chars"),
+            )
 
-        work = tempfile.mkdtemp(prefix="host_stats_state_")
-        inp = os.path.join(work, "in")
-        spark.read.parquet(f"{fix}/pages.parquet").repartition(12).write.mode(
-            "overwrite"
-        ).parquet(inp)
-        run_host_stats_once(
-            spark, inp, os.path.join(work, "updates"), os.path.join(work, "ckpt")
-        )
-        df = final_host_stats(spark, os.path.join(work, "updates")).select(
-            "host",
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            F.col("n_errors").cast("bigint").alias("n_errors"),
-            F.col("total_chars").cast("bigint").alias("total_chars"),
-        )
-        rows = df.collect()
-        shutil.rmtree(work, ignore_errors=True)
-        return spark.createDataFrame(rows, df.schema)
+        return _drained(spark, fix, "host_stats_state_", drain)
 
     def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages = spark.read.parquet(f"{fix}/pages.parquet")
@@ -194,9 +296,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_extract_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         glyphs = spark.read.parquet(f"{fix}/glyphs.parquet")
-        return glyphs_to_page_text(glyphs).select(
-            "doc_id", F.col("page").cast("bigint").alias("page"), "text"
-        )
+        return glyphs_to_page_text(glyphs).select(*_page_text_cols())
 
     def q_extract_layout_pyscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         """The owned-table production path: row-group scan ranges planned
@@ -206,7 +306,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_spark.operators.layout_ops import glyphs_to_page_text_pyscan
 
         return glyphs_to_page_text_pyscan(spark, f"{fix}/glyphs.parquet").select(
-            "doc_id", F.col("page").cast("bigint").alias("page"), "text"
+            *_page_text_cols()
         )
 
     def q_layout_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,7 +354,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return (
             pdf_to_page_text(docs)
             .filter(F.col("error").isNull())
-            .select("doc_id", F.col("page").cast("bigint").alias("page"), "text")
+            .select(*_page_text_cols())
         )
 
     def q_pdf_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,13 +431,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         glyphs = spark.read.parquet(f"{fix}/attendance_glyphs.parquet")
         doc_map = spark.read.parquet(f"{fix}/attendance_glyph_docs.parquet")
         r = ocr_structured_records(glyphs, doc_map)
-        return r.select(
-            "url",
-            F.col("fields.classe").alias("classe"),
-            F.col("fields.nombre_des_présents").alias("nombre_des_présents"),
-            F.col("fields.salle_n").alias("salle_n"),
-            F.size("fields.présences").cast("bigint").alias("n_students"),
-        )
+        return r.select(*_ocr_field_cols())
 
     def q_pdf_attendance(spark: SparkSession, sf_dir: str) -> DataFrame:
         """The reference's ACTUAL workflow from its titular format, end to
@@ -352,13 +446,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pdfs = spark.read.parquet(f"{fix}/attendance_pdfs.parquet")
         glyphs = pdf_to_glyphs(pdfs).filter(F.col("error").isNull()).drop("error")
         r = ocr_structured_records(glyphs, pdfs.select("doc_id", "url"))
-        return r.select(
-            "url",
-            F.col("fields.classe").alias("classe"),
-            F.col("fields.nombre_des_présents").alias("nombre_des_présents"),
-            F.col("fields.salle_n").alias("salle_n"),
-            F.size("fields.présences").cast("bigint").alias("n_students"),
-        )
+        return r.select(*_ocr_field_cols())
 
     def q_extract_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ocr_spark.operators.report import extraction_report
@@ -464,8 +552,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         skew unit — the fixture draws hosts Zipf(1.2), so this is also the
         judge-visible evidence of the long-tail distribution the
         partitioning policy is built for).  Pure codegen on both engines."""
+        from ocr_spark.streaming.host_stats import HOST_RE
+
         pages_df = spark.read.parquet(f"{fix}/pages.parquet")
-        host = F.regexp_extract("url", r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#:]*)", 1)
+        host = F.regexp_extract("url", HOST_RE, 1)
         return (
             pages_df.groupBy(host.alias("host"))
             .agg(
@@ -543,142 +633,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             near_threshold=0.8,
         )
         return audit
-
-    def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Real in-container audio modality: stdlib RIFF/WAVE header parse
-        over binary payloads (E6 per-row errors); the oracle is the
-        generator's PARAMETER-derived golden — independent of the parser."""
-        from ocr_spark.operators.multimodal import decode_audio
-
-        media = spark.read.parquet(f"{fix}/audio.parquet")
-        m = decode_audio(media)
-        return m.select(
-            "media_id",
-            F.col("meta.n_channels").alias("n_channels"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.bits_per_sample").alias("bits_per_sample"),
-            F.col("meta.n_frames").alias("n_frames"),
-            F.col("meta.duration_s").alias("duration_s"),
-            F.col("meta.sha256").alias("sha256"),
-            F.coalesce(F.col("meta.error"), F.lit("")).alias("error"),
-        )
-
-    def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Real video-container modality: ISO-BMFF box walk (ftyp brand,
-        moov/mvhd timescale+duration) — golden derives from generator
-        parameters, independent of the parser."""
-        from ocr_spark.operators.multimodal import decode_videos
-
-        media = spark.read.parquet(f"{fix}/video.parquet")
-        m = decode_videos(media)
-        return m.select(
-            "media_id",
-            F.col("meta.major_brand").alias("major_brand"),
-            F.col("meta.timescale").alias("timescale"),
-            F.col("meta.duration_units").alias("duration_units"),
-            F.col("meta.duration_s").alias("duration_s"),
-            F.col("meta.sha256").alias("sha256"),
-            F.coalesce(F.col("meta.error"), F.lit("")).alias("error"),
-        )
-
-    def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """REAL video frame sampling: the kernel parses the MP4 sample
-        tables (stts/stsc/stsz/stco) and slices + hashes every 5th frame's
-        bytes out of mdat; the golden carries pts/offsets/shas the
-        generator derived from its layout ARITHMETIC while writing the
-        boxes — independent code paths, so a match proves a correct
-        sample-table walk end-to-end."""
-        from ocr_spark.fixtures.generator import FRAME_SAMPLE_EVERY_N
-        from ocr_spark.operators.multimodal import sample_frames
-
-        media = spark.read.parquet(f"{fix}/video.parquet")
-        m = sample_frames(media, every_n=FRAME_SAMPLE_EVERY_N)
-        return m.select(
-            "media_id",
-            "frame_idx",
-            "pts_units",
-            "pts_s",
-            "byte_offset",
-            "n_bytes",
-            "frame_sha256",
-            F.coalesce(F.col("error"), F.lit("")).alias("error"),
-        )
-
-    def q_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """REAL pixel decode for codec-free (fourcc 'raw ') video tracks:
-        sampled frames are interpreted as width*height RGB24 pixels (stsd
-        VisualSampleEntry geometry) — pixel sha + integer channel means vs
-        the generator's own pixel buffers.  Compressed-fourcc tracks land
-        on the declared UNSUPPORTED_CODEC sentinel."""
-        from ocr_spark.fixtures.generator import FRAME_SAMPLE_EVERY_N
-        from ocr_spark.operators.multimodal import sample_frame_pixels
-
-        media = spark.read.parquet(f"{fix}/video.parquet")
-        m = sample_frame_pixels(media, every_n=FRAME_SAMPLE_EVERY_N)
-        return m.select(
-            "media_id",
-            "frame_idx",
-            F.col("width").cast("bigint").alias("width"),
-            F.col("height").cast("bigint").alias("height"),
-            "pixel_sha256",
-            "mean_r",
-            "mean_g",
-            "mean_b",
-            F.coalesce(F.col("error"), F.lit("")).alias("error"),
-        )
-
-    def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Real image modality: stdlib PNG decode (IHDR geometry, IDAT
-        zlib inflate, the five row unfilters, sha256 of the reconstructed
-        raw pixels) — the generator writes PNGs through the independent
-        FORWARD-filter path and the golden carries parameter-derived
-        values, so a match proves a correct codec end-to-end."""
-        from ocr_spark.operators.multimodal import decode_images
-
-        media = spark.read.parquet(f"{fix}/image.parquet")
-        m = decode_images(media)
-        return m.select(
-            "media_id",
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.col("meta.n_channels").alias("n_channels"),
-            F.col("meta.sha256").alias("sha256"),
-            F.col("meta.pixel_sha256").alias("pixel_sha256"),
-            F.coalesce(F.col("meta.error"), F.lit("")).alias("error"),
-        )
-
-    def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """PCM feature extraction (peak amplitude + exact-integer energy
-        over centered samples): kernel re-derives from the BYTES with
-        numpy; the golden recomputes the frozen spec from the generator's
-        in-memory sample buffer via pure-Python struct loops."""
-        from ocr_spark.operators.multimodal import audio_features
-
-        media = spark.read.parquet(f"{fix}/audio.parquet")
-        m = audio_features(media)
-        return m.select(
-            "media_id",
-            F.col("feat.n_frames").alias("n_frames"),
-            F.col("feat.peak_abs").alias("peak_abs"),
-            F.col("feat.sumsq").alias("sumsq"),
-            F.coalesce(F.col("feat.error"), F.lit("")).alias("error"),
-        )
-
-    def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Real NN thumbnail: decode (inflate + unfilter) -> 16x16
-        nearest-neighbor resize -> sha256 of the resized bytes; the golden
-        resizes the generator's pre-filter pixel buffer through
-        independent per-pixel Python loops."""
-        from ocr_spark.operators.multimodal import resize_images
-
-        media = spark.read.parquet(f"{fix}/image.parquet")
-        return resize_images(media).select(
-            "media_id",
-            "width",
-            "height",
-            "resized_sha256",
-            F.coalesce(F.col("error"), F.lit("")).alias("error"),
-        )
 
     # -- corpus construction ops ------------------------------------------
     def q_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,13 +866,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_report": q_host_report,
         "corpus_filter_audit": q_corpus_filter_audit,
         "corpus_filter_near": q_corpus_filter_near,
-        "audio_meta": q_audio_meta,
-        "audio_features": q_audio_features,
-        "image_resize": q_image_resize,
-        "video_meta": q_video_meta,
-        "frame_sample": q_frame_sample,
-        "frame_pixels": q_frame_pixels,
-        "image_meta": q_image_meta,
+        **{name: _golden_media_query(fix, name) for name in _GOLDEN_MEDIA},
         "sample_deterministic": q_sample_deterministic,
         "decontaminate": q_decontaminate,
         "pack_sequences": q_pack_sequences,
@@ -1101,22 +1049,30 @@ def oracle_sql() -> dict[str, str]:
     ga = f"{fix}/golden_attendance.parquet"
     gar = f"{fix}/golden_attendance_rows.parquet"
     pages = f"{fix}/pages.parquet"
+    # extraction vs GOLDEN fixtures: a value-hash match here IS the
+    # byte-identical-text check, run through the driver's own comparator;
+    # the streaming END STATE (availableNow drain + idempotent merge) must
+    # land exactly the same batch golden, one row per url
+    extract_sql = f"""
+        SELECT url, text, CAST(n_blocks AS BIGINT) AS n_blocks,
+               expect_error AS has_error
+        FROM '{gp}'
+    """
+    # extract_layout_pyscan: same golden, different IO path (task-side
+    # pyarrow row-group reads)
+    layout_sql = f"SELECT doc_id, CAST(page AS BIGINT) AS page, text FROM '{gg}'"
+    # ocr_attendance runs from glyph boxes, pdf_attendance from PDF BYTES
+    # (parse -> glyphs -> reading order -> fields): both must land the same
+    # structured golden
+    ocr_fields_sql = f"""
+        SELECT url, classe, "nombre_des_présents", salle_n,
+               CAST(len("présences") AS BIGINT) AS n_students
+        FROM '{ga}'
+    """
 
     out = {
-        # extraction vs GOLDEN fixtures: a value-hash match here IS the
-        # byte-identical-text check, run through the driver's own comparator
-        "extract_html": f"""
-            SELECT url, text, CAST(n_blocks AS BIGINT) AS n_blocks,
-                   expect_error AS has_error
-            FROM '{gp}'
-        """,
-        # streaming ingestion's END STATE: availableNow drain + idempotent
-        # merge must land exactly the batch golden, one row per url
-        "stream_extract_state": f"""
-            SELECT url, text, CAST(n_blocks AS BIGINT) AS n_blocks,
-                   expect_error AS has_error
-            FROM '{gp}'
-        """,
+        "extract_html": extract_sql,
+        "stream_extract_state": extract_sql,
         # stateful streaming fixpoint: the last per-host update after the
         # availableNow drain equals the batch groupBy over the golden
         "host_stats_state": f"""
@@ -1134,13 +1090,8 @@ def oracle_sql() -> dict[str, str]:
                    u."end" AS span_end
             FROM (SELECT url, unnest(spans) AS u FROM '{gp}')
         """,
-        "extract_layout": f"""
-            SELECT doc_id, CAST(page AS BIGINT) AS page, text FROM '{gg}'
-        """,
-        # same golden, different IO path (task-side pyarrow row-group reads)
-        "extract_layout_pyscan": f"""
-            SELECT doc_id, CAST(page AS BIGINT) AS page, text FROM '{gg}'
-        """,
+        "extract_layout": layout_sql,
+        "extract_layout_pyscan": layout_sql,
         # layout page spans: independent reconstruction via a window sum of
         # prior page lengths (+1 per \n joiner) over the GOLDEN page texts
         "layout_doc_spans": f"""
@@ -1221,18 +1172,8 @@ def oracle_sql() -> dict[str, str]:
             FROM '{gp}'
             WHERE coalesce(wet_text, '') != ''
         """,
-        "ocr_attendance": f"""
-            SELECT url, classe, "nombre_des_présents", salle_n,
-                   CAST(len("présences") AS BIGINT) AS n_students
-            FROM '{ga}'
-        """,
-        # the full reference workflow from PDF BYTES (parse -> glyphs ->
-        # reading order -> fields) must land the same structured golden
-        "pdf_attendance": f"""
-            SELECT url, classe, "nombre_des_présents", salle_n,
-                   CAST(len("présences") AS BIGINT) AS n_students
-            FROM '{ga}'
-        """,
+        "ocr_attendance": ocr_fields_sql,
+        "pdf_attendance": ocr_fields_sql,
         "extract_report": f"""
             SELECT p.lang,
                    COUNT(*) AS n_docs,
@@ -1369,58 +1310,7 @@ def oracle_sql() -> dict[str, str]:
             FROM '{pages}'
             GROUP BY 1
         """,
-        # audio: the golden carries the generator's PARAMETERS (channels,
-        # rate, frames -> duration), written by the stdlib `wave` module —
-        # an independent code path from the kernel's manual RIFF parse
-        "audio_meta": f"""
-            SELECT media_id, n_channels, sample_rate, bits_per_sample,
-                   n_frames, duration_s, sha256, coalesce(error, '') AS error
-            FROM '{fix}/golden_audio.parquet'
-        """,
-        "video_meta": f"""
-            SELECT media_id, major_brand, timescale, duration_units,
-                   duration_s, sha256, coalesce(error, '') AS error
-            FROM '{fix}/golden_video.parquet'
-        """,
-        # frames: the golden's pts/byte-ranges/shas come from the
-        # generator's chunk-layout arithmetic, never from parsing — the
-        # kernel must really walk stts/stsc/stsz/stco to match
-        "frame_sample": f"""
-            SELECT media_id, frame_idx, pts_units, pts_s, byte_offset,
-                   n_bytes, frame_sha256, coalesce(error, '') AS error
-            FROM '{fix}/golden_frames.parquet'
-        """,
-        # frame PIXELS: the golden's sha + channel means come from the
-        # generator's own RGB buffers — matching them requires the kernel
-        # to read the stsd geometry and decode the frame bytes as pixels
-        "frame_pixels": f"""
-            SELECT media_id, frame_idx, CAST(width AS BIGINT) AS width,
-                   CAST(height AS BIGINT) AS height, pixel_sha256,
-                   mean_r, mean_g, mean_b, coalesce(error, '') AS error
-            FROM '{fix}/golden_frame_pixels.parquet'
-        """,
-        # image: the golden carries parameter-derived geometry plus a
-        # sha256 of the RAW PIXELS the generator forward-filtered into the
-        # PNG — matching it requires the kernel to really inflate and
-        # invert the row filters, not just read the header
-        "image_meta": f"""
-            SELECT media_id, width, height, n_channels, sha256,
-                   pixel_sha256, coalesce(error, '') AS error
-            FROM '{fix}/golden_image.parquet'
-        """,
-        # feature-extract stages: goldens recompute the frozen specs from
-        # the generator's in-memory buffers via pure-Python loops (kernel:
-        # numpy over the parsed bytes — independent code paths)
-        "audio_features": f"""
-            SELECT media_id, n_frames, peak_abs, sumsq,
-                   coalesce(error, '') AS error
-            FROM '{fix}/golden_audio.parquet'
-        """,
-        "image_resize": f"""
-            SELECT media_id, width, height, resized_sha256,
-                   coalesce(error, '') AS error
-            FROM '{fix}/golden_image.parquet'
-        """,
+        **{name: _golden_media_oracle(fix, name) for name in _GOLDEN_MEDIA},
         "corpus_filter_audit": f"""
             WITH m AS ({_CF_RULES_SQL}),
             surv AS (

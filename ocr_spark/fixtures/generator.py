@@ -1253,54 +1253,60 @@ def _write_page_aligned(path: str, table: pa.Table, target_bytes: int = 1 << 20)
                 start = b
 
 
+_I32, _I64, _F64 = pa.int32(), pa.int64(), pa.float64()
+# (name, type) column lists shared by several tables; a None type is
+# inferred from the values
+_GLYPH_COLS = (
+    ("doc_id", _I64), ("page", _I32), ("glyph_id", _I64), ("ch", None),
+    ("x0", _F64), ("y0", _F64), ("x1", _F64), ("y1", _F64),
+)
+_PAGE_TEXT_COLS = (("doc_id", _I64), ("page", _I32), ("text", None))
+
+
+def _typed_table(cols: tuple, rows: list, by_name: bool = False) -> pa.Table:
+    """Rows -> a table of the declared (name, type) columns.  Rows are
+    tuples in column order, or dicts keyed by column name (``by_name``)."""
+    return pa.table(
+        {
+            name: pa.array([r[name if by_name else i] for r in rows], t)
+            for i, (name, t) in enumerate(cols)
+        }
+    )
+
+
+def _media_table(kind: str, content_type: str, goldens: list[dict], payloads: list) -> pa.Table:
+    """One modality's binary media column: media_id/kind/payload/content_type."""
+    n = len(goldens)
+    return pa.table(
+        {
+            "media_id": pa.array([g["media_id"] for g in goldens], _I64),
+            "kind": [kind] * n,
+            "payload": pa.array(payloads, pa.binary()),
+            "content_type": [content_type] * n,
+        }
+    )
+
+
 def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
     cfg = TIERS[tier]
     os.makedirs(out_dir, exist_ok=True)
     manifest = {"tier": tier, "seed": seed, "format_version": FORMAT_VERSION, **cfg}
     man_path = os.path.join(out_dir, "_MANIFEST.json")
-    expected = ["pages.parquet", "golden_pages.parquet"]
-    if cfg["glyph_docs"]:
-        expected += ["glyphs.parquet", "golden_glyphs.parquet"]
-    if cfg["attendance"]:
-        expected += [
-            "attendance_docs.parquet",
-            "golden_attendance.parquet",
-            "golden_attendance_spans.parquet",
-            "golden_attendance_rows.parquet",
-            "attendance_glyphs.parquet",
-            "attendance_glyph_docs.parquet",
-            "attendance_pdfs.parquet",
-        ]
-    if cfg["warc_files"]:
-        expected += ["warc", "wet"]
-    if cfg.get("audio"):
-        expected += ["audio.parquet", "golden_audio.parquet"]
-    if cfg.get("video"):
-        expected += [
-            "video.parquet",
-            "golden_video.parquet",
-            "golden_frames.parquet",
-            "golden_frame_pixels.parquet",
-        ]
-    if cfg.get("image"):
-        expected += ["image.parquet", "golden_image.parquet"]
-    if cfg.get("corpus"):
-        expected += ["corpus.parquet"]
-    if cfg.get("pdf_docs"):
-        expected += [
-            "pdf_docs.parquet",
-            "golden_pdf_glyphs.parquet",
-            "golden_pdf_text.parquet",
-            "golden_pdf_errors.parquet",
-        ]
     if os.path.exists(man_path):
         with open(man_path) as f:
-            # a matching manifest only counts if the tables it promises are
-            # actually on disk (a partially-deleted tier must self-repair)
-            if json.load(f) == manifest and all(
-                os.path.exists(os.path.join(out_dir, e)) for e in expected
-            ):
-                return manifest  # already generated, identical config
+            done = json.load(f)
+        # a matching manifest only counts if the files it lists are
+        # actually on disk (a partially-deleted tier must self-repair)
+        listed = done.pop("files", [])
+        if done == manifest and listed and all(
+            os.path.exists(os.path.join(out_dir, e)) for e in listed
+        ):
+            return manifest  # already generated, identical config
+    files: list[str] = []  # every file or directory written, for the manifest
+
+    def out(name: str) -> str:
+        files.append(name)
+        return os.path.join(out_dir, name)
 
     # ---- pages ----------------------------------------------------------
     rng = random.Random(f"{seed}-pages-{tier}")
@@ -1315,7 +1321,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             "lang": [d["lang"] for d in docs],
         }
     )
-    _write(os.path.join(out_dir, "pages.parquet"), pages)
+    _write(out("pages.parquet"), pages)
     golden = pa.table(
         {
             "url": [d["url"] for d in docs],
@@ -1335,7 +1341,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             "wet_text": [d["_wet_text"] for d in docs],
         }
     )
-    _write(os.path.join(out_dir, "golden_pages.parquet"), golden)
+    _write(out("golden_pages.parquet"), golden)
 
     # ---- glyphs ---------------------------------------------------------
     if cfg["glyph_docs"]:
@@ -1346,27 +1352,8 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             gr, go = gen_glyph_doc(rng, d)
             grows.extend(gr)
             gold.extend(go)
-        glyphs = pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in grows], pa.int64()),
-                "page": pa.array([r[1] for r in grows], pa.int32()),
-                "glyph_id": pa.array([r[2] for r in grows], pa.int64()),
-                "ch": [r[3] for r in grows],
-                "x0": pa.array([r[4] for r in grows], pa.float64()),
-                "y0": pa.array([r[5] for r in grows], pa.float64()),
-                "x1": pa.array([r[6] for r in grows], pa.float64()),
-                "y1": pa.array([r[7] for r in grows], pa.float64()),
-            }
-        )
-        _write_page_aligned(os.path.join(out_dir, "glyphs.parquet"), glyphs)
-        ggold = pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in gold], pa.int64()),
-                "page": pa.array([r[1] for r in gold], pa.int32()),
-                "text": [r[2] for r in gold],
-            }
-        )
-        _write(os.path.join(out_dir, "golden_glyphs.parquet"), ggold)
+        _write_page_aligned(out("glyphs.parquet"), _typed_table(_GLYPH_COLS, grows))
+        _write(out("golden_glyphs.parquet"), _typed_table(_PAGE_TEXT_COLS, gold))
 
     # ---- PDF documents (engine A byte layer) -----------------------------
     if cfg.get("pdf_docs"):
@@ -1384,7 +1371,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             for page, text in trows_:
                 pt_rows.append((d, page, text))
         _write(
-            os.path.join(out_dir, "pdf_docs.parquet"),
+            out("pdf_docs.parquet"),
             pa.table(
                 {
                     "doc_id": pa.array(range(cfg["pdf_docs"]), pa.int64()),
@@ -1392,33 +1379,10 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
                 }
             ),
         )
+        _write(out("golden_pdf_glyphs.parquet"), _typed_table(_GLYPH_COLS, pg_rows))
+        _write(out("golden_pdf_text.parquet"), _typed_table(_PAGE_TEXT_COLS, pt_rows))
         _write(
-            os.path.join(out_dir, "golden_pdf_glyphs.parquet"),
-            pa.table(
-                {
-                    "doc_id": pa.array([r[0] for r in pg_rows], pa.int64()),
-                    "page": pa.array([r[1] for r in pg_rows], pa.int32()),
-                    "glyph_id": pa.array([r[2] for r in pg_rows], pa.int64()),
-                    "ch": [r[3] for r in pg_rows],
-                    "x0": pa.array([r[4] for r in pg_rows], pa.float64()),
-                    "y0": pa.array([r[5] for r in pg_rows], pa.float64()),
-                    "x1": pa.array([r[6] for r in pg_rows], pa.float64()),
-                    "y1": pa.array([r[7] for r in pg_rows], pa.float64()),
-                }
-            ),
-        )
-        _write(
-            os.path.join(out_dir, "golden_pdf_text.parquet"),
-            pa.table(
-                {
-                    "doc_id": pa.array([r[0] for r in pt_rows], pa.int64()),
-                    "page": pa.array([r[1] for r in pt_rows], pa.int32()),
-                    "text": [r[2] for r in pt_rows],
-                }
-            ),
-        )
-        _write(
-            os.path.join(out_dir, "golden_pdf_errors.parquet"),
+            out("golden_pdf_errors.parquet"),
             pa.table(
                 {
                     "doc_id": pa.array([r[0] for r in pe_rows], pa.int64()),
@@ -1437,7 +1401,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
                 "doc_text": [p[0]["doc_text"] for p in pairs],
             }
         )
-        _write(os.path.join(out_dir, "attendance_docs.parquet"), adocs)
+        _write(out("attendance_docs.parquet"), adocs)
         g = [p[1] for p in pairs]
         gold_att = pa.table(
             {
@@ -1454,10 +1418,10 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
                 "présences": pa.array([x["présences"] for x in g], _PRES_PA),
             }
         )
-        _write(os.path.join(out_dir, "golden_attendance.parquet"), gold_att)
+        _write(out("golden_attendance.parquet"), gold_att)
         srows = [(x["url"], f, b, e) for x in g for f, b, e in x["_spans"]]
         _write(
-            os.path.join(out_dir, "golden_attendance_spans.parquet"),
+            out("golden_attendance_spans.parquet"),
             pa.table(
                 {
                     "url": [r[0] for r in srows],
@@ -1483,7 +1447,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
                 "nom_prénom": [r[2] for r in rows],
             }
         )
-        _write(os.path.join(out_dir, "golden_attendance_rows.parquet"), gold_rows)
+        _write(out("golden_attendance_rows.parquet"), gold_rows)
 
     # ---- attendance docs rendered as glyph pages (engine-A chain:
     #      layout OCR -> reading order -> field structuring) ---------------
@@ -1511,21 +1475,9 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
                     c, x0, y0, x1, y1 = glyphs[oi]
                     ag_rows.append((did, page_no, gid, c, x0, y0, x1, y1))
                     gid += 1
-        ag = pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in ag_rows], pa.int64()),
-                "page": pa.array([r[1] for r in ag_rows], pa.int32()),
-                "glyph_id": pa.array([r[2] for r in ag_rows], pa.int64()),
-                "ch": [r[3] for r in ag_rows],
-                "x0": pa.array([r[4] for r in ag_rows], pa.float64()),
-                "y0": pa.array([r[5] for r in ag_rows], pa.float64()),
-                "x1": pa.array([r[6] for r in ag_rows], pa.float64()),
-                "y1": pa.array([r[7] for r in ag_rows], pa.float64()),
-            }
-        )
-        _write_page_aligned(os.path.join(out_dir, "attendance_glyphs.parquet"), ag)
+        _write_page_aligned(out("attendance_glyphs.parquet"), _typed_table(_GLYPH_COLS, ag_rows))
         _write(
-            os.path.join(out_dir, "attendance_glyph_docs.parquet"),
+            out("attendance_glyph_docs.parquet"),
             pa.table(
                 {
                     "doc_id": pa.array([m[0] for m in ag_map], pa.int64()),
@@ -1557,7 +1509,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             )
             ap_rows.append((did, doc["url"], pdf))
         _write(
-            os.path.join(out_dir, "attendance_pdfs.parquet"),
+            out("attendance_pdfs.parquet"),
             pa.table(
                 {
                     "doc_id": pa.array([r[0] for r in ap_rows], pa.int64()),
@@ -1569,7 +1521,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
 
     # ---- WARC container files (same docs, Common-Crawl container form) --
     if cfg.get("warc_files"):
-        warc_dir = os.path.join(out_dir, "warc")
+        warc_dir = out("warc")
         os.makedirs(warc_dir, exist_ok=True)
         rng = random.Random(f"{seed}-warc-{tier}")
         shards: list[list[dict]] = [[] for _ in range(cfg["warc_files"])]
@@ -1610,7 +1562,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
         # preserve the text byte-for-byte (wet_roundtrip oracle)
         import gzip as _gzip
 
-        wet_dir = os.path.join(out_dir, "wet")
+        wet_dir = out("wet")
         os.makedirs(wet_dir, exist_ok=True)
         for si, shard in enumerate(shards):
             buf = bytearray()
@@ -1639,36 +1591,13 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             p, g = gen_audio_doc(rng, mid)
             payloads.append(p)
             goldens.append(g)
-        _write(
-            os.path.join(out_dir, "audio.parquet"),
-            pa.table(
-                {
-                    "media_id": pa.array([g["media_id"] for g in goldens], pa.int64()),
-                    "kind": ["audio"] * len(goldens),
-                    "payload": pa.array(payloads, pa.binary()),
-                    "content_type": ["audio/wav"] * len(goldens),
-                }
-            ),
+        _write(out("audio.parquet"), _media_table("audio", "audio/wav", goldens, payloads))
+        cols = (
+            ("media_id", _I64), ("n_channels", _I32), ("sample_rate", _I32),
+            ("bits_per_sample", _I32), ("n_frames", _I64), ("duration_s", _F64),
+            ("sha256", None), ("error", None), ("peak_abs", _I64), ("sumsq", _I64),
         )
-        _write(
-            os.path.join(out_dir, "golden_audio.parquet"),
-            pa.table(
-                {
-                    "media_id": pa.array([g["media_id"] for g in goldens], pa.int64()),
-                    "n_channels": pa.array([g["n_channels"] for g in goldens], pa.int32()),
-                    "sample_rate": pa.array([g["sample_rate"] for g in goldens], pa.int32()),
-                    "bits_per_sample": pa.array(
-                        [g["bits_per_sample"] for g in goldens], pa.int32()
-                    ),
-                    "n_frames": pa.array([g["n_frames"] for g in goldens], pa.int64()),
-                    "duration_s": pa.array([g["duration_s"] for g in goldens], pa.float64()),
-                    "sha256": [g["sha256"] for g in goldens],
-                    "error": [g["error"] for g in goldens],
-                    "peak_abs": pa.array([g["peak_abs"] for g in goldens], pa.int64()),
-                    "sumsq": pa.array([g["sumsq"] for g in goldens], pa.int64()),
-                }
-            ),
-        )
+        _write(out("golden_audio.parquet"), _typed_table(cols, goldens, by_name=True))
 
     # ---- video (ISO-BMFF binary column + parameter-derived golden) ------
     if cfg.get("video"):
@@ -1680,65 +1609,26 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             goldens.append(g)
             frame_rows.extend(fr)
             pixel_rows.extend(px)
-        _write(
-            os.path.join(out_dir, "video.parquet"),
-            pa.table(
-                {
-                    "media_id": pa.array([g["media_id"] for g in goldens], pa.int64()),
-                    "kind": ["video"] * len(goldens),
-                    "payload": pa.array(payloads, pa.binary()),
-                    "content_type": ["video/mp4"] * len(goldens),
-                }
-            ),
+        _write(out("video.parquet"), _media_table("video", "video/mp4", goldens, payloads))
+        cols = (
+            ("media_id", _I64), ("major_brand", None), ("timescale", _I64),
+            ("duration_units", _I64), ("duration_s", _F64), ("sha256", None),
+            ("error", None),
+        )
+        _write(out("golden_video.parquet"), _typed_table(cols, goldens, by_name=True))
+        cols = (
+            ("media_id", _I64), ("frame_idx", _I64), ("pts_units", _I64),
+            ("pts_s", _F64), ("byte_offset", _I64), ("n_bytes", _I64),
+            ("frame_sha256", None), ("error", None),
+        )
+        _write(out("golden_frames.parquet"), _typed_table(cols, frame_rows, by_name=True))
+        cols = (
+            ("media_id", _I64), ("frame_idx", _I64), ("width", _I32), ("height", _I32),
+            ("pixel_sha256", None), ("mean_r", _I64), ("mean_g", _I64),
+            ("mean_b", _I64), ("error", None),
         )
         _write(
-            os.path.join(out_dir, "golden_video.parquet"),
-            pa.table(
-                {
-                    "media_id": pa.array([g["media_id"] for g in goldens], pa.int64()),
-                    "major_brand": [g["major_brand"] for g in goldens],
-                    "timescale": pa.array([g["timescale"] for g in goldens], pa.int64()),
-                    "duration_units": pa.array(
-                        [g["duration_units"] for g in goldens], pa.int64()
-                    ),
-                    "duration_s": pa.array([g["duration_s"] for g in goldens], pa.float64()),
-                    "sha256": [g["sha256"] for g in goldens],
-                    "error": [g["error"] for g in goldens],
-                }
-            ),
-        )
-        _write(
-            os.path.join(out_dir, "golden_frames.parquet"),
-            pa.table(
-                {
-                    "media_id": pa.array([r["media_id"] for r in frame_rows], pa.int64()),
-                    "frame_idx": pa.array([r["frame_idx"] for r in frame_rows], pa.int64()),
-                    "pts_units": pa.array([r["pts_units"] for r in frame_rows], pa.int64()),
-                    "pts_s": pa.array([r["pts_s"] for r in frame_rows], pa.float64()),
-                    "byte_offset": pa.array(
-                        [r["byte_offset"] for r in frame_rows], pa.int64()
-                    ),
-                    "n_bytes": pa.array([r["n_bytes"] for r in frame_rows], pa.int64()),
-                    "frame_sha256": [r["frame_sha256"] for r in frame_rows],
-                    "error": [r["error"] for r in frame_rows],
-                }
-            ),
-        )
-        _write(
-            os.path.join(out_dir, "golden_frame_pixels.parquet"),
-            pa.table(
-                {
-                    "media_id": pa.array([r["media_id"] for r in pixel_rows], pa.int64()),
-                    "frame_idx": pa.array([r["frame_idx"] for r in pixel_rows], pa.int64()),
-                    "width": pa.array([r["width"] for r in pixel_rows], pa.int32()),
-                    "height": pa.array([r["height"] for r in pixel_rows], pa.int32()),
-                    "pixel_sha256": [r["pixel_sha256"] for r in pixel_rows],
-                    "mean_r": pa.array([r["mean_r"] for r in pixel_rows], pa.int64()),
-                    "mean_g": pa.array([r["mean_g"] for r in pixel_rows], pa.int64()),
-                    "mean_b": pa.array([r["mean_b"] for r in pixel_rows], pa.int64()),
-                    "error": [r["error"] for r in pixel_rows],
-                }
-            ),
+            out("golden_frame_pixels.parquet"), _typed_table(cols, pixel_rows, by_name=True)
         )
 
     # ---- image (PNG binary column + parameter-derived golden) -----------
@@ -1749,32 +1639,13 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             p, g = gen_image_doc(rng, mid)
             payloads.append(p)
             goldens.append(g)
-        _write(
-            os.path.join(out_dir, "image.parquet"),
-            pa.table(
-                {
-                    "media_id": pa.array([g["media_id"] for g in goldens], pa.int64()),
-                    "kind": ["image"] * len(goldens),
-                    "payload": pa.array(payloads, pa.binary()),
-                    "content_type": ["image/png"] * len(goldens),
-                }
-            ),
+        _write(out("image.parquet"), _media_table("image", "image/png", goldens, payloads))
+        cols = (
+            ("media_id", _I64), ("width", _I32), ("height", _I32), ("n_channels", _I32),
+            ("sha256", None), ("pixel_sha256", None), ("error", None),
+            ("resized_sha256", None),
         )
-        _write(
-            os.path.join(out_dir, "golden_image.parquet"),
-            pa.table(
-                {
-                    "media_id": pa.array([g["media_id"] for g in goldens], pa.int64()),
-                    "width": pa.array([g["width"] for g in goldens], pa.int32()),
-                    "height": pa.array([g["height"] for g in goldens], pa.int32()),
-                    "n_channels": pa.array([g["n_channels"] for g in goldens], pa.int32()),
-                    "sha256": [g["sha256"] for g in goldens],
-                    "pixel_sha256": [g["pixel_sha256"] for g in goldens],
-                    "error": [g["error"] for g in goldens],
-                    "resized_sha256": [g["resized_sha256"] for g in goldens],
-                }
-            ),
-        )
+        _write(out("golden_image.parquet"), _typed_table(cols, goldens, by_name=True))
 
     # ---- corpus (extracted web text for the cleaning ops) ---------------
     if cfg.get("corpus"):
@@ -1782,7 +1653,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
         chosts = _host_pool(random.Random(f"{seed}-corpus-hosts"), 40)
         cdocs = [gen_corpus_doc(rng, i, chosts) for i in range(cfg["corpus"])]
         _write(
-            os.path.join(out_dir, "corpus.parquet"),
+            out("corpus.parquet"),
             pa.table(
                 {
                     "doc_id": pa.array([d["doc_id"] for d in cdocs], pa.int64()),
@@ -1795,7 +1666,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
         )
 
     with open(man_path, "w") as f:
-        json.dump(manifest, f)
+        json.dump({**manifest, "files": files}, f)
     return manifest
 
 

@@ -42,9 +42,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 from html import unescape as _unescape
-from html.parser import HTMLParser
 
-from ocr_spark.normalize import collapse_ws, join_blocks
+from ocr_spark.normalize import join_blocks
 
 # Elements whose open OR close flushes the current atomic text block.
 BLOCK_TAGS = frozenset(
@@ -81,101 +80,9 @@ class Block:
         return self.anchor_chars / self.raw_chars if self.raw_chars else 0.0
 
 
-class _BlockTokenizer(HTMLParser):
-    """SAX-style flattener: HTML -> list[Block].  convert_charrefs=True makes
-    the stdlib parser decode entities before handle_data (normalize rule N1).
-    """
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[Block] = []
-        self._buf: list[str] = []
-        self._anchor_chars = 0
-        self._anchor_depth = 0
-        self._ignore_depth = 0
-        self._depth = 0
-
-    # -- flush ------------------------------------------------------------
-    def _flush(self) -> None:
-        raw = "".join(self._buf)
-        self._buf.clear()
-        anchor = self._anchor_chars
-        self._anchor_chars = 0
-        text = collapse_ws(raw)
-        if not text:
-            return
-        self.blocks.append(
-            Block(
-                text=text,
-                n_words=len(text.split(" ")),
-                anchor_chars=anchor,
-                raw_chars=len(raw.strip()) or len(raw),
-                depth=self._depth,
-            )
-        )
-
-    # -- parser callbacks -------------------------------------------------
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in IGNORE_TAGS:
-            self._ignore_depth += 1
-            return
-        if self._ignore_depth:
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-        if tag == "a":
-            self._anchor_depth += 1
-        self._depth += 1
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        if self._ignore_depth:
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in IGNORE_TAGS:
-            self._ignore_depth = max(0, self._ignore_depth - 1)
-            return
-        if self._ignore_depth:
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-        if tag == "a":
-            self._anchor_depth = max(0, self._anchor_depth - 1)
-        self._depth = max(0, self._depth - 1)
-
-    def handle_data(self, data: str) -> None:
-        if self._ignore_depth or not data:
-            return
-        self._buf.append(data)
-        if self._anchor_depth:
-            self._anchor_chars += len(data.strip()) or len(data)
-
-    def close(self) -> None:
-        super().close()
-        self._flush()
-
-
-def tokenize_blocks_stdlib(html: str) -> list[Block]:
-    """Reference tokenizer via html.parser.HTMLParser — must emit identical
-    blocks to the fast path on WELL-FORMED markup (the fixture distribution;
-    differential-tested in tests/test_kernels.py).  On malformed tag soup the
-    two deliberately diverge: html.parser re-emits unterminated comments /
-    CDATA / junk-named tags as *data* with CPython-version-specific event
-    chunking, while the frozen grammar (see _TOKEN_SPLIT_RE) drops
-    declaration-like junk to the next '>' — HTML5's bogus-comment rule, and
-    the better behavior for boilerplate removal.  The full-soup differential
-    reference is :func:`tokenize_blocks_reference`."""
-    p = _BlockTokenizer()
-    p.feed(html)
-    p.close()
-    return p.blocks
-
-
 # ---------------------------------------------------------------------------
-# fast tokenizer (regex scan) — same Block output, ~4x faster than the
-# stdlib parser; this is the production path inside the pandas UDF.
+# fast tokenizer (regex scan) — the production path, called per document
+# from the extraction batch step inside the writer's mapInArrow.
 # ---------------------------------------------------------------------------
 # One bulk re.split over the document: comments/doctype/CDATA are skipped
 # (their branches capture nothing, so their slots surface as None); a tag
@@ -209,9 +116,9 @@ def tokenize_blocks(html: str) -> list[Block]:
     """Fast scanner with all-local state (no attribute traffic in the hot
     loop) — must emit exactly the blocks of ``tokenize_blocks_reference``
     on ALL input (the frozen-grammar reference; differential-tested in
-    tests/test_kernels.py) and of ``tokenize_blocks_stdlib`` on
-    WELL-FORMED markup (on soup the stdlib parser's bogus-markup recovery
-    deliberately differs — see its docstring).
+    tests/test_kernels.py).  On malformed tag soup the grammar drops
+    declaration-like junk to the next '>' (HTML5's bogus-comment rule)
+    rather than re-emitting it as text.
 
     ``parts`` alternates [text, slash, name, selfc, text, ...]: each
     match contributes its 3 captured groups, each gap its text chunk

@@ -40,8 +40,6 @@ from __future__ import annotations
 
 import numpy as np
 
-PAGE_W = 612.0
-PAGE_H = 792.0
 HEADER_Y = 72.0
 FOOTER_Y = 720.0
 X_GAP_MIN = 18.0

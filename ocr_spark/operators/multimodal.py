@@ -27,16 +27,6 @@ from pyspark.sql import types as T
 
 from ocr_spark.operators.payloads import map_payloads
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("content_type", T.StringType(), True),
-    ]
-)
-
-
 def _keyed(field: str, dtype: T.DataType) -> T.StructType:
     """Output schema of a one-struct-per-payload operator."""
     return T.StructType(

@@ -34,36 +34,19 @@ from pyspark.sql import types as T
 from ocr_spark.functions.layout import page_texts_codes
 from ocr_spark.functions.pdf import pdf_glyph_columns
 from ocr_spark.operators.payloads import map_payloads
+from ocr_spark.schemas import GLYPHS_SCHEMA, PAGE_TEXT_SCHEMA
 
-PDF_GLYPHS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("page", T.IntegerType(), False),
-        T.StructField("glyph_id", T.LongType(), False),
-        T.StructField("ch", T.StringType(), False),
-        T.StructField("x0", T.DoubleType(), False),
-        T.StructField("y0", T.DoubleType(), False),
-        T.StructField("x1", T.DoubleType(), False),
-        T.StructField("y1", T.DoubleType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-PDF_PAGE_TEXT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("page", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
+# the layout branch's row schemas, each plus the per-document error slot
+_ERROR = T.StructField("error", T.StringType(), True)
+PDF_GLYPHS_SCHEMA = T.StructType(GLYPHS_SCHEMA.fields + [_ERROR])
+PDF_PAGE_TEXT_SCHEMA = T.StructType(PAGE_TEXT_SCHEMA.fields + [_ERROR])
 
 PDF_DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("text", T.StringType(), False),
         T.StructField("n_pages", T.IntegerType(), False),
-        T.StructField("error", T.StringType(), True),
+        _ERROR,
     ]
 )
 

@@ -33,16 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ocr_spark.operators.payloads import map_payloads
+from ocr_spark.schemas import PAGES_SCHEMA
 
+# the pages schema plus the WARC file each page came from
 WARC_PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("warc_file", T.StringType(), False),
-    ]
+    PAGES_SCHEMA.fields + [T.StructField("warc_file", T.StringType(), False)]
 )
 
 WARC_LINEAGE_SCHEMA = T.StructType(

@@ -24,11 +24,40 @@ def test_entry_runs(spark):
     ]
 
 
-def test_oracle_keys_subset_of_queries():
+def test_every_query_has_an_oracle_and_there_are_64():
+    """A rewrite of the query or oracle tables must not silently drop a
+    query or its oracle."""
     q = E.queries()
     o = E.oracle_sql()
-    assert set(o) <= set(q)
-    assert len(o) >= 15  # keep oracle coverage broad
+    assert set(o) == set(q)
+    assert len(q) == 64
+
+
+@pytest.mark.parametrize(
+    "name, module, drain",
+    [
+        ("stream_extract_state", "ocr_spark.streaming.extract_stream", "run_stream_once"),
+        ("host_stats_state", "ocr_spark.streaming.host_stats", "run_host_stats_once"),
+    ],
+    ids=["stream_extract_state", "host_stats_state"],
+)
+def test_streaming_query_removes_work_dir_when_drain_raises(
+    spark, tmp_path, monkeypatch, name, module, drain
+):
+    """The streaming queries shard the pages fixture into a temp work dir;
+    a drain that raises must not leave that copy (plus sink and checkpoint)
+    behind."""
+    import importlib
+    import tempfile
+
+    def boom(*_a, **_k):
+        raise RuntimeError("drain failed")
+
+    monkeypatch.setattr(importlib.import_module(module), drain, boom)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with pytest.raises(RuntimeError, match="drain failed"):
+        E.queries()[name](spark, SF)
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_oracles_are_valid_duckdb_sql():

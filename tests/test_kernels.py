@@ -506,8 +506,7 @@ def test_split_tokenizer_matches_scanner_reference_on_adversarial_html(fragments
     attributes, self-closing and ignored tags, entity fragments, mixed case.
     (html.parser is NOT the weeds reference — its EOF/bogus-comment recovery
     re-emits junk markup as data with CPython-specific chunking; the frozen
-    grammar drops it, per the HTML5 bogus-comment rule.  The stdlib
-    differential below covers the well-formed distribution instead.)"""
+    grammar drops it, per the HTML5 bogus-comment rule.)"""
     from ocr_spark.functions.html_extract import (
         tokenize_blocks,
         tokenize_blocks_reference,
@@ -538,17 +537,16 @@ def test_split_tokenizer_linear_on_truncated_tags():
         assert fast == tokenize_blocks_reference(html)
 
 
-def test_split_tokenizer_matches_stdlib_on_generated_pages():
-    """On the realistic (well-formed) fixture distribution the regex grammar
-    and html.parser agree block-for-block — pins the production tokenizer to
-    an entirely independent parser on the data the engine actually serves."""
+def test_split_tokenizer_matches_scanner_reference_on_generated_pages():
+    """On the realistic (well-formed) fixture distribution the regex scanner
+    and the character-scanner reference agree block-for-block on the pages
+    the engine actually serves."""
     import random
 
     from ocr_spark.fixtures.generator import _host_pool, gen_pages_doc
     from ocr_spark.functions.html_extract import (
         tokenize_blocks,
         tokenize_blocks_reference,
-        tokenize_blocks_stdlib,
     )
 
     rng = random.Random(0xD1FF)
@@ -561,7 +559,6 @@ def test_split_tokenizer_matches_stdlib_on_generated_pages():
             continue
         decoded = html.decode("utf-8", errors="replace") if isinstance(html, bytes) else html
         fast = tokenize_blocks(decoded)
-        assert fast == tokenize_blocks_stdlib(decoded)
         assert fast == tokenize_blocks_reference(decoded)
         checked += 1
     assert checked >= 150
