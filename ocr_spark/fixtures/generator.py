@@ -1554,7 +1554,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
             import gzip as _gzip
 
             with open(os.path.join(warc_dir, f"part-{si:03d}.warc.gz"), "wb") as f:
-                f.write(_gzip.compress(bytes(buf)))
+                f.write(_gzip.compress(bytes(buf), mtime=0))
 
         # WET sidecar: the SAME documents as conversion records carrying the
         # pre-extracted plain text (Common Crawl's .wet companion files) —
@@ -1581,7 +1581,7 @@ def generate_tier(tier: str, out_dir: str, seed: int = SEED) -> dict:
                     b"conversion", d["url"].encode(), ts, d["text"].encode("utf-8")
                 )
             with open(os.path.join(wet_dir, f"part-{si:03d}.wet.gz"), "wb") as f:
-                f.write(_gzip.compress(bytes(buf)))
+                f.write(_gzip.compress(bytes(buf), mtime=0))
 
     # ---- audio (binary media column + parameter-derived golden) ---------
     if cfg.get("audio"):

@@ -38,6 +38,8 @@ Frozen layout contract (v1):
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 HEADER_Y = 72.0
@@ -49,7 +51,8 @@ SPACE_GAP = 3.0
 
 
 def _largest_gap(lo: np.ndarray, hi: np.ndarray) -> tuple[float, float]:
-    """Largest uncovered interval in the 1-D projection of [lo, hi) boxes.
+    """Largest uncovered interval in the 1-D projection of [lo, hi) boxes
+    given in stable ascending ``lo`` order.
 
     Returns (gap_size, gap_mid); (0.0, 0.0) when fully covered.
     Deterministic: first-largest wins on ties (argmax of the vectorized gap
@@ -57,15 +60,13 @@ def _largest_gap(lo: np.ndarray, hi: np.ndarray) -> tuple[float, float]:
     identical arithmetic, identical tie-break)."""
     if lo.size < 2:
         return 0.0, 0.0
-    order = lo.argsort(kind="stable")
-    lo_s = lo[order]
-    cover = np.maximum.accumulate(hi[order])
-    gaps = lo_s[1:] - cover[:-1]
+    cover = np.maximum.accumulate(hi)
+    gaps = lo[1:] - cover[:-1]
     i = int(gaps.argmax())
     g = float(gaps[i])
     if g <= 0.0:
         return 0.0, 0.0
-    return g, float((lo_s[i + 1] + cover[i]) / 2.0)
+    return g, (float(lo[i + 1]) + float(cover[i])) / 2.0
 
 
 def _lines_text(ch: np.ndarray, x0: np.ndarray, x1: np.ndarray, y1: np.ndarray) -> str:
@@ -113,8 +114,10 @@ def _xycut(
     """Rule L2, recursive; returns leaf texts in reading order."""
     if len(idx) == 0:
         return []
-    xgap, xmid = _largest_gap(x0[idx], x1[idx])
-    ygap, ymid = _largest_gap(y0[idx], y1[idx])
+    xs = idx[np.argsort(x0[idx], kind="stable")]
+    ys = idx[np.argsort(y0[idx], kind="stable")]
+    xgap, xmid = _largest_gap(x0[xs], x1[xs])
+    ygap, ymid = _largest_gap(y0[ys], y1[ys])
     cut_x = xgap >= X_GAP_MIN and xgap >= ygap  # tie -> column cut (L2)
     cut_y = not cut_x and ygap >= Y_GAP_MIN
     if cut_x:
@@ -226,29 +229,66 @@ def _line_starts(ys: np.ndarray, leaf_start: np.ndarray) -> np.ndarray:
     return brk
 
 
-def _xycut_leaves(x0, y0, x1, y1, xc, yc, idx, out: list) -> None:
-    """Rule L2 over glyph indices ``idx`` (same recursion as _xycut);
-    appends the leaves' index arrays to ``out`` in reading order.  ``xc``
-    and ``yc`` are the glyph centers."""
-    xgap, xmid = _largest_gap(x0[idx], x1[idx])
-    ygap, ymid = _largest_gap(y0[idx], y1[idx])
-    cut_x = xgap >= X_GAP_MIN and xgap >= ygap
-    cut_y = not cut_x and ygap >= Y_GAP_MIN
-    if cut_x:
-        mid = xc[idx]
-        left, right = idx[mid < xmid], idx[mid >= xmid]
-        if len(left) and len(right):
-            _xycut_leaves(x0, y0, x1, y1, xc, yc, left, out)
-            _xycut_leaves(x0, y0, x1, y1, xc, yc, right, out)
-            return
-    if cut_y:
-        mid = yc[idx]
-        top, bottom = idx[mid < ymid], idx[mid >= ymid]
-        if len(top) and len(bottom):
-            _xycut_leaves(x0, y0, x1, y1, xc, yc, top, out)
-            _xycut_leaves(x0, y0, x1, y1, xc, yc, bottom, out)
-            return
-    out.append(idx)
+class LayoutTooLarge(Exception):
+    """The XY-cut's work passed the caller's ``max_cut_work``."""
+
+
+def _xycut_leaves(lo, hi, cx, cy, body, out: list, work: float) -> float:
+    """Rule L2 over one page's body glyphs ``body`` (ascending indices
+    into the ``n`` glyphs), the same cut as ``_xycut``: appends each
+    leaf's glyph indices, in x0 order, to ``out`` in reading order and
+    returns the work left.  ``lo`` is x0 then y0 and ``hi`` x1 then y1
+    (``2n`` each); ``cx`` and ``cy`` are the x and y centers, each twice.
+
+    Sort once: x0 and y0 are argsorted (stable) once per page, and each
+    child keeps its parent's two orders by stable partition, which is the
+    order a stable argsort of the child alone gives, so every gap and
+    tie-break is the spec's.  A node is one (2, k) array: its glyphs in
+    x0 order, then in y0 order offset by ``n``, so one gather, one
+    ``maximum.accumulate`` and one ``argmax`` serve both projections.
+    The cut runs on an explicit stack (right child pushed first), so a
+    staircase of cuts one glyph at a time costs no interpreter recursion.
+    Each node charges its glyph count against ``work``; going below zero
+    raises ``LayoutTooLarge``."""
+    n = lo.size // 2
+    stack = [
+        np.stack((
+            body[np.argsort(lo[body], kind="stable")],
+            body[np.argsort(lo[body + n], kind="stable")] + n,
+        ))
+    ]
+    while stack:
+        node = stack.pop()
+        k = node.shape[1]
+        work -= k
+        if work < 0:
+            raise LayoutTooLarge("XY-cut work budget exhausted")
+        if k < 2:  # no gap in either projection
+            out.append(node[0])
+            continue
+        # both projections' largest gaps, first-largest winning ties
+        lo_s = lo[node]
+        cover = np.maximum.accumulate(hi[node], axis=1)
+        gaps = lo_s[:, 1:] - cover[:, :-1]
+        ix, iy = gaps.argmax(axis=1).tolist()
+        xgap, ygap = float(gaps[0, ix]), float(gaps[1, iy])
+        # a gap <= 0 counts as 0.0 in L2; no decision below tells them apart
+        if xgap >= X_GAP_MIN and xgap >= ygap:  # tie -> column cut (L2)
+            c, mid = cx, (float(lo_s[0, ix + 1]) + float(cover[0, ix])) / 2.0
+        elif ygap >= Y_GAP_MIN:
+            c, mid = cy, (float(lo_s[1, iy + 1]) + float(cover[1, iy])) / 2.0
+        else:
+            out.append(node[0])
+            continue
+        # centers < mid go first, >= mid second; a NaN center goes to
+        # neither, as in ``_xycut``.  Both rows hold the same glyphs.
+        centers = c[node]
+        first, second = node[centers < mid], node[centers >= mid]
+        if first.size and second.size:
+            stack += (second.reshape(2, -1), first.reshape(2, -1))
+        else:
+            out.append(node[0])
+    return work
 
 
 def page_texts_codes(
@@ -258,11 +298,17 @@ def page_texts_codes(
     y0: np.ndarray,
     x1: np.ndarray,
     y1: np.ndarray,
+    *,
+    max_cut_work: float = math.inf,
 ) -> list[tuple[int, str]]:
     """Rules L1-L4 over several pages of single-code-point glyphs, each
     page one contiguous run of ``page`` (a document's ``pdf_glyph_columns``
     order) -> [(page, text)] for every run, "" where no glyph is in the
-    body.  Each text equals ``page_text`` on that page's glyphs."""
+    body.  Each text equals ``page_text`` on that page's glyphs.
+
+    L2 is ``_xycut_leaves`` per page, sharing ``max_cut_work`` (glyphs
+    summed over every cut node of every page; ``LayoutTooLarge`` past
+    it).  L3 and L4 then run once over all leaves of all pages."""
     page = np.asarray(page)
     n = page.size
     if n == 0:
@@ -274,31 +320,36 @@ def page_texts_codes(
     cuts = (np.flatnonzero(page[1:] != page[:-1]) + 1).tolist()
     xc = (x0 + x1) / 2.0
     yc = (y0 + y1) / 2.0
+    lo, hi = np.concatenate((x0, y0)), np.concatenate((x1, y1))
+    cx, cy = np.concatenate((xc, xc)), np.concatenate((yc, yc))
     in_body = (yc >= HEADER_Y) & (yc < FOOTER_Y)
     leaves: list[np.ndarray] = []
     page_glyphs = []  # body glyphs per page
+    work = max_cut_work
     for s, e in zip([0, *cuts], [*cuts, n]):
         body = np.flatnonzero(in_body[s:e]) + s
         if body.size:
-            _xycut_leaves(x0, y0, x1, y1, xc, yc, body, leaves)
+            work = _xycut_leaves(lo, hi, cx, cy, body, leaves, work)
         page_glyphs.append(body.size)
     keys = page[[0, *cuts]].tolist()
     if not leaves:
         return [(k, "") for k in keys]
-    # L3 over all leaves at once: leaf-major, then baseline; lexsort is
-    # stable, so equal baselines keep input order within their leaf
+    # L3 over all leaves at once, ordered (leaf, baseline, glyph order):
+    # one integer key per glyph from its rank in a stable argsort of y1
+    rank = np.empty(n, np.int64)
+    rank[np.argsort(y1, kind="stable")] = np.arange(n)
     idx = np.concatenate(leaves)
     sizes = [leaf.size for leaf in leaves]
     leaf = np.repeat(np.arange(len(leaves)), sizes)
-    order = np.lexsort((y1[idx], leaf))
+    idx = idx[np.argsort(leaf * n + rank[idx])]
     leaf_start = np.zeros(idx.size, dtype=bool)
     leaf_start[np.cumsum([0, *sizes[:-1]])] = True
-    line = np.cumsum(_line_starts(y1[idx[order]], leaf_start))
-    # L3 within-line order: x0 primary, input order (``order`` holds
-    # positions in ``idx``, ascending within a leaf) as tiebreak; lines
+    line = np.cumsum(_line_starts(y1[idx], leaf_start))
+    # L3 within-line order: (line, x0, glyph order), the same way; lines
     # are already in leaf then mean-baseline order
-    ls = np.lexsort((order, x0[idx[order]], line))
-    final = idx[order[ls]]
+    rank[np.argsort(x0, kind="stable")] = np.arange(n)
+    ls = np.argsort(line * n + rank[idx])
+    final = idx[ls]
     codes = cp[final].astype(np.uint32)
     line = line[ls]
     # L4: "\n" between lines (so between leaves and pages too), one space

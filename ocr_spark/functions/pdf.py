@@ -86,7 +86,8 @@ and every FlateDecode inflation is capped (``max_stream_bytes`` ->
 in a content stream, or one stream named many times, must cost one error
 row, never an executor OOM.  The content interpreter's work per document
 is capped too (``MAX_DOC_WORK`` -> ``doc_too_large``: 1 unit per
-operator plus each shown string's length).
+operator plus each shown string's length), and so is the XY-cut work
+``operators.pdf_ops`` spends laying the glyphs out (``MAX_LAYOUT_WORK``).
 """
 
 from __future__ import annotations
@@ -161,6 +162,13 @@ DEFAULT_MAX_STREAM_BYTES = 64 << 20
 # The largest fixture or benchmark document costs ~11k units; 2**20 leaves
 # ~100x headroom.
 MAX_DOC_WORK = 1 << 20
+# layout work per document (the XY-cut in ``pdf_ops``): each cut node costs
+# its glyph count, summed over the document's pages.  A page that the cut
+# peels one glyph at a time (a TJ line of glyphs 25 pt apart) costs
+# quadratic work: 3,000 such glyphs take 0.2 s, 50k about a minute.  The largest
+# fixture or benchmark document costs ~34k units; 2**23 leaves ~250x
+# headroom and still lays out a 3,000-glyph staircase (4.5M units).
+MAX_LAYOUT_WORK = 1 << 23
 
 
 class PdfError(Exception):
@@ -188,6 +196,10 @@ _REF_TAIL_RE = re.compile(_REF_TAIL)
 _REGULAR_RUN = re.compile(_REG + rb"*+")
 _LIT_PLAIN = re.compile(rb"[^\\()]*+\)")  # a literal string's rest, no escape
 _LIT_SPECIAL = re.compile(rb"[\\()]")
+_NUMBER_START = frozenset(b"+-.0123456789")
+# a classic xref entry in its usual shape (``offset gen n|f`` with plain
+# whitespace): read in one match; any other shape goes through _Lexer
+_XREF_ENTRY = re.compile(rb"[\x00\t\n\x0c\r ]*+(\d++)[\x00\t\n\x0c\r ]++\d++[\x00\t\n\x0c\r ]++([nf])")
 
 
 class _Lexer:
@@ -214,37 +226,20 @@ class _Lexer:
     def value(self):
         """One object-grammar value.  Indirect refs come back as
         ('R', num) tuples; names as Name; strings as bytes."""
-        self._skip_ws()
-        d, n = self.data, len(self.data)
-        if self.pos >= n:
+        d = self.data
+        self.pos = pos = _SKIP_WS.match(d, self.pos).end()
+        if pos >= len(d):
             raise PdfError("bad_obj", "unexpected EOF")
-        c = d[self.pos]
-        if c == 0x2F:  # /Name
-            return self._name()
-        if c == 0x28:  # (literal string)
-            return self._literal_string()
-        if c == 0x3C:  # << dict >> or <hex>
-            if d.startswith(b"<<", self.pos):
-                return self._dict()
-            return self._hex_string()
-        if c == 0x5B:  # [ array ]
-            return self._array()
-        if d.startswith(b"true", self.pos):
-            self.pos += 4
-            return True
-        if d.startswith(b"false", self.pos):
-            self.pos += 5
-            return False
-        if d.startswith(b"null", self.pos):
-            self.pos += 4
-            return None
-        m = _NUM_RE.match(d, self.pos)
-        if m is not None:
+        c = d[pos]
+        if c in _NUMBER_START:
+            m = _NUM_RE.match(d, pos)
+            if m is None:
+                raise PdfError("bad_obj", f"unparseable token at {pos}")
             self.pos = m.end()
             # int when possible so /Length & refs stay exact; ref lookahead:
             # "N G R" with both integers
-            txt = m.group().decode("latin-1")
-            if "." not in txt and "e" not in txt and "E" not in txt:
+            txt = m.group()
+            if b"." not in txt and b"e" not in txt and b"E" not in txt:
                 first = int(txt)
                 m2 = _REF_TAIL_RE.match(d, self.pos)
                 if m2 is not None:
@@ -252,7 +247,26 @@ class _Lexer:
                     return ("R", first)
                 return first
             return float(txt)
-        raise PdfError("bad_obj", f"unparseable token at {self.pos}")
+        if c == 0x2F:  # /Name
+            return self._name()
+        if c == 0x28:  # (literal string)
+            return self._literal_string()
+        if c == 0x3C:  # << dict >> or <hex>
+            if d.startswith(b"<<", pos):
+                return self._dict()
+            return self._hex_string()
+        if c == 0x5B:  # [ array ]
+            return self._array()
+        if d.startswith(b"true", pos):
+            self.pos += 4
+            return True
+        if d.startswith(b"false", pos):
+            self.pos += 5
+            return False
+        if d.startswith(b"null", pos):
+            self.pos += 4
+            return None
+        raise PdfError("bad_obj", f"unparseable token at {pos}")
 
     def _name(self) -> Name:
         start = self.pos + 1  # past '/'
@@ -454,11 +468,16 @@ class _Document:
                 if not isinstance(start, int) or not isinstance(count, int):
                     raise PdfError("bad_xref", "bad subsection header")
                 for k in range(count):
-                    entry_off = lx.value()
-                    _gen = lx.value()
-                    lx._skip_ws()
-                    kind = self.data[lx.pos : lx.pos + 1]
-                    lx.pos += 1
+                    m = _XREF_ENTRY.match(self.data, lx.pos)
+                    if m is not None:
+                        lx.pos = m.end()
+                        entry_off, kind = int(m[1]), m[2]
+                    else:
+                        entry_off = lx.value()
+                        _gen = lx.value()
+                        lx._skip_ws()
+                        kind = self.data[lx.pos : lx.pos + 1]
+                        lx.pos += 1
                     if kind == b"n":
                         self.offsets.setdefault(start + k, entry_off)
                     elif kind == b"f":
@@ -749,68 +768,119 @@ def _page_inputs(doc: _Document):
         yield page_no, _page_content(doc, page), fonts, media_top
 
 
-# content tokens (P3 grammar, P6 operators).  One regex match per token
-# covers whitespace/comments plus the common shapes: operators, numbers,
-# names, refs, hex strings, literal strings with no escape or nested paren,
-# and arrays of those.  Anything else (an escaped string, a dict, a stray
-# delimiter, an operator inside an array) is read by ``_Lexer`` from the
-# token's start, or from the outermost open array's '[' — one grammar.
-_CONTENT_TOKEN = re.compile(
-    _S
-    + rb"(?:(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9]" + _REG + rb"*+)"
-    + rb"|(?P<ref>" + _INT + rb")" + _REF_TAIL
-    + rb"|(?P<int>" + _INT + rb")"
-    + rb"|(?P<real>[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)"
-    + rb"|\((?P<str>[^\\()]*+)\)"
-    + rb"|/(?P<name>" + _REG + rb"*+)"
-    + rb"|<(?P<hex>[0-9A-Fa-f\t\n\x0c\r ]*+)>"
-    + rb"|(?P<open>\[)|(?P<close>\])|(?P<end>\Z)|(?P<other>[\s\S]))"
+# content tokens (P3 grammar, P6 operators), read in bulk.  One regex
+# search finds the tokens that start at a delimiter: strings, names, hex
+# strings and array brackets.  The bytes between two of them hold only
+# operators and numbers, so ``bytes.split`` (C) cuts them into words, and
+# each word converts on its own.  Everything the bulk pass does not read
+# (a comment, a dict, nested or unterminated parens, a stray delimiter,
+# an ``R`` that may close an ``N G R`` ref, a NUL or VT byte, which
+# ``bytes.split`` treats unlike PDF, a malformed number, an operator
+# inside an array) stops it; ``_Lexer`` then reads the rest of the stream
+# from the start of that word run, or from the outermost open '['.
+_CONTENT_SPECIAL = re.compile(
+    # every branch starts with a literal byte, so the search skips the
+    # bytes between specials in C
+    rb"\(([^\\()]*+)\)"  # 1: literal string with no escape
+    rb"|\(()(?:[^\\()]++|\\[\s\S])*+\)"  # 2: literal string with escapes
+    rb"|/(" + _REG + rb"*+)"  # 3: name
+    rb"|<([0-9A-Fa-f\t\n\x0c\r ]*+)>"  # 4: hex string
+    rb"|\[()|\]()"  # 5, 6: array brackets
+    rb"|\(|\)|<|>|\{|\}|%|R|\x00|\x0b"  # no group: left to _Lexer
 )
 _OPERAND_START = frozenset(b"/(<[+-.0123456789")
+_DIGITS = b"0123456789"
+_SIGNS = (b"+", b"-")
+
+
+def _words(code: bytes, in_array: bool) -> list | None:
+    """The operators and numbers of a run of bytes with no delimiter, or
+    None when a word is not exactly one number or operator (``5Tj``,
+    ``1.2.3``, ``+``) or an operator sits inside an array."""
+    out = []
+    for w in code.split():
+        c = w[0]
+        if 42 < c < 58 and c != 44:  # + - . 0-9 start a number
+            try:
+                if w.isdigit():
+                    out.append(int(w))
+                    continue
+                rest = w.translate(None, _DIGITS)
+                if rest in _SIGNS and c == rest[0]:
+                    out.append(int(w))  # [+-]?\d+
+                elif rest.translate(None, b"+-.eE"):
+                    return None
+                else:  # restricted to [0-9+-.eE], float() reads P3 reals only
+                    out.append(float(w))
+            except ValueError:  # not one number, or an int past int()'s digit limit
+                return None
+        elif in_array:
+            return None
+        else:
+            out.append(w.decode("latin-1"))
+    return out
+
+
+def _bulk_tokens(content: bytes) -> tuple[list, int | None]:
+    """(tokens, stop): the tokens of ``content[:stop]`` as ``_Lexer``
+    reads them; ``stop`` is None when the bulk pass read the whole stream."""
+    out: list = []
+    nest: list[list] = []  # open arrays, outermost first
+    outer = prev = 0  # outermost open '['; end of the last special token
+    for m in _CONTENT_SPECIAL.finditer(content):
+        k = m.lastindex
+        if k is None or (k == 6 and not nest):  # not read here, or a stray ']'
+            return out, outer if nest else prev
+        start = m.start()
+        if start > prev:
+            words = _words(content[prev:start], bool(nest))
+            if words is None:
+                return out, outer if nest else prev
+            (nest[-1] if nest else out).extend(words)
+        if k == 1:
+            v = m[1]
+        elif k == 5:
+            if not nest:
+                outer = start
+            nest.append([])
+            prev = m.end()
+            continue
+        elif k == 6:
+            v = nest.pop()
+        elif k == 2:
+            v = _Lexer(content, start)._literal_string()
+        elif k == 3:
+            v = Name(m[3].decode("latin-1"))
+        else:  # k == 4
+            h = m[4].translate(None, _WS)
+            v = bytes.fromhex((h + b"0" if len(h) % 2 else h).decode("latin-1"))
+        (nest[-1] if nest else out).append(v)
+        prev = m.end()
+    if prev < len(content):
+        words = _words(content[prev:], bool(nest))
+        if words is None:
+            return out, outer if nest else prev
+        (nest[-1] if nest else out).extend(words)
+    return out, outer if nest else None
 
 
 def _content_tokens(content: bytes):
     """Content-stream tokens in order: operators as ``str``, operands as
-    object-grammar values (``Name``, bytes, int, float, list, refs).  A
-    malformed operand or a stray delimiter raises ``bad_content``."""
-    pos = 0
+    object-grammar values (``Name``, bytes, int, float, list, refs), the
+    same tokens ``_Lexer`` alone reads (``tests/test_pdf.py`` checks it on
+    random streams).  ``_bulk_tokens`` reads the common shapes in one
+    pass; ``_Lexer`` reads the rest of the stream from where it stopped.
+    A malformed operand or a stray delimiter raises ``bad_content`` after
+    the tokens before it."""
+    tokens, pos = _bulk_tokens(content)
+    yield from tokens
+    if pos is None:
+        return
+    n = len(content)
     while True:
-        nest: list[list] = []  # open arrays, outermost first
-        for m in _CONTENT_TOKEN.finditer(content, pos):
-            kind = m.lastgroup
-            if kind == "op" and not nest:
-                yield m.group("op").decode("latin-1")
-                continue
-            if kind == "int":
-                v = int(m.group("int"))
-            elif kind == "str":
-                v = m.group("str")
-            elif kind == "real":
-                v = float(m.group("real"))
-            elif kind == "name":
-                v = Name(m.group("name").decode("latin-1"))
-            elif kind == "hex":
-                h = m.group("hex").translate(None, _WS)
-                v = bytes.fromhex((h + b"0" if len(h) % 2 else h).decode("latin-1"))
-            elif kind == "ref":
-                v = ("R", int(m.group("ref")))
-            elif kind == "open":
-                if not nest:
-                    array_start = m.start("open")
-                nest.append([])
-                continue
-            elif kind == "close" and nest:
-                v = nest.pop()
-            elif kind == "end" and not nest:
-                return
-            else:
-                break
-            if nest:
-                nest[-1].append(v)
-            else:
-                yield v
-        # the token _CONTENT_TOKEN leaves to the object grammar
-        pos = array_start if nest else m.start(kind)
+        pos = _SKIP_WS.match(content, pos).end()
+        if pos >= n:
+            return
         if content[pos] in _OPERAND_START:
             lx = _Lexer(content, pos)
             try:
@@ -819,8 +889,12 @@ def _content_tokens(content: bytes):
                 raise PdfError("bad_content", str(e))
             pos = lx.pos
             yield v
-        else:  # a delimiter that starts no operand
+        elif content[pos] in b")>]{}":
             raise PdfError("bad_content", f"stray delimiter at {pos}")
+        else:  # an operator: a run of regular bytes
+            end = _REGULAR_RUN.match(content, pos).end()
+            yield content[pos:end].decode("latin-1")
+            pos = end
 
 
 def _cp1252_table() -> np.ndarray:
@@ -856,8 +930,38 @@ def _width_table(widths) -> tuple[np.ndarray, object]:
     return w, _byte_class(np.isnan(w) & (_CP1252 >= 0))
 
 
-# BaseFont -> per-byte width table, built once from FONT_WIDTHS
-_FONT_TABLES = {base: _width_table(w) for base, w in FONT_WIDTHS.items()}
+# BaseFont -> (row of _WIDTHS, regex of its width-less bytes), built once
+# from FONT_WIDTHS
+_WIDTHS = np.stack([_width_table(w)[0] for w in FONT_WIDTHS.values()])
+_FONT_TABLES = {
+    base: (row, _width_table(w)[1]) for row, (base, w) in enumerate(FONT_WIDTHS.items())
+}
+
+
+def _chain_sums(v: np.ndarray, bounds: np.ndarray) -> None:
+    """Sequential prefix sums, in place, of each chain
+    ``v[bounds[i]:bounds[i + 1]]``; ``v[bounds[-1]]`` is a spare slot.
+    Each chain is one row of a padded 2-D ``np.add.accumulate(axis=1)``:
+    a row sums left to right, and its padding (reads and writes of the
+    spare slot) trails the chain's own entries, so it never reaches them.
+    One block pads every chain to the longest; when that would pass 4x
+    the elements, chains are grouped by length rounded up to a power of
+    two instead, which at most doubles them."""
+    starts = bounds[:-1]
+    lens = bounds[1:] - starts
+    end = int(bounds[-1])
+    log_width = np.frexp(lens - 1)[1]
+    top = int(log_width.max())
+    groups = [(starts, lens, top)]
+    if lens.size << top > 4 * end:
+        groups = [(starts[m], lens[m], e) for e in set(log_width.tolist()) for m in [log_width == e]]
+    for starts, lens, e in groups:
+        cols = np.arange(1 << e)
+        idx = starts[:, None] + cols
+        idx[cols >= lens[:, None]] = end
+        block = v[idx]
+        np.add.accumulate(block, axis=1, out=block)
+        v[idx] = block
 
 
 class GlyphColumns(NamedTuple):
@@ -881,23 +985,34 @@ def _interpret(pages) -> GlyphColumns:
     """Replay the P6 operator set over ``pages`` — (page_no, content, fonts,
     media_top) in leaf order — and return the glyph columns per P7.
 
-    Each show is vectorized: its bytes index the per-byte code point and
-    advance tables, and one sequential ``np.add.accumulate`` over
-    ``[x, adv...]`` yields the pen positions — the same float additions,
-    in the same order, as the scalar ``x = x + adv``, so boxes stay
+    Shows are batched per document.  From each positioning operator on,
+    the pen x is a chain: the line's start x, then every shown byte's
+    advance and every TJ kern's ``-t * size / 1000.0``, in order.  Each
+    show records only its bytes, font and size; ``_chain_sums`` then runs
+    the pen positions of every chain of the document at once.  Each chain
+    sums sequentially, the same float additions in the same order as the
+    scalar ``x = x + adv``, and ``x - k`` is ``x + (-k)`` exactly (a NaN
+    kern is stored as itself, which keeps its bits), so boxes stay
     bit-identical to the generator's mirrored arithmetic.
 
-    The document's pages share one ``MAX_DOC_WORK`` budget: each operator
-    costs 1 and each shown string its length, charged once per show call.
-    Exceeding it is ``doc_too_large``."""
-    shows: list[bytes] = []  # shown strings, spaces included
-    pens: list[np.ndarray] = []  # per show: pen x before each byte and after the last
-    meta: list[tuple] = []  # per show: (page, y0, y1)
+    Each show still checks its bytes as it runs, so the first error in
+    stream order wins: a show with no font set is ``missing_font``, then
+    an undefined WinAnsi byte ``bad_content``, then the work budget, then
+    a byte the font has no width for ``missing_width``.  The document's
+    pages share one ``MAX_DOC_WORK`` budget: each operator costs 1 and
+    each shown string its length.  Exceeding it is ``doc_too_large``."""
+    shows: list[bytes] = []  # non-empty shown strings, spaces included
+    meta: list[float] = []  # per show: width row, size, page, y0, y1
+    heads: list[int] = []  # element index of each chain's start x
+    head_x: list[float] = []
+    kerns: list[int] = []  # element index of each kern inside a chain
+    kern_d: list[float] = []
+    n_el = 0  # chain elements so far: start xs, kerns, shown bytes
     work = MAX_DOC_WORK
 
     def show(sbytes: bytes) -> None:
-        nonlocal x, work
-        if adv is None:
+        nonlocal work, n_el, chained
+        if row is None:
             raise PdfError("missing_font", "show with no font set")
         if _UNDEFINED_BYTE.search(sbytes) is not None:
             raise PdfError("bad_content", "undefined WinAnsi byte")
@@ -909,24 +1024,25 @@ def _interpret(pages) -> GlyphColumns:
             raise PdfError("missing_width", repr(sbytes))
         if n == 0:
             return
-        xs = np.empty(n + 1)
-        xs[0] = x
-        adv.take(np.frombuffer(sbytes, np.uint8), out=xs[1:])
-        np.add.accumulate(xs, out=xs)
-        x = float(xs[n])
+        if not chained:  # the pen x starts a new chain
+            heads.append(n_el)
+            head_x.append(x)
+            n_el += 1
+            chained = True
         y_top = media_top - y
         shows.append(sbytes)
-        pens.append(xs)
-        meta.append((page_no, y_top - 0.8 * size, y_top))
+        meta.extend((row, size, page_no, y_top - 0.8 * size, y_top))
+        n_el += n
 
     for page_no, content, fonts, media_top in pages:
         stack: list = []
-        adv = None  # per-byte advance at the active font and size
+        row = None  # the active font's row of _WIDTHS
         no_width = None  # regex of the bytes the active font has no width for
         size = 0.0
         leading = 0.0
         line_x = line_y = 0.0  # text line matrix translation
-        x = y = 0.0  # current pen position
+        x = y = 0.0  # current pen position, while not chained
+        chained = False  # the pen x is the open chain's running sum
         in_text = False
         for op in _content_tokens(content):
             if type(op) is not str:  # operands are values; operators are str
@@ -945,12 +1061,14 @@ def _interpret(pages) -> GlyphColumns:
                     line_x = line_x + tx
                     line_y = line_y + ty
                     x, y = line_x, line_y
+                    chained = False
                 elif op == "Tm":
                     a, b, cc, d2, e, f = (float(v) for v in stack[-6:])
                     if a != 1.0 or b != 0.0 or cc != 0.0 or d2 != 1.0:
                         raise PdfError("bad_content", "Tm with scale/rotation")
                     line_x, line_y = e, f
                     x, y = line_x, line_y
+                    chained = False
                 elif op == "TJ":
                     arr = stack[-1]
                     if not isinstance(arr, list):
@@ -959,18 +1077,27 @@ def _interpret(pages) -> GlyphColumns:
                         if isinstance(el, bytes):
                             show(el)
                         elif isinstance(el, (int, float)):
-                            x = x - float(el) * size / 1000.0
+                            k = float(el) * size / 1000.0
+                            if chained:
+                                kerns.append(n_el)
+                                kern_d.append(-k if k == k else k)
+                                n_el += 1
+                            else:
+                                x = x - k
                         else:
                             raise PdfError("bad_content", f"TJ element {el!r}")
                 elif op == "T*":
                     line_y = line_y - leading
                     x, y = line_x, line_y
+                    chained = False
                 elif op == "'":
                     line_y = line_y - leading
                     x, y = line_x, line_y
+                    chained = False
                     show(stack[-1])
                 elif op == "BT":
                     line_x = line_y = x = y = 0.0
+                    chained = False
                     in_text = True
                 elif op == "ET":
                     in_text = False
@@ -983,8 +1110,7 @@ def _interpret(pages) -> GlyphColumns:
                     if table is None:
                         raise PdfError("missing_font", base)
                     size = float(fsize)
-                    widths, no_width = table
-                    adv = widths * size / 1000.0  # adv = w * size / 1000.0
+                    row, no_width = table
                 elif op == "TL":
                     leading = float(stack[-1])
                 elif op in _NOOP_OPS:
@@ -998,13 +1124,33 @@ def _interpret(pages) -> GlyphColumns:
             raise PdfError("bad_content", "unbalanced BT/ET")
     if not shows:
         return NO_GLYPHS
-    counts = np.fromiter(map(len, shows), np.int64, len(shows))
-    page, y0, y1 = (np.repeat(np.array(c), counts) for c in zip(*meta))
-    cp = _CP1252[np.frombuffer(b"".join(shows), np.uint8)]
-    x0 = np.concatenate([xs[:-1] for xs in pens])
-    x1 = np.concatenate([xs[1:] for xs in pens]) - 0.5  # x + adv - 0.5
-    glyph = cp != 0x20  # a space advances the pen and emits nothing
-    return GlyphColumns(page[glyph], cp[glyph], x0[glyph], y0[glyph], x1[glyph], y1[glyph])
+    b = np.frombuffer(b"".join(shows), np.uint8)
+    per_show = np.array(meta).reshape(-1, 5)
+    # each shown byte with its show's row, size, page, y0, y1
+    per_byte = per_show.take(np.arange(len(shows)).repeat([len(sb) for sb in shows]), axis=0)
+    # the chain element of every shown byte: all but the starts and kerns
+    is_byte = np.ones(n_el, bool)
+    is_byte[heads] = False
+    is_byte[kerns] = False
+    at = np.flatnonzero(is_byte)
+    pen = np.empty(n_el + 1)  # one spare slot for _chain_sums
+    # adv = w * size / 1000.0 (P7), byte by byte
+    pen[at] = _WIDTHS[per_byte[:, 0].astype(np.intp), b] * per_byte[:, 1] / 1000.0
+    pen[heads] = head_x
+    pen[kerns] = kern_d
+    _chain_sums(pen, np.array(heads + [n_el]))
+    cp = _CP1252[b]
+    glyph = np.flatnonzero(cp != 0x20)  # a space advances the pen and emits nothing
+    at = at[glyph]
+    per_glyph = per_byte.take(glyph, axis=0)
+    return GlyphColumns(
+        per_glyph[:, 2].astype(np.int64),
+        cp[glyph],
+        pen[at - 1],  # the pen before the byte
+        per_glyph[:, 3],
+        pen[at] - 0.5,  # x + adv - 0.5
+        per_glyph[:, 4],
+    )
 
 
 # ---------------------------------------------------------------------------

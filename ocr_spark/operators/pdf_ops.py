@@ -12,11 +12,16 @@ table in the path.
 Structure: each operator is one small emitter run by the shared payload
 batch loop (``operators.payloads.map_payloads``, one ``mapInArrow``):
 the emitter parses its document once with ``pdf_glyph_columns`` — numpy
-columns (page, code point, box), no Python object per glyph — and appends
-glyph rows, page rows, or one doc row.  The page and doc emitters hand the
-columns to ``layout.page_texts_codes``, which XY-cuts each page and runs
-line clustering and spacing once over all of the document's leaves.
-Each output schema is declared once, as a Spark ``StructType``.
+columns (page, code point, box), no Python object per glyph; content
+streams are tokenized in bulk and the pen positions of all shows are
+summed at once — and appends glyph rows, page rows, or one doc row.  The
+page and doc emitters hand the columns to ``layout.page_texts_codes``,
+which XY-cuts each page (sorted once per page, on an explicit stack) and
+runs line clustering and spacing once over all of the document's leaves.
+Their cut work is capped per document (``pdf.MAX_LAYOUT_WORK`` ->
+``doc_too_large``), so no document's layout is quadratic without bound;
+the glyph emitter runs no layout.  Each output schema is declared once,
+as a Spark ``StructType``.
 
 Scale shape: a single-pass, zero-Exchange plan over the document relation
 (the html extraction branch's shape), no per-row Python UDFs, errors
@@ -31,8 +36,8 @@ from itertools import repeat
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ocr_spark.functions.layout import page_texts_codes
-from ocr_spark.functions.pdf import pdf_glyph_columns
+from ocr_spark.functions.layout import LayoutTooLarge, page_texts_codes
+from ocr_spark.functions.pdf import MAX_LAYOUT_WORK, pdf_glyph_columns
 from ocr_spark.operators.payloads import map_payloads
 from ocr_spark.schemas import GLYPHS_SCHEMA, PAGE_TEXT_SCHEMA
 
@@ -68,16 +73,28 @@ def _emit_glyphs(out, did, pdf):
     )
 
 
-def _emit_pages(out, did, pdf):
+def _page_texts(pdf) -> tuple[list, str | None]:
+    """(page texts, error) of one document: ``[]`` and the taxonomy code
+    on error, including ``doc_too_large`` past ``MAX_LAYOUT_WORK``."""
     g, err = pdf_glyph_columns(pdf)
-    pages = page_texts_codes(*g) if err is None else [(0, "")]
+    if err is not None:
+        return [], err
+    try:
+        return page_texts_codes(*g, max_cut_work=MAX_LAYOUT_WORK), None
+    except LayoutTooLarge:
+        return [], "doc_too_large"
+
+
+def _emit_pages(out, did, pdf):
+    pages, err = _page_texts(pdf)
+    if err is not None:
+        pages = [(0, "")]  # the E6 sentinel row
     out.extend((did, page, text, err) for page, text in pages)
 
 
 def _emit_doc(out, did, pdf):
-    g, err = pdf_glyph_columns(pdf)
-    texts = [text for _, text in page_texts_codes(*g)]
-    out.append((did, "\n".join(texts), len(texts), err))
+    pages, err = _page_texts(pdf)
+    out.append((did, "\n".join(text for _, text in pages), len(pages), err))
 
 
 def pdf_to_glyphs(docs: DataFrame) -> DataFrame:

@@ -20,8 +20,11 @@ from ocr_spark.functions.html_extract import (
     tokenize_blocks,
 )
 from ocr_spark.fixtures import generator as gen
+from ocr_spark.functions import layout
 from ocr_spark.functions.layout import (
     LINE_CLUSTER_EPS,
+    X_GAP_MIN,
+    Y_GAP_MIN,
     page_text,
     page_text_codes,
     page_texts_codes,
@@ -224,6 +227,78 @@ def test_page_texts_codes_matches_page_text_per_page(pages, step):
     page, cp, *boxes = (np.array(c) for c in zip(*cols))
     want = [(p, page_text(*zip(*glyphs))) for p, glyphs in zip(numbers, pages)]
     assert page_texts_codes(page, cp, *boxes) == want
+
+
+# Rule L2 as a plain recursive cut, each node argsorting its own glyphs:
+# the reference the iterative sort-once cut must reproduce leaf for leaf.
+def _ref_largest_gap(lo, hi):
+    if lo.size < 2:
+        return 0.0, 0.0
+    order = lo.argsort(kind="stable")
+    lo_s = lo[order]
+    cover = np.maximum.accumulate(hi[order])
+    gaps = lo_s[1:] - cover[:-1]
+    i = int(gaps.argmax())
+    g = float(gaps[i])
+    if g <= 0.0:
+        return 0.0, 0.0
+    return g, float((lo_s[i + 1] + cover[i]) / 2.0)
+
+
+def _ref_xycut_leaves(x0, y0, x1, y1, xc, yc, idx, out):
+    xgap, xmid = _ref_largest_gap(x0[idx], x1[idx])
+    ygap, ymid = _ref_largest_gap(y0[idx], y1[idx])
+    cut_x = xgap >= X_GAP_MIN and xgap >= ygap
+    cut_y = not cut_x and ygap >= Y_GAP_MIN
+    if cut_x:
+        mid = xc[idx]
+        left, right = idx[mid < xmid], idx[mid >= xmid]
+        if len(left) and len(right):
+            _ref_xycut_leaves(x0, y0, x1, y1, xc, yc, left, out)
+            _ref_xycut_leaves(x0, y0, x1, y1, xc, yc, right, out)
+            return
+    if cut_y:
+        mid = yc[idx]
+        top, bottom = idx[mid < ymid], idx[mid >= ymid]
+        if len(top) and len(bottom):
+            _ref_xycut_leaves(x0, y0, x1, y1, xc, yc, top, out)
+            _ref_xycut_leaves(x0, y0, x1, y1, xc, yc, bottom, out)
+            return
+    out.append(idx)
+
+
+# a coarse grid makes tied gaps, centers on a cut's midpoint and
+# duplicate boxes common; inf/nan are reachable (``1e400 0 Td``)
+_CUT_COORD = st.one_of(
+    st.sampled_from([0.0, 10.0, 20.0, 25.0, 30.0, 40.0, 50.0, 60.0, 100.0, 130.0, 400.0]),
+    st.floats(-50.0, 700.0),
+    st.sampled_from([float("inf"), float("-inf"), float("nan")]),
+)
+_CUT_SIZE = st.sampled_from([0.0, 5.0, 10.0, 20.0, 30.0, 60.0, -5.0, -30.0])  # < 0: x1 < x0
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.tuples(_CUT_COORD, _CUT_SIZE, _CUT_COORD, _CUT_SIZE), min_size=1, max_size=40))
+@example([(0.0, 10.0, 0.0, 10.0), (40.0, 10.0, 0.0, 10.0), (80.0, 10.0, 0.0, 10.0)])
+@example([(0.0, 10.0, 0.0, 10.0), (20.0, 10.0, 0.0, 10.0), (40.0, 10.0, 0.0, 10.0)])
+@example([(0.0, 10.0, 0.0, 10.0), (0.0, 10.0, 0.0, 10.0), (60.0, 10.0, 0.0, 10.0)])
+def test_sort_once_xycut_matches_recursive_reference(boxes):
+    """The iterative sort-once cut gives the recursive reference's leaves,
+    in order, on pages with tied gaps (first-largest wins), centers on the
+    midpoint (``<`` left, ``>=`` right), duplicate boxes and inf/nan."""
+    x0, w, y0, h = (np.array(c, dtype=np.float64) for c in zip(*boxes))
+    with np.errstate(all="ignore"):
+        x1, y1 = x0 + w, y0 + h
+        xc, yc = (x0 + x1) / 2.0, (y0 + y1) / 2.0
+        body = np.arange(x0.size)
+        want: list = []
+        _ref_xycut_leaves(x0, y0, x1, y1, xc, yc, body, want)
+        got: list = []
+        layout._xycut_leaves(
+            np.concatenate((x0, y0)), np.concatenate((x1, y1)),
+            np.concatenate((xc, xc)), np.concatenate((yc, yc)), body, got, float("inf"),
+        )
+    assert [sorted(leaf.tolist()) for leaf in got] == [leaf.tolist() for leaf in want]
 
 
 # ---------------------------------------------------------------------------

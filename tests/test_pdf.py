@@ -6,10 +6,12 @@ format, reference src/app/page.tsx:444-452)."""
 from __future__ import annotations
 
 import random
+import re
 import zlib
 
 import numpy as np
 import pytest
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ocr_spark.fixtures import generator as gen
@@ -463,6 +465,54 @@ def test_contents_array_naming_one_stream_many_times_is_stream_too_large_within_
     assert pdf_glyphs(small, max_stream_bytes=31) == ([], "stream_too_large")
 
 
+def _staircase_pdf(n: int) -> bytes:
+    """One page whose TJ shows ``n`` glyphs 25 pt apart: every XY-cut
+    node peels off one glyph, so the cut is ``n`` levels deep."""
+    content = zlib.compress(b"BT /F1 10 Tf 72 400 Td [" + b"(a) -2500 " * n + b"] TJ ET", 9)
+    return _handmade_pdf(
+        {
+            1: b"<< /Type /Catalog /Pages 2 0 R >>",
+            2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            3: b"<< /Type /Page /MediaBox [0 0 612 792] /Contents 4 0 R "
+            b"/Resources << /Font << /F1 5 0 R >> >> >>",
+            4: b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream" % (len(content), content),
+            5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Courier >>",
+        }
+    )
+
+
+def test_xycut_staircase_lays_out_without_recursion():
+    """3,000 glyphs one cut each, deeper than the interpreter's recursion
+    limit: the emitters give the page's text, one glyph per leaf."""
+    from ocr_spark.operators.pdf_ops import _emit_doc, _emit_pages
+
+    pdf = _staircase_pdf(3000)
+    assert len(pdf) < 1000
+    text = "\n".join(["a"] * 3000)
+    doc, pages = [], []
+    _emit_doc(doc, 7, pdf)
+    _emit_pages(pages, 7, pdf)
+    assert doc == [(7, text, 1, None)]
+    assert pages == [(7, 1, text, None)]
+
+
+def test_xycut_staircase_past_layout_budget_is_doc_too_large_within_deadline(deadline):
+    """The largest staircase ``MAX_DOC_WORK`` admits (one unit per
+    operator and per shown byte) costs quadratic cut work unless the
+    document's layout work is capped: ``doc_too_large``, one row."""
+    from ocr_spark.operators.pdf_ops import _emit_doc, _emit_pages
+
+    pdf = _staircase_pdf(pdfmod.MAX_DOC_WORK - 5)  # BT Tf Td TJ ET
+    assert len(pdf) < 30_000
+    doc, pages = [], []
+    with deadline(20.0):
+        _emit_doc(doc, 7, pdf)
+    assert doc == [(7, "", 0, "doc_too_large")]
+    with deadline(20.0):
+        _emit_pages(pages, 7, pdf)
+    assert pages == [(7, 0, "", "doc_too_large")]
+
+
 def test_work_budget_charges_one_unit_per_operator(monkeypatch):
     """Each operator costs exactly 1 unit of ``MAX_DOC_WORK``."""
     monkeypatch.setattr(pdfmod, "MAX_DOC_WORK", 10)
@@ -568,6 +618,32 @@ def test_vectorized_show_matches_scalar_p7_property():
         rows, err = pdf_glyphs(_one_page_pdf(content))
         assert err is None
         assert repr(rows) == repr(_p7_rows(font, size, x, y, elements))
+
+    prop()
+
+
+def test_chain_sums_match_sequential_sums_property():
+    """``_chain_sums`` gives every chain the left-to-right float sums of
+    a scalar loop, bit for bit, in one padded block or grouped by length
+    (one long chain among many short ones), with inf and nan included."""
+    from hypothesis import example, given, settings
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(st.lists(st.floats(), min_size=1, max_size=70), min_size=1, max_size=30))
+    @example([[1.5] * 64] + [[0.1, 0.2]] * 29)
+    def prop(chains):
+        v = np.array([x for c in chains for x in c] + [0.0])
+        bounds = np.cumsum([0] + [len(c) for c in chains])
+        with np.errstate(all="ignore"):
+            pdfmod._chain_sums(v, bounds)
+        want = []
+        for c in chains:
+            acc = c[0]
+            want.append(acc)
+            for x in c[1:]:
+                acc = acc + x
+                want.append(acc)
+        assert v[:-1].tobytes() == np.array(want).tobytes()
 
     prop()
 
@@ -727,6 +803,116 @@ def test_number_roundtrip_property():
         lx = pdfmod._Lexer(tok.encode("latin-1"))
         parsed = lx.value()
         assert float(parsed) == v  # exact round trip (repr or int form)
+
+    prop()
+
+
+_TEST_SKIP = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*")
+_TEST_REGULAR = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
+
+
+def _lexer_only_tokens(content: bytes):
+    """The content grammar read by ``_Lexer`` alone: an operand start
+    goes to ``_Lexer.value``, any other regular run is an operator, and a
+    delimiter that starts no operand is ``bad_content``."""
+    pos = 0
+    while True:
+        pos = _TEST_SKIP.match(content, pos).end()
+        if pos >= len(content):
+            return
+        c = content[pos]
+        if c in b"/(<[+-.0123456789":
+            lx = pdfmod._Lexer(content, pos)
+            try:
+                v = lx.value()
+            except pdfmod.PdfError as e:
+                raise pdfmod.PdfError("bad_content", str(e))
+            pos = lx.pos
+            yield v
+        elif c in b")>]{}":
+            raise pdfmod.PdfError("bad_content", f"stray delimiter at {pos}")
+        else:
+            end = _TEST_REGULAR.match(content, pos).end()
+            yield content[pos:end].decode("latin-1")
+            pos = end
+
+
+def _typed(v):
+    """A token with its type spelled out (Name vs str, int vs float)."""
+    if isinstance(v, list):
+        return ("list", [_typed(e) for e in v])
+    if isinstance(v, tuple):
+        return ("ref", v)
+    return (type(v).__name__, v)
+
+
+def _tokenize(fn, content: bytes):
+    """Every token, then the error that stopped the stream (or None)."""
+    toks: list = []
+    try:
+        for t in fn(content):
+            toks.append(_typed(t))
+    except pdfmod.PdfError as e:
+        return toks, e.code
+    return toks, None
+
+
+@st.composite
+def _content_streams(draw):
+    """Random content streams over the whole P3 token grammar, glued or
+    spaced: operators, ints, reals with exponents, ``N G R`` refs and
+    near misses, names, literal strings with escapes and nested parens,
+    hex strings, nested arrays, comments and stray delimiters."""
+    ints = st.integers(-10**6, 10**6).map(lambda v: str(v).encode())
+    reals = st.one_of(
+        st.floats(allow_nan=False, allow_infinity=False).map(lambda v: repr(v).encode()),
+        st.sampled_from([b".5", b"5.", b"-.5e-3", b"+1E5", b"00.5", b"1e", b"1.2.3", b"+", b"-", b".", b"1e400", b"5e+"]),
+    )
+    refs = st.tuples(st.integers(0, 99), st.integers(0, 9)).flatmap(
+        lambda ng: st.sampled_from([
+            b"%d %d R" % ng, b"%d %dR" % ng, b"%d %d Rx" % ng, b"%d %d.0 R" % ng,
+            b"%d %de1 R" % ng, b"%d.0 %d R" % ng, b"%d %%c\n %d R" % ng, b"%d %d R]" % ng,
+        ])
+    )
+    ops = st.sampled_from([b"Tj", b"TJ", b"Td", b"BT", b"ET", b"'", b"T*", b"R", b"RG", b"true", b"null", b"e", b"d0", b"\x0bq"])
+    names = st.binary(max_size=6).map(lambda b: b"/" + bytes(c for c in b if c not in b"\x00\t\n\x0c\r ()<>[]{}/%"))
+    lits = st.one_of(
+        st.tuples(st.binary(max_size=12), st.integers(0, 2**31)).map(
+            lambda t: gen._pdf_lit(t[0], random.Random(t[1])).encode("latin-1")
+        ),
+        st.sampled_from([b"(a(b)c)", b"(a\\)b)", b"(ab", b"(a\\", b"(\\(\\(", b"()", b"(\\\r\nx)", b"(\\0053)"]),
+    )
+    hexes = st.one_of(
+        st.binary(max_size=8).map(lambda b: b"<" + b.hex().encode() + b">"),
+        st.sampled_from([b"<4 1 4>", b"<abc>", b"<zz>", b"<41", b"<>", b"<< /A 1 >>", b">>"]),
+    )
+    strays = st.sampled_from([b")", b">", b"]", b"{", b"}", b"[", b"%comment\n", b"%tail"])
+    leaf = st.one_of(ops, ints, reals, refs, names, lits, hexes, strays)
+    tokens = st.recursive(
+        leaf, lambda inner: st.lists(inner, max_size=4).map(lambda xs: b"[" + b" ".join(xs) + b"]"),
+        max_leaves=12,
+    )
+    seps = st.sampled_from([b" ", b"\n", b"\r\n", b"\t", b"\x00", b"\x0c", b"", b"  "])
+    parts = draw(st.lists(tokens, max_size=12))
+    out = b""
+    for p in parts:
+        out += draw(seps) + p
+    return out + draw(seps)
+
+
+def test_content_tokens_match_lexer_only_grammar_property():
+    """``_content_tokens`` yields exactly what ``_Lexer`` alone reads from
+    any content stream, types included, and stops with the same
+    ``bad_content`` after the same tokens."""
+    from hypothesis import example, given, settings
+
+    @settings(max_examples=400, deadline=None)
+    @given(_content_streams())
+    @example(b"1 0 R 2 0 R Tj")
+    @example(b"BT /F1 10 Tf [(a) -25 (b\\351)] TJ 1 %c\n0 R ET")
+    @example(b"5Tj 1.2.3 [ [1 (x)] true ] <41 42> << /K 1 >> ]")
+    def prop(content):
+        assert _tokenize(pdfmod._content_tokens, content) == _tokenize(_lexer_only_tokens, content)
 
     prop()
 

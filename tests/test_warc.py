@@ -2,8 +2,13 @@
 
 from __future__ import annotations
 
+import hashlib
+import os
+import time
+
 from pyspark.sql import functions as F
 
+from ocr_spark.fixtures import generator as gen
 from ocr_spark.operators.extract import extract_pages
 from ocr_spark.sources.warc import parse_warc_bytes, read_warc, warc_lineage
 
@@ -179,3 +184,19 @@ def test_warc_byte_flip_fuzz_within_deadline(tiny_dir, deadline):
                         rows, bad = parse_warc_bytes(bytes(b), name, mode)
                     assert bad >= 0 and all(r["warc_file"] == name for r in rows)
 
+
+
+def test_warc_and_wet_fixtures_do_not_depend_on_the_clock(tmp_path, monkeypatch):
+    """Regenerating a tier at another wall-clock time writes the same
+    ``.warc.gz`` and ``.wet.gz`` bytes: the gzip header's mtime is pinned."""
+    digests = []
+    for i, now in enumerate((1_000_000_000.0, 1_700_000_000.0)):
+        monkeypatch.setattr(time, "time", lambda now=now: now)
+        out = tmp_path / f"run{i}"
+        gen.generate_tier("tiny", str(out))
+        digests.append({
+            f"{sub}/{name}": hashlib.sha256((out / sub / name).read_bytes()).hexdigest()
+            for sub in ("warc", "wet")
+            for name in sorted(os.listdir(out / sub))
+        })
+    assert digests[0] and digests[0] == digests[1]
