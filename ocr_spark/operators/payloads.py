@@ -42,12 +42,15 @@ class BatchStep:
     repeated for every row the input row emitted.  ``keeps`` names the
     output columns copied unchanged from the input row that emitted them,
     so a value computed JVM-side from ``src`` on one of them (a bucket id)
-    holds for the output rows.  ``written`` is filled by the sink that ran
-    the step: the per-file metadata its write returned."""
+    holds for the output rows.  ``write`` holds a sink's write plan built
+    ahead, ``(sink, token, plan)``, until the write that runs it takes it;
+    ``written`` is filled by the sink that ran the step: the per-file
+    metadata its write returned."""
 
     src: DataFrame
     fn: Callable
     keeps: tuple[str, ...]
+    write: tuple | None = None
     written: list | None = None
 
 

@@ -9,6 +9,13 @@ table is identical to an uninterrupted run (exactly-once visible rows per
 url; the per-group MERGE makes replays of a half-processed group
 idempotent, reference K3 semantics).
 
+A group is split into a plan half (``_plan_group``: the input slice, the
+transform and the output table's write plan, no Spark job) and a run half
+(``_run_group``: the merge's one job, the commit, the counters).  With
+``max_concurrent=1`` one group job runs at a time, in group order, and a
+planner thread builds the next group's plan while the current group's job
+runs, so the driver does not plan in the gap between jobs.
+
 Lineage counters — docs, docs errored, text chars per commit — come from
 the file metadata the group's incoming write returns (rows, errors and
 text characters per file, counted by the write tasks that also run the
@@ -20,12 +27,15 @@ so a retried or speculative task never counts twice.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 from ocr_spark.operators.extract import extract_pages
 from ocr_spark.operators.payloads import batch_step
 from ocr_spark.plans.partitioning import salted_repartition
-from ocr_spark.sources.icelite import IceliteTable, bucket_expr
+from ocr_spark.sources.icelite import IceliteTable
 
 
 class ExtractionPipeline:
@@ -99,13 +109,23 @@ class ExtractionPipeline:
         if isinstance(pages, IceliteTable):
             self._check_layout(pages, "input")
             return pages.read(spark, buckets=group)
-        return pages.filter(bucket_expr(self.key_col, self.n_buckets).isin(group))
+        return pages.filter(self.out.bucket_id.isin(group))
 
-    def _run_group(self, pages, group: list[int], spark=None) -> dict:
+    def _plan_group(self, pages, spark, group: list[int]) -> DataFrame:
+        """The plan half of a group: its input slice, the transform, and
+        the output table's write plan for it, built ahead and kept on the
+        transform's batch step (``IceliteTable.plan_write``).  Runs no
+        Spark job and writes no file."""
         part = self._group_input(pages, spark, group)
         if self.salt:
             part = salted_repartition(part, self.key_col, self.n_buckets, self.salt)
         extracted = self.transform(part)
+        self.out.plan_write(extracted)
+        return extracted
+
+    def _run_group(self, extracted: DataFrame, group: list[int]) -> dict:
+        """The run half of a group: the merge (its one job, then the
+        commit) and the lineage counters its write counted."""
         sid = self.out.merge(
             extracted,
             metadata={"bucket_group": group, "counters": {}},
@@ -139,10 +159,17 @@ class ExtractionPipeline:
         property test): raises after that many group commits (serial mode).
         ``force=True`` reprocesses every group (the reference's re-process
         path, C3: the MERGE overwrites prior rows per key, page.tsx:183-187).
-        ``max_concurrent>1`` drives several bucket-group jobs at once —
-        groups touch disjoint buckets, so their merges commit concurrently
-        (icelite validates disjointness); keeps a wide cluster busy through
-        each group's commit tail.
+        ``max_concurrent=1`` runs one group job at a time, in group order,
+        with every merge, commit and counter update on the calling thread;
+        one planner thread builds the next group's plan (``_plan_group``)
+        while the current group's job runs, so the driver's planning is
+        off the path between jobs.  ``max_concurrent>1`` drives several
+        bucket-group jobs at once, each thread planning and then running
+        its group — groups touch disjoint buckets, so their merges commit
+        concurrently (icelite validates disjointness); keeps a wide cluster
+        busy through each group's commit tail.  Either way the other
+        threads run under the caller's Spark local properties (job group,
+        scheduler pool, job description).
         """
         if isinstance(pages, IceliteTable) and spark is None:
             raise ValueError("pass spark= when pages is an IceliteTable")
@@ -156,19 +183,34 @@ class ExtractionPipeline:
             stats["errors"] += got["errors"]
             stats["text_chars"] += got["text_chars"]
 
+        session = spark if spark is not None else pages.sparkSession
+
+        def submit(pool, fn, *args):
+            # wrapped per call: each call gets its own copy of the caller's
+            # local properties, as calls sharing one copy would overwrite
+            # each other's SQL execution id in it
+            return pool.submit(inheritable_thread_target(session)(fn), *args)
+
         groups = self.bucket_groups() if force else self.remaining_groups()
-        if max_concurrent <= 1:
+        if max_concurrent > 1:
+
+            def plan_and_run(group):
+                return self._run_group(self._plan_group(pages, spark, group), group)
+
+            with ThreadPoolExecutor(max_concurrent) as pool:
+                for running in [submit(pool, plan_and_run, g) for g in groups]:
+                    tally(running.result())
+            return stats
+
+        with ThreadPoolExecutor(1) as planner:
+            ahead = submit(planner, self._plan_group, pages, spark, groups[0]) if groups else None
             for i, group in enumerate(groups):
                 if fail_after_groups is not None and i >= fail_after_groups:
                     raise RuntimeError(
                         f"simulated crash after {fail_after_groups} groups"
                     )
-                tally(self._run_group(pages, group, spark))
-            return stats
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_concurrent) as ex:
-            for got in ex.map(lambda g: self._run_group(pages, g, spark), groups):
-                tally(got)
+                extracted = ahead.result()
+                if i + 1 < len(groups):
+                    ahead = submit(planner, self._plan_group, pages, spark, groups[i + 1])
+                tally(self._run_group(extracted, group))
         return stats

@@ -42,10 +42,11 @@ import sys
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any, Callable
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -255,6 +256,13 @@ class IceliteTable:
         self._lock = threading.Lock()
         self._record()
 
+    @cached_property
+    def bucket_id(self) -> Column:
+        """``bucket_expr`` on this table's layout, built once per table: each
+        build is several py4j calls.  Not shared wider: a Column holds a
+        JVM reference that dies with its session."""
+        return bucket_expr(self.key_col, self.n_buckets)
+
     @classmethod
     def open(cls, root: str, key_col: str = "url", n_buckets: int = 16) -> "IceliteTable":
         """The table at ``root`` with the layout its record stores;
@@ -352,6 +360,34 @@ class IceliteTable:
         return sid
 
     # ----------------------------------------------------------------- write
+    def plan_write(self, df: DataFrame, token: str | None = None) -> str:
+        """The plan half of a write (``_write_data`` runs it): build
+        ``df``'s write DataFrame under ``token`` (a fresh one if None),
+        force its physical plan, and keep both on ``df``'s batch step for
+        the write that runs it; returns the token.  A plan this table
+        already built for ``df`` is reused unless ``token`` names another.
+        Planning runs no job and writes no file, so a caller can build the
+        next write's plan while a job runs (``ExtractionPipeline.run``)."""
+        step = batch_step(df)
+        if step.write is not None and step.write[0] is self and token in (None, step.write[1]):
+            return step.write[1]
+        token = token or f"w-{uuid.uuid4().hex[:12]}"
+        root = os.path.abspath(self.root)
+        src, fn = step.src, step.fn
+        if self.key_col not in step.keeps or df.is_cached:
+            src, fn = df, same_batch
+
+        def write(batches):
+            carry = (BUCKET_COL,)
+            return write_bucket_files((fn(b, carry) for b in batches), root, token)
+
+        plan = src.withColumn(BUCKET_COL, self.bucket_id).mapInArrow(write, WRITTEN_FILES_SCHEMA)
+        # analysis, optimization and physical planning happen here, not in
+        # the write's collect, which reuses this query execution
+        plan._jdf.queryExecution().executedPlan()
+        step.write = (self, token, plan)
+        return token
+
     def _write_data(self, df: DataFrame, token: str) -> tuple[dict, dict]:
         """Write df bucket-partitioned under data/<token>; returns
         (files: bucket->paths, file_rows: path->rows).
@@ -370,7 +406,10 @@ class IceliteTable:
         collects that metadata, records it on the step (``written``) and
         commits it, so a write is one Spark job.  A write of T tasks
         leaves up to T files per bucket — ``compact`` folds them back to
-        one.  A cached ``df`` is written from its cache.
+        one.  A cached ``df`` is written from its cache.  The write
+        DataFrame comes from ``plan_write``: the plan built ahead for
+        ``df`` under ``token`` if there is one (taken off the step, so it
+        runs once), else one built now.
 
         Workers unpickle ``write_bucket_files`` by reference, importing
         this module: keep it free of ``ocr_spark.plans`` (the
@@ -382,21 +421,10 @@ class IceliteTable:
         speculative task attempts never collide; files of an attempt that did not win are
         never returned, so no snapshot references them and
         ``remove_orphan_files`` reaps them."""
-        root = os.path.abspath(self.root)
+        self.plan_write(df, token)
         step = batch_step(df)
-        src, fn = step.src, step.fn
-        if self.key_col not in step.keeps or df.is_cached:
-            src, fn = df, same_batch
-
-        def write(batches):
-            carry = (BUCKET_COL,)
-            return write_bucket_files((fn(b, carry) for b in batches), root, token)
-
-        step.written = (
-            src.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets))
-            .mapInArrow(write, WRITTEN_FILES_SCHEMA)
-            .collect()
-        )
+        plan, step.write = step.write[2], None
+        step.written = plan.collect()
         files: dict[str, list[str]] = {}
         file_rows: dict[str, int] = {}
         for f in sorted(step.written):
@@ -444,7 +472,7 @@ class IceliteTable:
         is validated against the table schema first (SchemaMismatchError,
         no files written)."""
         self._validate_or_record_schema(df)
-        files, file_rows = self._write_data(df, f"w-{uuid.uuid4().hex[:12]}")
+        files, file_rows = self._write_data(df, self.plan_write(df))
         return self._commit(None, "append", files, file_rows, metadata)
 
     def build_or_reuse(
@@ -529,7 +557,7 @@ class IceliteTable:
             return self.append(df, metadata)
         self._validate_or_record_schema(df)
 
-        token = f"w-{uuid.uuid4().hex[:12]}"
+        token = self.plan_write(df)
         files, file_rows = self._write_data(df, token)
         if touched_buckets is not None:
             stray = sorted(set(files) - {str(b) for b in touched_buckets})
@@ -630,7 +658,7 @@ class IceliteTable:
         # one task per bucket, so the task-side writer makes one file each
         rewritten = self.read(
             spark, buckets=[int(b) for b in fat], snapshot_id=start_head.snapshot_id
-        ).repartition(bucket_expr(self.key_col, self.n_buckets))
+        ).repartition(self.bucket_id)
         files, file_rows = self._write_data(rewritten, f"compact-{uuid.uuid4().hex[:12]}")
         meta = {"compacted_buckets": sorted(fat)}
         return self._commit(start_head, "compact", files, file_rows, meta, replaced=fat)

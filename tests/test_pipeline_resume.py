@@ -4,6 +4,8 @@ run, exactly-once visible rows per url."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -193,6 +195,123 @@ def test_parallel_groups_match_serial(spark, pages, tmp_path):
         if "bucket_group" in s.metadata
     ]
     assert sum(c["docs"] for c in counters) == pages.count()
+
+
+def test_concurrent_groups_run_in_callers_job_group(spark, pages, tmp_path):
+    """Groups driven on pool threads (``max_concurrent>1``) run their jobs
+    under the caller's local properties: every group job lands in the
+    caller's job group, so cancelling it, scheduler pools and job
+    descriptions reach them."""
+    out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
+    sc = spark.sparkContext
+    job_group = "pipeline-concurrent-groups"
+    sc.setJobGroup(job_group, "concurrent pipeline groups")
+    try:
+        stats = ExtractionPipeline(out, n_buckets=8, group_size=2).run(
+            pages, max_concurrent=2
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["groups"] == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(job_group)) == 4
+
+
+class _LoggedTable(IceliteTable):
+    """An output table that logs each commit and can hold a merge open
+    (``after_merge``) until the test lets it return."""
+
+    def __init__(self, root: str, log: list, after_merge=None):
+        super().__init__(root, key_col="url", n_buckets=8)
+        self.log = log
+        self.after_merge = after_merge
+
+    def merge(self, df, metadata=None, touched_buckets=None):
+        sid = super().merge(df, metadata, touched_buckets)
+        if self.after_merge is not None:
+            self.after_merge(metadata["bucket_group"])
+        return sid
+
+    def _commit(self, *args, **kwargs):
+        sid = super()._commit(*args, **kwargs)
+        self.log.append("commit")
+        return sid
+
+
+def test_next_group_planned_while_group_runs(spark, pages, tmp_path):
+    """Group N+1's transform is called before group N's merge returns:
+    each merge waits for the next group's transform call, which a loop
+    that plans a group only after the previous one committed never makes."""
+    pipe = ExtractionPipeline(_LoggedTable(str(tmp_path / "out"), []), n_buckets=8, group_size=2)
+    groups = pipe.bucket_groups()
+    planned = [threading.Event() for _ in groups]
+    calls, waited = [], []
+
+    def transform(part):
+        calls.append(part)
+        planned[len(calls) - 1].set()
+        return extract_pages(part)
+
+    def after_merge(group):
+        i = groups.index(group)
+        if i + 1 < len(groups):
+            waited.append(planned[i + 1].wait(timeout=60))
+
+    pipe.transform = transform
+    pipe.out.after_merge = after_merge
+    stats = pipe.run(pages)
+    assert stats["groups"] == len(groups) and waited == [True] * (len(groups) - 1)
+
+
+def test_group_jobs_never_overlap(spark, pages, tmp_path, monkeypatch):
+    """Planning ahead runs no job: the group writes' collects never nest,
+    and each starts after the previous group's commit."""
+    log: list = []
+    df_type = type(pages)
+    collect = df_type.collect
+
+    def logged_collect(self):
+        log.append("job")
+        try:
+            return collect(self)
+        finally:
+            log.append("end")
+
+    monkeypatch.setattr(df_type, "collect", logged_collect)
+    pipe = ExtractionPipeline(_LoggedTable(str(tmp_path / "out"), log), n_buckets=8, group_size=2)
+    assert pipe.run(pages)["groups"] == 4
+    assert log == ["job", "end", "commit"] * 4
+
+
+def test_transform_failure_keeps_earlier_groups(spark, pages, tmp_path):
+    """A transform that raises on group k (while group k-1 runs) leaves
+    exactly the groups before k committed; the error propagates, and no
+    data file is orphaned, because planning writes none."""
+    out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
+    pipe = ExtractionPipeline(out, n_buckets=8, group_size=2)
+    calls = []
+
+    def transform(part):
+        calls.append(part)
+        if len(calls) == 3:
+            raise ValueError("transform failed on group 2")
+        return extract_pages(part)
+
+    pipe.transform = transform
+    with pytest.raises(ValueError, match="group 2"):
+        pipe.run(pages)
+    assert out.committed_groups() == pipe.bucket_groups()[:2]
+    assert out.remove_orphan_files() == []
+
+
+def test_simulated_crash_leaves_no_orphans(spark, pages, tmp_path):
+    """``fail_after_groups=2`` still leaves 2 committed groups, and the
+    group planned ahead of the crash wrote no file."""
+    out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
+    pipe = ExtractionPipeline(out, n_buckets=8, group_size=2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(pages, fail_after_groups=2)
+    assert out.committed_groups() == pipe.bucket_groups()[:2]
+    assert out.remove_orphan_files() == []
 
 
 def test_table_input_prunes_files_physically(spark, pages, tmp_path):
