@@ -43,9 +43,9 @@ class BatchStep:
     output columns copied unchanged from the input row that emitted them,
     so a value computed JVM-side from ``src`` on one of them (a bucket id)
     holds for the output rows.  ``write`` holds a sink's write plan built
-    ahead, ``(sink, token, plan)``, until the write that runs it takes it;
-    ``written`` is filled by the sink that ran the step: the per-file
-    metadata its write returned."""
+    ahead, ``(sink, plan)``, until the write that runs it takes it;
+    ``written`` is filled by the sink that ran the step: the rows its
+    write tasks returned, one per file."""
 
     src: DataFrame
     fn: Callable

@@ -17,12 +17,13 @@ planner thread builds the next group's plan while the current group's job
 runs, so the driver does not plan in the gap between jobs.
 
 Lineage counters — docs, docs errored, text chars per commit — come from
-the file metadata the group's incoming write returns (rows, errors and
-text characters per file, counted by the write tasks that also run the
-extraction step; see ``IceliteTable._write_data``), never from the
-anti-join survivors, and land in the snapshot metadata alongside per-file
-row counts.  Only the attempts whose metadata the driver collected count,
-so a retried or speculative task never counts twice.
+the rows the group's incoming write returns, one per file (rows, errors
+and text characters, counted by the write tasks that also run the
+extraction step; see ``IceliteTable._write_data``) — the same rows the
+commit lists in the manifest — never from the anti-join survivors, and
+land in the snapshot metadata alongside per-file row counts.  Only the
+attempts whose rows the driver collected count, so a retried or
+speculative task never counts twice.
 """
 
 from __future__ import annotations
@@ -145,7 +146,6 @@ class ExtractionPipeline:
     def run(
         self,
         pages,
-        fail_after_groups: int | None = None,
         force: bool = False,
         max_concurrent: int = 1,
         spark=None,
@@ -155,8 +155,6 @@ class ExtractionPipeline:
         ``pages`` is a DataFrame OR an ``IceliteTable`` (pass ``spark`` with
         a table) — table input gets manifest-level file pruning per group
         (see ``_group_input``).
-        ``fail_after_groups`` simulates a mid-job crash (for the resume
-        property test): raises after that many group commits (serial mode).
         ``force=True`` reprocesses every group (the reference's re-process
         path, C3: the MERGE overwrites prior rows per key, page.tsx:183-187).
         ``max_concurrent=1`` runs one group job at a time, in group order,
@@ -205,10 +203,6 @@ class ExtractionPipeline:
         with ThreadPoolExecutor(1) as planner:
             ahead = submit(planner, self._plan_group, pages, spark, groups[0]) if groups else None
             for i, group in enumerate(groups):
-                if fail_after_groups is not None and i >= fail_after_groups:
-                    raise RuntimeError(
-                        f"simulated crash after {fail_after_groups} groups"
-                    )
                 extracted = ahead.result()
                 if i + 1 < len(groups):
                     ahead = submit(planner, self._plan_group, pages, spark, groups[i + 1])

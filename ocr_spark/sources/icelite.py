@@ -31,6 +31,7 @@ Layout::
       _table.json                # the table record: key_col, n_buckets, schema
       _snapshots/<id>.json       # manifest chain (parent_id links)
       data/<token>/__bucket=<k>/part-<uuid>.parquet   # one token per write
+                                 # (a merge's survivors get their own)
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ import shutil
 import sys
 import uuid
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from functools import cached_property
 from typing import Any, Callable
 
@@ -216,29 +217,11 @@ class Snapshot:
     metadata: dict[str, Any] = field(default_factory=dict)
 
     def to_json(self) -> str:
-        return json.dumps(
-            {
-                "snapshot_id": self.snapshot_id,
-                "parent_id": self.parent_id,
-                "operation": self.operation,
-                "files": self.files,
-                "file_rows": self.file_rows,
-                "metadata": self.metadata,
-            },
-            indent=1,
-        )
+        return json.dumps(asdict(self), indent=1)
 
     @staticmethod
     def from_json(s: str) -> "Snapshot":
-        d = json.loads(s)
-        return Snapshot(
-            snapshot_id=d["snapshot_id"],
-            parent_id=d["parent_id"],
-            operation=d["operation"],
-            files=d["files"],
-            file_rows=d["file_rows"],
-            metadata=d.get("metadata", {}),
-        )
+        return Snapshot(**json.loads(s))
 
 
 class IceliteTable:
@@ -322,8 +305,7 @@ class IceliteTable:
         self,
         start: Snapshot | None,
         operation: str,
-        files: dict[str, list[str]],
-        file_rows: dict[str, int],
+        written: list,
         metadata: dict | None,
         replaced=(),
     ) -> int:
@@ -332,9 +314,11 @@ class IceliteTable:
         ``replaced`` bucket changed since ``start`` (the head the write
         read: committing over a concurrent writer's change to that bucket
         would silently drop it), keeps every other bucket's files by
-        reference, drops the replaced buckets' files, adds ``files``, and
-        writes the manifest, then ``_HEAD`` — the atomic commit point.
-        Writers of disjoint buckets thus commit in any order."""
+        reference, drops the replaced buckets' files, adds the ``written``
+        files (the rows ``_write_data`` returned, in order) with their row
+        counts, and writes the manifest, then ``_HEAD`` — the atomic
+        commit point.  Writers of disjoint buckets thus commit in any
+        order."""
         with self._lock:
             head = self.snapshot()
             for b in replaced:
@@ -347,9 +331,9 @@ class IceliteTable:
                 b: list(ps) for b, ps in (head.files if head else {}).items() if b not in replaced
             }
             new_rows = {p: head.file_rows[p] for ps in new_files.values() for p in ps}
-            for b, ps in files.items():
-                new_files.setdefault(b, []).extend(ps)
-            new_rows.update(file_rows)
+            for f in written:
+                new_files.setdefault(str(f.bucket), []).append(f.path)
+                new_rows[f.path] = f.rows
             sid = head.snapshot_id + 1 if head else 0
             snap = Snapshot(
                 sid, head.snapshot_id if head else None, operation, new_files, new_rows,
@@ -360,18 +344,18 @@ class IceliteTable:
         return sid
 
     # ----------------------------------------------------------------- write
-    def plan_write(self, df: DataFrame, token: str | None = None) -> str:
+    def plan_write(self, df: DataFrame) -> None:
         """The plan half of a write (``_write_data`` runs it): build
-        ``df``'s write DataFrame under ``token`` (a fresh one if None),
-        force its physical plan, and keep both on ``df``'s batch step for
-        the write that runs it; returns the token.  A plan this table
-        already built for ``df`` is reused unless ``token`` names another.
-        Planning runs no job and writes no file, so a caller can build the
-        next write's plan while a job runs (``ExtractionPipeline.run``)."""
+        ``df``'s write DataFrame under a fresh token — the write's
+        ``data/<token>/`` directory — force its physical plan, and keep it
+        on ``df``'s batch step for the write that runs it.  A plan this
+        table already built for ``df`` is kept.  Planning runs no job and
+        writes no file, so a caller can build the next write's plan while
+        a job runs (``ExtractionPipeline.run``)."""
         step = batch_step(df)
-        if step.write is not None and step.write[0] is self and token in (None, step.write[1]):
-            return step.write[1]
-        token = token or f"w-{uuid.uuid4().hex[:12]}"
+        if step.write is not None and step.write[0] is self:
+            return
+        token = f"w-{uuid.uuid4().hex[:12]}"
         root = os.path.abspath(self.root)
         src, fn = step.src, step.fn
         if self.key_col not in step.keeps or df.is_cached:
@@ -385,12 +369,12 @@ class IceliteTable:
         # analysis, optimization and physical planning happen here, not in
         # the write's collect, which reuses this query execution
         plan._jdf.queryExecution().executedPlan()
-        step.write = (self, token, plan)
-        return token
+        step.write = (self, plan)
 
-    def _write_data(self, df: DataFrame, token: str) -> tuple[dict, dict]:
-        """Write df bucket-partitioned under data/<token>; returns
-        (files: bucket->paths, file_rows: path->rows).
+    def _write_data(self, df: DataFrame) -> list:
+        """Write df bucket-partitioned under data/<token>; returns the
+        rows the write tasks returned, one per file, sorted — the record
+        ``_commit`` builds the manifest from.
 
         The Iceberg writer protocol, in one Python pass per task: the
         bucket column is computed JVM-side on the rows of ``df``'s batch
@@ -403,34 +387,29 @@ class IceliteTable:
         into one snappy parquet file per bucket it holds, at
         ``data/<token>/__bucket=<b>/part-<uuid>.parquet``, and returns
         only ``(bucket, path, rows, errors, text_chars)``; the driver
-        collects that metadata, records it on the step (``written``) and
-        commits it, so a write is one Spark job.  A write of T tasks
+        collects those rows, records them on the step (``written``) and
+        commits them, so a write is one Spark job.  A write of T tasks
         leaves up to T files per bucket — ``compact`` folds them back to
         one.  A cached ``df`` is written from its cache.  The write
         DataFrame comes from ``plan_write``: the plan built ahead for
-        ``df`` under ``token`` if there is one (taken off the step, so it
-        runs once), else one built now.
+        ``df`` if there is one (taken off the step, so it runs once), else
+        one built now.
 
         Workers unpickle ``write_bucket_files`` by reference, importing
         this module: keep it free of ``ocr_spark.plans`` (the
         ``operators/payloads.py`` leaf rule).
 
-        The token is unique per commit attempt (a merge writes its incoming
-        rows and its anti-join survivors under one), and every file name
+        The token is unique per write (a merge's anti-join survivors are
+        a write of their own, in their own directory), and every file name
         carries a fresh uuid, so concurrent writers and retried or
-        speculative task attempts never collide; files of an attempt that did not win are
-        never returned, so no snapshot references them and
+        speculative task attempts never collide; files of an attempt that
+        did not win are never returned, so no snapshot references them and
         ``remove_orphan_files`` reaps them."""
-        self.plan_write(df, token)
+        self.plan_write(df)
         step = batch_step(df)
-        plan, step.write = step.write[2], None
-        step.written = plan.collect()
-        files: dict[str, list[str]] = {}
-        file_rows: dict[str, int] = {}
-        for f in sorted(step.written):
-            files.setdefault(str(f.bucket), []).append(f.path)
-            file_rows[f.path] = f.rows
-        return files, file_rows
+        plan, step.write = step.write[1], None
+        step.written = sorted(plan.collect())
+        return step.written
 
     # ---------------------------------------------------------------- schema
     def table_schema(self) -> dict[str, str] | None:
@@ -472,8 +451,7 @@ class IceliteTable:
         is validated against the table schema first (SchemaMismatchError,
         no files written)."""
         self._validate_or_record_schema(df)
-        files, file_rows = self._write_data(df, self.plan_write(df))
-        return self._commit(None, "append", files, file_rows, metadata)
+        return self._commit(None, "append", self._write_data(df), metadata)
 
     def build_or_reuse(
         self,
@@ -541,8 +519,10 @@ class IceliteTable:
         the files just written — so an expensive upstream (the extraction
         transform) is never recomputed for the key set.  Only the buckets
         those files land in can hold a matched key: their old files are
-        anti-joined and the survivors written by the same writer; every
-        other bucket, ``touched_buckets`` included, keeps its files.
+        anti-joined and the survivors written by the same writer, as a
+        write of their own (their own ``data/<token>/``); the commit lists
+        ``df``'s files, then the survivors'.  Every other bucket,
+        ``touched_buckets`` included, keeps its files.
         ``touched_buckets`` (the pipeline's bucket group) is the bucket set
         the caller promises ``df`` stays inside; a row outside it is a
         typed error.
@@ -557,10 +537,10 @@ class IceliteTable:
             return self.append(df, metadata)
         self._validate_or_record_schema(df)
 
-        token = self.plan_write(df)
-        files, file_rows = self._write_data(df, token)
+        written = self._write_data(df)
+        buckets = dict.fromkeys(str(f.bucket) for f in written)  # in file order
         if touched_buckets is not None:
-            stray = sorted(set(files) - {str(b) for b in touched_buckets})
+            stray = sorted(buckets.keys() - {str(b) for b in touched_buckets})
             if stray:
                 # under-covering touched_buckets would APPEND these buckets'
                 # rows without anti-joining their old keys — duplicate keys,
@@ -570,7 +550,7 @@ class IceliteTable:
                     f"{sorted(touched_buckets)} — the caller's bucket set "
                     "under-covers the incoming batch"
                 )
-        old_paths = [p for b in files for p in start_head.files.get(b, [])]
+        old_paths = [p for b in buckets for p in start_head.files.get(b, [])]
         if old_paths:
             # both reads take df's (validated) schema: no inference job
             def scan(paths, schema):
@@ -578,7 +558,7 @@ class IceliteTable:
                     *[os.path.join(self.root, p) for p in paths]
                 )
 
-            keys = scan(list(file_rows), T.StructType([df.schema[self.key_col]]))
+            keys = scan([f.path for f in written], T.StructType([df.schema[self.key_col]]))
             # no forced broadcast on the key set: a bucket-group merge at
             # the 100 TB design point carries ~10^8 distinct keys (multi-GB
             # — over Spark's broadcast hard limit and the driver heap);
@@ -586,13 +566,11 @@ class IceliteTable:
             # the key relation is actually small, so the hint only removed
             # the planner's ability to fall back
             keep = scan(old_paths, df.schema).join(keys.distinct(), self.key_col, "left_anti")
-            kept, kept_rows = self._write_data(keep, token)
-            for b, paths in kept.items():
-                files[b].extend(paths)
-            file_rows.update(kept_rows)
+            # a new list: df's step keeps only df's own files
+            written = written + self._write_data(keep)
         # the anti-join read the written buckets' old state: they are the
         # ones a concurrent writer must not have changed
-        return self._commit(start_head, "merge", files, file_rows, metadata, replaced=set(files))
+        return self._commit(start_head, "merge", written, metadata, replaced=buckets)
 
     # ------------------------------------------------------------------ read
     def read(
@@ -659,9 +637,8 @@ class IceliteTable:
         rewritten = self.read(
             spark, buckets=[int(b) for b in fat], snapshot_id=start_head.snapshot_id
         ).repartition(self.bucket_id)
-        files, file_rows = self._write_data(rewritten, f"compact-{uuid.uuid4().hex[:12]}")
         meta = {"compacted_buckets": sorted(fat)}
-        return self._commit(start_head, "compact", files, file_rows, meta, replaced=fat)
+        return self._commit(start_head, "compact", self._write_data(rewritten), meta, replaced=fat)
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
         """Iceberg-style maintenance: drop history older than the last

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ocr_spark.operators.extract import extract_pages
+from ocr_spark.operators.payloads import batch_step
 from ocr_spark.schemas import PAGES_SCHEMA
 from ocr_spark.sources.icelite import IceliteTable
 
@@ -29,6 +30,12 @@ def run_stream_once(
     """Drain all currently-available files (availableNow) through the
     extraction stage into the merge sink; returns processed row count.
 
+    Each micro-batch is one merge, so one write job (plus the anti-join's
+    when it lands in written buckets); the row count is what the merge's
+    write tasks counted, so the batch runs once and is never cached.  An
+    empty micro-batch (only an empty input file makes one) commits a
+    snapshot that changes no file, as an empty pipeline group does.
+
     ``schema``/``transform`` generalize the ingest beyond the html branch
     (same pattern as ExtractionPipeline): e.g. schema ``doc_id long, pdf
     binary`` with ``pdf_ops.pdf_doc_records`` streams a landing directory
@@ -42,17 +49,8 @@ def run_stream_once(
     total = {"n": 0}
 
     def sink(batch_df, epoch_id: int) -> None:
-        # persist: the extraction step is the dominant cost and the sink
-        # consumes batch_df twice (this count and merge's one write of
-        # it) — unpersisted, every micro-batch would pay the extraction 2x
-        batch_df.persist()
-        try:
-            cnt = batch_df.count()
-            if cnt:
-                out_table.merge(batch_df, metadata={"stream_epoch": epoch_id})
-            total["n"] += cnt
-        finally:
-            batch_df.unpersist()
+        out_table.merge(batch_df, metadata={"stream_epoch": epoch_id})
+        total["n"] += sum(f.rows for f in batch_step(batch_df).written)
 
     q = (
         extracted.writeStream.foreachBatch(sink)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import signal
 import time
 from contextlib import contextmanager
@@ -51,3 +52,30 @@ def deadline():
     """``with deadline(s): ...`` — a byte kernel must be bounded, not just
     total: the body must finish within ``s`` seconds."""
     return _deadline
+
+
+@contextmanager
+def _crash_after_groups(table, groups: int):
+    """Inside the block, ``table.merge`` raises ``RuntimeError("simulated
+    crash ...")`` from its ``groups + 1``-th call on, before writing
+    anything: a pipeline run dies after ``groups`` group commits.  The
+    table's own ``merge`` is back when the block exits."""
+    merge, calls = table.merge, itertools.count(1)
+
+    def crashing(*args, **kwargs):
+        if next(calls) > groups:
+            raise RuntimeError(f"simulated crash after {groups} groups")
+        return merge(*args, **kwargs)
+
+    table.merge = crashing
+    try:
+        yield
+    finally:
+        del table.merge
+
+
+@pytest.fixture
+def crash_after_groups():
+    """``with crash_after_groups(table, k): pipe.run(...)`` — a run that
+    dies after k group commits, crashing in the output table's merge."""
+    return _crash_after_groups

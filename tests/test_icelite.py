@@ -52,6 +52,29 @@ def test_merge_idempotent(spark, tmp_table):
     assert u7 == [1, 2, 3]
 
 
+def test_merge_lists_incoming_files_then_survivors(spark, tmp_table):
+    """A merge commits the rows its write tasks returned: per rewritten
+    bucket, the incoming files (as the step's ``written`` lists them),
+    then the anti-join survivors' files, a write of their own in their
+    own ``data/<token>/`` directory."""
+    from ocr_spark.operators.payloads import batch_step
+
+    tmp_table.append(_df(spark, [(f"u{i}", i) for i in range(8)]))
+    batch = _df(spark, [("u1", 10), ("u9", 90)])
+    tmp_table.merge(batch)
+    head = tmp_table.snapshot()
+    incoming = batch_step(batch).written
+    survivors = []
+    for b in {str(f.bucket) for f in incoming}:
+        mine = [f.path for f in incoming if str(f.bucket) == b]
+        assert head.files[b][: len(mine)] == mine
+        survivors += head.files[b][len(mine):]
+    assert survivors
+    token = {p.split("/")[1] for p in survivors}
+    assert len(token) == 1 and token.isdisjoint(f.path.split("/")[1] for f in incoming)
+    assert all(head.file_rows[f.path] == f.rows for f in incoming)
+
+
 def test_snapshot_isolation_history(spark, tmp_table):
     tmp_table.append(_df(spark, [("u1", 1)]))
     tmp_table.merge(_df(spark, [("u1", 100)]))
@@ -548,8 +571,8 @@ def test_compact_conflicts_with_a_concurrent_merge(spark, tmp_table, monkeypatch
     write = tmp_table._write_data
     merged = {}
 
-    def write_then_merge(df, token):
-        out = write(df, token)
+    def write_then_merge(df):
+        out = write(df)
         monkeypatch.setattr(tmp_table, "_write_data", write)
         merged["sid"] = tmp_table.merge(_df(spark, [(k, 100) for k in keys]))
         return out

@@ -941,7 +941,7 @@ def test_unpredict_inverts_forward_filters_property():
     prop()
 
 
-def test_pdf_pipeline_resumable(spark, tiny_dir, tmp_path):
+def test_pdf_pipeline_resumable(spark, tiny_dir, tmp_path, crash_after_groups):
     """The PDF front door through the RESUMABLE production pipeline
     (extract_job --format pdf shape): crash after 2 bucket groups, rerun,
     final table equals the golden doc-text assembly exactly-once."""
@@ -954,8 +954,8 @@ def test_pdf_pipeline_resumable(spark, tiny_dir, tmp_path):
     pipe = ExtractionPipeline(
         out, n_buckets=8, group_size=2, key_col="doc_id", transform=pdf_doc_records
     )
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        pipe.run(docs, fail_after_groups=2)
+    with crash_after_groups(out, 2), pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(docs)
     n_before = len(out.committed_groups())
     assert 0 < n_before <= 2
     stats = pipe.run(docs)  # resume: only the remaining groups

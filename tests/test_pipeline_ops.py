@@ -515,6 +515,32 @@ def test_streaming_extract(spark, tiny_dir, tmp_path):
     assert n2 == 0 and out.row_count() == 100
 
 
+def test_stream_micro_batch_is_one_job(spark, tiny_dir, tmp_path, monkeypatch):
+    """A non-empty micro-batch runs one DataFrame action, its merge's
+    write: no count beside it, and no cache to share the extraction
+    between two actions."""
+    import shutil
+
+    from ocr_spark.sources.icelite import IceliteTable
+    from ocr_spark.streaming import run_stream_once
+
+    log: list = []
+    df_type = type(spark.range(1))
+    for action in ("collect", "count", "persist"):
+
+        def logged(self, *args, _action=action, _run=getattr(df_type, action)):
+            log.append(_action)
+            return _run(self, *args)
+
+        monkeypatch.setattr(df_type, action, logged)
+    in_dir = tmp_path / "incoming"
+    in_dir.mkdir()
+    shutil.copy(f"{tiny_dir}/pages.parquet", in_dir / "pages.parquet")
+    out = IceliteTable(str(tmp_path / "stream_out"), key_col="url", n_buckets=4)
+    assert run_stream_once(spark, str(in_dir), out, str(tmp_path / "ckpt")) == 100
+    assert log == ["collect"]
+
+
 def test_near_dup_clusters(spark):
     from ocr_spark.operators.dedup import near_dup_clusters
 

@@ -4,6 +4,8 @@ run, exactly-once visible rows per url."""
 
 from __future__ import annotations
 
+import json
+import os
 import threading
 
 import pytest
@@ -36,7 +38,7 @@ def test_uninterrupted_run(spark, pages, tmp_path):
     assert out.row_count() == pages.count()
 
 
-def test_kill_and_resume_identical(spark, pages, tmp_path):
+def test_kill_and_resume_identical(spark, pages, tmp_path, crash_after_groups):
     # ground truth: uninterrupted
     ref = IceliteTable(str(tmp_path / "ref"), key_col="url", n_buckets=8)
     ExtractionPipeline(ref, n_buckets=8, group_size=2).run(pages)
@@ -45,8 +47,8 @@ def test_kill_and_resume_identical(spark, pages, tmp_path):
     # crash after 2 of 4 group commits
     out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
     pipe = ExtractionPipeline(out, n_buckets=8, group_size=2)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        pipe.run(pages, fail_after_groups=2)
+    with crash_after_groups(out, 2), pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(pages)
     assert len(pipe.remaining_groups()) == 2
     partial = out.row_count()
     assert 0 < partial < pages.count()
@@ -303,15 +305,60 @@ def test_transform_failure_keeps_earlier_groups(spark, pages, tmp_path):
     assert out.remove_orphan_files() == []
 
 
-def test_simulated_crash_leaves_no_orphans(spark, pages, tmp_path):
-    """``fail_after_groups=2`` still leaves 2 committed groups, and the
-    group planned ahead of the crash wrote no file."""
+def test_simulated_crash_leaves_no_orphans(spark, pages, tmp_path, crash_after_groups):
+    """A crash in the third group's merge still leaves 2 committed groups,
+    and the group planned ahead of the crash wrote no file."""
     out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
     pipe = ExtractionPipeline(out, n_buckets=8, group_size=2)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        pipe.run(pages, fail_after_groups=2)
+    with crash_after_groups(out, 2), pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(pages)
     assert out.committed_groups() == pipe.bucket_groups()[:2]
     assert out.remove_orphan_files() == []
+
+
+def _manifest_fields_by_name(d: dict) -> str:
+    """A manifest as ``Snapshot.to_json`` wrote it with each field named
+    by hand."""
+    return json.dumps(
+        {
+            "snapshot_id": d["snapshot_id"],
+            "parent_id": d["parent_id"],
+            "operation": d["operation"],
+            "files": d["files"],
+            "file_rows": d["file_rows"],
+            "metadata": d["metadata"],
+        },
+        indent=1,
+    )
+
+
+def test_manifests_keep_their_bytes_and_resume(spark, pages, tmp_path, crash_after_groups):
+    """A crashed run's manifests are byte-identical to the same snapshots
+    written with each field named by hand; a table holding manifests
+    written that way opens, reads and resumes to the uninterrupted run's
+    content."""
+    ref = IceliteTable(str(tmp_path / "ref"), key_col="url", n_buckets=8)
+    ExtractionPipeline(ref, n_buckets=8, group_size=2).run(pages)
+    root = str(tmp_path / "out")
+    out = IceliteTable(root, key_col="url", n_buckets=8)
+    with crash_after_groups(out, 2), pytest.raises(RuntimeError, match="simulated crash"):
+        ExtractionPipeline(out, n_buckets=8, group_size=2).run(pages)
+    partial = out.row_count()
+
+    snapshots = os.path.join(root, "_snapshots")
+    for name in os.listdir(snapshots):
+        with open(os.path.join(snapshots, name)) as f:
+            text = f.read()
+        old = _manifest_fields_by_name(json.loads(text))
+        assert text == old
+        with open(os.path.join(snapshots, name), "w") as f:
+            f.write(old)
+
+    reopened = IceliteTable.open(root)
+    assert reopened.read(spark).count() == partial
+    stats = ExtractionPipeline(reopened, n_buckets=8, group_size=2).run(pages)
+    assert stats["groups"] == 2
+    assert _table_content(spark, reopened) == _table_content(spark, ref)
 
 
 def test_table_input_prunes_files_physically(spark, pages, tmp_path):
@@ -344,7 +391,7 @@ def test_table_input_prunes_files_physically(spark, pages, tmp_path):
     assert part.count() == want
 
 
-def test_table_input_run_matches_dataframe_run(spark, pages, tmp_path):
+def test_table_input_run_matches_dataframe_run(spark, pages, tmp_path, crash_after_groups):
     """Full pipeline over icelite input == over the flat DataFrame input,
     including crash-resume (the resume scans only remaining groups)."""
     ref = IceliteTable(str(tmp_path / "ref"), key_col="url", n_buckets=8)
@@ -354,10 +401,8 @@ def test_table_input_run_matches_dataframe_run(spark, pages, tmp_path):
     src = IceliteTable(str(tmp_path / "src"), key_col="url", n_buckets=8)
     src.append(pages)
     out = IceliteTable(str(tmp_path / "out"), key_col="url", n_buckets=8)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        ExtractionPipeline(out, n_buckets=8, group_size=2).run(
-            src, fail_after_groups=2, spark=spark
-        )
+    with crash_after_groups(out, 2), pytest.raises(RuntimeError, match="simulated crash"):
+        ExtractionPipeline(out, n_buckets=8, group_size=2).run(src, spark=spark)
     stats = ExtractionPipeline(out, n_buckets=8, group_size=2).run(src, spark=spark)
     assert stats["groups"] == 2
     assert _table_content(spark, out) == want
@@ -377,8 +422,8 @@ def test_same_bucket_conflict_detected(spark, tmp_path):
     fired = {"done": False}
     orig_write = t._write_data
 
-    def write_with_interleaved_commit(dfx, token):
-        res = orig_write(dfx, token)
+    def write_with_interleaved_commit(dfx):
+        res = orig_write(dfx)
         if not fired["done"]:
             fired["done"] = True
             t.merge(
